@@ -261,6 +261,12 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _error_text(e: BaseException) -> str:
+    """An exception as one artifact field: type and message, clipped so
+    a JVM stack trace cannot swamp the record."""
+    return f"{type(e).__name__}: {e}"[:500]
+
+
 def _skew_demo(spark, sf_dir: str) -> dict[str, float]:
     """Plain vs salted join on a deliberately hot-keyed frame
     (VERDICT r4 ask #8).
@@ -405,14 +411,17 @@ def main() -> None:
     # so timings reflect steady-state engine performance, not first-call
     # compilation. Standard JVM benchmarking practice; the warmup runs
     # different data (sf0.001) than the measured queries.
+    # A warm-up failure does not stop the bench, but it is recorded in
+    # the artifact (``warmup_errors``) rather than dropped.
     warm_sf = "/root/testdata/sf0.001"
+    warmup_errors: dict[str, str] = {}
     if os.path.isdir(warm_sf) and os.path.abspath(warm_sf) != os.path.abspath(sf_dir):
         for wname in ["q1_pricing_summary", "q3_top_revenue_orders", "charges_score"]:
             if wname in queries:
                 try:
                     _materialize(queries[wname](spark, warm_sf))
-                except Exception:
-                    pass
+                except Exception as e:
+                    warmup_errors[wname] = _error_text(e)
     spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
 
     # Machine-epoch calibration (VERDICT r10 #6): sf0.1 round-over-round
@@ -453,6 +462,7 @@ def main() -> None:
     # cache), warm = the steady-state resolution cost per query.
     derivation_cold = 0.0
     derivation_warm = 0.0
+    derivation_error = None
     try:
         from clearcare_data_pipeline_spark.queries import charges as charges_q
         from clearcare_data_pipeline_spark.sources import charges as charges_src
@@ -468,8 +478,8 @@ def main() -> None:
         t0 = time.time()
         charges_q._cleaned(spark, sf_dir)
         derivation_warm = round(time.time() - t0, 3)
-    except Exception:
-        pass
+    except Exception as e:
+        derivation_error = _error_text(e)
 
     # Headline-only mode: cheap repeated runs for harness-attribution
     # experiments (VERDICT r7 #4) — skips EXTENDED and the skew demo.
@@ -555,6 +565,10 @@ def main() -> None:
                 **({"query_steal_pct": steals} if steals else {}),
                 "derivation_sec": derivation_warm,
                 "derivation_cold_sec": derivation_cold,
+                # non-empty = that step raised; its timing above is not
+                # a measurement
+                **({"derivation_error": derivation_error} if derivation_error else {}),
+                **({"warmup_errors": warmup_errors} if warmup_errors else {}),
                 "extended": ext_timings,
                 "extended_total_sec": round(sum(ext_timings.values()), 3),
                 "extended_core_total_sec": round(

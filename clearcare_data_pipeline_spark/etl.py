@@ -7,7 +7,44 @@ score -> sinks (clean, quarantine, devlog) -> registry upsert.
 The reference's file-based IR between stages is preserved as parquet
 checkpoints: extraction output is materialized before cleaning (the
 same boundary the reference crosses via
-``data/extracted data/{system}/{campus_id}_extracted.csv``).
+``data/extracted data/{system}/{campus_id}_extracted.csv``). The
+checkpoint holds the extractor's slots before the R3 allowed-type gate,
+so both the charges table and the devlog's unknown-type histogram come
+from the one scan of the raw file.
+
+A campus is one pass. Spark jobs per campus, from the event log of a
+traced run at sf0.01 (``perfbench``'s tracer, 4 local cores), before
+and after the devlog was folded into the cleaning aggregate:
+
+=======================  ==============  ===============
+layer                    multi-pass      one pass
+                         tall/JSON/wide  tall/JSON/wide
+=======================  ==============  ===============
+registry                 5 / 5 / 5       2 / 2 / 2
+extract                  3 / 2 / 3       3 / 2 / 3
+extract checkpoint       2 / 2 / 3       1 / 1 / 2
+cleaning aggregate       4 / 4 / 4       4 / 4 / 4
+clean+quarantine sinks   2 / 2 / 2       2 / 2 / 2
+devlog                   11 / 10 / 11    2 / 2 / 2
+total                    27 / 25 / 28    14 / 13 / 15
+=======================  ==============  ===============
+
+* registry: one collected snapshot serves the lookup and the upsert,
+  read with the known schema (no footer-inference job), plus the
+  rewrite.
+* checkpoint: the read-back is given the written schema.
+* devlog: field presence (A1) and the code-type histogram (A2) are
+  columns of the cleaning aggregate; modifier tokens (A6) and unknown
+  raw types (A3) share one group-by; missing types (A4) are derived
+  from A2 on the driver. The multi-pass devlog re-read the clean sink
+  for four actions and scanned the raw file a second time for A3.
+
+The one cached frame is the cleaning pipeline's tagged plan. ``run_etl``
+owns its lifetime: ``run_cleaning_pipeline`` persists it on entry to
+the ``with`` block that writes both sinks and collects the keyed
+counts, and unpersists it when the block exits, on success or failure.
+The devlog is written after the cache is released, atomically (temp
+file + ``os.replace``).
 """
 
 from __future__ import annotations
@@ -26,7 +63,8 @@ from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS, REFERENCE_HE
 from clearcare_data_pipeline_spark.sources.extract_json import extract_json
 from clearcare_data_pipeline_spark.sources.extract_tall import extract_tall
 from clearcare_data_pipeline_spark.sources.extract_wide import extract_wide
-from clearcare_data_pipeline_spark.sources.registry import lookup_campus, load_registry, upsert_campus
+from clearcare_data_pipeline_spark.sources.mrf import kept_charges, unknown_type_keys
+from clearcare_data_pipeline_spark.sources.registry import lookup_campus, registry_snapshot, upsert_campus
 
 # C1: format dispatch (ETL_pipeline.py:19-38)
 EXTRACTOR_DISPATCH = {
@@ -57,7 +95,7 @@ def run_etl(
     user: str = "spark",
     file_format: str | None = None,
 ) -> EtlResult:
-    registry = load_registry(spark, registry_path)
+    registry = registry_snapshot(spark, registry_path)
     campus = lookup_campus(registry, campus_id)
     fmt = (file_format or campus["structure"] or "").lower()
     if fmt not in EXTRACTOR_DISPATCH:
@@ -71,22 +109,21 @@ def run_etl(
         zip_code=campus["zip_code"] or "",
     )
     extracted_path = os.path.join(output_dir, "extracted", campus_id)
-    extracted.charges.write.mode("overwrite").parquet(extracted_path)
-    charges = spark.read.parquet(extracted_path)
+    extracted.slots.write.mode("overwrite").parquet(extracted_path)
+    slots = spark.read.schema(extracted.slots.schema).parquet(extracted_path)
 
-    # --- clean phase -------------------------------------------------
-    result = run_cleaning_pipeline(charges)
+    # --- clean phase: tagged is cached only inside this block --------
     clean_path = os.path.join(output_dir, "cleaned", campus_id)
     quarantine_path = os.path.join(output_dir, "quarantine", campus_id)
-    result.clean.write.mode("overwrite").parquet(clean_path)
-    result.quarantine.write.mode("overwrite").parquet(quarantine_path)
+    with run_cleaning_pipeline(kept_charges(slots)) as result:
+        result.clean.write.mode("overwrite").parquet(clean_path)
+        result.quarantine.write.mode("overwrite").parquet(quarantine_path)
+        keyed = M.keyed_counts({
+            "modifier_counts": M.modifier_tokens(result.clean),
+            "unknown_code_types": unknown_type_keys(slots),
+        })
 
     # --- devlog (K5): one JSON document of run metrics ---------------
-    clean_df = spark.read.parquet(clean_path)
-    presence = M.field_presence(clean_df).first().asDict()
-    type_hist = {r["code_type"]: r["n"] for r in M.code_type_histogram(clean_df).collect()}
-    unknown_hist = {r["raw_code_type"]: r["n"] for r in extracted.unknown_types.collect()}
-    mod_counts = {r["modifier"]: r["n"] for r in M.modifier_counts(clean_df).collect()}
     now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     devlog = {
         "campus_id": campus_id,
@@ -94,11 +131,11 @@ def run_etl(
         "processed_on": now,
         "source_format": fmt,
         "source_metadata": extracted.metadata,
-        "field_presence": presence,
-        "code_type_histogram": type_hist,
-        "unknown_code_types": unknown_hist,
-        "missing_code_types": M.missing_code_types(clean_df),
-        "modifier_counts": mod_counts,
+        "field_presence": result.field_presence,
+        "code_type_histogram": result.code_type_histogram,
+        "unknown_code_types": keyed["unknown_code_types"],
+        "missing_code_types": M.missing_code_types(result.code_type_histogram),
+        "modifier_counts": keyed["modifier_counts"],
         "rule_violation_counts": result.rule_counts,
         "algorithm_format_issues": result.algorithm_format_issues,
         "clean_rows": result.clean_rows,
@@ -106,14 +143,7 @@ def run_etl(
         "transparency_score": result.score,
     }
     devlog_path = os.path.join(output_dir, "devlogs", f"{campus_id}.json")
-    os.makedirs(os.path.dirname(devlog_path), exist_ok=True)
-    existing = []
-    if os.path.exists(devlog_path):
-        with open(devlog_path) as f:
-            existing = json.load(f)
-    existing.append(devlog)
-    with open(devlog_path, "w") as f:
-        json.dump(existing, f, indent=2, default=str)
+    _append_devlog(devlog_path, devlog)
 
     # --- registry update phase (J4/K6) -------------------------------
     upsert_campus(
@@ -128,6 +158,7 @@ def run_etl(
             "issues_encountered": str(result.quarantined_rows),
             "file_format": fmt,
         },
+        snapshot=registry,
     )
 
     return EtlResult(
@@ -139,6 +170,27 @@ def run_etl(
         clean_rows=result.clean_rows,
         quarantined_rows=result.quarantined_rows,
     )
+
+
+def _append_devlog(path: str, entry: dict) -> None:
+    """Append ``entry`` to the campus devlog, a JSON list. The new list
+    goes to a temp file beside it and is swapped in with ``os.replace``
+    (atomic on POSIX), so a failure mid-write leaves the previous
+    devlog intact."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    entries = []
+    if os.path.exists(path):
+        with open(path) as f:
+            entries = json.load(f)
+    entries.append(entry)
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(entries, f, indent=2, default=str)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def write_jdbc(

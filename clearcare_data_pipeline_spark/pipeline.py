@@ -5,6 +5,9 @@ The Spark analog of the reference's chunked cleaning stage
 the chunk loop disappears: partitioned execution replaces chunking, and
 the whole stage is one lazy plan with two materialization forks
 (clean sink, quarantine sink) plus a single-pass metrics aggregate.
+``run_cleaning_pipeline`` is a context manager: the tagged plan those
+consumers share is persisted on entry and released on exit, whether
+the block succeeds or fails.
 
 Stage order mirrors the reference exactly (SURVEY.md §3 step 4):
 header-normalize -> inject missing cols -> price typing (F1) ->
@@ -17,6 +20,8 @@ clean/quarantine split (R4) -> transparency score (A11).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -33,7 +38,7 @@ from clearcare_data_pipeline_spark.functions.cleaning import (
     scrub_invalid_tokens,
     validate_code_format,
 )
-from clearcare_data_pipeline_spark.plans.metrics import transparency_score, violation_counts
+from clearcare_data_pipeline_spark.plans.metrics import parse_summary, tagged_summary, transparency_score
 from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, split_clean_quarantine, tag_violations
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
 
@@ -81,34 +86,38 @@ class CleaningResult:
     clean_rows: int = 0
     quarantined_rows: int = 0
     algorithm_format_issues: int = 0
+    # devlog A1/A2 over the clean rows, from the same aggregate
+    field_presence: dict[str, int] = field(default_factory=dict)
+    code_type_histogram: dict[str, int] = field(default_factory=dict)
 
 
-def run_cleaning_pipeline(df: DataFrame) -> CleaningResult:
-    """Clean -> tag -> split -> score. Persists the tagged plan across
-    its three consumers (clean sink, quarantine sink, metrics) so the
-    source is scanned once."""
+@contextmanager
+def run_cleaning_pipeline(df: DataFrame) -> Iterator[CleaningResult]:
+    """Clean -> tag -> split -> score. The tagged plan is persisted for
+    the block's lifetime so its consumers (this summary aggregate, the
+    clean and quarantine sinks, the devlog's keyed counts) scan the
+    source once; it is unpersisted when the block exits, on success or
+    failure. ``clean``/``quarantine`` stay valid lazy plans afterwards
+    but recompute from the source."""
     tagged = tag_violations(clean_charges(df)).persist()
     try:
-        metrics = violation_counts(tagged).collect()[0].asDict()
+        summary = parse_summary(tagged_summary(tagged).collect()[0].asDict())
         clean, quarantine = split_clean_quarantine(tagged)
-        clean = clean.drop("code_type_raw", "negotiated_algorithm_invalid")
-        rule_counts = {r: int(metrics.get(r) or 0) for r in RULE_NAMES}
-        quarantined = int(metrics["quarantined_rows"])
-        clean_rows = int(metrics["total_rows"]) - quarantined
-        score = transparency_score(clean_rows, rule_counts)
-        return CleaningResult(
-            clean=clean,
+        quarantined = summary["quarantined_rows"]
+        clean_rows = summary["total_rows"] - quarantined
+        yield CleaningResult(
+            clean=clean.drop("code_type_raw", "negotiated_algorithm_invalid"),
             quarantine=quarantine,
-            score=score,
-            rule_counts=rule_counts,
+            score=transparency_score(clean_rows, summary["rule_counts"]),
+            rule_counts=summary["rule_counts"],
             clean_rows=clean_rows,
             quarantined_rows=quarantined,
-            algorithm_format_issues=int(metrics.get("algorithm_format_issues") or 0),
+            algorithm_format_issues=summary["algorithm_format_issues"],
+            field_presence=summary["field_presence"],
+            code_type_histogram=summary["code_type_histogram"],
         )
     finally:
-        # Plans returned in the result keep the persisted lineage; the
-        # caller materializes them before this session ends.
-        pass
+        tagged.unpersist()
 
 
 def score_summary(df: DataFrame, *, already_clean: bool = False) -> DataFrame:

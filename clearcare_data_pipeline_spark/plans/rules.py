@@ -111,6 +111,11 @@ def tag_violations(df: DataFrame) -> DataFrame:
     return df.withColumn("rules_violated", F.concat_ws(",", *tags))
 
 
+def is_clean() -> Column:
+    """R4 predicate over a ``tag_violations`` output: no rule fired."""
+    return F.col("rules_violated") == ""
+
+
 def split_clean_quarantine(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     """R4: (clean, quarantine) from a ``tag_violations`` output.
 
@@ -118,7 +123,6 @@ def split_clean_quarantine(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     plan first — this is the one fork where naive Spark would otherwise
     scan the source twice (SURVEY.md §4).
     """
-    is_clean = F.col("rules_violated") == ""
-    clean = tagged.where(is_clean).drop(*RULE_NAMES, "rules_violated")
-    quarantine = tagged.where(~is_clean).drop(*RULE_NAMES)
+    clean = tagged.where(is_clean()).drop(*RULE_NAMES, "rules_violated")
+    quarantine = tagged.where(~is_clean()).drop(*RULE_NAMES)
     return clean, quarantine

@@ -17,8 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type_expr
-from clearcare_data_pipeline_spark.sources.extract_tall import ExtractResult
-from clearcare_data_pipeline_spark.sources.mrf import finalize_canonical, gate_allowed_types
+from clearcare_data_pipeline_spark.sources.mrf import ExtractResult, finalize_canonical
 
 _META_KEYS = ["hospital_name", "hospital_location", "hospital_address", "last_updated_on", "version"]
 
@@ -94,16 +93,9 @@ def extract_json(
 
     df = df.where((F.col("code") != "") & (F.col("code_type_raw") != ""))
     df = df.withColumn("code_type", normalize_code_type_expr(F.col("code_type_raw")))
-    kept, unknown = gate_allowed_types(df)
-
-    unknown_hist = (
-        unknown.groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    charges = finalize_canonical(
-        kept,
+    slots = finalize_canonical(
+        df,
         hospital_name=hospital_name or meta.get("hospital_name", ""),
         zip_code=zip_code,
     )
-    return ExtractResult(charges=charges, metadata=meta, unknown_types=unknown_hist)
+    return ExtractResult(slots=slots, metadata=meta)

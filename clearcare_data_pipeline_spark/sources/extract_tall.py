@@ -9,16 +9,14 @@ loop).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.text import split_payer_name_id
 from clearcare_data_pipeline_spark.sources.mrf import (
+    ExtractResult,
     explode_code_slots,
     finalize_canonical,
-    gate_allowed_types,
     read_csv_after_preamble,
     read_preamble,
 )
@@ -44,14 +42,6 @@ TALL_SOURCE_MAP: dict[str, str] = {
 }
 
 
-@dataclass
-class ExtractResult:
-    charges: DataFrame
-    metadata: dict[str, str]
-    unknown_types: DataFrame  # (raw_code_type, n) — devlog A3
-    devlog: dict = field(default_factory=dict)
-
-
 def extract_tall(
     spark: SparkSession,
     path: str,
@@ -70,16 +60,9 @@ def extract_tall(
     renames = {src: dst for src, dst in TALL_SOURCE_MAP.items() if src in raw.columns}
     df = df.withColumnsRenamed(renames)
 
-    # X1 + F7 + R3
+    # X1 + F7 (the R3 gate applies to the slots: ExtractResult.charges)
     df = explode_code_slots(df, raw.columns)
-    kept, unknown = gate_allowed_types(df)
-
-    unknown_hist = (
-        unknown.groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    slots = finalize_canonical(
+        df, hospital_name=hospital_name or meta.get("hospital_name", ""), zip_code=zip_code
     )
-
-    charges = finalize_canonical(
-        kept, hospital_name=hospital_name or meta.get("hospital_name", ""), zip_code=zip_code
-    )
-    return ExtractResult(charges=charges, metadata=meta, unknown_types=unknown_hist)
+    return ExtractResult(slots=slots, metadata=meta)

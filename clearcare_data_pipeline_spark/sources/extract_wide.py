@@ -21,17 +21,15 @@ re-expression:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.text import notes_concat
-from clearcare_data_pipeline_spark.sources.extract_tall import ExtractResult
 from clearcare_data_pipeline_spark.sources.mrf import (
+    ExtractResult,
+    allowed_type,
     explode_code_slots,
     finalize_canonical,
-    gate_allowed_types,
     read_csv_after_preamble,
     read_preamble,
 )
@@ -127,11 +125,12 @@ def extract_wide(
 
     # --- X1: code slots (cross with payer cells via the same row) ----
     melted = explode_code_slots(melted, raw.columns)
-    kept, unknown = gate_allowed_types(melted)
-
-    unknown_hist = (
-        unknown.groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    # Slots R3 will reject ride through the regroup as one group each,
+    # so the unknown-type histogram counts them as the melt emitted
+    # them; allowed slots all have a NULL key and group by (code, type,
+    # payer, plan) alone.
+    melted = melted.withColumn(
+        "_unknown_slot", F.when(~allowed_type(), F.monotonically_increasing_id())
     )
 
     # --- X2 regroup: last-write-wins per (code, type, payer, plan) ---
@@ -150,9 +149,9 @@ def extract_wide(
         if "additional_generic_notes" in raw.columns
         else [F.first(F.lit("")).alias("_generic_notes")]
     )
-    grouped = kept.groupBy("code", "code_type", "code_type_raw", "payer_name", "plan_name").agg(
-        *field_aggs, *row_level_aggs, *generic_notes
-    )
+    grouped = melted.groupBy(
+        "code", "code_type", "code_type_raw", "payer_name", "plan_name", "_unknown_slot"
+    ).agg(*field_aggs, *row_level_aggs, *generic_notes).drop("_unknown_slot")
 
     # F11: additional notes = generic ⊕ payer note
     grouped = grouped.withColumn(
@@ -161,7 +160,7 @@ def extract_wide(
     ).drop("_generic_notes", "_payer_notes")
     grouped = grouped.na.fill("")
 
-    charges = finalize_canonical(
+    slots = finalize_canonical(
         grouped, hospital_name=hospital_name or meta.get("hospital_name", ""), zip_code=zip_code
     )
-    return ExtractResult(charges=charges, metadata=meta, unknown_types=unknown_hist)
+    return ExtractResult(slots=slots, metadata=meta)

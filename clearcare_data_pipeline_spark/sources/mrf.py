@@ -4,12 +4,20 @@ All three physical layouts (tall CSV, wide CSV, nested JSON) normalize
 into the canonical 22-column all-string charges table. CSV layouts
 carry a 2-line metadata preamble (row 1 = keys, row 2 = values) before
 the real header (tall_format_csv_extractor.pyc:66-71).
+
+An extractor returns its *slots*: every emitted (code, type) slot in
+canonical layout plus ``code_type_raw``, before the R3 allowed-type
+gate. Both outputs derive from that one frame — the charges table
+(``kept_charges``) and the unknown-type histogram
+(``unknown_type_histogram``) — so a caller that materializes the slots
+once (the ETL's extract checkpoint) gets both from one raw scan.
 """
 
 from __future__ import annotations
 
 import csv
 import io
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -83,16 +91,16 @@ def explode_code_slots(df: DataFrame, available_cols: list[str]) -> DataFrame:
     return df.drop("_slot")
 
 
-def gate_allowed_types(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """R3: split (kept, unknown-type) on the normalized code type."""
-    kept = df.where(F.col("code_type").isin(ALLOWED_CODE_TYPES))
-    unknown = df.where(~F.col("code_type").isin(ALLOWED_CODE_TYPES) | F.col("code_type").isNull())
-    return kept, unknown
+def allowed_type() -> Column:
+    """R3 keep predicate on the normalized code type; an unmapped
+    (NULL) type is not allowed."""
+    return F.coalesce(F.col("code_type").isin(ALLOWED_CODE_TYPES), F.lit(False))
 
 
 def finalize_canonical(df: DataFrame, hospital_name: str = "", zip_code: str = "") -> DataFrame:
-    """Project to the canonical 22 columns in order, filling the
-    registry-sourced identity columns and defaulting absences to ''."""
+    """Project to the canonical 22 columns in order, plus
+    ``code_type_raw``, filling the registry-sourced identity columns
+    and defaulting absences to ''."""
     out = df
     if "hospital_name" not in out.columns:
         out = out.withColumn("hospital_name", F.lit(hospital_name))
@@ -101,4 +109,38 @@ def finalize_canonical(df: DataFrame, hospital_name: str = "", zip_code: str = "
     for c in CANONICAL_COLUMNS:
         if c not in out.columns:
             out = out.withColumn(c, F.lit("").cast(StringType()))
-    return out.select(*CANONICAL_COLUMNS)
+    return out.select(*CANONICAL_COLUMNS, "code_type_raw")
+
+
+def kept_charges(slots: DataFrame) -> DataFrame:
+    """R3: the canonical charges table, i.e. the slots whose normalized
+    type is allowed."""
+    return slots.where(allowed_type()).select(*CANONICAL_COLUMNS)
+
+
+def unknown_type_keys(slots: DataFrame) -> DataFrame:
+    """Devlog A3 keys: one row per slot R3 rejected, holding its raw
+    type upper-cased and trimmed."""
+    return slots.where(~allowed_type()).select(
+        F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type")
+    )
+
+
+def unknown_type_histogram(slots: DataFrame) -> DataFrame:
+    """Devlog A3: (raw_code_type, n) over the slots R3 rejected."""
+    return unknown_type_keys(slots).groupBy("raw_code_type").agg(F.count(F.lit(1)).alias("n"))
+
+
+@dataclass
+class ExtractResult:
+    slots: DataFrame  # every emitted slot: canonical columns + code_type_raw, before R3
+    metadata: dict[str, str]
+
+    @property
+    def charges(self) -> DataFrame:
+        return kept_charges(self.slots)
+
+    @property
+    def unknown_types(self) -> DataFrame:
+        """(raw_code_type, n) — devlog A3."""
+        return unknown_type_histogram(self.slots)

@@ -38,7 +38,18 @@ def load_registry(spark: SparkSession, path: str) -> DataFrame:
         return load_registry_xlsx(spark, path)
     if not os.path.exists(path):
         return empty_registry(spark)
-    return spark.read.parquet(path)
+    # the schema is known, so no job runs to infer it from the footers
+    return spark.read.schema(REGISTRY_SCHEMA).parquet(path)
+
+
+def registry_snapshot(spark: SparkSession, path: str) -> dict[str, dict]:
+    """campus_id -> registry row (as a dict), from one collect. A
+    campus run takes one snapshot and hands it to both
+    ``lookup_campus`` and ``upsert_campus``, so the registry is read
+    once per campus. The upsert then rewrites the registry as it was
+    when the run began plus this campus's row: like the whole-directory
+    overwrite itself, that is safe for one writer at a time only."""
+    return {r["campus_id"]: r.asDict() for r in load_registry(spark, path).collect()}
 
 
 def save_registry(df: DataFrame, path: str) -> None:
@@ -85,21 +96,34 @@ def save_registry_xlsx(df: DataFrame, path: str, sheet_name: str = "Sheet1") -> 
     write_xlsx(path, list(REGISTRY_COLUMNS), rows, sheet_name=sheet_name)
 
 
-def lookup_campus(registry: DataFrame, campus_id: str) -> Row:
-    """S6/J1: point lookup; error if absent (cleaning_utils.py:56-66)."""
-    rows = registry.where(registry.campus_id == campus_id).limit(1).collect()
-    if not rows:
+def lookup_campus(registry: DataFrame | dict[str, dict], campus_id: str) -> Row | dict:
+    """S6/J1: point lookup in a registry frame or a
+    ``registry_snapshot``; error if absent (cleaning_utils.py:56-66)."""
+    if isinstance(registry, dict):
+        row = registry.get(campus_id)
+    else:
+        rows = registry.where(registry.campus_id == campus_id).limit(1).collect()
+        row = rows[0] if rows else None
+    if row is None:
         raise CampusNotFound(f"campus_id {campus_id!r} not found in registry")
-    return rows[0]
+    return row
 
 
-def upsert_campus(spark: SparkSession, path: str, campus_id: str, updates: dict[str, str]) -> None:
-    """K6: merge ``updates`` into the campus row (insert if new)."""
+def upsert_campus(
+    spark: SparkSession,
+    path: str,
+    campus_id: str,
+    updates: dict[str, str],
+    snapshot: dict[str, dict] | None = None,
+) -> None:
+    """K6: merge ``updates`` into the campus row (insert if new).
+    ``snapshot`` is the caller's ``registry_snapshot`` of ``path``;
+    without one the registry is read here."""
     bad = set(updates) - set(REGISTRY_COLUMNS)
     if bad:
         raise ValueError(f"unknown registry columns: {sorted(bad)}")
-    current = {r["campus_id"]: r.asDict() for r in load_registry(spark, path).collect()}
-    row = current.get(campus_id, {c: None for c in REGISTRY_COLUMNS})
+    current = dict(registry_snapshot(spark, path) if snapshot is None else snapshot)
+    row = dict(current.get(campus_id) or {c: None for c in REGISTRY_COLUMNS})
     row["campus_id"] = campus_id
     row.update({k: (None if v is None else str(v)) for k, v in updates.items()})
     current[campus_id] = row

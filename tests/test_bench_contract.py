@@ -100,3 +100,9 @@ def test_steal_sampling_fields(monkeypatch):
     assert bench._steal_pct((1, 2), (1, 2)) is None  # zero-width window
     s = bench._steal_sample()
     assert s is None or (len(s) == 2 and s[1] >= s[0] >= 0)
+
+
+def test_error_text_keeps_type_and_clips_message():
+    text = bench._error_text(ValueError("x" * 10_000))
+    assert text.startswith("ValueError: xxx")
+    assert len(text) == 500

@@ -137,3 +137,169 @@ def test_write_jdbc_validates_and_reaches_jdbc_layer(spark, tmp_path):
         write_jdbc(
             df, f"jdbc:sqlite:{tmp_path}/t.db", "t", mode="overwrite", num_partitions=1
         )
+
+
+# --- one campus per layout: devlog pins, cache release, atomic devlog ---
+
+_LAYOUTS = {
+    "tall_campus": ("tall csv", "tall.csv"),
+    "wide_campus": ("wide csv", "wide.csv"),
+    "json_campus": ("json", "mrf.json"),
+}
+_PRESENCE_ORDER = [
+    "hospital_name", "zip_code", "code", "code_type", "description", "drug_unit", "drug_type",
+    "payer_name", "payer_id", "plan_name", "negotiated_price", "negotiated_percentage",
+    "negotiated_algorithm", "negotiated_methodology", "gross_charge", "discounted_cash_price",
+    "min_price", "max_price", "estimated_amount", "setting", "additional_notes", "modifiers",
+]
+_NO_RULES = {f"rule_{i}": 0 for i in range(1, 11)}
+_META = {
+    "hospital_name": "General Hospital",
+    "last_updated_on": "2024-07-01",
+    "version": "2.0.0",
+    "hospital_location": "Springfield",
+    "hospital_address": "123 Main St, Springfield ST 12345",
+}
+
+# Devlog entries (minus processed_on/processed_by) as the multi-pass
+# devlog computed them: a re-read of the clean sink for presence, code
+# types and modifiers, and a second scan of the raw file for unknown
+# types. The one-pass devlog must reproduce them exactly.
+PINNED_DEVLOGS = {
+    "tall_campus": {
+        "source_format": "tall csv",
+        "field_presence": dict(zip(_PRESENCE_ORDER, [
+            7, 7, 7, 7, 6, 1, 1, 7, 4, 7, 6, 1, 0, 7, 6, 6, 6, 6, 1, 7, 2, 3])),
+        "code_type_histogram": {"CPT": 6, "CDT": 1},
+        "unknown_code_types": {"LOCAL": 1},
+        "missing_code_types": ["HCPCS", "ICD", "DRG", "NDC", "APC"],
+        "modifier_counts": {"26": 2, "59": 1, "TC": 1},
+        "rule_violation_counts": {**_NO_RULES, "rule_1": 1},
+        "algorithm_format_issues": 0,
+        "clean_rows": 7,
+        "quarantined_rows": 1,
+        "transparency_score": 0.9875,
+    },
+    "wide_campus": {
+        "source_format": "wide csv",
+        "field_presence": dict(zip(_PRESENCE_ORDER, [
+            5, 5, 5, 5, 5, 2, 2, 5, 0, 5, 5, 0, 0, 5, 5, 5, 5, 5, 0, 5, 2, 3])),
+        "code_type_histogram": {"CPT": 4, "DRG": 1},
+        "unknown_code_types": {},
+        "missing_code_types": ["HCPCS", "ICD", "CDT", "NDC", "APC"],
+        "modifier_counts": {"TC": 2, "26": 1},
+        "rule_violation_counts": {**_NO_RULES, "rule_4": 1},
+        "algorithm_format_issues": 0,
+        "clean_rows": 5,
+        "quarantined_rows": 1,
+        "transparency_score": 0.9833333333333333,
+    },
+    "json_campus": {
+        "source_format": "json",
+        "field_presence": dict(zip(_PRESENCE_ORDER, [
+            3, 3, 3, 3, 3, 2, 2, 3, 0, 3, 3, 0, 0, 3, 3, 3, 3, 3, 0, 3, 1, 0])),
+        "code_type_histogram": {"HCPCS": 1, "NDC": 1, "CPT": 1},
+        "unknown_code_types": {},
+        "missing_code_types": ["ICD", "DRG", "CDT", "APC"],
+        "modifier_counts": {},
+        "rule_violation_counts": {**_NO_RULES, "rule_1": 1, "rule_4": 1},
+        "algorithm_format_issues": 0,
+        "clean_rows": 3,
+        "quarantined_rows": 2,
+        "transparency_score": 0.96,
+    },
+}
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _layout_registry(spark, path: str) -> None:
+    rows = [
+        tuple(
+            {"campus_id": cid, "hospital_name": f"Hospital {cid}", "zip_code": "12345", "structure": st}.get(c)
+            for c in REGISTRY_SCHEMA.fieldNames()
+        )
+        for cid, (st, _) in _LAYOUTS.items()
+    ]
+    spark.createDataFrame(rows, REGISTRY_SCHEMA).write.mode("overwrite").parquet(path)
+
+
+def _run_layout(spark, cid: str, registry: str, out: str):
+    return run_etl(
+        spark,
+        campus_id=cid,
+        raw_path=f"{FIX}/{_LAYOUTS[cid][1]}",
+        registry_path=registry,
+        output_dir=out,
+    )
+
+
+@pytest.fixture(scope="module")
+def layout_loop(spark, tmp_path_factory):
+    """One session, one campus per raw layout, run back to back. Yields
+    the registry path, output dir, results and the RDDs that were
+    persisted before the loop began."""
+    base = tmp_path_factory.mktemp("layouts")
+    registry, out = str(base / "registry.parquet"), str(base / "out")
+    _layout_registry(spark, registry)
+    before = _persisted_ids(spark)
+    results = {cid: _run_layout(spark, cid, registry, out) for cid in _LAYOUTS}
+    return {"registry": registry, "out": out, "results": results, "persisted_before": before}
+
+
+@pytest.mark.parametrize("cid", sorted(_LAYOUTS))
+def test_devlog_matches_multi_pass_pins(layout_loop, cid):
+    res = layout_loop["results"][cid]
+    with open(res.devlog_path) as f:
+        entries = json.load(f)
+    assert len(entries) == 1
+    got = {k: v for k, v in entries[0].items() if k not in ("processed_on", "processed_by")}
+    assert got == {**PINNED_DEVLOGS[cid], "campus_id": cid, "source_metadata": _META}
+    assert (res.clean_rows, res.quarantined_rows, res.score) == (
+        got["clean_rows"], got["quarantined_rows"], got["transparency_score"]
+    )
+
+
+def test_campus_loop_releases_cached_frames(spark, layout_loop):
+    assert _persisted_ids(spark) - layout_loop["persisted_before"] == set()
+    done = {r["campus_id"]: r["etl_status"] for r in load_registry(spark, layout_loop["registry"]).collect()}
+    assert done == {cid: "processed" for cid in _LAYOUTS}
+
+
+def test_failed_sink_write_releases_cached_frame(spark, layout_loop, monkeypatch, tmp_path):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if os.sep + "quarantine" + os.sep in path:
+            raise RuntimeError("injected quarantine write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    before = _persisted_ids(spark)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(RuntimeError, match="injected quarantine"):
+        _run_layout(spark, "tall_campus", layout_loop["registry"], str(tmp_path / "out"))
+    assert _persisted_ids(spark) - before == set()
+
+
+def test_failed_devlog_write_keeps_previous_devlog(spark, layout_loop, monkeypatch):
+    from clearcare_data_pipeline_spark import etl as etl_mod
+
+    path = layout_loop["results"]["json_campus"].devlog_path
+    with open(path, "rb") as f:
+        previous = f.read()
+
+    def half_dump(obj, fh, **kwargs):
+        fh.write('[{"campus_id": ')
+        raise OSError("injected failure mid-dump")
+
+    monkeypatch.setattr(etl_mod.json, "dump", half_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        _run_layout(spark, "json_campus", layout_loop["registry"], layout_loop["out"])
+    with open(path, "rb") as f:
+        assert f.read() == previous
+    # no temp file left behind beside the devlogs
+    assert set(os.listdir(os.path.dirname(path))) == {f"{cid}.json" for cid in _LAYOUTS}

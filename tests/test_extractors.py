@@ -155,7 +155,7 @@ def test_extracted_tall_feeds_cleaning(spark):
     from clearcare_data_pipeline_spark.pipeline import run_cleaning_pipeline
 
     res = extract_tall(spark, f"{FIX}/tall.csv", zip_code="12345")
-    result = run_cleaning_pipeline(res.charges)
-    # 9 extracted; the 7-digit '0070551' NDC fails R2 format validation
-    assert result.clean_rows + result.quarantined_rows == 8
-    assert 0.0 <= result.score <= 1.0
+    with run_cleaning_pipeline(res.charges) as result:
+        # 9 extracted; the 7-digit '0070551' NDC fails R2 format validation
+        assert result.clean_rows + result.quarantined_rows == 8
+        assert 0.0 <= result.score <= 1.0

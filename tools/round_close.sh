@@ -20,7 +20,8 @@ set -e
 N="${1:?usage: sh tools/round_close.sh <round-number> [--sf1]}"
 R=$(printf 'r%02d' "$N")
 
-python -m pytest tests/ -q
+# the full suite: pytest.ini deselects the slow tests by default
+python -m pytest tests/ -q -m "slow or not slow"
 python tools/verify_local.py --out "CORRECTNESS_LOCAL_${R}.json" /root/testdata/sf0.01
 python tools/plan_audit.py /root/testdata/sf0.01
 python bench.py > "BENCH_local_${R}.json"
