@@ -37,7 +37,6 @@ from pyspark.sql.types import DoubleType, StringType
 
 from clearcare_data_pipeline_spark.schema import (
     ALGORITHM_INVALID_REGEX,
-    ALLOWED_CODE_TYPES,
     CODE_FORMAT_REGEX,
     CODE_TYPE_NORMALIZATION,
     ICD_CODE_MAX_LEN,
@@ -139,11 +138,6 @@ def code_format_valid_expr(code: Column, code_type: Column) -> Column:
     checks.append((code_type == "ICD") & F.length(code).between(ICD_CODE_MIN_LEN, ICD_CODE_MAX_LEN))
     no_code = code.isNull() | (F.trim(code) == "")
     return reduce(lambda a, b: a | b, checks, no_code)
-
-
-def allowed_code_type_expr(normalized_type: Column) -> Column:
-    """R3 gate: normalized type must be in the allowed set."""
-    return normalized_type.isin(ALLOWED_CODE_TYPES)
 
 
 # ----------------------------------------------------------------------

@@ -225,7 +225,6 @@ def hierarchical_assign(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     stats: dict | None = None,
-    exchange: str = "auto",
 ) -> DataFrame:
     """Recursive B-way k-means partitioning (bisecting-k-means
     generalized — the same family as Spark MLlib's BisectingKMeans and
@@ -247,21 +246,21 @@ def hierarchical_assign(
     log_branch(n / target_width), so total work is O(n log n) — no
     stage is ever O(n x total_clusters).
 
-    ``exchange`` picks how a level's sub-centroids move between
-    assignment and means (VERDICT r7 #6):
-    * ``"driver"`` — collect the splitting clusters' centroids into a
-      dict and ship it into an Arrow-batched UDF closure. Cheapest at
-      benched scales; bounded by driver memory at ~10M simultaneous
-      centroids (HIER_DRIVER_CENTROID_CAP).
-    * ``"join"`` — keep centroids in a DataFrame keyed on cluster and
-      assign via cogroup + applyInPandas; means update that frame with
-      a keyed left join. No driver-sized state anywhere — the 100 TB
-      path. Bit-identical to the driver exchange (same dimension-major
-      float64 fold, same lowest-sub argmin, same DECIMAL means, same
-      exact-fixed-point early stop), so the switch can never change a
-      result, only where the centroid bytes live.
-    * ``"auto"`` (default) — driver until a level's splitting-cluster
-      count x branch exceeds HIER_DRIVER_CENTROID_CAP, join beyond.
+    A level's sub-centroids move between assignment and means by one
+    of two exchanges, picked from the level's size alone (VERDICT r7
+    #6):
+    * driver — collect the splitting clusters' centroids into a dict
+      and ship it into an Arrow-batched UDF closure. Used while the
+      level's splitting-cluster count x branch stays within
+      HIER_DRIVER_CENTROID_CAP (~10M simultaneous centroids, the
+      driver-memory bound); cheapest at benched scales.
+    * join — keep centroids in a DataFrame keyed on cluster and assign
+      via cogroup + applyInPandas; means update that frame with a
+      keyed left join. No driver-sized state anywhere — the 100 TB
+      path, used above the cap. Bit-identical to the driver exchange
+      (same dimension-major float64 fold, same lowest-sub argmin, same
+      DECIMAL means, same exact-fixed-point early stop), so the switch
+      can never change a result, only where the centroid bytes live.
     ``stats["join_levels"]`` reports how many levels used the join
     exchange.
 
@@ -270,7 +269,7 @@ def hierarchical_assign(
     and joins that frame back onto the work set — broadcast under
     HIER_SPLIT_BROADCAST_CAP rows, shuffle join above — so the only
     per-level driver round-trip is the scalar splitting-cluster count
-    (which also drives the ``auto`` trigger). The old implementation
+    (which also picks the exchange). The old implementation
     collected one row per LIVE cluster every level and rebuilt the
     split set via createDataFrame — ~30M rows (~0.5-1 GB) through the
     driver at 1B vectors / width 32.
@@ -286,9 +285,6 @@ def hierarchical_assign(
     pairwise stage then pays that cluster's true quadratic cost, which
     is output-bound anyway for identical vectors.
     """
-    if exchange not in ("auto", "driver", "join"):
-        raise ValueError(f"exchange must be auto|driver|join, got {exchange!r}")
-
     import time as _time
 
     base = df.select(
@@ -307,11 +303,11 @@ def hierarchical_assign(
             # cluster was ~30M rows (~0.5-1 GB) through the driver at
             # 1B vectors / width 32, exactly the state class the join
             # exchange exists to avoid. Only a SCALAR (the splitting-
-            # cluster count) ever reaches the driver; it also drives
-            # the auto exchange trigger (r8 #7), so `auto` works
-            # without collecting ids. The driver exchange still needs
-            # the id list, but only runs when n_split*branch is under
-            # HIER_DRIVER_CENTROID_CAP — a bounded collect.
+            # cluster count) ever reaches the driver; it also picks
+            # the exchange (r8 #7) without collecting ids. The driver
+            # exchange still needs the id list, but only runs when
+            # n_split*branch is under HIER_DRIVER_CENTROID_CAP — a
+            # bounded collect.
             t_level = _time.time()
             split_df = (
                 cur.groupBy("cluster")
@@ -347,10 +343,7 @@ def hierarchical_assign(
                 )
                 break
             levels_run += 1
-            use_join = exchange == "join" or (
-                exchange == "auto"
-                and n_split * branch > HIER_DRIVER_CENTROID_CAP
-            )
+            use_join = n_split * branch > HIER_DRIVER_CENTROID_CAP
             # broadcast the split set below a cap (its driver footprint
             # is one bigint per splitting cluster), shuffle-join above
             # it so no level ever materializes data-sized state
@@ -370,15 +363,9 @@ def hierarchical_assign(
                     join_levels += 1
                     final_sub = _split_level_join(work, branch, iters)
                 else:
-                    # in auto mode the driver path only runs when
-                    # n_split fit under the cap, so `head` IS the
-                    # complete split set; forced exchange="driver" can
-                    # overflow the cap, and a truncated head would
-                    # silently leave the missing clusters unsplit —
-                    # re-collect the full set in that case (the caller
-                    # chose driver-sized state explicitly)
-                    rows = head if len(head) < cap_rows else split_df.collect()
-                    split_ids = sorted(r["cluster"] for r in rows)
+                    # the driver path only runs when n_split fits under
+                    # the cap, so `head` IS the complete split set
+                    split_ids = sorted(r["cluster"] for r in head)
                     final_sub = _split_level_driver(work, split_ids, branch, iters)
                 t_exchange = _time.time()
                 cur = (
@@ -432,7 +419,7 @@ def _init_sub_centroid_ids(work: DataFrame, branch: int) -> DataFrame:
 def _split_level_driver(
     work: DataFrame, split_ids: list[int], branch: int, iters: int
 ) -> DataFrame:
-    """One splitting level with the DRIVER centroid exchange: centroid
+    """One splitting level with the DRIVER centroid exchange — centroid
     matrices live in a dict shipped into the Arrow UDF closure, means
     come back via collect. Bounded by HIER_DRIVER_CENTROID_CAP total
     centroids (<= branch x dim doubles per splitting cluster)."""
@@ -636,7 +623,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     target_width: int = SEMDEDUP_TARGET_WIDTH,
-    flat_max_n: int = SEMDEDUP_FLAT_MAX_N,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the corpus with k-means, then inside
@@ -651,7 +637,7 @@ def semantic_dedup(
     cluster id (one shuffle; never a global all-pairs product), so the
     quadratic cost is confined within each cluster. When ``k`` is None
     (the default) the partitioning is corpus-count-keyed (VERDICT r7
-    #3): up to ``flat_max_n`` vectors it is flat auto-k Lloyd's
+    #3): up to SEMDEDUP_FLAT_MAX_N vectors it is flat auto-k Lloyd's
     (k = ceil(n / width) — one level, no multi-level driver
     round-trips, measured 4.8 s vs 13.9 s hierarchical at sf1's 51k
     vectors); beyond that it is ``hierarchical_assign`` — recursive
@@ -675,7 +661,7 @@ def semantic_dedup(
     )
 
     if k is None:
-        # O(cap) branch probe (VERDICT r8 #4a): LIMIT flat_max_n+1
+        # O(cap) branch probe (VERDICT r8 #4a): LIMIT cap+1
         # short-circuits the count after the cap instead of scanning
         # the whole corpus (the dedicated full-count job was the
         # measured +8% at sf10). Below the cap the limited count IS
@@ -686,7 +672,7 @@ def semantic_dedup(
         # run via probed_dot; any probed dim yields bit-identical
         # scores because dot_expr_fixed falls back per-row on size
         # mismatch and is IEEE-identical to the fold when it applies).
-        probe = df.limit(flat_max_n + 1).agg(
+        probe = df.limit(SEMDEDUP_FLAT_MAX_N + 1).agg(
             F.count(F.lit(1)).alias("n"),
             F.max(F.size(F.col(vec_col))).alias("dim"),
         ).collect()[0]
@@ -697,7 +683,7 @@ def semantic_dedup(
             if 1 <= pdim <= DOT_UNROLL_MAX_DIM
             else dot_expr
         )
-        if n <= flat_max_n:
+        if n <= SEMDEDUP_FLAT_MAX_N:
             _cents, assigned = kmeans_fit(
                 df,
                 k=derive_k(n, target_width),

@@ -275,8 +275,6 @@ def blocked_similarity_join(
     text_col: str,
     min_sim: float = 0.7,
     id_col: str = "id",
-    n_salt: int | str = "auto",
-    target_block_pairs: int = SALT_TARGET_BLOCK_PAIRS,
     stats: dict | None = None,
 ) -> DataFrame:
     """Record-linkage candidate scoring with blocking.
@@ -299,31 +297,23 @@ def blocked_similarity_join(
     numbered repartition on the block keys is exempt from AQE
     coalescing and keeps the blocks spread.
 
-    Bound (ADVICE r6): with ``n_salt=1`` each block still lands wholly
-    in one task, so one hot block's quadratic pair explosion serializes
-    on one core. ``n_salt=s`` splits every block into s sub-buckets —
-    left rows hash into one sub-bucket, right rows replicate into all
-    s — cutting the largest task s-fold at the cost of an s× right-side
-    shuffle. Output is identical for any s (each (l, r) pair meets in
-    exactly the sub-bucket hash(l) picks).
+    Bound (ADVICE r6): unsalted, each block lands wholly in one task,
+    so one hot block's quadratic pair explosion serializes on one core.
+    A salt s splits every block into s sub-buckets — left rows hash
+    into one sub-bucket, right rows replicate into all s — cutting the
+    largest task s-fold at the cost of an s× right-side shuffle.
+    Output is identical for any s (each (l, r) pair meets in exactly
+    the sub-bucket hash(l) picks).
 
-    ``n_salt="auto"`` (the default — VERDICT r7 #5: an opt-in salt
-    defaulting to 1 left the sf10 skew_demo's hot block serialized at
-    207 s vs 26.7 s salted) derives s from a cheap block-width probe —
-    one groupBy(count) per side joined on the block keys, linear work,
-    the same probe discipline as cosine_topk's guard — as
-    ceil(max block pair count / target_block_pairs), capped at
-    SALT_MAX. Uniform inputs probe to s=1 and pay no replication.
-    Pass ``stats`` to observe ``{"n_salt": <chosen>}``.
+    s comes from a cheap block-width probe (VERDICT r7 #5: an opt-in
+    salt defaulting to 1 left the sf10 skew_demo's hot block
+    serialized at 207 s vs 26.7 s salted) — one groupBy(count) per
+    side joined on the block keys, linear work, the same probe
+    discipline as cosine_topk's guard — as ceil(max block pair count /
+    SALT_TARGET_BLOCK_PAIRS), capped at SALT_MAX. Uniform inputs probe
+    to s=1 and pay no replication. Pass ``stats`` to observe
+    ``{"n_salt": <chosen>}``.
     """
-    # ADVICE r8 #4: only the exact string 'auto' is meaningful — any
-    # other str (e.g. a config-sourced '8') would fall through to the
-    # `n_salt > 1` comparison and raise an opaque TypeError deep in
-    # the operator instead of a clear argument error here.
-    if isinstance(n_salt, str) and n_salt != "auto":
-        raise ValueError(
-            f"n_salt must be a positive int or the string 'auto', got {n_salt!r}"
-        )
     n_part = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     bkeys = [f"_b_{c}" for c in block_cols]
     lt = left.select(
@@ -336,14 +326,13 @@ def blocked_similarity_join(
         F.col(text_col).alias("right_text"),
         *[F.col(c).alias(f"_b_{c}") for c in block_cols],
     )
-    if n_salt == "auto":
-        mx = (
-            lt.groupBy(bkeys).count().withColumnRenamed("count", "_lw")
-            .join(rt.groupBy(bkeys).count().withColumnRenamed("count", "_rw"), bkeys)
-            .agg(F.max(F.col("_lw") * F.col("_rw")).alias("mx"))
-            .collect()[0]["mx"]
-        )
-        n_salt = max(1, min(SALT_MAX, -((mx or 0) // -target_block_pairs)))
+    mx = (
+        lt.groupBy(bkeys).count().withColumnRenamed("count", "_lw")
+        .join(rt.groupBy(bkeys).count().withColumnRenamed("count", "_rw"), bkeys)
+        .agg(F.max(F.col("_lw") * F.col("_rw")).alias("mx"))
+        .collect()[0]["mx"]
+    )
+    n_salt = max(1, min(SALT_MAX, -((mx or 0) // -SALT_TARGET_BLOCK_PAIRS)))
     if stats is not None:
         stats["n_salt"] = n_salt
     if n_salt > 1:

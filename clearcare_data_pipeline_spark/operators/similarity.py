@@ -84,17 +84,6 @@ def _vec_bytes_estimate(dim: int, max_rows: int) -> int:
     return max_rows * (dim * 8 + 32)
 
 
-def _estimated_vec_bytes(df: DataFrame, max_rows: int, vec_col: str = "embedding") -> int:
-    """Byte estimate with the dimension probed from one row (a LIMIT-1
-    job). The flat-branch caller avoids even this by folding the dim
-    into its existing LIMIT count probe; this standalone form serves
-    direct callers. An empty corpus estimates 0 and broadcasts
-    trivially."""
-    head = df.select(F.size(F.col(vec_col)).alias("d")).head(1)
-    dim = int(head[0]["d"]) if head and head[0]["d"] is not None else 0
-    return _vec_bytes_estimate(dim, max_rows)
-
-
 def as_double_vec(col: Column) -> Column:
     """float32 array -> double array (exact widening; all downstream
     arithmetic is then engine-portable)."""
@@ -162,10 +151,6 @@ def probed_dot(df: DataFrame, vec_col: str = "embedding"):
 
 def norm_expr(v: Column) -> Column:
     return F.sqrt(dot_expr(v, v))
-
-
-def cosine_expr(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    return dot_expr(a, b) / (norm_a * norm_b)
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -432,27 +417,17 @@ def lsh_near_dup_pairs(
     df: DataFrame,
     min_cosine: float = 0.99,
     id_col: str = "vec_id",
-    num_planes: int | None = None,
-    flat_max_n: int = LSH_FLAT_MAX_N,
-    n_bands: int = 1,
 ) -> DataFrame:
     """Near-duplicate vector pairs: bucket by hyperplane signature,
     score only intra-bucket pairs (the 100 TB-safe plan: a keyed
     self-join, never a cross product).
 
-    ``n_bands > 1`` (VERDICT r8 #6) applies the OR construction via
-    ``lsh_banded_pairs``: a pair is a candidate if it collides in ANY
-    of ``n_bands`` independent plane families, lifting recall for
-    non-identical near-dups from the single-band ~p^15 to
-    1-(1-p^15)^bands at ``n_bands``x the bucketing cost. The measured
-    recall gate lives in queries/similarity.py (emb_lsh_recall).
-
-    ``num_planes=None`` (default) is corpus-count-keyed (r8, mirroring
-    semantic_dedup's crossover): up to ``flat_max_n`` vectors a single
-    fixed ``LSH_FLAT_PLANES``-plane bucketing is used — one signature
-    pass, no ladder machinery, the fast shape for small corpora — and
-    beyond it the adaptive prefix refinement (``refined_lsh_buckets``):
-    dense signature regions split deeper along LSH_REFINE_LADDER until
+    The bucketing is corpus-count-keyed (r8, mirroring semantic_dedup's
+    crossover): up to LSH_FLAT_MAX_N vectors a single fixed
+    ``LSH_FLAT_PLANES``-plane bucketing is used — one signature pass,
+    no ladder machinery, the fast shape for small corpora — and beyond
+    it the adaptive prefix refinement (``refined_lsh_buckets``): dense
+    signature regions split deeper along LSH_REFINE_LADDER until
     buckets hold at most LSH_LEAF_CAP vectors, so the intra-bucket
     quadratic is bounded regardless of corpus size OR directional
     skew. The count probe is one O(n) pass; the DuckDB oracle twin
@@ -461,72 +436,47 @@ def lsh_near_dup_pairs(
     copies share the full signature, hence always one bucket, under
     either branch; recall for NON-identical pairs at the threshold
     decays as regions refine (cos 0.99 collides per-plane with
-    p ~ 0.955), so a recall-critical deployment should OR several
-    independent signature bands (the MinHash-band construction in
-    operators/dedup.py) on top. An explicit ``num_planes`` keeps the
-    fixed-width single-level bucketing unconditionally."""
-    if n_bands > 1:
-        # ADVICE r9 #4: an explicit num_planes is forwarded as the
-        # per-band width (lsh_banded_pairs' planes_per_band) instead of
-        # being silently ignored; flat_max_n has no meaning in the
-        # banded path (no crossover), so a non-default value is a
-        # caller error, not something to drop on the floor.
-        if flat_max_n != LSH_FLAT_MAX_N:
-            raise ValueError(
-                "flat_max_n is a single-band crossover knob; it does not "
-                "apply when n_bands > 1"
-            )
-        return lsh_banded_pairs(
-            df,
-            min_cosine=min_cosine,
-            id_col=id_col,
-            n_bands=n_bands,
-            planes_per_band=(
-                num_planes if num_planes is not None else LSH_FLAT_PLANES
-            ),
-        )
-    flat = False
-    if num_planes is None:
-        # O(cap) branch probe (VERDICT r8 #4a): the decision only
-        # needs "at most flat_max_n rows or not", so a LIMIT cap+1
-        # count short-circuits after flat_max_n+1 rows instead of
-        # scanning the whole corpus (the dedicated full-count job was
-        # the measured +8% at sf10) — the same bounded-probe
-        # discipline as cosine_topk's broadcast guard.
-        # One probe job returns BOTH the capped count and the vector
-        # dimension (for the broadcast byte gate below) — folding the
-        # ADVICE r9 #3 dim probe into the existing LIMIT probe keeps
-        # the flat branch at a single probe job.
-        # F.max (not F.first) over the capped sample: null-skipping, so
-        # a NULL embedding in the sample cannot zero the dim and defeat
-        # the byte gate, and deterministic regardless of partition
-        # order (ADVICE r10 #4).
-        probe = df.limit(flat_max_n + 1).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size(F.col("embedding"))).alias("dim"),
-        ).collect()[0]
-        flat_dim = int(probe["dim"]) if probe["dim"] is not None else 0
-        # ADVICE r10 #3: the byte gate sizes the ACTUAL corpus (probed
-        # capped count), not the crossover ceiling — a 100-row x
-        # 4096-dim corpus is ~3 MB, not the 2 GB a flat_max_n estimate
-        # would claim, and keeps its zero-shuffle broadcast plan.
-        flat_rows = min(int(probe["n"]), flat_max_n)
-        # the probed dim also picks the unrolled-dot fast path for the
-        # pair scoring below (bit-identical; see dot_expr_fixed)
-        dot = (
-            (lambda x, y: dot_expr_fixed(x, y, flat_dim))
-            if 1 <= flat_dim <= DOT_UNROLL_MAX_DIM
-            else dot_expr
-        )
-        if int(probe["n"]) <= flat_max_n:
-            b = lsh_buckets(df, id_col, LSH_FLAT_PLANES)
-            flat = True
-        else:
-            b = refined_lsh_buckets(df, id_col)
+    p ~ 0.955), so a recall-critical caller uses ``lsh_banded_pairs``
+    (VERDICT r8 #6), which ORs several independent plane families —
+    the MinHash-band construction of operators/dedup.py; the measured
+    recall gate lives in queries/similarity.py (emb_lsh_recall)."""
+    # O(cap) branch probe (VERDICT r8 #4a): the decision only needs
+    # "at most LSH_FLAT_MAX_N rows or not", so a LIMIT cap+1 count
+    # short-circuits after cap+1 rows instead of scanning the whole
+    # corpus (the dedicated full-count job was the measured +8% at
+    # sf10) — the same bounded-probe discipline as cosine_topk's
+    # broadcast guard.
+    # One probe job returns BOTH the capped count and the vector
+    # dimension (for the broadcast byte gate below) — folding the
+    # ADVICE r9 #3 dim probe into the existing LIMIT probe keeps the
+    # flat branch at a single probe job.
+    # F.max (not F.first) over the capped sample: null-skipping, so a
+    # NULL embedding in the sample cannot zero the dim and defeat the
+    # byte gate, and deterministic regardless of partition order
+    # (ADVICE r10 #4).
+    probe = df.limit(LSH_FLAT_MAX_N + 1).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size(F.col("embedding"))).alias("dim"),
+    ).collect()[0]
+    n = int(probe["n"])
+    dim = int(probe["dim"]) if probe["dim"] is not None else 0
+    # the probed dim also picks the unrolled-dot fast path for the
+    # pair scoring below (bit-identical; see dot_expr_fixed)
+    dot = (
+        (lambda x, y: dot_expr_fixed(x, y, dim))
+        if 1 <= dim <= DOT_UNROLL_MAX_DIM
+        else dot_expr
+    )
+    flat = n <= LSH_FLAT_MAX_N
+    if flat:
+        b = lsh_buckets(df, id_col, LSH_FLAT_PLANES)
     else:
-        dot = probed_dot(df)
-        b = lsh_buckets(df, id_col, num_planes)
-    use_broadcast = flat and _vec_bytes_estimate(flat_dim, flat_rows) <= LSH_BROADCAST_BYTES_CAP
+        b = refined_lsh_buckets(df, id_col)
+    # ADVICE r10 #3: the byte gate sizes the ACTUAL corpus (the probed
+    # count, exact on the flat branch), not the crossover ceiling — a
+    # 100-row x 4096-dim corpus is ~3 MB, not the 2 GB a cap-sized
+    # estimate would claim, and keeps its zero-shuffle broadcast plan.
+    use_broadcast = flat and _vec_bytes_estimate(dim, n) <= LSH_BROADCAST_BYTES_CAP
     if not use_broadcast:
         # Shuffle-join path: both sides derive from ONE explicit hash
         # repartition so they canonicalize to the same Exchange (r13,
@@ -539,7 +489,7 @@ def lsh_near_dup_pairs(
     left = b.select(F.col("bucket"), F.col(id_col).alias("a"), F.col("dvec").alias("va"), F.col("norm").alias("na"))
     right = b.select(F.col("bucket"), F.col(id_col).alias("b"), F.col("dvec").alias("vb"), F.col("norm").alias("nb"))
     if use_broadcast:
-        # the flat branch's corpus is <= flat_max_n rows by the probe,
+        # the flat branch's corpus is <= LSH_FLAT_MAX_N rows by the probe,
         # so the bucket self-join broadcasts its right side: zero
         # shuffles, one stage, instead of two exchanges over a tiny
         # input. Gated on ESTIMATED BYTES, not row count (ADVICE r9

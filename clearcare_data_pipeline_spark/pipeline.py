@@ -43,16 +43,13 @@ from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, split_clean_qu
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
 
 
-def clean_charges(
-    df: DataFrame, *, normalize_types: bool = True, validate: bool = True, dedup: bool = True
-) -> DataFrame:
+def clean_charges(df: DataFrame, *, validate: bool = True, dedup: bool = True) -> DataFrame:
     """The full cleaning transform chain; returns the cleaned canonical
     table (typed prices, normalized text/modifiers/code types, invalid
     code formats filtered, exact duplicates dropped)."""
     df = normalize_headers(df)
     df = ensure_columns(df, CANONICAL_COLUMNS)
-    if normalize_types:
-        df = normalize_code_type(df)
+    df = normalize_code_type(df)
     df = clean_price_fields(df)
     df = scrub_invalid_tokens(df, [c for c in CANONICAL_COLUMNS if c not in
                                    {"negotiated_price", "negotiated_percentage", "gross_charge",
@@ -120,11 +117,12 @@ def run_cleaning_pipeline(df: DataFrame) -> Iterator[CleaningResult]:
         tagged.unpersist()
 
 
-def score_summary(df: DataFrame, *, already_clean: bool = False) -> DataFrame:
-    """One-row DataFrame version of the score computation (A11) —
-    fully declarative so it can run inside a larger plan (and be
+def score_summary(cleaned: DataFrame) -> DataFrame:
+    """One-row DataFrame version of the score computation (A11) over
+    an already-cleaned table (``clean_charges`` output) — fully
+    declarative so it can run inside a larger plan (and be
     oracle-checked in SQL)."""
-    tagged = tag_violations(df if already_clean else clean_charges(df))
+    tagged = tag_violations(cleaned)
     agg = tagged.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.count(F.when(F.col("rules_violated") != "", F.lit(1))).alias("quarantined_rows"),

@@ -61,15 +61,6 @@ def missing_code_types(histogram: dict[str, int]) -> list[str]:
     return [t for t in ALLOWED_CODE_TYPES if not histogram.get(t)]
 
 
-def code_type_mapping_audit(df: DataFrame) -> DataFrame:
-    """A5: raw type -> set of normalized types it mapped to."""
-    return (
-        df.where(F.col("code_type").isNotNull())
-        .groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.sort_array(F.collect_set("code_type")).alias("normalized_types"))
-    )
-
-
 def modifier_tokens(df: DataFrame) -> DataFrame:
     """A6 keys: one row per token of the normalized modifier list."""
     return df.select(F.explode(modifiers_to_array_expr(F.col("modifiers"))).alias("modifier"))

@@ -3,6 +3,7 @@ plus a DuckDB oracle SQL twin for the driver's correctness gate."""
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +25,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #                         sf10 through a scale-safe companion form
 #                         named in the receipt.
 #
-# Gate harnesses derive the runnable set from this map
+# Gate harnesses (tools/sf10_gate.sh, verify_segmented
+# --exclude-scale-class) derive the runnable set from this map
 # (``runnable_queries(exclude_classes=...)``) instead of copying
 # names around; tests/test_scale_class.py pins that every registry
 # entry resolves and that each non-prod entry names its companion.
@@ -75,47 +77,25 @@ def runnable_queries(exclude_classes: set[str] | frozenset[str] = frozenset()) -
     ]
 
 
-def all_queries() -> dict[str, QueryFn]:
-    from clearcare_data_pipeline_spark.queries import (
-        advanced,
-        charges,
-        eventsops,
-        extractors,
-        relational,
-        similarity,
-        stats,
-        textops,
-        textops2,
-        textops3,
-        tpch_extra,
-        tpch_extra2,
-        tpch_extra3,
-    )
+# The query modules, in registry order; each defines QUERIES and
+# ORACLES dicts keyed by query name.
+_MODULES = (
+    "relational", "tpch_extra", "tpch_extra2", "tpch_extra3", "advanced",
+    "stats", "charges", "textops", "textops2", "textops3", "similarity",
+    "eventsops", "extractors",
+)
 
-    out: dict[str, QueryFn] = {}
-    for mod in (relational, tpch_extra, tpch_extra2, tpch_extra3, advanced, stats, charges, textops, textops2, textops3, similarity, eventsops, extractors):
-        out.update(mod.QUERIES)
+
+def _merged(attr: str) -> dict:
+    out: dict = {}
+    for name in _MODULES:
+        out.update(getattr(importlib.import_module(f"{__name__}.{name}"), attr))
     return out
+
+
+def all_queries() -> dict[str, QueryFn]:
+    return _merged("QUERIES")
 
 
 def all_oracles() -> dict[str, str]:
-    from clearcare_data_pipeline_spark.queries import (
-        advanced,
-        charges,
-        eventsops,
-        extractors,
-        relational,
-        similarity,
-        stats,
-        textops,
-        textops2,
-        textops3,
-        tpch_extra,
-        tpch_extra2,
-        tpch_extra3,
-    )
-
-    out: dict[str, str] = {}
-    for mod in (relational, tpch_extra, tpch_extra2, tpch_extra3, advanced, stats, charges, textops, textops2, textops3, similarity, eventsops, extractors):
-        out.update(mod.ORACLES)
-    return out
+    return _merged("ORACLES")

@@ -138,7 +138,7 @@ def q_charges_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_charges_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return score_summary(_cleaned(spark, sf_dir), already_clean=True)
+    return score_summary(_cleaned(spark, sf_dir))
 
 
 # --- q: quarantine rows (R4) -------------------------------------------

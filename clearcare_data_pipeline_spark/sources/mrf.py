@@ -56,19 +56,6 @@ def read_csv_after_preamble(spark: SparkSession, path: str) -> DataFrame:
     return df.na.fill("")
 
 
-def code_slot_structs(num_slots: int = 4) -> Column:
-    """X1 helper: array of (code, raw_type) structs from code|i cols."""
-    return F.array(
-        *[
-            F.struct(
-                F.col(f"`code|{i}`").alias("code"),
-                F.col(f"`code|{i}|type`").alias("raw_type"),
-            )
-            for i in range(1, num_slots + 1)
-        ]
-    )
-
-
 def explode_code_slots(df: DataFrame, available_cols: list[str]) -> DataFrame:
     """X1: one output row per valid (code, type) slot; blank slots
     skipped; raw type normalized (F7) and gated to the allowed set

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,22 +24,32 @@ _DIM_TABLES = {"region", "nation", "customer", "supplier", "part"}
 # passing it back via .schema(...) skips that job on every load after
 # the first — exactly what a catalog/metastore does. This memoizes
 # METADATA only; every execution still scans the parquet files.
-# Keyed on (path, mtime, size) — ADVICE r13 #2: a path-only key served
-# a stale schema when a fixture was regenerated in-place (e.g. a test
-# rewriting testdata); the stat pair invalidates the memo the way a
-# metastore's table version would. The stat call is ~1 us, noise next
-# to the ~100 ms inference job it replaces.
-_SCHEMA_CACHE: dict[tuple[str, float, int], object] = {}
+# One entry per path, holding the stat key the schema was inferred
+# under (ADVICE r13 #2: a bare path key served a stale schema when a
+# fixture was regenerated in place); a changed key re-infers and
+# replaces the entry, so the memo never grows past one entry per
+# table. The stat calls cost microseconds, noise next to the ~100 ms
+# inference job they replace.
+_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
 
 
-def _schema_key(path: str) -> tuple[str, float, int]:
+def _stat_key(path: str) -> tuple | None:
+    """(mtime, size) of a single-file table. A directory-style table
+    also folds in its newest file mtime: rewriting a part file in place
+    leaves the directory's own mtime unchanged. None if the path cannot
+    be stat'ed (nothing is memoized then)."""
     try:
         st = os.stat(path)
-        return (path, st.st_mtime, st.st_size)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        newest = max(
+            (os.stat(os.path.join(d, f)).st_mtime_ns
+             for d, _dirs, files in os.walk(path) for f in files),
+            default=0,
+        )
+        return (st.st_mtime_ns, st.st_size, newest)
     except OSError:
-        # directory-style parquet or vanished path: stat the dir entry
-        # itself if possible, else fall back to a path-only key
-        return (path, 0.0, -1)
+        return None
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -60,13 +71,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP_NS -> TIMESTAMP).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _schema_key(path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+    key = _stat_key(path)
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is not None and cached[0] == key:
+        df = spark.read.schema(cached[1]).parquet(path)
     else:
-        df = spark.read.schema(cached).parquet(path)
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMA_CACHE[path] = (key, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     if name not in _DIM_TABLES:

@@ -1,6 +1,9 @@
-"""blocked_similarity_join salting (ADVICE r6): identical output for
-any n_salt, and the right side is the replicated one."""
+"""blocked_similarity_join salting (ADVICE r6, VERDICT r7 #5): the salt
+comes from the block-width probe against SALT_TARGET_BLOCK_PAIRS,
+output is identical for any salt, and the right side is the replicated
+one. Tests pick the salt by patching that target."""
 
+from clearcare_data_pipeline_spark.operators import joins
 from clearcare_data_pipeline_spark.operators.joins import blocked_similarity_join
 
 
@@ -19,73 +22,59 @@ def _frame(spark):
     return spark.createDataFrame(rows, "id long, txt string, blk string")
 
 
-def test_salted_output_identical(spark):
+def _join(monkeypatch, target, df, **kw):
+    """Run the join with SALT_TARGET_BLOCK_PAIRS patched to ``target``;
+    returns (output, chosen salt)."""
+    monkeypatch.setattr(joins, "SALT_TARGET_BLOCK_PAIRS", target)
+    stats = {}
+    out = blocked_similarity_join(df, df, ["blk"], "txt", stats=stats, **kw)
+    return out, stats["n_salt"]
+
+
+def test_salted_output_identical(spark, monkeypatch):
     df = _frame(spark)
-    base = blocked_similarity_join(df, df, ["blk"], "txt", min_sim=0.3, n_salt=1)
-    salted = blocked_similarity_join(df, df, ["blk"], "txt", min_sim=0.3, n_salt=4)
+    # hot block: 6x6 = 36 pairs -> target 10_000 gives s=1, 10 gives s=4
+    base, s1 = _join(monkeypatch, 10_000, df, min_sim=0.3)
+    salted, s4 = _join(monkeypatch, 10, df, min_sim=0.3)
+    assert (s1, s4) == (1, 4)
     key = lambda r: (r["left_id"], r["right_id"], r["similarity"])
     a = sorted(map(key, base.collect()))
     b = sorted(map(key, salted.collect()))
     assert a == b and len(a) > 0
 
 
-def test_salt_larger_than_block(spark):
+def test_salt_larger_than_block(spark, monkeypatch):
     df = _frame(spark)
-    base = blocked_similarity_join(df, df, ["blk"], "txt", min_sim=0.0, n_salt=1)
-    salted = blocked_similarity_join(df, df, ["blk"], "txt", min_sim=0.0, n_salt=17)
+    base, _ = _join(monkeypatch, 10_000, df, min_sim=0.0)
+    salted, s = _join(monkeypatch, 1, df, min_sim=0.0)
+    assert s > 6  # more sub-buckets than the hot block has members
     assert base.count() == salted.count()
 
 
-def test_auto_salt_probes_hot_block(spark):
-    """VERDICT r7 #5: n_salt='auto' must derive the split from the
-    block-width probe — a hot block over the target splits, a uniform
-    input stays at 1 — with identical output either way."""
+def test_auto_salt_probes_hot_block(spark, monkeypatch):
+    """VERDICT r7 #5: the split comes from the block-width probe — a
+    hot block over the target splits, a uniform input stays at 1 —
+    with identical output either way."""
     hot = [(i, "blk0", f"txt{i % 9}") for i in range(60)]
     cold = [(1000 + i, f"b{i}", f"txt{i}") for i in range(10)]
     df = spark.createDataFrame(hot + cold, ["id", "blk", "txt"])
 
-    stats = {}
-    out = blocked_similarity_join(
-        df, df, ["blk"], "txt", min_sim=0.0,
-        n_salt="auto", target_block_pairs=500, stats=stats,
-    )
     # hot block: 60x60 = 3600 pairs / 500 target -> ceil = 8
-    assert stats["n_salt"] == 8
-    base = blocked_similarity_join(df, df, ["blk"], "txt", min_sim=0.0, n_salt=1)
+    out, s = _join(monkeypatch, 500, df, min_sim=0.0)
+    assert s == 8
+    base, s_base = _join(monkeypatch, 10_000, df, min_sim=0.0)
+    assert s_base == 1
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, base.collect()))
 
-    stats2 = {}
-    blocked_similarity_join(
-        df, df, ["blk"], "txt", min_sim=0.0,
-        n_salt="auto", target_block_pairs=10_000, stats=stats2,
-    ).count()
-    assert stats2["n_salt"] == 1
 
-
-def test_auto_salt_caps_and_handles_empty(spark):
-    from clearcare_data_pipeline_spark.operators.joins import SALT_MAX
-
+def test_auto_salt_caps_and_handles_empty(spark, monkeypatch):
     rows = [(i, "blk0", "t") for i in range(40)]
     df = spark.createDataFrame(rows, ["id", "blk", "txt"])
-    stats = {}
-    blocked_similarity_join(
-        df, df, ["blk"], "txt", n_salt="auto", target_block_pairs=1, stats=stats
-    ).count()
-    assert stats["n_salt"] == SALT_MAX
+    out, s = _join(monkeypatch, 1, df)
+    out.count()
+    assert s == joins.SALT_MAX
 
     empty = df.where("id < 0")
-    stats2 = {}
-    out = blocked_similarity_join(
-        empty, empty, ["blk"], "txt", n_salt="auto", stats=stats2
-    )
-    assert out.count() == 0 and stats2["n_salt"] == 1
-
-
-def test_non_auto_string_n_salt_rejected(spark):
-    """ADVICE r8 #4: any str other than 'auto' must raise a clear
-    ValueError, not an opaque TypeError deep in the operator."""
-    import pytest
-
-    df = _frame(spark)
-    with pytest.raises(ValueError, match="n_salt"):
-        blocked_similarity_join(df, df, ["blk"], "txt", n_salt="8")
+    stats = {}
+    out = blocked_similarity_join(empty, empty, ["blk"], "txt", stats=stats)
+    assert out.count() == 0 and stats["n_salt"] == 1

@@ -149,57 +149,15 @@ def test_semantic_dedup_flags_planted_copies(spark):
 
 
 @pytest.mark.slow
-def test_hierarchical_join_exchange_bit_identical(spark):
-    """VERDICT r7 #6: the keyed-join centroid exchange (the 100 TB
-    path, forced via exchange='join') must emit exactly the driver
-    exchange's assignments — same Lloyd fold, same early stop, same
-    path-encoded ids."""
-    from clearcare_data_pipeline_spark.operators.clustering import (
-        hierarchical_assign,
-    )
-    from clearcare_data_pipeline_spark.sources.tables import load_table
-
-    vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    stats_d, stats_j = {}, {}
-    drv = hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3,
-        stats=stats_d, exchange="driver",
-    )
-    jn = hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3,
-        stats=stats_j, exchange="join",
-    )
-    assert stats_d["join_levels"] == 0
-    assert stats_j["join_levels"] == stats_j["levels"] > 0
-    d = {r.vec_id: r.cluster for r in drv.collect()}
-    j = {r.vec_id: r.cluster for r in jn.collect()}
-    assert d == j
-
-
-def test_hierarchical_exchange_rejects_bad_mode(spark):
-    import pytest
-
-    from clearcare_data_pipeline_spark.operators.clustering import (
-        hierarchical_assign,
-    )
-
-    df = spark.createDataFrame(_vec_rows(), ["vec_id", "embedding"])
-    with pytest.raises(ValueError, match="exchange"):
-        hierarchical_assign(df, exchange="banana")
-
-
-@pytest.mark.slow
-def test_semantic_dedup_crossover_paths_flag_planted_copies(spark):
+def test_semantic_dedup_crossover_paths_flag_planted_copies(spark, monkeypatch):
     """VERDICT r7 #3: auto partitioning is count-keyed — small corpora
     take flat auto-k Lloyd's, large ones the hierarchy (forced here
-    via flat_max_n=0). Exact planted copies must be flagged on BOTH
-    sides of the crossover, and the output schema must not change
-    across it (cluster stays BIGINT)."""
+    via SEMDEDUP_FLAT_MAX_N=0). Exact planted copies must be flagged
+    on BOTH sides of the crossover, and the output schema must not
+    change across it (cluster stays BIGINT)."""
     from pyspark.sql import functions as F
 
-    from clearcare_data_pipeline_spark.operators.clustering import semantic_dedup
+    from clearcare_data_pipeline_spark.operators import clustering
     from clearcare_data_pipeline_spark.sources.tables import load_table
 
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -209,42 +167,80 @@ def test_semantic_dedup_crossover_paths_flag_planted_copies(spark):
         "vec_id", F.col("vec_id") + 500000
     )
     corpus = vecs.unionByName(copies)
-    for forced_max in (None, 0):  # None -> flat (n < 65536); 0 -> hierarchical
-        kw = {} if forced_max is None else {"flat_max_n": forced_max}
-        out = semantic_dedup(corpus, k=None, iters=2, threshold=0.99, **kw)
+    # default cap -> flat (n < 65536); cap 0 -> hierarchical
+    for cap in (clustering.SEMDEDUP_FLAT_MAX_N, 0):
+        monkeypatch.setattr(clustering, "SEMDEDUP_FLAT_MAX_N", cap)
+        out = clustering.semantic_dedup(corpus, k=None, iters=2, threshold=0.99)
         assert dict(out.dtypes)["cluster"] == "bigint"
         rows = {r["vec_id"]: r for r in out.collect()}
         for vid, r in rows.items():
             if vid >= 500000:
-                assert r["is_dup"], f"copy {vid} not flagged (flat_max_n={forced_max})"
+                assert r["is_dup"], f"copy {vid} not flagged (SEMDEDUP_FLAT_MAX_N={cap})"
                 assert r["cluster"] == rows[vid - 500000]["cluster"]
 
 
 @pytest.mark.slow
 def test_hierarchical_auto_trigger_without_collect(spark, monkeypatch):
-    """VERDICT r8 #7: the auto exchange trigger derives from the
-    DataFrame-side splitting-cluster count — forcing the cap to 0 must
-    route every splitting level through the join exchange with output
-    identical to the driver exchange."""
+    """VERDICT r7 #6 / r8 #7: the exchange is picked from the
+    DataFrame-side splitting-cluster count — at the default cap every
+    level uses the driver exchange, and forcing the cap to 0 routes
+    every splitting level through the keyed-join exchange (the 100 TB
+    path) with identical output: same Lloyd fold, same early stop,
+    same path-encoded ids."""
     from clearcare_data_pipeline_spark.operators import clustering
     from clearcare_data_pipeline_spark.sources.tables import load_table
 
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding"
     )
+    ref_stats = {}
     ref = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3, exchange="driver"
+        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=ref_stats
     )
+    assert ref_stats["join_levels"] == 0 and ref_stats["levels"] > 0
     monkeypatch.setattr(clustering, "HIER_DRIVER_CENTROID_CAP", 0)
     stats = {}
     out = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3,
-        stats=stats, exchange="auto",
+        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=stats
     )
     assert stats["join_levels"] == stats["levels"] > 0
     assert {(r.vec_id, r.cluster) for r in out.collect()} == {
         (r.vec_id, r.cluster) for r in ref.collect()
     }
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("driver_cap", [None, 0], ids=["driver", "join"])
+def test_hierarchical_matches_duckdb_twin(spark, monkeypatch, driver_cap):
+    """Both centroid exchanges reproduce the DuckDB twin
+    (hierarchical_kmeans_oracle_sql) exactly at small scale: the
+    default cap keeps every level on the driver exchange, cap 0 moves
+    every level to the keyed-join exchange."""
+    import duckdb
+
+    from clearcare_data_pipeline_spark.operators import clustering
+    from clearcare_data_pipeline_spark.sources.tables import load_table
+
+    sf = "/root/testdata/sf0.001"
+    if driver_cap is not None:
+        monkeypatch.setattr(clustering, "HIER_DRIVER_CENTROID_CAP", driver_cap)
+    vecs = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    stats = {}
+    out = clustering.hierarchical_assign(
+        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=stats
+    )
+    got = {(r.vec_id, r.cluster) for r in out.collect()}
+    assert stats["levels"] > 0
+    assert stats["join_levels"] == (0 if driver_cap is None else stats["levels"])
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    sql = clustering.hierarchical_kmeans_oracle_sql(
+        "embeddings", "embedding", "vec_id", target=8, branch=4, iters=2, levels=3
+    )
+    want = set(con.execute(sql).fetchall())
+    assert len(want) == vecs.count()
+    assert got == want
 
 
 @pytest.mark.slow
@@ -265,33 +261,6 @@ def test_hierarchical_shuffle_join_split_set_bit_identical(spark, monkeypatch):
     out = clustering.hierarchical_assign(
         vecs, target_width=8, branch=4, iters=2, max_levels=3
     )
-    assert {(r.vec_id, r.cluster) for r in out.collect()} == {
-        (r.vec_id, r.cluster) for r in ref.collect()
-    }
-
-
-@pytest.mark.slow
-def test_hierarchical_forced_driver_over_cap_recollects(spark, monkeypatch):
-    """ADVICE r13: forced exchange='driver' with a split set overflowing
-    HIER_DRIVER_CENTROID_CAP must not act on the truncated capped head —
-    the driver branch re-collects the full split set, so assignments
-    match the uncapped driver run exactly."""
-    from clearcare_data_pipeline_spark.operators import clustering
-    from clearcare_data_pipeline_spark.sources.tables import load_table
-
-    vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    ref = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3, exchange="driver"
-    )
-    monkeypatch.setattr(clustering, "HIER_DRIVER_CENTROID_CAP", 0)
-    stats = {}
-    out = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3,
-        stats=stats, exchange="driver",
-    )
-    assert stats["join_levels"] == 0 and stats["levels"] > 0
     assert {(r.vec_id, r.cluster) for r in out.collect()} == {
         (r.vec_id, r.cluster) for r in ref.collect()
     }
