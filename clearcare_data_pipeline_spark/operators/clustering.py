@@ -32,8 +32,8 @@ _SUM_DEC = "decimal(27,10)"
 # DECIMAL getItem-sum columns, value-identical by the exactness of
 # DECIMAL partial sums) was built and A/B'd alternating in one JVM at
 # sf10 — and LOST at both shapes: hierarchical exchange 39.6 s wide vs
-# 32.3 s long (.r12state/hier_ab_sf10.json), flat k=4 fit 20.3 s wide
-# vs 7.1 s long (.r12state/kmeans_ab_sf10.json). The n*dim narrow-row
+# 32.3 s long, flat k=4 fit 20.3 s wide vs 7.1 s long (receipts in git
+# history: f55ca19:.r12state/{hier,kmeans}_ab_sf10.json). The n*dim narrow-row
 # explode through Tungsten beats 64 per-group decimal aggregates with
 # their per-row getItem casts, so the constant-plan long format is
 # both the scalable AND the fast choice — do not re-try wide without

@@ -38,12 +38,12 @@ from clearcare_data_pipeline_spark.functions.cleaning import (
     scrub_invalid_tokens,
     validate_code_format,
 )
-from clearcare_data_pipeline_spark.plans.metrics import parse_summary, tagged_summary, transparency_score
-from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, split_clean_quarantine, tag_violations
-from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
+from clearcare_data_pipeline_spark.plans.metrics import parse_summary, tagged_summary
+from clearcare_data_pipeline_spark.plans.rules import split_clean_quarantine, tag_violations
+from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS, PRICE_FIELDS
 
 
-def clean_charges(df: DataFrame, *, validate: bool = True, dedup: bool = True) -> DataFrame:
+def clean_charges(df: DataFrame) -> DataFrame:
     """The full cleaning transform chain; returns the cleaned canonical
     table (typed prices, normalized text/modifiers/code types, invalid
     code formats filtered, exact duplicates dropped)."""
@@ -51,27 +51,18 @@ def clean_charges(df: DataFrame, *, validate: bool = True, dedup: bool = True) -
     df = ensure_columns(df, CANONICAL_COLUMNS)
     df = normalize_code_type(df)
     df = clean_price_fields(df)
-    df = scrub_invalid_tokens(df, [c for c in CANONICAL_COLUMNS if c not in
-                                   {"negotiated_price", "negotiated_percentage", "gross_charge",
-                                    "discounted_cash_price", "min_price", "max_price",
-                                    "estimated_amount"}])
+    df = scrub_invalid_tokens(df, [c for c in CANONICAL_COLUMNS if c not in PRICE_FIELDS])
     df = normalize_text_fields(df)
     df = normalize_modifiers(df)
     df = flag_invalid_algorithm(df)
-    if validate:
-        df = validate_code_format(df)
-    if dedup:
-        # Global dedup over the canonical columns only (helper columns
-        # like code_type_raw would otherwise block duplicate matches).
-        # Helper columns survive as the group minimum so the retained
-        # row is deterministic and engine-independent (dropDuplicates'
-        # pick is arbitrary; the DuckDB oracle mirrors this exactly).
-        helpers = [c for c in df.columns if c not in set(CANONICAL_COLUMNS)]
-        if helpers:
-            df = df.groupBy(*CANONICAL_COLUMNS).agg(*[F.min(c).alias(c) for c in helpers])
-        else:
-            df = df.distinct()
-    return df
+    df = validate_code_format(df)
+    # Global dedup over the canonical columns only (helper columns like
+    # code_type_raw would otherwise block duplicate matches). Helper
+    # columns survive as the group minimum so the retained row is
+    # deterministic and engine-independent (dropDuplicates' pick is
+    # arbitrary; the DuckDB oracle mirrors this exactly).
+    helpers = [c for c in df.columns if c not in set(CANONICAL_COLUMNS)]
+    return df.groupBy(*CANONICAL_COLUMNS).agg(*[F.min(c).alias(c) for c in helpers])
 
 
 @dataclass
@@ -105,7 +96,7 @@ def run_cleaning_pipeline(df: DataFrame) -> Iterator[CleaningResult]:
         yield CleaningResult(
             clean=clean.drop("code_type_raw", "negotiated_algorithm_invalid"),
             quarantine=quarantine,
-            score=transparency_score(clean_rows, summary["rule_counts"]),
+            score=summary["transparency_score"],
             rule_counts=summary["rule_counts"],
             clean_rows=clean_rows,
             quarantined_rows=quarantined,
@@ -118,31 +109,13 @@ def run_cleaning_pipeline(df: DataFrame) -> Iterator[CleaningResult]:
 
 
 def score_summary(cleaned: DataFrame) -> DataFrame:
-    """One-row DataFrame version of the score computation (A11) over
-    an already-cleaned table (``clean_charges`` output) — fully
-    declarative so it can run inside a larger plan (and be
-    oracle-checked in SQL)."""
-    tagged = tag_violations(cleaned)
-    agg = tagged.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(F.col("rules_violated") != "", F.lit(1))).alias("quarantined_rows"),
-        *[F.sum(F.col(r).cast("long")).alias(r) for r in RULE_NAMES],
-    )
-    total_viol = None
-    for r in RULE_NAMES:
-        c = F.coalesce(F.col(r), F.lit(0))
-        total_viol = c if total_viol is None else (total_viol + c)
-    return agg.select(
+    """One-row DataFrame of the score (A11) over an already-cleaned
+    table (``clean_charges`` output): the ``tagged_summary`` columns the
+    ETL's score comes from, with the score rounded to 6 places."""
+    summary = tagged_summary(tag_violations(cleaned))
+    return summary.select(
         (F.col("total_rows") - F.col("quarantined_rows")).alias("clean_rows"),
-        F.col("quarantined_rows"),
-        total_viol.alias("total_violations"),
-        F.round(
-            F.greatest(
-                F.lit(0.0),
-                F.lit(1.0)
-                - total_viol
-                / ((F.col("total_rows") - F.col("quarantined_rows") + total_viol) * F.lit(10.0)),
-            ),
-            6,
-        ).alias("transparency_score"),
+        "quarantined_rows",
+        "total_violations",
+        F.round("transparency_score", 6).alias("transparency_score"),
     )

@@ -7,8 +7,9 @@ counters):
 
 * ``tagged_summary``: one ``agg()`` row over the cleaning pipeline's
   persisted tagged plan, holding every family with a fixed key set —
-  per-rule violations, row counts, field presence (A1) and the
-  code-type histogram over ``ALLOWED_CODE_TYPES`` (A2), the last two as
+  per-rule violations (A8), row counts, the transparency score (A11),
+  field presence (A1) and the code-type histogram over
+  ``ALLOWED_CODE_TYPES`` (A2), the last two as
   ``count(when(clean & ...))`` columns over the clean rows;
 * ``keyed_counts``: one group-by for the families whose keys are only
   known from the data — modifier tokens (A6) of the clean rows, and
@@ -16,6 +17,10 @@ counters):
 
 ``missing_code_types`` (A4) is then a driver-side set difference on the
 A2 histogram, with no Spark work of its own.
+
+``run_etl`` and the ``charges_*`` queries build their outputs from these
+same functions, so the DuckDB oracle of each query checks the
+expression the ETL runs.
 """
 
 from __future__ import annotations
@@ -24,10 +29,9 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField
 
 from clearcare_data_pipeline_spark.functions.cleaning import modifiers_to_array_expr
-from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, is_clean
+from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, is_clean, present
 from clearcare_data_pipeline_spark.schema import ALLOWED_CODE_TYPES, CANONICAL_COLUMNS
 
 
@@ -36,24 +40,9 @@ _PRESENT = "present:"
 _CODE_TYPE = "code_type:"
 
 
-def present(field: StructField) -> Column:
-    """A1 predicate for one column: non-NULL, and for a string column
-    also non-blank after trimming."""
-    col = F.col(field.name)
-    if field.dataType.typeName() == "string":
-        return col.isNotNull() & (F.trim(col) != "")
-    return col.isNotNull()
-
-
-def presence_columns(df: DataFrame) -> list[str]:
-    """The canonical columns ``df`` has, in canonical order."""
-    return [c for c in CANONICAL_COLUMNS if c in df.columns]
-
-
-def field_presence(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """A1: one row; per-column count of present values."""
-    columns = columns or presence_columns(df)
-    return df.agg(*[F.count(F.when(present(df.schema[c]), F.lit(1))).alias(c) for c in columns])
+def field_presence(df: DataFrame) -> DataFrame:
+    """A1: one row; per canonical column, the count of present values."""
+    return df.agg(*[F.count(F.when(present(c), F.lit(1))).alias(c) for c in CANONICAL_COLUMNS])
 
 
 def missing_code_types(histogram: dict[str, int]) -> list[str]:
@@ -88,58 +77,59 @@ def keyed_counts(families: dict[str, DataFrame]) -> dict[str, dict[str, int]]:
 
 
 def tagged_summary(tagged: DataFrame) -> DataFrame:
-    """One row, one pass over the tagged plan: per-rule violation
-    totals (A8), the algorithm-format flag (A9) and the row counts over
-    every row; field presence (A1) and the code-type histogram (A2)
-    over the clean rows only, the rows the clean sink receives.
-    ``parse_summary`` turns the row into the devlog's dicts."""
+    """One row, one pass over a ``tag_violations`` output: per-rule
+    violation totals (A8), the algorithm-format flag (A9), the row
+    counts, ``total_violations`` and the unrounded
+    ``transparency_score`` (A11) over every row; field presence (A1)
+    and the code-type histogram (A2) over the clean rows only, the rows
+    the clean sink receives. ``parse_summary`` turns the row into the
+    devlog's dicts; the ``charges_*`` queries select from it."""
     clean = is_clean()
-    aggs = [F.sum(F.col(r).cast("long")).alias(r) for r in RULE_NAMES if r in tagged.columns]
-    if "negotiated_algorithm_invalid" in tagged.columns:
-        aggs.append(
-            F.sum(F.col("negotiated_algorithm_invalid").cast("long")).alias("algorithm_format_issues")
-        )
+    aggs = [F.sum(F.col(r).cast("long")).alias(r) for r in RULE_NAMES]
+    aggs.append(
+        F.sum(F.col("negotiated_algorithm_invalid").cast("long")).alias("algorithm_format_issues")
+    )
     aggs.append(F.count(F.lit(1)).alias("total_rows"))
     aggs.append(F.count(F.when(~clean, F.lit(1))).alias("quarantined_rows"))
     aggs += [
-        F.count(F.when(clean & present(tagged.schema[c]), F.lit(1))).alias(_PRESENT + c)
-        for c in presence_columns(tagged)
+        F.count(F.when(clean & present(c), F.lit(1))).alias(_PRESENT + c)
+        for c in CANONICAL_COLUMNS
     ]
     aggs += [
         F.count(F.when(clean & (F.col("code_type") == t), F.lit(1))).alias(_CODE_TYPE + t)
         for t in ALLOWED_CODE_TYPES
     ]
-    return tagged.agg(*aggs)
+    # A11 (cleaning_utils.py:214-216): max(0, 1 - V / (N * 10)) where V
+    # sums the per-rule counts (a row violating k rules counts k times,
+    # as in the reference) and N = clean rows + V; 0.0 when N = 0 ("0 if
+    # no records"). Left unrounded: below 2^53 the long/double quotient
+    # is correctly rounded, so it equals the reference's Python int / int.
+    violations = reduce(Column.__add__, [F.coalesce(F.col(r), F.lit(0)) for r in RULE_NAMES])
+    v = F.col("total_violations")
+    examined = F.col("total_rows") - F.col("quarantined_rows") + v
+    score = F.when(examined == 0, F.lit(0.0)).otherwise(
+        F.greatest(F.lit(0.0), 1.0 - v / (examined * 10.0))
+    )
+    summary = tagged.agg(*aggs).withColumn("total_violations", violations)
+    return summary.withColumn("transparency_score", score)
 
 
 def parse_summary(row: dict) -> dict:
     """The ``tagged_summary`` row as devlog families: per-rule counts,
-    ``field_presence`` in canonical order, and ``code_type_histogram``
+    ``field_presence`` in canonical order, ``code_type_histogram``
     with the types that were never seen left out (as a group-by would
-    have). Cleaning normalizes every code type into the allowed set or
-    NULL, so the fixed key set loses no type."""
+    have), and the score. Cleaning normalizes every code type into the
+    allowed set or NULL, so the fixed key set loses no type."""
 
     def family(prefix: str) -> dict[str, int]:
         return {k[len(prefix):]: int(v) for k, v in row.items() if k.startswith(prefix)}
 
     return {
-        "rule_counts": {r: int(row.get(r) or 0) for r in RULE_NAMES},
-        "algorithm_format_issues": int(row.get("algorithm_format_issues") or 0),
+        "rule_counts": {r: int(row[r] or 0) for r in RULE_NAMES},
+        "algorithm_format_issues": int(row["algorithm_format_issues"] or 0),
         "total_rows": int(row["total_rows"]),
         "quarantined_rows": int(row["quarantined_rows"]),
         "field_presence": family(_PRESENT),
         "code_type_histogram": {t: n for t, n in family(_CODE_TYPE).items() if n},
+        "transparency_score": float(row["transparency_score"]),
     }
-
-
-def transparency_score(clean_rows: int, per_rule_counts: dict[str, int]) -> float:
-    """A11 (cleaning_utils.py:214-216): ``max(0, 1 - V / (N * 10))``
-    where V = sum of per-rule counts (a row violating k rules counts k
-    times — the reference's double-counting is intentional semantics)
-    and N = clean rows + V.
-    """
-    total_violations = sum(per_rule_counts.values())
-    total_examined = clean_rows + total_violations
-    if total_examined == 0:
-        return 0.0
-    return max(0.0, 1.0 - total_violations / (total_examined * 10))

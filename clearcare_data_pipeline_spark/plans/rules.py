@@ -28,40 +28,42 @@ from clearcare_data_pipeline_spark.schema import PRICE_FIELDS
 RULE_NAMES: list[str] = [f"rule_{i}" for i in range(1, 11)]
 
 
-def _text_present(name: str) -> Column:
+def present(name: str) -> Column:
+    """A value counts as present when it is non-NULL; a field outside
+    ``PRICE_FIELDS`` must also be non-blank after trimming. The rules
+    and the devlog's field presence (A1) share this predicate; the
+    DuckDB oracles spell out the same rule."""
     c = F.col(name)
+    if name in PRICE_FIELDS:
+        return c.isNotNull()
     return c.isNotNull() & (F.trim(c) != "")
-
-
-def _num_present(name: str) -> Column:
-    return F.col(name).isNotNull()
 
 
 def rule_predicates() -> dict[str, Column]:
     """rule name -> violation predicate over the cleaned canonical table."""
-    payer = _text_present("payer_name")
-    plan = _text_present("plan_name")
-    methodology = _text_present("negotiated_methodology")
-    code = _text_present("code")
-    code_type = _text_present("code_type")
-    desc = _text_present("description")
-    notes = _text_present("additional_notes")
-    modifiers = _text_present("modifiers")
-    drug_unit = _text_present("drug_unit")
-    drug_type = _text_present("drug_type")
-    algorithm = _text_present("negotiated_algorithm")
+    payer = present("payer_name")
+    plan = present("plan_name")
+    methodology = present("negotiated_methodology")
+    code = present("code")
+    code_type = present("code_type")
+    desc = present("description")
+    notes = present("additional_notes")
+    modifiers = present("modifiers")
+    drug_unit = present("drug_unit")
+    drug_type = present("drug_type")
+    algorithm = present("negotiated_algorithm")
 
-    neg_price = _num_present("negotiated_price")
-    neg_pct = _num_present("negotiated_percentage")
-    gross = _num_present("gross_charge")
-    cash = _num_present("discounted_cash_price")
-    min_p = _num_present("min_price")
-    max_p = _num_present("max_price")
-    est = _num_present("estimated_amount")
+    neg_price = present("negotiated_price")
+    neg_pct = present("negotiated_percentage")
+    gross = present("gross_charge")
+    cash = present("discounted_cash_price")
+    min_p = present("min_price")
+    max_p = present("max_price")
+    est = present("estimated_amount")
 
     any_price = F.lit(False)
     for p in PRICE_FIELDS:
-        any_price = any_price | _num_present(p)
+        any_price = any_price | present(p)
 
     return {
         # 1: a negotiated/gross figure without full payer context

@@ -11,7 +11,7 @@ SEPARATOR, EM SPACE split in neither — pinned in
 tests/test_ws_convention.py). So oracles written with a bare ``\\s``
 silently disagree with the engine on any text containing a vertical
 tab. The gated synthetic corpora contain zero U+000B anywhere (scan
-receipt: .r12state/vt_scan.json), which is why the divergence never
+receipt in git history: f55ca19:.r12state/vt_scan.json), which is why the divergence never
 tripped a gate — but the oracle's job is to pin the ENGINE's
 semantics, not RE2's, so every oracle now spells the Java class out.
 

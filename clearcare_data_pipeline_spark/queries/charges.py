@@ -12,10 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clearcare_data_pipeline_spark.functions.cleaning import modifiers_to_array_expr
+from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type
 from clearcare_data_pipeline_spark.functions.text import split_payer_name_id
 from clearcare_data_pipeline_spark.pipeline import clean_charges, score_summary
-from clearcare_data_pipeline_spark.plans.metrics import field_presence
+from clearcare_data_pipeline_spark.plans.metrics import field_presence, modifier_tokens, tagged_summary
 from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, tag_violations
 from clearcare_data_pipeline_spark.queries._textsql import (
     PAYER_EXTRACT_RE,
@@ -28,6 +28,7 @@ from clearcare_data_pipeline_spark.queries._oracle_expr import (
 )
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
 from clearcare_data_pipeline_spark.sources.charges import charges_from_lineitem, charges_sql
+from clearcare_data_pipeline_spark.sources.mrf import unknown_type_histogram
 from clearcare_data_pipeline_spark.sources.tables import load_table
 
 _CANON = ", ".join(CANONICAL_COLUMNS)
@@ -125,12 +126,8 @@ def q_charges_rules_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_charges_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tagged = tag_violations(_cleaned(spark, sf_dir))
-    return tagged.agg(
-        *[F.sum(F.col(r).cast("long")).alias(r) for r in RULE_NAMES],
-        F.count(F.lit(1)).alias("total_rows"),
-        F.count(F.when(F.col("rules_violated") != "", F.lit(1))).alias("quarantined_rows"),
-        F.sum(F.col("negotiated_algorithm_invalid").cast("long")).alias("algorithm_format_issues"),
+    return tagged_summary(tag_violations(_cleaned(spark, sf_dir))).select(
+        *RULE_NAMES, "total_rows", "quarantined_rows", "algorithm_format_issues"
     )
 
 
@@ -169,21 +166,14 @@ def q_charges_code_type_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def q_charges_unknown_code_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = clean_charges(charges_from_lineitem(spark, sf_dir), validate=False, dedup=False)
-    return (
-        df.where(F.col("code_type").isNull() & (F.trim(F.coalesce("code_type_raw", F.lit(""))) != ""))
-        .groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    """A3 over the derived charges, before code-format validation and
+    dedup; a blank raw type is not counted."""
+    df = normalize_code_type(charges_from_lineitem(spark, sf_dir))
+    return unknown_type_histogram(df.where(F.trim(F.coalesce("code_type_raw", F.lit(""))) != ""))
 
 
 def q_charges_modifier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _cleaned(spark, sf_dir)
-    return (
-        df.select(F.explode(modifiers_to_array_expr(F.col("modifiers"))).alias("modifier"))
-        .groupBy("modifier")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return modifier_tokens(_cleaned(spark, sf_dir)).groupBy("modifier").agg(F.count(F.lit(1)).alias("n"))
 
 
 # --- q: payer "Name [ID]" split (F5, tall-extractor semantics) ---------
@@ -304,7 +294,7 @@ ORACLES = {k: materialize_ctes(v) for k, v in _oracles().items()}
 
 def q_charges_code_type_mappings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5: raw code type -> sorted set of normalized types it mapped to."""
-    df = clean_charges(charges_from_lineitem(spark, sf_dir), validate=False, dedup=False)
+    df = normalize_code_type(charges_from_lineitem(spark, sf_dir))
     return (
         df.where(F.col("code_type").isNotNull())
         .groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))

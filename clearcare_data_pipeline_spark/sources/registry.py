@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from clearcare_data_pipeline_spark.schema import REGISTRY_COLUMNS, REGISTRY_SCHEMA
 
@@ -52,18 +52,6 @@ def registry_snapshot(spark: SparkSession, path: str) -> dict[str, dict]:
     return {r["campus_id"]: r.asDict() for r in load_registry(spark, path).collect()}
 
 
-def save_registry(df: DataFrame, path: str) -> None:
-    # collect-then-rewrite: the dimension is tiny and the target may be
-    # the same path we read from (Spark cannot overwrite its own input
-    # lazily).
-    if _is_xlsx(path):
-        save_registry_xlsx(df, path)
-        return
-    rows = df.collect()
-    spark = df.sparkSession
-    spark.createDataFrame(rows, df.schema).write.mode("overwrite").parquet(path)
-
-
 def load_registry_xlsx(spark: SparkSession, path: str, sheet_name: str = "Sheet1") -> DataFrame:
     """S5 (native format): ingest a real ClearCare ``Hospital
     Registry.xlsx`` (hospital_enricher.py:174-186 column layout, read
@@ -96,14 +84,10 @@ def save_registry_xlsx(df: DataFrame, path: str, sheet_name: str = "Sheet1") -> 
     write_xlsx(path, list(REGISTRY_COLUMNS), rows, sheet_name=sheet_name)
 
 
-def lookup_campus(registry: DataFrame | dict[str, dict], campus_id: str) -> Row | dict:
-    """S6/J1: point lookup in a registry frame or a
-    ``registry_snapshot``; error if absent (cleaning_utils.py:56-66)."""
-    if isinstance(registry, dict):
-        row = registry.get(campus_id)
-    else:
-        rows = registry.where(registry.campus_id == campus_id).limit(1).collect()
-        row = rows[0] if rows else None
+def lookup_campus(registry: dict[str, dict], campus_id: str) -> dict:
+    """S6/J1: point lookup in a ``registry_snapshot``; error if absent
+    (cleaning_utils.py:56-66)."""
+    row = registry.get(campus_id)
     if row is None:
         raise CampusNotFound(f"campus_id {campus_id!r} not found in registry")
     return row
@@ -114,15 +98,15 @@ def upsert_campus(
     path: str,
     campus_id: str,
     updates: dict[str, str],
-    snapshot: dict[str, dict] | None = None,
+    snapshot: dict[str, dict],
 ) -> None:
-    """K6: merge ``updates`` into the campus row (insert if new).
-    ``snapshot`` is the caller's ``registry_snapshot`` of ``path``;
-    without one the registry is read here."""
+    """K6: merge ``updates`` into the campus row (insert if new) and
+    rewrite ``path``. ``snapshot`` is the caller's ``registry_snapshot``
+    of ``path``."""
     bad = set(updates) - set(REGISTRY_COLUMNS)
     if bad:
         raise ValueError(f"unknown registry columns: {sorted(bad)}")
-    current = dict(registry_snapshot(spark, path) if snapshot is None else snapshot)
+    current = dict(snapshot)
     row = dict(current.get(campus_id) or {c: None for c in REGISTRY_COLUMNS})
     row["campus_id"] = campus_id
     row.update({k: (None if v is None else str(v)) for k, v in updates.items()})

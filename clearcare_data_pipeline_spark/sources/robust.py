@@ -26,17 +26,16 @@ def read_csv_with_quarantine(
     spark: SparkSession,
     path: str,
     schema_ddl: str,
-    *,
-    header: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (parsed, quarantined). ``schema_ddl`` is the expected
-    schema; lines that fail to parse land in the quarantine frame with
-    their raw text. The input is read once per returned frame (two
-    filtered scans, both pushdown-friendly), never collected."""
+    """Returns (parsed, quarantined) from a CSV with a header line.
+    ``schema_ddl`` is the expected schema; lines that fail to parse
+    land in the quarantine frame with their raw text. The input is read
+    once per returned frame (two filtered scans, both
+    pushdown-friendly), never collected."""
     full_schema = f"{schema_ddl}, {CORRUPT_COL} string"
     raw = (
         spark.read.schema(full_schema)
-        .option("header", str(header).lower())
+        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)

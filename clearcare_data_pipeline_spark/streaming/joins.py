@@ -49,7 +49,6 @@ def enrich_stream(
     on: list[str],
     *,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static enrichment join: an unbounded fact stream joined
     to a bounded dimension — the standard lookup shape (events x user
@@ -57,19 +56,16 @@ def enrich_stream(
 
     Stream-static joins carry NO state store: Spark re-evaluates the
     static side per microbatch (so a dimension backed by a table picks
-    up refreshes between batches, a key practical property). With
-    ``broadcast_dim`` the dimension ships to every task and the stream
+    up refreshes between batches, a key practical property). The
+    dimension is broadcast, so it ships to every task and the stream
     side never shuffles — at 100 TB/day the fact stream stays
-    partition-local; drop the hint only when the dimension itself is
-    too large to broadcast, which falls back to a per-batch shuffled
-    join. ``how`` is limited to Spark's supported stream-static modes
+    partition-local. ``how`` is limited to Spark's supported stream-static modes
     ('inner', 'left' with the stream on the left)."""
     if how not in ("inner", "left"):
         raise ValueError(
             f"stream-static join supports how in ('inner', 'left'), got {how!r}"
         )
-    right = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(right, on, how)
+    return stream.join(F.broadcast(dim), on, how)
 
 
 def stream_click_attribution(

@@ -35,7 +35,6 @@ def run_lm_scoring_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_model: bool | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Score an unbounded stream of documents against a static trigram
     LM; append (id, n_trigrams, avg_logprob, perplexity) to parquet.
@@ -74,6 +73,4 @@ def run_lm_scoring_stream(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

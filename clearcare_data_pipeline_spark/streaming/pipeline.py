@@ -30,8 +30,6 @@ def stream_clean(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
     raw = (
         spark.readStream.schema(CHARGES_RAW_SCHEMA)
@@ -55,9 +53,7 @@ def stream_clean(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def stream_event_window_counts(
@@ -68,7 +64,6 @@ def stream_event_window_counts(
     *,
     window: str = "10 minutes",
     watermark: str = "30 minutes",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Watermarked tumbling-window counts over JSON event files
     (schema: ts timestamp, event_type string, value double)."""
@@ -88,9 +83,7 @@ def stream_event_window_counts(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def stream_dedup_events(
@@ -100,7 +93,6 @@ def stream_dedup_events(
     checkpoint_dir: str,
     *,
     watermark: str = "1 hour",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming exact dedup on event_id within the watermark horizon
     (``dropDuplicatesWithinWatermark``): state for an id is kept only
@@ -118,9 +110,7 @@ def stream_dedup_events(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def stream_session_counts(
@@ -131,7 +121,6 @@ def stream_session_counts(
     *,
     gap: str = "30 minutes",
     watermark: str = "1 hour",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Watermarked session-window aggregation per user: events closer
     than ``gap`` merge into one session; a session emits once the
@@ -160,6 +149,4 @@ def stream_session_counts(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -82,8 +82,6 @@ def stream_user_running_totals(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
     events = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -101,9 +99,7 @@ def stream_user_running_totals(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 # --- transformWithState (Spark 4 successor API) --------------------------
@@ -162,8 +158,6 @@ def stream_running_max(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """transformWithStateInPandas pipeline over the JSON event feed."""
     if not _HAS_TWS:  # pragma: no cover
@@ -190,6 +184,4 @@ def stream_running_max(
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -13,6 +13,7 @@ from clearcare_data_pipeline_spark.sources.registry import (
     CampusNotFound,
     load_registry,
     lookup_campus,
+    registry_snapshot,
     upsert_campus,
 )
 
@@ -38,15 +39,18 @@ def registry_path(spark, tmp_path):
 
 
 def test_registry_lookup_and_upsert(spark, registry_path):
-    reg = load_registry(spark, registry_path)
+    reg = registry_snapshot(spark, registry_path)
     row = lookup_campus(reg, "general_springfield")
     assert row["hospital_name"] == "General Hospital"
     with pytest.raises(CampusNotFound):
         lookup_campus(reg, "nope")
-    upsert_campus(spark, registry_path, "general_springfield", {"etl_status": "done"})
-    upsert_campus(spark, registry_path, "new_campus", {"hospital_name": "New One"})
-    reg2 = load_registry(spark, registry_path)
-    assert reg2.count() == 2
+    upsert_campus(spark, registry_path, "general_springfield", {"etl_status": "done"}, reg)
+    upsert_campus(
+        spark, registry_path, "new_campus", {"hospital_name": "New One"},
+        registry_snapshot(spark, registry_path),
+    )
+    reg2 = registry_snapshot(spark, registry_path)
+    assert len(reg2) == 2
     assert lookup_campus(reg2, "general_springfield")["etl_status"] == "done"
     assert lookup_campus(reg2, "new_campus")["hospital_name"] == "New One"
 
@@ -71,7 +75,7 @@ def test_run_etl_tall_end_to_end(spark, registry_path, tmp_path):
     assert devlog[-1]["transparency_score"] == res.score
     assert devlog[-1]["unknown_code_types"] == {"LOCAL": 1}
     # registry updated (J4/K6)
-    row = lookup_campus(load_registry(spark, registry_path), "general_springfield")
+    row = lookup_campus(registry_snapshot(spark, registry_path), "general_springfield")
     assert row["etl_status"] == "processed"
     assert row["processed_by"] == "tester"
     assert float(row["transparency_score"]) == pytest.approx(res.score)
@@ -87,6 +91,32 @@ def test_run_etl_format_dispatch_errors(spark, registry_path, tmp_path):
             output_dir=str(tmp_path / "o"),
             file_format="excel",
         )
+
+
+def test_run_etl_all_unknown_code_types_scores_zero(spark, registry_path, tmp_path):
+    # Every slot has a code type R3 rejects, so the cleaned table is
+    # empty: the score is 0.0 ("0 if no records"), not a division error.
+    raw = tmp_path / "unknown_only.csv"
+    with open(f"{FIX}/tall.csv") as f:
+        preamble = [next(f) for _ in range(3)]
+    raw.write_text(
+        "".join(preamble)
+        + "Mystery proc,X99,LOCAL,,,,,,,United,POS,130,,,fee schedule,210,160,110,310,,outpatient,,,,\n"
+    )
+    res = run_etl(
+        spark,
+        campus_id="general_springfield",
+        raw_path=str(raw),
+        registry_path=registry_path,
+        output_dir=str(tmp_path / "out"),
+    )
+    with open(res.devlog_path) as f:
+        devlog = json.load(f)[-1]
+    assert devlog["unknown_code_types"] == {"LOCAL": 1}
+    assert (devlog["clean_rows"], devlog["quarantined_rows"]) == (0, 0)
+    assert devlog["transparency_score"] == 0.0
+    row = lookup_campus(registry_snapshot(spark, registry_path), "general_springfield")
+    assert row["transparency_score"] == "0.000000"
 
 
 @pytest.mark.slow

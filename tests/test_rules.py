@@ -139,11 +139,30 @@ def test_split_clean_quarantine(spark):
     assert "rules_violated" not in clean.columns
 
 
+# Raw-string overrides that make a `_CLEAN_ROW` violate exactly one rule.
+_VIOLATES_ONLY = {"rule_1": {"payer_name": ""}}
+
+
 @pytest.mark.parametrize(
     "clean_rows,counts,expected",
-    [(0, {}, 0.0), (90, {"rule_1": 10}, 1 - 10 / 1000)],
+    [(0, {}, 0.0), (90, {"rule_1": 10}, 0.99)],
 )
-def test_transparency_score(clean_rows, counts, expected):
-    from clearcare_data_pipeline_spark.plans.metrics import transparency_score
+def test_transparency_score(spark, clean_rows, counts, expected):
+    # The A11 score as the ETL and the charges_score query compute it,
+    # from raw rows through cleaning; (0, {}) is an empty raw frame.
+    from clearcare_data_pipeline_spark.pipeline import clean_charges, score_summary
+    from clearcare_data_pipeline_spark.schema import CHARGES_RAW_SCHEMA
 
-    assert transparency_score(clean_rows, counts) == pytest.approx(expected)
+    raw = {c: None if v is None else str(v) for c, v in _CLEAN_ROW.items()}
+    rows = [{**raw, "description": f"item {i}"} for i in range(clean_rows)]
+    for rule, n in counts.items():
+        rows += [{**raw, **_VIOLATES_ONLY[rule], "description": f"{rule} {i}"} for i in range(n)]
+    df = spark.createDataFrame([tuple(r[c] for c in CANONICAL_COLUMNS) for r in rows], CHARGES_RAW_SCHEMA)
+    got = [r.asDict() for r in score_summary(clean_charges(df)).collect()]
+    violations = sum(counts.values())
+    assert got == [{
+        "clean_rows": clean_rows,
+        "quarantined_rows": violations,
+        "total_violations": violations,
+        "transparency_score": expected,
+    }]

@@ -164,7 +164,8 @@ def test_ws_class_defined_once():
 
 
 def test_gated_corpus_is_pure_ascii():
-    """Premise of .r12state/ascii_scan.json, pinned at sf0.001 so data
+    """Premise of the ascii_scan.json receipt (git show
+    f55ca19:.r12state/ascii_scan.json), pinned at sf0.001 so data
     regeneration can't silently void it: every VARCHAR value in every
     table is pure ASCII, which makes all unicode engine-divergence
     classes (case mapping, normalization, exotic whitespace beyond the

@@ -7,6 +7,7 @@ from clearcare_data_pipeline_spark.schema import REGISTRY_COLUMNS
 from clearcare_data_pipeline_spark.sources.registry import (
     load_registry_xlsx,
     lookup_campus,
+    registry_snapshot,
     save_registry_xlsx,
 )
 from clearcare_data_pipeline_spark.sources.xlsx import read_xlsx, write_xlsx
@@ -51,7 +52,7 @@ def test_registry_xlsx_lookup(spark, tmp_path):
     save_registry_xlsx(
         _mk_registry(spark, [_row("mercy-west", "Mercy West", state="IA")]), path
     )
-    row = lookup_campus(load_registry_xlsx(spark, path), "mercy-west")
+    row = lookup_campus(registry_snapshot(spark, path), "mercy-west")
     assert row["state"] == "IA"
 
 
@@ -113,16 +114,13 @@ def test_write_xlsx_wide_sheet_column_letters(tmp_path):
 def test_upsert_and_dispatch_through_xlsx_path(spark, tmp_path):
     # load_registry / upsert_campus dispatch on the .xlsx extension, so
     # the reference's read-modify-write workbook cycle works verbatim.
-    from clearcare_data_pipeline_spark.sources.registry import (
-        load_registry,
-        upsert_campus,
-    )
+    from clearcare_data_pipeline_spark.sources.registry import upsert_campus
 
     path = str(tmp_path / "Hospital Registry.xlsx")
     save_registry_xlsx(_mk_registry(spark, [_row("gen", "General")]), path)
-    upsert_campus(spark, path, "gen", {"etl_status": "done"})
-    upsert_campus(spark, path, "new1", {"hospital_name": "New One"})
-    reg = load_registry(spark, path)
-    assert reg.count() == 2
+    upsert_campus(spark, path, "gen", {"etl_status": "done"}, registry_snapshot(spark, path))
+    upsert_campus(spark, path, "new1", {"hospital_name": "New One"}, registry_snapshot(spark, path))
+    reg = registry_snapshot(spark, path)
+    assert len(reg) == 2
     assert lookup_campus(reg, "gen")["etl_status"] == "done"
     assert lookup_campus(reg, "new1")["hospital_name"] == "New One"

@@ -37,7 +37,7 @@ historical merges only; new gate scripts must not use it.
 
 Usage:
   python tools/merge_correctness.py --out CORRECTNESS_SF10_r13.json \
-      --note "..." CORRECTNESS_SF10_r12.json .r13state/sf10_changed.json \
+      --note "..." CORRECTNESS_SF10_r12.json sf10_fresh_runs.json \
       --waive doc_stats="comment-only edit to textops.py:12 (see diff)"
 """
 

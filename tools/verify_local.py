@@ -150,7 +150,7 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
 
 # Digest FORMULA version, stamped into artifacts (r12): digests are
 # breadcrumbs bound to the formula era of their fresh run — the r12
-# lineage check (.r12state/digest_lineage_check.json) had to
+# lineage check (git show f55ca19:.r12state/digest_lineage_check.json) had to
 # reconstruct forensically that four preserved r9 digests predated
 # da89a38's injective length-prefix refinement. Bump this whenever
 # the canonicalization (_spark_canon/_duck_canon/joining) changes so

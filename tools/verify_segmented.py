@@ -51,7 +51,8 @@ def run_verify(sf_dir: str, names: list[str], out: str, env: dict) -> dict:
 def _digest_version() -> int | None:
     """The formula version of verify_local's in-engine digest — the
     subprocesses' digests all carry this era (see verify_local.py
-    DIGEST_VERSION and .r12state/digest_lineage_check.json)."""
+    DIGEST_VERSION and, in git history, f55ca19:.r12state/
+    digest_lineage_check.json)."""
     try:
         import verify_local
 
