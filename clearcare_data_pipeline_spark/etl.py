@@ -12,26 +12,32 @@ checkpoint holds the extractor's slots before the R3 allowed-type gate,
 so both the charges table and the devlog's unknown-type histogram come
 from the one scan of the raw file.
 
-A campus is one pass. Spark jobs per campus, from the event log of a
-traced run at sf0.01 (``perfbench``'s tracer, 4 local cores), before
-and after the devlog was folded into the cleaning aggregate:
+A campus is one pass and runs no Python worker. Spark jobs per campus,
+from the event log of a traced run at sf0.01 (``perfbench``'s tracer,
+4 local cores), tall / JSON / wide: multi-pass, then with the devlog
+folded into the cleaning aggregate, then with the registry on the
+driver and the CSV preamble read in the JVM (the benchmark runs no wide
+campus; that column is one campus's job-group count, split by layer
+from the tall one's):
 
-=======================  ==============  ===============
-layer                    multi-pass      one pass
-                         tall/JSON/wide  tall/JSON/wide
-=======================  ==============  ===============
-registry                 5 / 5 / 5       2 / 2 / 2
-extract                  3 / 2 / 3       3 / 2 / 3
-extract checkpoint       2 / 2 / 3       1 / 1 / 2
-cleaning aggregate       4 / 4 / 4       4 / 4 / 4
-clean+quarantine sinks   2 / 2 / 2       2 / 2 / 2
-devlog                   11 / 10 / 11    2 / 2 / 2
-total                    27 / 25 / 28    14 / 13 / 15
-=======================  ==============  ===============
+=======================  ============  ============  ============
+layer                    multi-pass    one pass      no Python
+=======================  ============  ============  ============
+registry                 5 / 5 / 5     2 / 2 / 2     0 / 0 / 0
+extract                  3 / 2 / 3     3 / 2 / 3     1 / 2 / 1
+extract checkpoint       2 / 2 / 3     1 / 1 / 2     1 / 1 / 2
+cleaning aggregate       4 / 4 / 4     4 / 4 / 4     4 / 4 / 4
+clean+quarantine sinks   2 / 2 / 2     2 / 2 / 2     2 / 2 / 2
+devlog                   11 / 10 / 11  2 / 2 / 2     2 / 2 / 2
+total                    27 / 25 / 28  14 / 13 / 15  10 / 11 / 11
+=======================  ============  ============  ============
 
-* registry: one collected snapshot serves the lookup and the upsert,
-  read with the known schema (no footer-inference job), plus the
-  rewrite.
+* registry: one snapshot, read on the driver with pyarrow (or the
+  stdlib workbook reader), serves the lookup and the upsert, which
+  writes the table back the same way (``sources/registry.py``).
+* extract: one action collects a CSV file's preamble and header; the
+  body is parsed by ``from_csv`` in the scan's own plan
+  (``sources/mrf.read_mrf_csv``).
 * checkpoint: the read-back is given the written schema.
 * devlog: field presence (A1) and the code-type histogram (A2) are
   columns of the cleaning aggregate; modifier tokens (A6) and unknown
@@ -95,7 +101,7 @@ def run_etl(
     user: str = "spark",
     file_format: str | None = None,
 ) -> EtlResult:
-    registry = registry_snapshot(spark, registry_path)
+    registry = registry_snapshot(registry_path)
     campus = lookup_campus(registry, campus_id)
     fmt = (file_format or campus["structure"] or "").lower()
     if fmt not in EXTRACTOR_DISPATCH:
@@ -147,7 +153,6 @@ def run_etl(
 
     # --- registry update phase (J4/K6) -------------------------------
     upsert_campus(
-        spark,
         registry_path,
         campus_id,
         {

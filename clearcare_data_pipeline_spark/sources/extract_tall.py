@@ -17,8 +17,7 @@ from clearcare_data_pipeline_spark.sources.mrf import (
     ExtractResult,
     explode_code_slots,
     finalize_canonical,
-    read_csv_after_preamble,
-    read_preamble,
+    read_mrf_csv,
 )
 
 # P4: tall source column -> canonical column (where a plain rename).
@@ -49,8 +48,7 @@ def extract_tall(
     hospital_name: str = "",
     zip_code: str = "",
 ) -> ExtractResult:
-    meta = read_preamble(spark, path)
-    raw = read_csv_after_preamble(spark, path)
+    meta, raw = read_mrf_csv(spark, path)
 
     # F5: "Payer Name [ID]" split
     name, payer_id = split_payer_name_id(F.col("payer_name"))

@@ -30,8 +30,7 @@ from clearcare_data_pipeline_spark.sources.mrf import (
     allowed_type,
     explode_code_slots,
     finalize_canonical,
-    read_csv_after_preamble,
-    read_preamble,
+    read_mrf_csv,
 )
 
 # P5: payer-level field name -> canonical column
@@ -86,8 +85,7 @@ def extract_wide(
     hospital_name: str = "",
     zip_code: str = "",
 ) -> ExtractResult:
-    meta = read_preamble(spark, path)
-    raw = read_csv_after_preamble(spark, path)
+    meta, raw = read_mrf_csv(spark, path)
 
     # --- P5: classify payer columns from the schema (driver-side) ----
     payer_cols: list[tuple[str, str, str, str]] = []  # (src, field, payer, plan)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import csv
 import io
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -30,30 +31,80 @@ from clearcare_data_pipeline_spark.schema import (
 from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type_expr
 
 
-def read_preamble(spark: SparkSession, path: str) -> dict[str, str]:
-    """S3: 2-line metadata preamble -> dict (driver-side; 2 rows)."""
-    first_two = spark.sparkContext.textFile(path).take(2)
-    rows = list(csv.reader(io.StringIO("\n".join(first_two))))
-    if len(rows) < 2:
-        return {}
-    return dict(zip(rows[0], (rows[1] + [""] * len(rows[0]))[: len(rows[0])]))
+def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFrame]:
+    """S2/S3/S4: a tall or wide MRF CSV as (preamble metadata, body).
 
+    Line 1 holds the preamble keys and line 2 their values (X3: zipped
+    into a dict, missing values ''); the first non-blank line after them
+    is the header. One action collects those three lines. The body is
+    every later non-blank line that is not a copy of the header, parsed
+    by Spark's CSV parser (``from_csv``) under an all-string schema
+    named from the header, NULL cells blank-filled (P3): the rules
+    ``DataFrameReader.csv`` applies to a dataset of lines with a header.
+    Names are NOT normalized (P1): the raw names (with '|') are semantic
+    for the extractors.
 
-def read_csv_after_preamble(spark: SparkSession, path: str) -> DataFrame:
-    """S2/S4: scan the CSV body that starts at line 3 (header line).
-
-    Spark CSV has no skip-rows option, so the file is line-indexed and
-    the 2 preamble lines dropped before parsing. Assumes no embedded
-    newlines inside quoted fields (the same line-based assumption the
-    reference's ``pd.read_csv(skiprows=2)`` makes). At production
-    scale the extract stage would strip preambles on landing instead.
+    The preamble is dropped by position: ``_line`` counts the rows of
+    each scan partition, and lines 0 and 1 of the first partition are
+    the file's own only if that partition starts with the split at
+    offset 0 and both lines start inside it. Spark orders a file's
+    splits by length, longest first, with a stable sort, so the split
+    at offset 0 (full size unless it is the only one) comes first; the
+    head action checks both conditions and raises ``ValueError`` where
+    they fail (``maxPartitionBytes`` shorter than the first line) rather
+    than parse a preamble line as data. Like the reference's
+    ``pd.read_csv(skiprows=2)``, a quoted field may not span lines.
     """
-    lines = spark.sparkContext.textFile(path)
-    body = lines.zipWithIndex().filter(lambda t: t[1] >= 2).map(lambda t: t[0])
-    df = spark.read.option("header", True).csv(body)
-    # P3: blank-fill; P1: header normalize is NOT applied here — raw
-    # source column names (with '|') are semantic for the extractors.
-    return df.na.fill("")
+    lines = spark.read.text(path).withColumn("_line", F.monotonically_increasing_id())
+    preamble = F.col("_line") < 2
+    nonblank = F.length(F.trim("value")) > 0
+    head = (
+        lines.where(preamble | nonblank)
+        .select("value", "_line", F.input_file_block_start().alias("_start"))
+        .limit(3)
+        .collect()
+    )
+    if len(head) < 3:
+        raise ValueError(f"{path}: no header line after the 2-line preamble")
+    if [(r._line, r._start) for r in head[:2]] != [(0, 0), (1, 0)]:
+        raise ValueError(f"{path}: the 2-line preamble does not start the first scan split")
+    rows = list(csv.reader(io.StringIO("\n".join(r.value for r in head[:2]))))
+    meta = dict(zip(rows[0], rows[1] + [""] * len(rows[0]))) if len(rows) >= 2 else {}
+    header = head[2].value
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    names = _safe_header(_csv_cells(spark, header), case_sensitive)
+    schema = ", ".join(f"`{n.replace('`', '``')}` STRING" for n in names)
+    body = lines.where(~preamble & nonblank & (F.col("value") != header))
+    return meta, body.select(F.from_csv("value", schema).alias("r")).select("r.*").na.fill("")
+
+
+def _csv_cells(spark: SparkSession, line: str) -> list[str | None]:
+    """The cells of one CSV line as Spark's CSV parser splits them (the
+    parser the body goes through), NULL for a blank cell. The query
+    reads a one-row ``VALUES`` table, which the optimizer evaluates on
+    the driver, so no job runs. ``schema_of_csv`` gives the cell count;
+    a line of n commas has at most n + 1 cells."""
+    width = line.count(",") + 1
+    strings = ", ".join(f"c{i} STRING" for i in range(width))
+    row = spark.sql(
+        f"SELECT from_csv(v, schema_of_csv(:line)) AS typed, from_csv(v, '{strings}') AS cells"
+        " FROM VALUES (:line) AS t(v)",
+        args={"line": line},
+    ).collect()[0]
+    return list(row.cells)[: len(row.typed)]
+
+
+def _safe_header(names: list[str | None], case_sensitive: bool) -> list[str]:
+    """Column names from header cells by Spark's ``makeSafeHeader``: a
+    blank (NULL) cell becomes ``_c{i}``, and a repeated name (compared
+    case-insensitively unless ``case_sensitive``) gets its index ``i``
+    appended."""
+    key = (lambda n: n) if case_sensitive else str.lower
+    seen = Counter(key(n) for n in names if n)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if seen[key(n)] > 1 else n
+        for i, n in enumerate(names)
+    ]
 
 
 def explode_code_slots(df: DataFrame, available_cols: list[str]) -> DataFrame:

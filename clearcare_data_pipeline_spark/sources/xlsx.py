@@ -20,6 +20,7 @@ single-writer.
 
 from __future__ import annotations
 
+import os
 import xml.etree.ElementTree as ET
 import zipfile
 
@@ -86,7 +87,8 @@ _WORKBOOK_RELS = f"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 def write_xlsx(
     path: str, header: list[str], rows: list[list[str | None]], sheet_name: str = "Sheet1"
 ) -> None:
-    """Write one worksheet of string cells (None -> empty cell)."""
+    """Write one worksheet of string cells (None -> empty cell),
+    replacing ``path`` atomically."""
     workbook = (
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         f'<workbook xmlns="{_NS_MAIN}" xmlns:r="{_NS_REL_DOC}"><sheets>'
@@ -109,12 +111,21 @@ def write_xlsx(
             )
         body.append(f'<row r="{r}">{"".join(cells)}</row>')
     body.append("</sheetData></worksheet>")
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", _CONTENT_TYPES)
-        z.writestr("_rels/.rels", _ROOT_RELS)
-        z.writestr("xl/workbook.xml", workbook)
-        z.writestr("xl/_rels/workbook.xml.rels", _WORKBOOK_RELS)
-        z.writestr("xl/worksheets/sheet1.xml", "".join(body))
+    # The workbook is built beside ``path`` and swapped in with
+    # os.replace (atomic on POSIX): a failure mid-write leaves the
+    # previous workbook whole.
+    tmp = path + ".tmp"
+    try:
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
+            z.writestr("[Content_Types].xml", _CONTENT_TYPES)
+            z.writestr("_rels/.rels", _ROOT_RELS)
+            z.writestr("xl/workbook.xml", workbook)
+            z.writestr("xl/_rels/workbook.xml.rels", _WORKBOOK_RELS)
+            z.writestr("xl/worksheets/sheet1.xml", "".join(body))
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 # ----------------------------------------------------------------------

@@ -39,20 +39,80 @@ def registry_path(spark, tmp_path):
 
 
 def test_registry_lookup_and_upsert(spark, registry_path):
-    reg = registry_snapshot(spark, registry_path)
+    reg = registry_snapshot(registry_path)
     row = lookup_campus(reg, "general_springfield")
     assert row["hospital_name"] == "General Hospital"
     with pytest.raises(CampusNotFound):
         lookup_campus(reg, "nope")
-    upsert_campus(spark, registry_path, "general_springfield", {"etl_status": "done"}, reg)
+    upsert_campus(registry_path, "general_springfield", {"etl_status": "done"}, reg)
     upsert_campus(
-        spark, registry_path, "new_campus", {"hospital_name": "New One"},
-        registry_snapshot(spark, registry_path),
+        registry_path, "new_campus", {"hospital_name": "New One"},
+        registry_snapshot(registry_path),
     )
-    reg2 = registry_snapshot(spark, registry_path)
+    reg2 = registry_snapshot(registry_path)
     assert len(reg2) == 2
     assert lookup_campus(reg2, "general_springfield")["etl_status"] == "done"
     assert lookup_campus(reg2, "new_campus")["hospital_name"] == "New One"
+
+
+# Every filesystem step of a parquet registry rewrite, in the order a
+# rewrite of a live directory takes them.
+_REWRITE_STEPS = 7
+
+
+def _steps_failing_at(m, fail_at):
+    """Patch the rewrite's filesystem calls so that the ``fail_at``-th
+    one raises instead (a ``write_table`` leaves a truncated file behind
+    first). Returns the list the calls are recorded in."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    calls = []
+    for mod, name in ((os, "rename"), (os, "makedirs"), (shutil, "rmtree"), (pq, "write_table")):
+        def step(*args, _real=getattr(mod, name), _name=name, **kwargs):
+            calls.append(_name)
+            if len(calls) - 1 == fail_at:
+                if _name == "write_table":
+                    with open(args[1], "wb") as f:
+                        f.write(b"PAR1 truncated")
+                raise OSError(f"injected failure at step {fail_at} ({_name})")
+            return _real(*args, **kwargs)
+
+        m.setattr(mod, name, step)
+    return calls
+
+
+@pytest.mark.parametrize("written_by", ["spark", "upsert"])
+@pytest.mark.parametrize("fail_at", range(_REWRITE_STEPS))
+def test_interrupted_registry_rewrite_reads_back_whole(
+    spark, registry_path, monkeypatch, written_by, fail_at
+):
+    # Whichever step of the rewrite fails, the registry reads back as
+    # the old table or the new one, never a mix or nothing: for the
+    # directory Spark wrote (part-*, _SUCCESS, .crc files) and for one
+    # a previous upsert wrote. The next upsert then completes.
+    if written_by == "upsert":
+        with monkeypatch.context() as m:
+            calls = _steps_failing_at(m, None)
+            upsert_campus(
+                registry_path, "other", {"hospital_name": "Other"}, registry_snapshot(registry_path)
+            )
+        assert len(calls) == _REWRITE_STEPS
+    old = registry_snapshot(registry_path)
+    new = registry_snapshot(registry_path)
+    new["general_springfield"] = dict(new["general_springfield"], etl_status="processed")
+    with monkeypatch.context() as m:
+        _steps_failing_at(m, fail_at)
+        with pytest.raises(OSError, match="injected"):
+            upsert_campus(registry_path, "general_springfield", {"etl_status": "processed"}, old)
+    got = registry_snapshot(registry_path)
+    assert got in (old, new)
+    view = load_registry(spark, registry_path).collect()
+    assert {r["campus_id"]: r.asDict() for r in view} == got
+    upsert_campus(registry_path, "general_springfield", {"etl_status": "processed"}, got)
+    assert registry_snapshot(registry_path) == new
+    assert not os.path.exists(registry_path + ".old")
 
 
 @pytest.mark.slow
@@ -75,7 +135,7 @@ def test_run_etl_tall_end_to_end(spark, registry_path, tmp_path):
     assert devlog[-1]["transparency_score"] == res.score
     assert devlog[-1]["unknown_code_types"] == {"LOCAL": 1}
     # registry updated (J4/K6)
-    row = lookup_campus(registry_snapshot(spark, registry_path), "general_springfield")
+    row = lookup_campus(registry_snapshot(registry_path), "general_springfield")
     assert row["etl_status"] == "processed"
     assert row["processed_by"] == "tester"
     assert float(row["transparency_score"]) == pytest.approx(res.score)
@@ -115,7 +175,7 @@ def test_run_etl_all_unknown_code_types_scores_zero(spark, registry_path, tmp_pa
     assert devlog["unknown_code_types"] == {"LOCAL": 1}
     assert (devlog["clean_rows"], devlog["quarantined_rows"]) == (0, 0)
     assert devlog["transparency_score"] == 0.0
-    row = lookup_campus(registry_snapshot(spark, registry_path), "general_springfield")
+    row = lookup_campus(registry_snapshot(registry_path), "general_springfield")
     assert row["transparency_score"] == "0.000000"
 
 
@@ -268,15 +328,40 @@ def _run_layout(spark, cid: str, registry: str, out: str):
 
 @pytest.fixture(scope="module")
 def layout_loop(spark, tmp_path_factory):
-    """One session, one campus per raw layout, run back to back. Yields
-    the registry path, output dir, results and the RDDs that were
-    persisted before the loop began."""
+    """One session, one campus per raw layout, run back to back, each
+    under its own job group. Yields the registry path, output dir,
+    results, Spark jobs per campus and the RDDs that were persisted
+    before the loop began."""
     base = tmp_path_factory.mktemp("layouts")
     registry, out = str(base / "registry.parquet"), str(base / "out")
     _layout_registry(spark, registry)
     before = _persisted_ids(spark)
-    results = {cid: _run_layout(spark, cid, registry, out) for cid in _LAYOUTS}
-    return {"registry": registry, "out": out, "results": results, "persisted_before": before}
+    sc = spark.sparkContext
+    results, jobs = {}, {}
+    for cid in _LAYOUTS:
+        group = f"test_etl.layout_loop.{cid}"
+        sc.setJobGroup(group, f"run_etl {cid}")
+        try:
+            results[cid] = _run_layout(spark, cid, registry, out)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[cid] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return {
+        "registry": registry, "out": out, "results": results, "jobs": jobs,
+        "persisted_before": before,
+    }
+
+
+# Spark jobs per campus on the fixtures (the table in etl.py counts the
+# same phases at sf0.01). The registry runs none, and a CSV file's
+# preamble and header take one action, so a job added to any phase
+# shows here.
+JOBS_PER_CAMPUS = {"tall_campus": 10, "json_campus": 10, "wide_campus": 11}
+
+
+def test_spark_jobs_per_campus(layout_loop):
+    assert layout_loop["jobs"] == JOBS_PER_CAMPUS
 
 
 @pytest.mark.parametrize("cid", sorted(_LAYOUTS))

@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.sources.extract_json import extract_json
 from clearcare_data_pipeline_spark.sources.extract_tall import extract_tall
 from clearcare_data_pipeline_spark.sources.extract_wide import extract_wide
+from clearcare_data_pipeline_spark.sources.mrf import read_mrf_csv
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -159,3 +161,119 @@ def test_extracted_tall_feeds_cleaning(spark):
         # 9 extracted; the 7-digit '0070551' NDC fails R2 format validation
         assert result.clean_rows + result.quarantined_rows == 8
         assert 0.0 <= result.score <= 1.0
+
+
+# --- CSV reader: preamble + body, pinned to the line-indexed reader's output ---
+
+_PRE = 'hospital_name,version,hospital_address\nGeneral Hospital,2.0.0,"123 Main St, Springfield"\n'
+_PRE_META = {
+    "hospital_name": "General Hospital",
+    "version": "2.0.0",
+    "hospital_address": "123 Main St, Springfield",
+}
+
+# file text -> (metadata, columns, rows) as the reader that parsed the
+# lines after the preamble with DataFrameReader.csv returned them
+# (captured before that reader was replaced).
+CSV_READER_CASES = {
+    "quoted_comma": (
+        _PRE + 'description,code,notes\n"Office, visit",99213,"a ""quoted"" note"\nMRI,70551,"x,y,z"\n',
+        _PRE_META,
+        ["description", "code", "notes"],
+        [["Office, visit", "99213", '"a ""quoted"" note"'], ["MRI", "70551", "x,y,z"]],
+    ),
+    "blank_and_duplicate_header": (
+        _PRE + "name,,code,Code,name, \nA,1,2,3,4,5\n",
+        _PRE_META,
+        ["name0", "_c1", "code2", "Code3", "name4", " "],
+        [["A", "1", "2", "3", "4", "5"]],
+    ),
+    "blank_body_lines": (
+        _PRE + "a,b,c\n1,2,3\n\n   \n\t\n4,5,6\n",
+        _PRE_META,
+        ["a", "b", "c"],
+        [["1", "2", "3"], ["\t", "", ""], ["4", "5", "6"]],
+    ),
+    "body_line_equals_header": (
+        _PRE + 'a,b,c\n1,2,3\na,b,c\n a,b,c\n"a",b,c\n4,5,6\n',
+        _PRE_META,
+        ["a", "b", "c"],
+        [["1", "2", "3"], [" a", "b", "c"], ["a", "b", "c"], ["4", "5", "6"]],
+    ),
+    "preamble_shorter_than_header": (
+        "hospital_name,version\nGeneral Hospital\na,b,c,d\n1,2,3,4\n",
+        {"hospital_name": "General Hospital", "version": ""},
+        ["a", "b", "c", "d"],
+        [["1", "2", "3", "4"]],
+    ),
+    "no_body": (_PRE + "a,b,c\n", _PRE_META, ["a", "b", "c"], []),
+    "no_body_no_newline": (_PRE + "a,b,c", _PRE_META, ["a", "b", "c"], []),
+    "short_and_long_rows": (
+        _PRE + "a,b,c\n1\n1,2,3,4,5\n,,\n",
+        _PRE_META,
+        ["a", "b", "c"],
+        [["1", "", ""], ["1", "2", "3"], ["", "", ""]],
+    ),
+    "crlf": (_PRE.replace("\n", "\r\n") + "a,b\r\n1,2\r\n", _PRE_META, ["a", "b"], [["1", "2"]]),
+    "blank_line_before_header": (_PRE + "\na,b\n1,2\n", _PRE_META, ["a", "b"], [["1", "2"]]),
+    "backslash_escape_in_header": (
+        _PRE + '"a\\"b",a\\,c\n1,2,3\n',
+        _PRE_META,
+        ['a"b', "a\\", "c"],
+        [["1", "2", "3"]],
+    ),
+    "doubled_quote_in_header": (
+        _PRE + '"a ""q"" z","b"""\n1,2\n',
+        _PRE_META,
+        ['"a ""q"" z"', 'b""'],
+        [["1", "2"]],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CSV_READER_CASES))
+def test_csv_reader_matches_line_indexed_reader(spark, tmp_path, case):
+    text, meta, columns, rows = CSV_READER_CASES[case]
+    path = tmp_path / f"{case}.csv"
+    path.write_bytes(text.encode())
+    got_meta, df = read_mrf_csv(spark, str(path))
+    assert got_meta == meta
+    assert df.columns == columns
+    assert sorted(list(r) for r in df.collect()) == sorted(rows)
+
+
+def test_csv_reader_drops_preamble_only_in_first_split(spark, tmp_path):
+    # Forced into many small splits, every line after the header is
+    # read once, and only the file's own first lines are dropped.
+    body = [f"{i},v{i}" for i in range(300)]
+    path = tmp_path / "split.csv"
+    path.write_text(_PRE + "a,b\n" + "\n".join(body) + "\n")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "512")
+    try:
+        meta, df = read_mrf_csv(spark, str(path))
+        assert df.rdd.getNumPartitions() > 1
+        got = sorted(f"{r.a},{r.b}" for r in df.collect())
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert meta == _PRE_META
+    assert got == sorted(body)
+
+
+def test_csv_reader_refuses_preamble_split_across_partitions(spark, tmp_path):
+    # A split shorter than preamble line 0 puts line 1 in another scan
+    # partition, where it cannot be told apart from a data row.
+    path = tmp_path / "long_preamble.csv"
+    path.write_text("k" * 600 + ",version\nv,2.0.0\na,b\n1,2\n")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "512")
+    try:
+        with pytest.raises(ValueError, match="does not start the first scan split"):
+            read_mrf_csv(spark, str(path))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+def test_csv_reader_needs_a_header_line(spark, tmp_path):
+    path = tmp_path / "preamble_only.csv"
+    path.write_text(_PRE)
+    with pytest.raises(ValueError, match="no header line"):
+        read_mrf_csv(spark, str(path))

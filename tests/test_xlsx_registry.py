@@ -5,18 +5,15 @@ import zipfile
 
 from clearcare_data_pipeline_spark.schema import REGISTRY_COLUMNS
 from clearcare_data_pipeline_spark.sources.registry import (
-    load_registry_xlsx,
+    load_registry,
     lookup_campus,
     registry_snapshot,
-    save_registry_xlsx,
 )
 from clearcare_data_pipeline_spark.sources.xlsx import read_xlsx, write_xlsx
 
 
-def _mk_registry(spark, rows):
-    from clearcare_data_pipeline_spark.schema import REGISTRY_SCHEMA
-
-    return spark.createDataFrame(rows, REGISTRY_SCHEMA)
+def _write_registry(path, rows):
+    write_xlsx(path, list(REGISTRY_COLUMNS), rows)
 
 
 def _row(campus_id, name, **kw):
@@ -24,20 +21,19 @@ def _row(campus_id, name, **kw):
     base["campus_id"] = campus_id
     base["hospital_name"] = name
     base.update(kw)
-    return tuple(base[c] for c in REGISTRY_COLUMNS)
+    return [base[c] for c in REGISTRY_COLUMNS]
 
 
 def test_registry_xlsx_roundtrip(spark, tmp_path):
     path = str(tmp_path / "Hospital Registry.xlsx")
-    df = _mk_registry(
-        spark,
+    _write_registry(
+        path,
         [
             _row("st-marys", "St. Mary's & Sons <Hospital>", city="Austin", zip_code="73301"),
             _row("general", "General, \"The\" Hospital", cms_rating="4.5"),
         ],
     )
-    save_registry_xlsx(df, path)
-    back = load_registry_xlsx(spark, path)
+    back = load_registry(spark, path)
     assert sorted(back.columns) == sorted(REGISTRY_COLUMNS)
     got = {r["campus_id"]: r for r in back.collect()}
     assert got["st-marys"]["hospital_name"] == "St. Mary's & Sons <Hospital>"
@@ -47,12 +43,10 @@ def test_registry_xlsx_roundtrip(spark, tmp_path):
     assert got["general"]["city"] is None
 
 
-def test_registry_xlsx_lookup(spark, tmp_path):
+def test_registry_xlsx_lookup(tmp_path):
     path = str(tmp_path / "reg.xlsx")
-    save_registry_xlsx(
-        _mk_registry(spark, [_row("mercy-west", "Mercy West", state="IA")]), path
-    )
-    row = lookup_campus(registry_snapshot(spark, path), "mercy-west")
+    _write_registry(path, [_row("mercy-west", "Mercy West", state="IA")])
+    row = lookup_campus(registry_snapshot(path), "mercy-west")
     assert row["state"] == "IA"
 
 
@@ -65,7 +59,7 @@ def test_load_xlsx_missing_and_extra_columns(spark, tmp_path):
         ["campus_id", "bogus_col", "hospital_name"],
         [["c1", "ignore me", "Alpha Medical"]],
     )
-    got = load_registry_xlsx(spark, path).collect()[0]
+    got = load_registry(spark, path).collect()[0]
     assert got["hospital_name"] == "Alpha Medical"
     assert got["campus_id"] == "c1"
     assert got["state"] is None
@@ -110,17 +104,52 @@ def test_write_xlsx_wide_sheet_column_letters(tmp_path):
     assert rows == [[str(i) for i in range(30)]]
 
 
-@pytest.mark.slow
-def test_upsert_and_dispatch_through_xlsx_path(spark, tmp_path):
-    # load_registry / upsert_campus dispatch on the .xlsx extension, so
+def test_upsert_and_dispatch_through_xlsx_path(tmp_path):
+    # registry_snapshot / upsert_campus dispatch on the .xlsx extension, so
     # the reference's read-modify-write workbook cycle works verbatim.
     from clearcare_data_pipeline_spark.sources.registry import upsert_campus
 
     path = str(tmp_path / "Hospital Registry.xlsx")
-    save_registry_xlsx(_mk_registry(spark, [_row("gen", "General")]), path)
-    upsert_campus(spark, path, "gen", {"etl_status": "done"}, registry_snapshot(spark, path))
-    upsert_campus(spark, path, "new1", {"hospital_name": "New One"}, registry_snapshot(spark, path))
-    reg = registry_snapshot(spark, path)
+    _write_registry(path, [_row("gen", "General")])
+    upsert_campus(path, "gen", {"etl_status": "done"}, registry_snapshot(path))
+    upsert_campus(path, "new1", {"hospital_name": "New One"}, registry_snapshot(path))
+    reg = registry_snapshot(path)
     assert len(reg) == 2
     assert lookup_campus(reg, "gen")["etl_status"] == "done"
     assert lookup_campus(reg, "new1")["hospital_name"] == "New One"
+
+
+@pytest.mark.parametrize("fail_in", ["sheet_write", "replace"])
+def test_failed_xlsx_rewrite_keeps_previous_workbook(tmp_path, monkeypatch, fail_in):
+    # A failure while the new workbook is written, or while it is
+    # swapped in, leaves the previous workbook readable and whole, with
+    # no temp file beside it.
+    import os
+
+    from clearcare_data_pipeline_spark.sources import xlsx
+    from clearcare_data_pipeline_spark.sources.registry import upsert_campus
+
+    path = str(tmp_path / "Hospital Registry.xlsx")
+    _write_registry(path, [_row("gen", "General"), _row("m", "Mercy")])
+    before = registry_snapshot(path)
+
+    real_writestr = zipfile.ZipFile.writestr
+
+    def failing_writestr(self, name, data, *args, **kwargs):
+        if name == "xl/worksheets/sheet1.xml":
+            real_writestr(self, name, data[: len(data) // 2], *args, **kwargs)
+            raise OSError("injected failure mid-sheet")
+        return real_writestr(self, name, data, *args, **kwargs)
+
+    def failing_replace(src, dst):
+        raise OSError("injected failure at replace")
+
+    with monkeypatch.context() as m:
+        if fail_in == "sheet_write":
+            m.setattr(zipfile.ZipFile, "writestr", failing_writestr)
+        else:
+            m.setattr(xlsx.os, "replace", failing_replace)
+        with pytest.raises(OSError, match="injected"):
+            upsert_campus(path, "gen", {"etl_status": "processed"}, before)
+    assert registry_snapshot(path) == before
+    assert os.listdir(tmp_path) == ["Hospital Registry.xlsx"]

@@ -7,6 +7,7 @@
 #
 # Produces/refreshes, in order:
 #   1. green pytest suite                 (correctness of non-relational adapters)
+#      + perfbench/tests                  (the benchmark's event-log reader)
 #   2. CORRECTNESS_LOCAL_r{N}.json        (all queries vs DuckDB oracles, sf0.01)
 #   3. PLAN_AUDIT.md                      (physical-plan audit, exits nonzero on violations)
 #   4. BENCH_local_r{N}.json              (informal local bench; the driver records
@@ -20,8 +21,10 @@ set -e
 N="${1:?usage: sh tools/round_close.sh <round-number> [--sf1]}"
 R=$(printf 'r%02d' "$N")
 
-# the full suite: pytest.ini deselects the slow tests by default
+# the full suite (pytest.ini deselects the slow tests by default), then
+# the benchmark's event-log reader tests, which tests/ does not collect
 python -m pytest tests/ -q -m "slow or not slow"
+python3 -m pytest perfbench/tests -q
 python tools/verify_local.py --out "CORRECTNESS_LOCAL_${R}.json" /root/testdata/sf0.01
 python tools/plan_audit.py /root/testdata/sf0.01
 python bench.py > "BENCH_local_${R}.json"
