@@ -173,10 +173,8 @@ def clean_price_fields(df: DataFrame) -> DataFrame:
     )
 
 
-def scrub_invalid_tokens(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """R1 applied to every string column (or an explicit subset)."""
-    if columns is None:
-        columns = [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
+def scrub_invalid_tokens(df: DataFrame, columns: list[str]) -> DataFrame:
+    """R1 applied to ``columns``."""
     return df.withColumns({c: scrub_invalid_token_expr(F.col(c)) for c in columns})
 
 

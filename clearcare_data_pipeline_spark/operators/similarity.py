@@ -98,7 +98,8 @@ def dot_expr(a: Column, b: Column) -> Column:
 
 # Codegen-size bound for the unrolled dot below: a single dot of
 # <= 256 terms compiles fine, unlike the 64-planes x 64-dims = 4096
-# term matrix that pushed lsh_bucket_expr to a runtime loop.
+# term matrix that keeps the LSH signature (lsh_bucket_from_mat) a
+# runtime loop.
 DOT_UNROLL_MAX_DIM = 256
 
 
@@ -248,37 +249,21 @@ def cosine_topk(
     )
 
 
-def lsh_bucket_expr(dvec: Column, num_planes: int = NUM_PLANES) -> Column:
-    """``num_planes``-bit hyperplane signature: bit j set iff
-    dot(v, plane_j) >= 0.
-
-    One ``transform`` over a constant plane-matrix literal (runtime
-    loop) instead of unrolled dot-product trees — same
-    codegen-size rationale as ``ivf_cell_expr``.
+def lsh_bucket_from_mat(dvec: Column, pmat: Column) -> Column:
+    """Hyperplane signature over a plane matrix COLUMN: bit j set iff
+    dot(v, plane_j) >= 0. The matrix rides a one-row broadcast table
+    (``plane_matrix_df``, same rationale as ``centroid_matrix_df``)
+    instead of a ~num_planes x 64 literal expression tree, whose
+    per-query Python construction + analysis cost was ~0.6 s of the
+    near-dup operator's small-scale fixed overhead (r9).
 
     Both sides of each dot are sliced to min(len(v), PLANE_DIM) first
     (ADVICE r7 #1): ``zip_with`` null-pads the shorter array, so a
-    vector whose length differs from the 64-long plane literal used to
-    turn every product NULL — every bit fell to the otherwise(0) branch
-    and all such vectors collapsed into bucket 0 (a silent O(n^2) pair
-    join). The slice restores the plane-PREFIX semantics the pandas
-    path (``pm[:, :x.shape[1]]``) and the DuckDB ``_bucket_sql`` twin
-    always had, so the three evaluators agree for any dimension."""
-    planes = F.array(
-        *[F.array(*[F.lit(w) for w in _plane(j)]) for j in range(num_planes)]
-    )
-    return lsh_bucket_from_mat(dvec, planes)
-
-
-def lsh_bucket_from_mat(dvec: Column, pmat: Column) -> Column:
-    """The signature fold over a plane matrix COLUMN — the shape
-    ``lsh_buckets`` actually executes (r9): the plane matrix rides a
-    one-row broadcast table (``plane_matrix_df``, same rationale as
-    ``centroid_matrix_df``) instead of a ~num_planes x 64 literal
-    expression tree, whose per-query Python construction + analysis
-    cost was ~0.6 s of the near-dup operator's small-scale fixed
-    overhead. Values are bit-identical either way — the runtime fold
-    is the same; only where the plane bytes live changes."""
+    vector whose length differs from the 64-long planes would turn
+    every product NULL and collapse into bucket 0. The slice keeps the
+    plane-PREFIX semantics of the pandas path (``pm[:, :x.shape[1]]``)
+    and the DuckDB ``_bucket_sql`` twin, so the three evaluators agree
+    for any dimension."""
     n = F.least(F.size(dvec), F.lit(PLANE_DIM))
     v = F.slice(dvec, 1, n)
     bits = F.transform(

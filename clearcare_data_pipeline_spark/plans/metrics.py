@@ -20,7 +20,7 @@ A2 histogram, with no Spark work of its own.
 
 ``run_etl`` and the ``charges_*`` queries build their outputs from these
 same functions, so the DuckDB oracle of each query checks the
-expression the ETL runs.
+expression and the row population the ETL runs.
 """
 
 from __future__ import annotations
@@ -38,11 +38,6 @@ from clearcare_data_pipeline_spark.schema import ALLOWED_CODE_TYPES, CANONICAL_C
 # Column-name prefixes of the A1/A2 families inside ``tagged_summary``.
 _PRESENT = "present:"
 _CODE_TYPE = "code_type:"
-
-
-def field_presence(df: DataFrame) -> DataFrame:
-    """A1: one row; per canonical column, the count of present values."""
-    return df.agg(*[F.count(F.when(present(c), F.lit(1))).alias(c) for c in CANONICAL_COLUMNS])
 
 
 def missing_code_types(histogram: dict[str, int]) -> list[str]:
@@ -112,6 +107,23 @@ def tagged_summary(tagged: DataFrame) -> DataFrame:
     )
     summary = tagged.agg(*aggs).withColumn("total_violations", violations)
     return summary.withColumn("transparency_score", score)
+
+
+def presence_counts(summary: DataFrame) -> DataFrame:
+    """A1 as one row: the field-presence columns of a ``tagged_summary``
+    frame, named by canonical column."""
+    return summary.select(*[F.col(f"`{_PRESENT}{c}`").alias(c) for c in CANONICAL_COLUMNS])
+
+
+def code_type_counts(summary: DataFrame) -> DataFrame:
+    """A2 as (code_type, n) rows: the histogram columns of a
+    ``tagged_summary`` frame unpivoted, the types never seen left out
+    as ``parse_summary`` leaves them out."""
+    pairs = [
+        F.struct(F.lit(t).alias("code_type"), F.col(f"`{_CODE_TYPE}{t}`").alias("n"))
+        for t in ALLOWED_CODE_TYPES
+    ]
+    return summary.select(F.inline(F.array(*pairs))).where(F.col("n") > 0)
 
 
 def parse_summary(row: dict) -> dict:

@@ -40,10 +40,12 @@ Granularity and its consequences (deliberate):
 Exclusions (each with the reason it cannot hide a semantic change):
 
 * ``clearcare_data_pipeline_spark.queries`` (the package __init__):
-  registry wiring and scale-class metadata only. A registry REMAP of
-  a name to a different function is still caught, because the check
-  side re-resolves the defining module from the CURRENT registry — a
-  remap changes the closure and therefore the hash.
+  registry wiring, scale-class metadata and ``query_code_hashes`` (the
+  per-query lookup of these hashes) only. A registry REMAP of a name
+  to a different function is still caught, because the check side
+  re-resolves the defining module from the CURRENT registry — a remap
+  changes the closure and therefore the hash. This module imports
+  nothing from the registry, so package code may import it.
 
 Everything else inside the package (operators/, sources/, functions/,
 plans/, streaming/, the query modules, _oracle_expr) participates.
@@ -205,32 +207,6 @@ def check_no_reexports_through_excluded(modname: str) -> None:
                 "re-exports through the registry package are invisible "
                 "to closure hashes; import the defining module directly"
             )
-
-
-def query_code_hashes(names: list[str] | None = None) -> dict[str, str]:
-    """``code_hash`` for each registered query (default: all). The
-    defining module is resolved from the CURRENT registry, so a
-    remapped name hashes its new implementation. Refuses functions
-    whose defining module lies outside the hashed package (wrappers,
-    partials, lambdas in the registry __init__) and closures that
-    reach back into the excluded registry package."""
-    from clearcare_data_pipeline_spark.queries import all_queries
-
-    registry = all_queries()
-    out: dict[str, str] = {}
-    for name in (names if names is not None else list(registry)):
-        fn = registry[name]
-        mod = fn.__module__
-        if module_path(mod) is None or mod in EXCLUDED_MODULES:
-            raise ValueError(
-                f"query {name!r} is defined in {mod!r}, which the "
-                "closure walk cannot hash — move the function into a "
-                "package module (no partials/lambdas/registry-__init__ "
-                "definitions)"
-            )
-        check_no_reexports_through_excluded(mod)
-        out[name] = closure_hash(mod)
-    return out
 
 
 def clear_caches() -> None:

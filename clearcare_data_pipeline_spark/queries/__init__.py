@@ -99,3 +99,32 @@ def all_queries() -> dict[str, QueryFn]:
 
 def all_oracles() -> dict[str, str]:
     return _merged("ORACLES")
+
+
+def query_code_hashes(names: list[str] | None = None) -> dict[str, str]:
+    """``code_hash`` for each registered query (default: all): the
+    ``provenance.closure_hash`` of its defining module. The defining
+    module is resolved from the CURRENT registry, so a remapped name
+    hashes its new implementation. Refuses functions whose defining
+    module lies outside the hashed package (wrappers, partials, lambdas
+    in this registry __init__) and closures that reach back into the
+    excluded registry package. It lives here so that ``provenance``
+    imports nothing from the registry, and package code (the
+    cleaned-stage cache key) may import ``provenance``."""
+    from clearcare_data_pipeline_spark import provenance
+
+    registry = all_queries()
+    out: dict[str, str] = {}
+    for name in (names if names is not None else list(registry)):
+        fn = registry[name]
+        mod = fn.__module__
+        if provenance.module_path(mod) is None or mod in provenance.EXCLUDED_MODULES:
+            raise ValueError(
+                f"query {name!r} is defined in {mod!r}, which the "
+                "closure walk cannot hash — move the function into a "
+                "package module (no partials/lambdas/registry-__init__ "
+                "definitions)"
+            )
+        provenance.check_no_reexports_through_excluded(mod)
+        out[name] = provenance.closure_hash(mod)
+    return out

@@ -15,7 +15,12 @@ from pyspark.sql import functions as F
 from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type
 from clearcare_data_pipeline_spark.functions.text import split_payer_name_id
 from clearcare_data_pipeline_spark.pipeline import clean_charges, score_summary
-from clearcare_data_pipeline_spark.plans.metrics import field_presence, modifier_tokens, tagged_summary
+from clearcare_data_pipeline_spark.plans.metrics import (
+    code_type_counts,
+    modifier_tokens,
+    presence_counts,
+    tagged_summary,
+)
 from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, tag_violations
 from clearcare_data_pipeline_spark.queries._textsql import (
     PAYER_EXTRACT_RE,
@@ -40,26 +45,16 @@ _CLEANED_CKPT: dict[str, str] = {}
 
 def _cleaned_version_key() -> str:
     """Content key for the cleaned checkpoint: the derivation SQL plus
-    the source of the whole cleaning chain (pipeline.clean_charges, the
-    column expressions it composes, and the schema module whose
-    CANONICAL_COLUMNS drives ensure_columns and the dedup key set —
-    ADVICE r5). Any edit to any of them yields a new cache directory,
-    so stale cleaned results can never be served."""
-    import inspect
-
-    from clearcare_data_pipeline_spark import pipeline as pipeline_mod
-    from clearcare_data_pipeline_spark import schema as schema_mod
-    from clearcare_data_pipeline_spark.functions import cleaning as cleaning_mod
+    the closure hash of ``pipeline``, which covers ``clean_charges``,
+    the column expressions it composes and the schema module whose
+    CANONICAL_COLUMNS drives ensure_columns and the dedup key set. Any
+    edit to any of them yields a new cache directory, so stale cleaned
+    results can never be served."""
+    from clearcare_data_pipeline_spark.provenance import closure_hash
     from clearcare_data_pipeline_spark.sources.charges import _CHARGES_SQL_TEMPLATE
 
     return "\x00".join(
-        [
-            "cleaned-v1",
-            _CHARGES_SQL_TEMPLATE,
-            inspect.getsource(pipeline_mod),
-            inspect.getsource(cleaning_mod),
-            inspect.getsource(schema_mod),
-        ]
+        ["cleaned-v1", _CHARGES_SQL_TEMPLATE, closure_hash("clearcare_data_pipeline_spark.pipeline")]
     )
 
 
@@ -125,8 +120,13 @@ def q_charges_rules_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q: per-rule violation counts (devlog A8) --------------------------
 
 
+def _summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ETL's devlog aggregate over the cleaned table."""
+    return tagged_summary(tag_violations(_cleaned(spark, sf_dir)))
+
+
 def q_charges_rule_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tagged_summary(tag_violations(_cleaned(spark, sf_dir))).select(
+    return _summary(spark, sf_dir).select(
         *RULE_NAMES, "total_rows", "quarantined_rows", "algorithm_format_issues"
     )
 
@@ -152,17 +152,14 @@ def q_charges_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_charges_field_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _cleaned(spark, sf_dir).select(*CANONICAL_COLUMNS)
-    return field_presence(df)
+    """A1 over the rows that pass the rules, the rows the clean sink
+    receives."""
+    return presence_counts(_summary(spark, sf_dir))
 
 
 def q_charges_code_type_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _cleaned(spark, sf_dir)
-    return (
-        df.where(F.col("code_type").isNotNull())
-        .groupBy("code_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    """A2 over the rows that pass the rules."""
+    return code_type_counts(_summary(spark, sf_dir))
 
 
 def q_charges_unknown_code_types(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,12 +250,13 @@ def _oracles() -> dict[str, str]:
             f"SELECT {_CANON}, rules_violated FROM tagged WHERE rules_violated <> ''"
         ),
         "charges_field_presence": (
-            f"WITH {cleaned_charges_cte(_LINEITEM_REL)} SELECT {presence} FROM cleaned"
+            f"WITH {tagged_charges_cte(_LINEITEM_REL)} "
+            f"SELECT {presence} FROM tagged WHERE rules_violated = ''"
         ),
         "charges_code_type_histogram": (
-            f"WITH {cleaned_charges_cte(_LINEITEM_REL)} "
-            "SELECT code_type, CAST(count(*) AS BIGINT) AS n FROM cleaned "
-            "WHERE code_type IS NOT NULL GROUP BY code_type"
+            f"WITH {tagged_charges_cte(_LINEITEM_REL)} "
+            "SELECT code_type, CAST(count(*) AS BIGINT) AS n FROM tagged "
+            "WHERE rules_violated = '' AND code_type IS NOT NULL GROUP BY code_type"
         ),
         "charges_unknown_code_types": (
             # pre-validate/pre-dedup stage == the `flagged` CTE

@@ -86,5 +86,13 @@ def get_spark(app_name: str = "clearcare-spark", shuffle_partitions: int | None 
         # executor-memory-safe at large SF while remaining the right
         # granularity for local[32] over small files.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Tungsten page size. Spark derives it from heap / cores (64 MiB
+        # with the default heap above on 4 cores), and a broadcast hash
+        # relation whose keys do not pack into one long (q5's supplier
+        # side, the MinHash band table) takes one whole page: 64 MiB
+        # for 100 or 2,200 rows, held in the block store until the
+        # context cleaner gets to it. 4 MiB still addresses 32 GiB per
+        # task.
+        .config("spark.buffer.pageSize", "4m")
     )
     return builder.getOrCreate()

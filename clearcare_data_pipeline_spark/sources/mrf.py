@@ -38,11 +38,20 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     into a dict, missing values ''); the first non-blank line after them
     is the header. One action collects those three lines. The body is
     every later non-blank line that is not a copy of the header, parsed
-    by Spark's CSV parser (``from_csv``) under an all-string schema
-    named from the header, NULL cells blank-filled (P3): the rules
-    ``DataFrameReader.csv`` applies to a dataset of lines with a header.
-    Names are NOT normalized (P1): the raw names (with '|') are semantic
-    for the extractors.
+    by ``from_csv`` under an all-string schema named from the header,
+    NULL cells blank-filled (P3): the rules ``DataFrameReader.csv``
+    applies to a dataset of lines with a header. Names are NOT
+    normalized (P1): the raw names (with '|') are semantic for the
+    extractors.
+
+    One CSV dialect, RFC 4180 as the reference's ``pd.read_csv`` reads
+    it: the preamble and header lines go through Python's ``csv.reader``
+    and the body through ``from_csv`` with ``escape='"'``, so a doubled
+    quote in a quoted cell is one quote everywhere (``"a ""q"" z"`` ->
+    ``a "q" z``). Two differences from pandas remain: a quoted body cell
+    holding a backslash before a quote (``"x\\"y"``, not RFC 4180) comes
+    out as its raw text where pandas gives ``x\\y"``, and a quoted field
+    may not span lines.
 
     The preamble is dropped by position: ``_line`` counts the rows of
     each scan partition, and lines 0 and 1 of the first partition are
@@ -52,8 +61,7 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     at offset 0 (full size unless it is the only one) comes first; the
     head action checks both conditions and raises ``ValueError`` where
     they fail (``maxPartitionBytes`` shorter than the first line) rather
-    than parse a preamble line as data. Like the reference's
-    ``pd.read_csv(skiprows=2)``, a quoted field may not span lines.
+    than parse a preamble line as data.
     """
     lines = spark.read.text(path).withColumn("_line", F.monotonically_increasing_id())
     preamble = F.col("_line") < 2
@@ -72,31 +80,16 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     meta = dict(zip(rows[0], rows[1] + [""] * len(rows[0]))) if len(rows) >= 2 else {}
     header = head[2].value
     case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-    names = _safe_header(_csv_cells(spark, header), case_sensitive)
+    names = _safe_header(next(csv.reader([header])), case_sensitive)
     schema = ", ".join(f"`{n.replace('`', '``')}` STRING" for n in names)
     body = lines.where(~preamble & nonblank & (F.col("value") != header))
-    return meta, body.select(F.from_csv("value", schema).alias("r")).select("r.*").na.fill("")
+    cells = F.from_csv("value", schema, {"escape": '"'})
+    return meta, body.select(cells.alias("r")).select("r.*").na.fill("")
 
 
-def _csv_cells(spark: SparkSession, line: str) -> list[str | None]:
-    """The cells of one CSV line as Spark's CSV parser splits them (the
-    parser the body goes through), NULL for a blank cell. The query
-    reads a one-row ``VALUES`` table, which the optimizer evaluates on
-    the driver, so no job runs. ``schema_of_csv`` gives the cell count;
-    a line of n commas has at most n + 1 cells."""
-    width = line.count(",") + 1
-    strings = ", ".join(f"c{i} STRING" for i in range(width))
-    row = spark.sql(
-        f"SELECT from_csv(v, schema_of_csv(:line)) AS typed, from_csv(v, '{strings}') AS cells"
-        " FROM VALUES (:line) AS t(v)",
-        args={"line": line},
-    ).collect()[0]
-    return list(row.cells)[: len(row.typed)]
-
-
-def _safe_header(names: list[str | None], case_sensitive: bool) -> list[str]:
+def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:
     """Column names from header cells by Spark's ``makeSafeHeader``: a
-    blank (NULL) cell becomes ``_c{i}``, and a repeated name (compared
+    blank ('') cell becomes ``_c{i}``, and a repeated name (compared
     case-insensitively unless ``case_sensitive``) gets its index ``i``
     appended."""
     key = (lambda n: n) if case_sensitive else str.lower

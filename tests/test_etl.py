@@ -179,6 +179,28 @@ def test_run_etl_all_unknown_code_types_scores_zero(spark, registry_path, tmp_pa
     assert row["transparency_score"] == "0.000000"
 
 
+def test_run_etl_reads_doubled_quotes_as_one(spark, registry_path, tmp_path):
+    # RFC 4180, as the reference's pd.read_csv reads it: a doubled quote
+    # inside a quoted cell is one quote in the clean sink.
+    raw = tmp_path / "quoted_notes.csv"
+    with open(f"{FIX}/tall.csv") as f:
+        preamble = [next(f) for _ in range(3)]
+    raw.write_text(
+        "".join(preamble)
+        + 'Office visit,99213,CPT,,,,,,,Aetna [AET001],PPO,$120.50,,,fee schedule,'
+        + '200,150,100,300,,outpatient,,,"a ""quoted"" note",26\n'
+    )
+    res = run_etl(
+        spark,
+        campus_id="general_springfield",
+        raw_path=str(raw),
+        registry_path=registry_path,
+        output_dir=str(tmp_path / "out"),
+    )
+    clean = spark.read.parquet(res.clean_path).collect()
+    assert [r["additional_notes"] for r in clean] == ['a "quoted" note']
+
+
 @pytest.mark.slow
 def test_run_etl_twice_appends_devlog(spark, registry_path, tmp_path):
     out = str(tmp_path / "out")

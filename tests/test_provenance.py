@@ -14,7 +14,7 @@ import sys
 import pytest
 
 from clearcare_data_pipeline_spark import provenance as P
-from clearcare_data_pipeline_spark.queries import all_queries
+from clearcare_data_pipeline_spark.queries import all_queries, query_code_hashes
 
 PKG = "clearcare_data_pipeline_spark"
 
@@ -27,7 +27,7 @@ def _fresh_caches():
 
 
 def test_every_registered_query_gets_a_hash():
-    hashes = P.query_code_hashes()
+    hashes = query_code_hashes()
     assert set(hashes) == set(all_queries())
     for name, h in hashes.items():
         assert h.startswith(P.HASH_PREFIX) and len(h) == len(P.HASH_PREFIX) + P.HASH_LEN, (name, h)
@@ -59,7 +59,7 @@ def test_hash_changes_iff_closure_module_bytes_change(monkeypatch):
     """Perturb one operator module's bytes (reader-level, no disk
     writes): every query whose closure includes it re-hashes; every
     query whose closure doesn't is untouched."""
-    before = P.query_code_hashes()
+    before = query_code_hashes()
     target = P.module_path(f"{PKG}.operators.similarity")
     real = P._file_bytes.__wrapped__
 
@@ -71,7 +71,7 @@ def test_hash_changes_iff_closure_module_bytes_change(monkeypatch):
     P.import_closure.cache_clear()
     P.closure_hash.cache_clear()
     P._direct_imports.cache_clear()
-    after = P.query_code_hashes()
+    after = query_code_hashes()
 
     registry = all_queries()
     for name in registry:
@@ -89,7 +89,7 @@ def test_hash_changes_iff_closure_module_bytes_change(monkeypatch):
 
 def test_unknown_query_name_raises():
     with pytest.raises(KeyError):
-        P.query_code_hashes(["not_a_query"])
+        query_code_hashes(["not_a_query"])
 
 
 def test_relative_import_hard_errors(tmp_path, monkeypatch):
@@ -136,7 +136,7 @@ def _run_merge(tmp_path, artifacts, *extra):
 
 
 def test_merge_refuses_stale_then_accepts_waiver_and_matches_current(tmp_path):
-    current = P.query_code_hashes(["q1_pricing_summary", "doc_stats"])
+    current = query_code_hashes(["q1_pricing_summary", "doc_stats"])
     doc = {
         "sf_dir": "x",
         "queries": {
@@ -174,7 +174,7 @@ def test_merge_refuses_unhashed_unless_allowed(tmp_path):
 
 
 def test_merge_rejects_waiver_for_absent_query_and_empty_reason(tmp_path):
-    current = P.query_code_hashes(["doc_stats"])
+    current = query_code_hashes(["doc_stats"])
     doc = {"sf_dir": "x",
            "queries": {"doc_stats": _entry(code_hash=current["doc_stats"])}}
     proc, _ = _run_merge(tmp_path, [doc], "--waive", "no_such_query=whatever")
@@ -185,7 +185,7 @@ def test_merge_rejects_waiver_for_absent_query_and_empty_reason(tmp_path):
 
 
 def test_merge_later_input_wins_and_fresh_hash_passes(tmp_path):
-    current = P.query_code_hashes(["doc_stats"])
+    current = query_code_hashes(["doc_stats"])
     stale = {"sf_dir": "x",
              "queries": {"doc_stats": _entry(code_hash="ch:0000000000000000")}}
     fresh = {"sf_dir": "x",
@@ -208,7 +208,7 @@ def test_backfilled_r12_artifacts_are_fully_hashed():
     for path in ("CORRECTNESS_LOCAL_r12.json", "CORRECTNESS_SF1_r12.json",
                  "CORRECTNESS_SF10_r12.json"):
         doc = json.load(open(path))
-        current = P.query_code_hashes(list(doc["queries"]))
+        current = query_code_hashes(list(doc["queries"]))
         for name, entry in doc["queries"].items():
             recorded = entry.get("code_hash")
             assert isinstance(recorded, str) and recorded.startswith("ch:"), (
@@ -221,7 +221,7 @@ def test_merge_output_may_overwrite_an_input(tmp_path):
     (CORRECTNESS_SF10_r12.json both read and written). The tool reads
     every input fully before writing — pin that, so a future
     streaming-read refactor can't silently truncate the artifact."""
-    current = P.query_code_hashes(["doc_stats"])
+    current = query_code_hashes(["doc_stats"])
     doc = {"sf_dir": "x",
            "queries": {"doc_stats": _entry(code_hash=current["doc_stats"])}}
     p = tmp_path / "artifact.json"
@@ -240,7 +240,7 @@ def test_waiver_persists_and_rechecks_clean_on_next_merge(tmp_path):
     """A --waive stamps the CURRENT hash next to the recorded waiver
     text; the NEXT merge therefore re-checks it as a normal matched
     entry while the waiver text stays in the artifact for reviewers."""
-    current = P.query_code_hashes(["doc_stats"])
+    current = query_code_hashes(["doc_stats"])
     doc = {"sf_dir": "x",
            "queries": {"doc_stats": _entry(code_hash="ch:0000000000000000")}}
     proc, merged = _run_merge(tmp_path, [doc], "--waive", "doc_stats=spelling-only, see diff")
@@ -259,7 +259,7 @@ def test_merge_is_cwd_independent(tmp_path):
     sys.path to its own location, not '.'. Run the merge from inside
     tmp_path; with the old cwd-relative insert this import fails (or
     worse, silently hashes an installed package)."""
-    current = P.query_code_hashes(["doc_stats"])
+    current = query_code_hashes(["doc_stats"])
     doc = {"sf_dir": "x",
            "queries": {"doc_stats": _entry(code_hash=current["doc_stats"])}}
     p = tmp_path / "artifact.json"
@@ -309,9 +309,11 @@ def test_partial_or_registry_defined_query_fn_refused(monkeypatch):
         out["evil_partial"] = functools.partial(real["q1_pricing_summary"], None)
         return out
 
+    # called through qpkg: test_oracle_stage_cache re-imports the
+    # registry package, so a module-top import may hold a stale copy
     monkeypatch.setattr(qpkg, "all_queries", fake_registry)
     with pytest.raises(ValueError, match="evil_partial"):
-        P.query_code_hashes(["evil_partial"])
+        qpkg.query_code_hashes(["evil_partial"])
 
 
 def test_remap_reresolves_to_new_module(monkeypatch):
@@ -332,9 +334,9 @@ def test_remap_reresolves_to_new_module(monkeypatch):
         out[victim] = impostor
         return out
 
-    before = P.query_code_hashes([victim])[victim]
+    before = qpkg.query_code_hashes([victim])[victim]
     monkeypatch.setattr(qpkg, "all_queries", fake_registry)
-    after = P.query_code_hashes([victim])[victim]
+    after = qpkg.query_code_hashes([victim])[victim]
     assert after != before
     assert after == P.closure_hash(impostor.__module__)
 
@@ -363,7 +365,7 @@ def test_reexport_through_excluded_module_refused(monkeypatch):
     P.import_closure.cache_clear()
     P.closure_hash.cache_clear()
     with pytest.raises(ValueError, match="re-export"):
-        P.query_code_hashes(["emb_cosine_topk"])
+        query_code_hashes(["emb_cosine_topk"])
 
 
 def test_current_tree_has_no_excluded_imports_in_any_closure():
@@ -379,7 +381,7 @@ def test_merge_stamps_digest_eras_per_entry(tmp_path):
     Merging artifacts from different eras must stamp each entry with
     the era it ran under, so a later lineage check is mechanical, not
     forensic."""
-    current = P.query_code_hashes(["doc_stats", "q1_pricing_summary"])
+    current = query_code_hashes(["doc_stats", "q1_pricing_summary"])
     old_era = {"sf_dir": "x", "digest_version": 1,
                "queries": {"doc_stats": _entry(
                    code_hash=current["doc_stats"], digest="123")}}

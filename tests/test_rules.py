@@ -166,3 +166,26 @@ def test_transparency_score(spark, clean_rows, counts, expected):
         "total_violations": violations,
         "transparency_score": expected,
     }]
+
+
+def test_charges_a1_a2_queries_match_devlog(spark, sf_dir):
+    # charges_field_presence and charges_code_type_histogram count the
+    # rows the clean sink receives, as the devlog's A1/A2 do: both equal
+    # what run_cleaning_pipeline reports over the same raw charges, and
+    # A1 equals a count over those clean rows themselves.
+    from clearcare_data_pipeline_spark.pipeline import run_cleaning_pipeline
+    from clearcare_data_pipeline_spark.plans.rules import present
+    from clearcare_data_pipeline_spark.queries.charges import (
+        q_charges_code_type_histogram,
+        q_charges_field_presence,
+    )
+    from clearcare_data_pipeline_spark.sources.charges import charges_from_lineitem
+
+    presence = q_charges_field_presence(spark, sf_dir).collect()[0].asDict()
+    histogram = {r.code_type: r.n for r in q_charges_code_type_histogram(spark, sf_dir).collect()}
+    with run_cleaning_pipeline(charges_from_lineitem(spark, sf_dir)) as result:
+        assert result.quarantined_rows > 0  # so the two populations differ
+        counts = [F.count(F.when(present(c), 1)).alias(c) for c in CANONICAL_COLUMNS]
+        own = result.clean.agg(*counts).collect()[0].asDict()
+    assert presence == result.field_presence == own
+    assert histogram == result.code_type_histogram

@@ -116,13 +116,11 @@ def test_expr_and_pandas_signatures_agree_off_dimension(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     d = similarity.with_norm(df, "embedding")
-    expr8 = d.select(
-        "vec_id", similarity.lsh_bucket_expr(F.col("dvec"), 8).alias("b")
-    )
+    expr8 = similarity.lsh_buckets(df, num_planes=8)
     pandas8 = d.select(
         "vec_id", similarity._lsh_signature_pandas(8)(F.col("dvec")).alias("b")
     )
-    got_e = {r.vec_id: r.b for r in expr8.collect()}
+    got_e = {r.vec_id: r.bucket for r in expr8.collect()}
     got_p = {r.vec_id: r.b for r in pandas8.collect()}
     assert got_e == got_p
     # not everything collapsed into bucket 0
@@ -151,14 +149,13 @@ def test_bucket_oracle_agrees_beyond_plane_dim(spark):
     """ADVICE r8 #2: for vectors LONGER than PLANE_DIM the DuckDB twin
     used to NULL every plane dot (plane[i] is NULL past 64) and bucket
     everything to 0 while Spark computed real prefix bits. The clamped
-    _dot_prefix must agree with lsh_bucket_expr for short, exact, and
-    long vectors alike."""
+    _dot_prefix must agree with lsh_buckets for short, exact, and long
+    vectors alike."""
     import duckdb
-    from pyspark.sql import functions as F
 
     from clearcare_data_pipeline_spark.operators.similarity import (
         PLANE_DIM,
-        lsh_bucket_expr,
+        lsh_buckets,
     )
     from clearcare_data_pipeline_spark.queries.similarity import _bucket_sql
 
@@ -167,11 +164,8 @@ def test_bucket_oracle_agrees_beyond_plane_dim(spark):
         [float((i * 11) % 9 - 4) for i in range(PLANE_DIM)],  # exact
         [float((i * 13) % 7 - 3) for i in range(PLANE_DIM + 8)],  # long
     ]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], ["i", "dvec"])
-    got_spark = {
-        r["i"]: r["b"]
-        for r in df.select("i", lsh_bucket_expr(F.col("dvec")).alias("b")).collect()
-    }
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], ["vec_id", "embedding"])
+    got_spark = {r["vec_id"]: r["bucket"] for r in lsh_buckets(df).collect()}
     con = duckdb.connect()
     got_duck = {}
     for i, v in enumerate(vecs):

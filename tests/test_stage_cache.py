@@ -102,16 +102,28 @@ def test_stale_repair_race_accepts_concurrent_winner(tmp_path, monkeypatch):
     assert [n for n in os.listdir(tmp_path) if ".tmp-" in n] == []
 
 
-def test_cleaned_version_key_tracks_schema_module():
-    """ADVICE r5: the cleaned-stage cache key must include the schema
+def test_cleaned_version_key_tracks_schema_module(monkeypatch):
+    """ADVICE r5: the cleaned-stage cache key must cover the schema
     module (CANONICAL_COLUMNS drives ensure_columns and the dedup key),
-    so editing it invalidates the cross-process checkpoint."""
-    import inspect
-
-    from clearcare_data_pipeline_spark import schema
+    so editing it invalidates the cross-process checkpoint. The key
+    holds the closure hash of ``pipeline``; an edit to the schema
+    module's bytes (simulated at the reader) changes it."""
+    from clearcare_data_pipeline_spark import provenance as P
     from clearcare_data_pipeline_spark.queries.charges import _cleaned_version_key
 
-    assert inspect.getsource(schema) in _cleaned_version_key()
+    P.clear_caches()
+    before = _cleaned_version_key()
+    target = P.module_path("clearcare_data_pipeline_spark.schema")
+    real = P._file_bytes.__wrapped__
+    monkeypatch.setattr(P, "_file_bytes", lambda path: real(path) + (b"\n#" if path == target else b""))
+    P.import_closure.cache_clear()
+    P.closure_hash.cache_clear()
+    P._direct_imports.cache_clear()
+    try:
+        assert _cleaned_version_key() != before
+    finally:
+        monkeypatch.undo()
+        P.clear_caches()
 
 
 def test_build_failure_cleans_tmp_and_propagates(tmp_path):

@@ -98,7 +98,7 @@ def main() -> int:
         # either fail the import or silently hash a different tree
         # than the artifacts being merged.
         sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-        from clearcare_data_pipeline_spark.provenance import query_code_hashes
+        from clearcare_data_pipeline_spark.queries import query_code_hashes
 
         try:
             current = query_code_hashes(list(queries))

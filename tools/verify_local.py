@@ -493,7 +493,7 @@ def main() -> int:
         # package code closure, so cross-round merges can machine-check
         # which preserved entries are still valid on the current tree
         # (tools/merge_correctness.py refuses stale ones unless waived)
-        from clearcare_data_pipeline_spark.provenance import query_code_hashes
+        from clearcare_data_pipeline_spark.queries import query_code_hashes
 
         hashes = query_code_hashes(list(results))
         for name, entry in results.items():
