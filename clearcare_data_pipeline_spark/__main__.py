@@ -2,11 +2,9 @@
 
     python -m clearcare_data_pipeline_spark list
     python -m clearcare_data_pipeline_spark run <query> [--sf DIR] [--limit N] [--explain]
-    python -m clearcare_data_pipeline_spark audit [--sf DIR]
 
 ``run`` executes any registered query and prints the result (head);
-``--explain`` prints the formatted physical plan instead. ``audit``
-delegates to tools/plan_audit.py semantics for one-off plan checks.
+``--explain`` prints the formatted physical plan instead.
 """
 
 from __future__ import annotations

@@ -99,11 +99,10 @@ def run_etl(
     registry_path: str,
     output_dir: str,
     user: str = "spark",
-    file_format: str | None = None,
 ) -> EtlResult:
     registry = registry_snapshot(registry_path)
     campus = lookup_campus(registry, campus_id)
-    fmt = (file_format or campus["structure"] or "").lower()
+    fmt = (campus["structure"] or "").lower()
     if fmt not in EXTRACTOR_DISPATCH:
         raise ValueError(f"Unsupported format {fmt!r}; expected one of {sorted(EXTRACTOR_DISPATCH)}")
 

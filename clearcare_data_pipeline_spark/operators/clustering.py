@@ -121,7 +121,6 @@ def kmeans_fit(
     iters: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    stats: dict | None = None,
 ) -> tuple[list[list[float]], DataFrame]:
     """Run up to ``iters`` Lloyd's iterations; returns (centroids,
     assignments DataFrame(id_col, cluster)).
@@ -132,15 +131,13 @@ def kmeans_fit(
     assignment and means — so the loop breaks. Because the stop fires
     only at exact convergence, the result is bit-identical to running
     all ``iters`` iterations, and the fixed-iteration DuckDB oracle
-    replay stays valid with no epsilon to keep in sync. Pass ``stats``
-    to observe ``{"iterations": <executed>}``.
+    replay stays valid with no epsilon to keep in sync.
     """
     d = df.select(id_col, as_double_vec(F.col(vec_col)).alias("dvec")).persist()
     try:
         init_rows = d.orderBy(id_col).limit(k).collect()
         centroids = [list(r.dvec) for r in init_rows]
         dim = len(centroids[0])
-        executed = 0
         for _ in range(iters):
             assigned = d.withColumn("cluster", _assign_col(F.col("dvec"), centroids))
             # Per-dimension means via posexplode + (cluster, pos) agg:
@@ -161,12 +158,9 @@ def kmeans_fit(
             for r in rows:
                 means.setdefault(r.cluster, [None] * dim)[r.pos] = r.m
             new_centroids = [means.get(c, centroids[c]) for c in range(k)]
-            executed += 1
             if new_centroids == centroids:
                 break
             centroids = new_centroids
-        if stats is not None:
-            stats["iterations"] = executed
         final = d.withColumn("cluster", _assign_col(F.col("dvec"), centroids)).select(
             id_col, "cluster"
         )
@@ -218,32 +212,29 @@ HIER_SPLIT_BROADCAST_CAP = 4_000_000
 
 def hierarchical_assign(
     df: DataFrame,
-    target_width: int = SEMDEDUP_TARGET_WIDTH,
-    branch: int = HIER_BRANCH,
     iters: int = 2,
-    max_levels: int = HIER_MAX_LEVELS,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Recursive B-way k-means partitioning (bisecting-k-means
     generalized — the same family as Spark MLlib's BisectingKMeans and
     the coarse levels of a faiss IMI index): every cluster wider than
-    ``target_width`` is split into ``branch`` sub-clusters by a
-    deterministic per-cluster Lloyd's run (init = the ``branch``
-    lowest-id members, ``iters`` iterations, DECIMAL-summed means,
-    empty sub-clusters keep their init centroid, argmin ties break on
-    the lowest sub index), until every cluster fits or ``max_levels``
-    is reached. Returns (id_col, cluster BIGINT); ids are path-encoded
-    (parent * (branch+1) + sub + 1 for split rows, parent * (branch+1)
-    for pass-through rows), so ids are unique across mixed depths.
+    width = SEMDEDUP_TARGET_WIDTH is split into branch = HIER_BRANCH
+    sub-clusters by a deterministic per-cluster Lloyd's run (init = the
+    branch lowest-id members, ``iters`` iterations, DECIMAL-summed
+    means, empty sub-clusters keep their init centroid, argmin ties
+    break on the lowest sub index), until every cluster fits or
+    HIER_MAX_LEVELS is reached. Returns (id_col, cluster BIGINT); ids
+    are path-encoded (parent * (branch+1) + sub + 1 for split rows,
+    parent * (branch+1) for pass-through rows), so ids are unique
+    across mixed depths.
 
     Scale shape: each level is one keyed join + ``iters + 1``
     whole-corpus passes that score each point against at most
-    ``branch`` centroids (Arrow-batched, dimension-major fold — bit-
+    branch centroids (Arrow-batched, dimension-major fold — bit-
     identical to the flat path and the DuckDB twin), plus one
     per-(cluster, sub, dim) DECIMAL aggregation. Level count grows as
-    log_branch(n / target_width), so total work is O(n log n) — no
+    log_branch(n / width), so total work is O(n log n) — no
     stage is ever O(n x total_clusters).
 
     A level's sub-centroids move between assignment and means by one
@@ -261,11 +252,9 @@ def hierarchical_assign(
       (same dimension-major float64 fold, same lowest-sub argmin, same
       DECIMAL means, same exact-fixed-point early stop), so the switch
       can never change a result, only where the centroid bytes live.
-    ``stats["join_levels"]`` reports how many levels used the join
-    exchange.
 
     The split set itself is derived DataFrame-side (VERDICT r8 #2/#7):
-    each level filters the width histogram to ``count > target_width``
+    each level filters the width histogram to ``count > width``
     and joins that frame back onto the work set — broadcast under
     HIER_SPLIT_BROADCAST_CAP rows, shuffle join above — so the only
     per-level driver round-trip is the scalar splitting-cluster count
@@ -280,13 +269,12 @@ def hierarchical_assign(
     fixed-iteration replay the oracle runs.
 
     The fixed-depth cap bounds the generated oracle SQL; a pathological
-    cluster that is still oversized at ``max_levels`` (e.g. > branch x
-    target_width identical vectors) stays one cluster — the downstream
+    cluster that is still oversized at HIER_MAX_LEVELS (e.g. > branch x
+    width identical vectors) stays one cluster — the downstream
     pairwise stage then pays that cluster's true quadratic cost, which
     is output-bound anyway for identical vectors.
     """
-    import time as _time
-
+    branch, max_levels = HIER_BRANCH, HIER_MAX_LEVELS
     base = df.select(
         F.col(id_col).alias("_hid"), as_double_vec(F.col(vec_col)).alias("dvec")
     ).persist()
@@ -294,11 +282,9 @@ def hierarchical_assign(
     try:
         cur = base.select("_hid", F.lit(0).cast("bigint").alias("cluster"))
         cur = cur.localCheckpoint(eager=True)
-        levels_run = 0
-        join_levels = 0
         for _level in range(max_levels):
             # Distributed split-set derivation (VERDICT r8 #2): the set
-            # of clusters wider than target_width stays a DataFrame —
+            # of clusters wider than the target width stays a DataFrame —
             # the old per-level `.collect()` of one row per live
             # cluster was ~30M rows (~0.5-1 GB) through the driver at
             # 1B vectors / width 32, exactly the state class the join
@@ -308,11 +294,10 @@ def hierarchical_assign(
             # exchange still needs the id list, but only runs when
             # n_split*branch is under HIER_DRIVER_CENTROID_CAP — a
             # bounded collect.
-            t_level = _time.time()
             split_df = (
                 cur.groupBy("cluster")
                 .count()
-                .where(F.col("count") > target_width)
+                .where(F.col("count") > SEMDEDUP_TARGET_WIDTH)
                 .select("cluster")
             )
             # ONE capped collect answers three questions the level used
@@ -323,13 +308,12 @@ def hierarchical_assign(
             # driver footprint at HIER_DRIVER_CENTROID_CAP // branch
             # + 1 bigint rows; only a level that overflows it (the
             # join-exchange regime) still pays a count job, and only
-            # for the broadcast-vs-shuffle split-set decision + stats.
+            # for the broadcast-vs-shuffle split-set decision.
             cap_rows = HIER_DRIVER_CENTROID_CAP // branch + 1
             head = split_df.limit(cap_rows).collect()
             n_split = len(head)
             if n_split >= cap_rows:
                 n_split = split_df.count()
-            t_split = _time.time()
             if n_split == 0:
                 # The fixed-depth oracle replay re-encodes ids by `enc`
                 # at EVERY level, including no-op ones — apply the
@@ -342,7 +326,6 @@ def hierarchical_assign(
                     (F.col("cluster") * (enc**remaining)).cast("bigint").alias("cluster"),
                 )
                 break
-            levels_run += 1
             use_join = n_split * branch > HIER_DRIVER_CENTROID_CAP
             # broadcast the split set below a cap (its driver footprint
             # is one bigint per splitting cluster), shuffle-join above
@@ -360,14 +343,12 @@ def hierarchical_assign(
             )
             try:
                 if use_join:
-                    join_levels += 1
                     final_sub = _split_level_join(work, branch, iters)
                 else:
                     # the driver path only runs when n_split fits under
                     # the cap, so `head` IS the complete split set
                     split_ids = sorted(r["cluster"] for r in head)
                     final_sub = _split_level_driver(work, split_ids, branch, iters)
-                t_exchange = _time.time()
                 cur = (
                     cur.join(final_sub, "_hid", "left")
                     .select(
@@ -379,23 +360,8 @@ def hierarchical_assign(
                     )
                     .localCheckpoint(eager=True)
                 )
-                if stats is not None:
-                    # phase timers for scale attribution (r12): the
-                    # exchange's lazy tail materializes inside the
-                    # checkpoint, so exchange_sec covers only its
-                    # forced driver work (init collect + Lloyd means)
-                    stats.setdefault("level_timings", []).append({
-                        "n_split": n_split,
-                        "exchange": "join" if use_join else "driver",
-                        "split_count_sec": round(t_split - t_level, 2),
-                        "exchange_sec": round(t_exchange - t_split, 2),
-                        "checkpoint_sec": round(_time.time() - t_exchange, 2),
-                    })
             finally:
                 work.unpersist()
-        if stats is not None:
-            stats["levels"] = levels_run
-            stats["join_levels"] = join_levels
         return cur.select(F.col("_hid").alias(id_col), "cluster")
     finally:
         base.unpersist()
@@ -606,23 +572,21 @@ def _assign_grouped_pandas(cents):
     return assign
 
 
-def derive_k(n: int, target_width: int = SEMDEDUP_TARGET_WIDTH) -> int:
-    """k = ceil(n / target_width) — the SemDeDup scaling rule (VERDICT
-    r5 #2): cluster count grows with the corpus so cluster width, and
-    with it the per-cluster quadratic cost, stays constant."""
+def derive_k(n: int) -> int:
+    """k = ceil(n / SEMDEDUP_TARGET_WIDTH) — the SemDeDup scaling rule
+    (VERDICT r5 #2): cluster count grows with the corpus so cluster
+    width, and with it the per-cluster quadratic cost, stays constant."""
     import math
 
-    return max(1, int(math.ceil(n / float(target_width))))
+    return max(1, int(math.ceil(n / float(SEMDEDUP_TARGET_WIDTH))))
 
 
 def semantic_dedup(
     df: DataFrame,
-    k: int | None = None,
     iters: int = 3,
     threshold: float = 0.99,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    target_width: int = SEMDEDUP_TARGET_WIDTH,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the corpus with k-means, then inside
@@ -635,83 +599,58 @@ def semantic_dedup(
 
     Scale shape: the pairwise stage is an equi-join keyed on the
     cluster id (one shuffle; never a global all-pairs product), so the
-    quadratic cost is confined within each cluster. When ``k`` is None
-    (the default) the partitioning is corpus-count-keyed (VERDICT r7
-    #3): up to SEMDEDUP_FLAT_MAX_N vectors it is flat auto-k Lloyd's
-    (k = ceil(n / width) — one level, no multi-level driver
-    round-trips, measured 4.8 s vs 13.9 s hierarchical at sf1's 51k
-    vectors); beyond that it is ``hierarchical_assign`` — recursive
-    ``HIER_BRANCH``-way splitting until every cluster is at most
-    ``target_width`` wide, so every assignment pass scores at most
-    ``HIER_BRANCH`` centroids per point: O(n log n) end to end, where
-    flat's O(n x k) = O(n^2/width) pass was the measured 75x sf10
-    scale-killer. Both branches are deterministic and the DuckDB twin
+    quadratic cost is confined within each cluster. The partitioning
+    is corpus-count-keyed (VERDICT r7 #3): up to SEMDEDUP_FLAT_MAX_N
+    vectors it is flat auto-k Lloyd's (k = ceil(n / width) — one
+    level, no multi-level driver round-trips, measured 4.8 s vs 13.9 s
+    hierarchical at sf1's 51k vectors); beyond that it is
+    ``hierarchical_assign`` — recursive ``HIER_BRANCH``-way splitting
+    until every cluster is at most SEMDEDUP_TARGET_WIDTH wide, so every
+    assignment pass scores at most ``HIER_BRANCH`` centroids per point:
+    O(n log n) end to end, where flat's O(n x k) = O(n^2/width) pass was
+    the measured 75x sf10 scale-killer. Both branches are deterministic and the DuckDB twin
     (``semantic_partition_oracle_sql``) derives the SAME count from the
     SAME corpus, gating each replayed branch to emptiness when not
-    taken — so both engines always compute the same partitioning. An
-    explicit ``k`` keeps the flat single-level Lloyd's run
-    unconditionally.
+    taken — so both engines always compute the same partitioning.
     """
     from clearcare_data_pipeline_spark.operators.similarity import (
         DOT_UNROLL_MAX_DIM,
         dot_expr,
         dot_expr_fixed,
-        probed_dot,
         with_norm,
     )
 
-    if k is None:
-        # O(cap) branch probe (VERDICT r8 #4a): LIMIT cap+1
-        # short-circuits the count after the cap instead of scanning
-        # the whole corpus (the dedicated full-count job was the
-        # measured +8% at sf10). Below the cap the limited count IS
-        # the exact corpus count, which is all derive_k needs; above
-        # it the hierarchy derives its own widths and never needs n.
-        # The same bounded job also probes the vector dimension for
-        # the unrolled-dot fast path (r13 — was a second probe job per
-        # run via probed_dot; any probed dim yields bit-identical
-        # scores because dot_expr_fixed falls back per-row on size
-        # mismatch and is IEEE-identical to the fold when it applies).
-        probe = df.limit(SEMDEDUP_FLAT_MAX_N + 1).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.size(F.col(vec_col))).alias("dim"),
-        ).collect()[0]
-        n = int(probe["n"])
-        pdim = int(probe["dim"]) if probe["dim"] is not None else 0
-        dot = (
-            (lambda a, b, _d=pdim: dot_expr_fixed(a, b, _d))
-            if 1 <= pdim <= DOT_UNROLL_MAX_DIM
-            else dot_expr
+    # O(cap) branch probe (VERDICT r8 #4a): LIMIT cap+1 short-circuits
+    # the count after the cap instead of scanning the whole corpus (the
+    # dedicated full-count job was the measured +8% at sf10). Below the
+    # cap the limited count IS the exact corpus count, which is all
+    # derive_k needs; above it the hierarchy derives its own widths and
+    # never needs n. The same bounded job also probes the vector
+    # dimension for the unrolled-dot fast path of the within-cluster
+    # pairwise scorer (r13 — was a second probe job per run via
+    # probed_dot; any probed dim yields bit-identical scores because
+    # dot_expr_fixed falls back per-row on size mismatch and is
+    # IEEE-identical to the fold when it applies).
+    probe = df.limit(SEMDEDUP_FLAT_MAX_N + 1).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size(F.col(vec_col))).alias("dim"),
+    ).collect()[0]
+    n = int(probe["n"])
+    pdim = int(probe["dim"]) if probe["dim"] is not None else 0
+    dot = (
+        (lambda a, b, _d=pdim: dot_expr_fixed(a, b, _d))
+        if 1 <= pdim <= DOT_UNROLL_MAX_DIM
+        else dot_expr
+    )
+    if n <= SEMDEDUP_FLAT_MAX_N:
+        _cents, assigned = kmeans_fit(
+            df, k=derive_k(n), iters=iters, vec_col=vec_col, id_col=id_col
         )
-        if n <= SEMDEDUP_FLAT_MAX_N:
-            _cents, assigned = kmeans_fit(
-                df,
-                k=derive_k(n, target_width),
-                iters=iters,
-                vec_col=vec_col,
-                id_col=id_col,
-            )
-            # hierarchical ids are BIGINT path codes; keep one schema
-            # across the crossover
-            assigned = assigned.withColumn(
-                "cluster", F.col("cluster").cast("bigint")
-            )
-        else:
-            assigned = hierarchical_assign(
-                df,
-                target_width=target_width,
-                iters=iters,
-                vec_col=vec_col,
-                id_col=id_col,
-            )
+        # hierarchical ids are BIGINT path codes; keep one schema
+        # across the crossover
+        assigned = assigned.withColumn("cluster", F.col("cluster").cast("bigint"))
     else:
-        # the within-cluster pairwise scorer is the dot-heavy stage
-        # (r12 sf10 attribution); the probed unrolled dot
-        # (bit-identical to the fold — see dot_expr_fixed's IEEE
-        # argument and the r11 digest A/B) moves it into whole-stage
-        # codegen. One bounded probe job.
-        dot = probed_dot(df, vec_col)
-        _cents, assigned = kmeans_fit(df, k=k, iters=iters, vec_col=vec_col, id_col=id_col)
+        assigned = hierarchical_assign(df, iters=iters, vec_col=vec_col, id_col=id_col)
     # Persisted: three consumers below (both pairwise sides + the final
     # projection) would otherwise each re-run the scan -> assignment
     # chain. MLlib-style tradeoff — the cache is LRU-evicted; rows are

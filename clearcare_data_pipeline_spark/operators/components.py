@@ -20,17 +20,16 @@ def connected_components(
     *,
     id_col: str = "id",
     max_iters: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(id, component) where component = min node id reachable.
 
     ``nodes``: one column ``id``; ``edges``: columns ``a``, ``b``
     (undirected). Loops until no label changes; ``max_iters`` is a
     safety bound only — hitting it without convergence raises rather
-    than silently returning wrong labels. Every ``checkpoint_every``
-    iterations the label frame is ``localCheckpoint``-ed so the logical
-    plan doesn't nest one join per iteration (lineage truncation for
-    high-diameter components).
+    than silently returning wrong labels. Every 5th iteration the label
+    frame is ``localCheckpoint``-ed so the logical plan doesn't nest one
+    join per iteration (lineage truncation for high-diameter
+    components).
     """
     sym = edges.select("a", "b").union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
@@ -49,7 +48,7 @@ def connected_components(
                 ),
             )
         )
-        if it % checkpoint_every == 0:
+        if it % 5 == 0:
             new_labels = new_labels.localCheckpoint(eager=True)
         else:
             new_labels = new_labels.persist()

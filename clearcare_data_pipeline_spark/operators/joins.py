@@ -275,7 +275,6 @@ def blocked_similarity_join(
     text_col: str,
     min_sim: float = 0.7,
     id_col: str = "id",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Record-linkage candidate scoring with blocking.
 
@@ -310,9 +309,8 @@ def blocked_similarity_join(
     serialized at 207 s vs 26.7 s salted) — one groupBy(count) per
     side joined on the block keys, linear work, the same probe
     discipline as cosine_topk's guard — as ceil(max block pair count /
-    SALT_TARGET_BLOCK_PAIRS), capped at SALT_MAX. Uniform inputs probe
-    to s=1 and pay no replication. Pass ``stats`` to observe
-    ``{"n_salt": <chosen>}``.
+    SALT_TARGET_BLOCK_PAIRS), capped at SALT_MAX (``_salt_count``).
+    Uniform inputs probe to s=1 and pay no replication.
     """
     n_part = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     bkeys = [f"_b_{c}" for c in block_cols]
@@ -326,15 +324,7 @@ def blocked_similarity_join(
         F.col(text_col).alias("right_text"),
         *[F.col(c).alias(f"_b_{c}") for c in block_cols],
     )
-    mx = (
-        lt.groupBy(bkeys).count().withColumnRenamed("count", "_lw")
-        .join(rt.groupBy(bkeys).count().withColumnRenamed("count", "_rw"), bkeys)
-        .agg(F.max(F.col("_lw") * F.col("_rw")).alias("mx"))
-        .collect()[0]["mx"]
-    )
-    n_salt = max(1, min(SALT_MAX, -((mx or 0) // -SALT_TARGET_BLOCK_PAIRS)))
-    if stats is not None:
-        stats["n_salt"] = n_salt
+    n_salt = _salt_count(lt, rt, bkeys)
     if n_salt > 1:
         lt = lt.withColumn("_salt", F.pmod(F.hash("left_id"), F.lit(n_salt)))
         rt = rt.withColumn(
@@ -353,3 +343,15 @@ def blocked_similarity_join(
         .where(F.col("similarity") >= min_sim)
         .select("left_id", "right_id", "left_text", "right_text", "similarity")
     )
+
+
+def _salt_count(lt: DataFrame, rt: DataFrame, bkeys: list[str]) -> int:
+    """The block-width probe: ceil(largest block's pair count /
+    SALT_TARGET_BLOCK_PAIRS), between 1 and SALT_MAX."""
+    mx = (
+        lt.groupBy(bkeys).count().withColumnRenamed("count", "_lw")
+        .join(rt.groupBy(bkeys).count().withColumnRenamed("count", "_rw"), bkeys)
+        .agg(F.max(F.col("_lw") * F.col("_rw")).alias("mx"))
+        .collect()[0]["mx"]
+    )
+    return max(1, min(SALT_MAX, -((mx or 0) // -SALT_TARGET_BLOCK_PAIRS)))

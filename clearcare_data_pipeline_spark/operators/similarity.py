@@ -174,7 +174,6 @@ def cosine_topk(
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
-    max_broadcast_queries: int = BRUTE_FORCE_QUERY_CAP,
 ) -> DataFrame:
     """Brute-force top-k cosine neighbors for each query vector.
 
@@ -183,7 +182,7 @@ def cosine_topk(
     all-pairs shuffle materializes. Ranking key is
     (round(cos,6) DESC, neighbor ASC) — fully deterministic.
 
-    Guardrail: when the query side exceeds ``max_broadcast_queries``
+    Guardrail: when the query side exceeds BRUTE_FORCE_QUERY_CAP
     rows the brute-force plan is refused and the call routes to
     ``ivf_topk_nprobe`` (same output schema, approximate results) —
     the exact baseline must be asked for knowingly, never become the
@@ -196,17 +195,19 @@ def cosine_topk(
     # even when the query frame is corpus-sized. The same bounded job
     # also returns the vector dimension (null-skipping max, the r10
     # probe discipline) for the unrolled-dot fast path below.
-    probe = queries.limit(max_broadcast_queries + 1).agg(
+    cap = BRUTE_FORCE_QUERY_CAP
+    probe = queries.limit(cap + 1).agg(
         F.count(F.lit(1)).alias("n"),
         F.max(F.size(F.col("embedding"))).alias("dim"),
     ).collect()[0]
-    if int(probe["n"]) > max_broadcast_queries:
+    if int(probe["n"]) > cap:
         import warnings
 
         warnings.warn(
-            f"cosine_topk: query side exceeds {max_broadcast_queries} rows; "
+            f"cosine_topk: query side exceeds {cap} rows; "
             "routing to ivf_topk_nprobe (approximate). Call ivf_topk_nprobe "
-            "directly, or raise max_broadcast_queries for an exact run.",
+            f"directly, or pass at most {cap} query rows per call for an "
+            "exact run.",
             stacklevel=2,
         )
         return ivf_topk_nprobe(vectors, queries, k=k, id_col=id_col)

@@ -94,7 +94,7 @@ def run_cleaning_pipeline(df: DataFrame) -> Iterator[CleaningResult]:
         quarantined = summary["quarantined_rows"]
         clean_rows = summary["total_rows"] - quarantined
         yield CleaningResult(
-            clean=clean.drop("code_type_raw", "negotiated_algorithm_invalid"),
+            clean=clean,
             quarantine=quarantine,
             score=summary["transparency_score"],
             rule_counts=summary["rule_counts"],

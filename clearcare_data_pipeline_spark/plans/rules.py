@@ -119,12 +119,17 @@ def is_clean() -> Column:
 
 
 def split_clean_quarantine(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """R4: (clean, quarantine) from a ``tag_violations`` output.
+    """R4: (clean, quarantine) from a ``tag_violations`` output. The
+    clean side drops the rule flags and the helper columns
+    (``code_type_raw``, ``negotiated_algorithm_invalid``); the
+    quarantine side keeps the helpers and ``rules_violated``.
 
     Callers that consume both sides should ``.persist()`` the tagged
     plan first — this is the one fork where naive Spark would otherwise
     scan the source twice (SURVEY.md §4).
     """
-    clean = tagged.where(is_clean()).drop(*RULE_NAMES, "rules_violated")
+    clean = tagged.where(is_clean()).drop(
+        *RULE_NAMES, "rules_violated", "code_type_raw", "negotiated_algorithm_invalid"
+    )
     quarantine = tagged.where(~is_clean()).drop(*RULE_NAMES)
     return clean, quarantine

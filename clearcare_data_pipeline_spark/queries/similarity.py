@@ -459,7 +459,6 @@ def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return semantic_dedup(
         vecs.unionByName(copies),
-        k=None,
         iters=_SEMDEDUP_ITERS,
         threshold=_SEMDEDUP_THRESHOLD,
     )

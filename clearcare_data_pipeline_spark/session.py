@@ -34,23 +34,20 @@ def _default_heap_gib() -> int:
     return max(2, min(cores, mem_gib // 2))
 
 
-def get_spark(app_name: str = "clearcare-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "clearcare-spark") -> SparkSession:
     """Build (or fetch) a SparkSession with scale-appropriate defaults.
 
-    ``shuffle_partitions`` defaults to the local core count: at local
-    test scale one partition per core avoids over-parallelizing tiny
-    shuffles; on a real cluster this is overridden (or left to AQE
-    coalescing, which is enabled).
+    Shuffle partitions = the machine's core count: at local test scale
+    one partition per core avoids over-parallelizing tiny shuffles; on a
+    real cluster AQE coalescing (enabled) sizes them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 32
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(os.cpu_count() or 32))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

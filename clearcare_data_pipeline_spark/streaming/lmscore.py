@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from clearcare_data_pipeline_spark.operators.textstats import (
+    broadcast_if_small,
     doc_trigram_counts,
     score_trigram_counts,
 )
@@ -34,7 +35,6 @@ def run_lm_scoring_stream(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool | None = None,
 ) -> StreamingQuery:
     """Score an unbounded stream of documents against a static trigram
     LM; append (id, n_trigrams, avg_logprob, perplexity) to parquet.
@@ -43,24 +43,13 @@ def run_lm_scoring_stream(
     replay with idempotent per-batch overwrite semantics handled by
     the parquet append + batch id (replayed batch ids overwrite their
     own output partition)."""
-    if broadcast_model is None:
-        # The model is static across batches: resolve the auto-switch
-        # ONCE here rather than paying the row probe per micro-batch.
-        from clearcare_data_pipeline_spark.operators.textstats import (
-            BROADCAST_MODEL_ROW_CAP,
-        )
-
-        broadcast_model = (
-            model.limit(BROADCAST_MODEL_ROW_CAP + 1).count()
-            <= BROADCAST_MODEL_ROW_CAP
-        )
+    # The model is static across batches: probe its size ONCE here
+    # rather than per micro-batch.
+    model = broadcast_if_small(model)
 
     def _score(batch_df: DataFrame, batch_id: int) -> None:
         out = score_trigram_counts(
-            doc_trigram_counts(batch_df, id_col, text_col),
-            model,
-            id_col=id_col,
-            broadcast_model=broadcast_model,
+            doc_trigram_counts(batch_df, id_col, text_col), model, id_col=id_col
         )
         (
             out.write.mode("overwrite").parquet(

@@ -5,7 +5,9 @@ stream).
 * ``stream_clean``: canonical charges CSVs landing in a directory are
   cleaned/validated continuously; foreachBatch splits each micro-batch
   into clean + quarantine parquet sinks (the streaming analog of the
-  reference's append-mode chunk loop, cleaning_utils.py:163-208).
+  reference's append-mode chunk loop, cleaning_utils.py:163-208). Each
+  batch overwrites its own ``batch_id={id}`` directory, so a replayed
+  batch rewrites its rows instead of appending them again.
 * ``stream_event_window_counts``: watermarked tumbling-window counts
   over an event stream — late data beyond the watermark is dropped.
 
@@ -42,9 +44,10 @@ def stream_clean(
         tagged = tag_violations(clean_charges(batch_df)).persist()
         try:
             clean, quarantine = split_clean_quarantine(tagged)
-            clean = clean.drop("code_type_raw", "negotiated_algorithm_invalid")
-            clean.write.mode("append").parquet(f"{output_dir}/clean")
-            quarantine.write.mode("append").parquet(f"{output_dir}/quarantine")
+            clean.write.mode("overwrite").parquet(f"{output_dir}/clean/batch_id={batch_id}")
+            quarantine.write.mode("overwrite").parquet(
+                f"{output_dir}/quarantine/batch_id={batch_id}"
+            )
         finally:
             tagged.unpersist()
 

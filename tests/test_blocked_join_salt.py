@@ -1,7 +1,8 @@
 """blocked_similarity_join salting (ADVICE r6, VERDICT r7 #5): the salt
 comes from the block-width probe against SALT_TARGET_BLOCK_PAIRS,
 output is identical for any salt, and the right side is the replicated
-one. Tests pick the salt by patching that target."""
+one. Tests pick the salt by patching that target and read the chosen
+salt through a spy on the probe."""
 
 from clearcare_data_pipeline_spark.operators import joins
 from clearcare_data_pipeline_spark.operators.joins import blocked_similarity_join
@@ -22,13 +23,20 @@ def _frame(spark):
     return spark.createDataFrame(rows, "id long, txt string, blk string")
 
 
+_REAL_SALT_COUNT = joins._salt_count
+
+
 def _join(monkeypatch, target, df, **kw):
     """Run the join with SALT_TARGET_BLOCK_PAIRS patched to ``target``;
     returns (output, chosen salt)."""
     monkeypatch.setattr(joins, "SALT_TARGET_BLOCK_PAIRS", target)
-    stats = {}
-    out = blocked_similarity_join(df, df, ["blk"], "txt", stats=stats, **kw)
-    return out, stats["n_salt"]
+    salts = []
+    monkeypatch.setattr(
+        joins, "_salt_count", lambda *a: salts.append(_REAL_SALT_COUNT(*a)) or salts[-1]
+    )
+    out = blocked_similarity_join(df, df, ["blk"], "txt", **kw)
+    (salt,) = salts
+    return out, salt
 
 
 def test_salted_output_identical(spark, monkeypatch):
@@ -75,6 +83,5 @@ def test_auto_salt_caps_and_handles_empty(spark, monkeypatch):
     assert s == joins.SALT_MAX
 
     empty = df.where("id < 0")
-    stats = {}
-    out = blocked_similarity_join(empty, empty, ["blk"], "txt", stats=stats)
-    assert out.count() == 0 and stats["n_salt"] == 1
+    out, s = _join(monkeypatch, 1, empty)
+    assert out.count() == 0 and s == 1

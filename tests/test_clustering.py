@@ -9,6 +9,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from clearcare_data_pipeline_spark.operators import clustering  # noqa: E402
 from clearcare_data_pipeline_spark.operators.clustering import kmeans_fit  # noqa: E402
 
 
@@ -55,14 +56,19 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     assert got[2] != got[1]
 
 
-def test_kmeans_early_stop_is_exact(spark):
+def test_kmeans_early_stop_is_exact(spark, monkeypatch):
     """VERDICT r5 #3: once an update leaves every centroid exactly
     unchanged the loop stops, and the result is bit-identical to the
     fixed-iteration run the oracle replays."""
+    # one assignment per Lloyd iteration plus the final one
+    assignments = []
+    real = clustering._assign_col
+    monkeypatch.setattr(
+        clustering, "_assign_col", lambda *a: assignments.append(1) or real(*a)
+    )
     df = spark.createDataFrame(_vec_rows(), ["vec_id", "embedding"])
-    stats = {}
-    cents10, assigned10 = kmeans_fit(df, k=2, iters=10, stats=stats)
-    assert stats["iterations"] < 10  # two tight blobs converge immediately
+    cents10, assigned10 = kmeans_fit(df, k=2, iters=10)
+    assert len(assignments) - 1 < 10  # two tight blobs converge immediately
     cents2, assigned2 = kmeans_fit(df, k=2, iters=2)
     assert cents10 == cents2
     assert sorted(map(tuple, assigned10.collect())) == sorted(
@@ -106,27 +112,25 @@ def test_semantic_dedup_derive_k():
     assert derive_k(0) == 1
 
 
-def test_semantic_dedup_releases_cache(spark):
+def test_semantic_dedup_releases_cache(spark, monkeypatch):
     """ADVICE r5: semantic_dedup must not leak its persisted join input
     for the session lifetime; at most the narrow eager checkpoint of the
     (id, cluster, is_dup) result may remain."""
-    from clearcare_data_pipeline_spark.operators.clustering import semantic_dedup
-
+    monkeypatch.setattr(clustering, "SEMDEDUP_TARGET_WIDTH", 3)  # 6 vectors -> k=2
     df = spark.createDataFrame(_vec_rows(), ["vec_id", "embedding"])
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    out = semantic_dedup(df, k=2, iters=1)
+    out = clustering.semantic_dedup(df, iters=1)
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after - before <= 1
     assert out.count() == len(_vec_rows())
 
 
 @pytest.mark.slow
-def test_semantic_dedup_flags_planted_copies(spark):
+def test_semantic_dedup_flags_planted_copies(spark, monkeypatch):
     """Exact copies (cos = 1.0) land in the same cluster and must be
     the flagged duplicates; the lower-id originals are kept."""
     from pyspark.sql import functions as F
 
-    from clearcare_data_pipeline_spark.operators.clustering import semantic_dedup
     from clearcare_data_pipeline_spark.sources.tables import load_table
 
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
@@ -135,7 +139,11 @@ def test_semantic_dedup_flags_planted_copies(spark):
     copies = vecs.where(F.col("vec_id") % 100 == 0).withColumn(
         "vec_id", F.col("vec_id") + 500000
     )
-    out = semantic_dedup(vecs.unionByName(copies), k=4, iters=2, threshold=0.99)
+    corpus = vecs.unionByName(copies)
+    n = corpus.count()
+    monkeypatch.setattr(clustering, "SEMDEDUP_TARGET_WIDTH", -(-n // 4))
+    assert clustering.derive_k(n) == 4
+    out = clustering.semantic_dedup(corpus, iters=2, threshold=0.99)
     rows = {r["vec_id"]: r for r in out.collect()}
     n_originals = vecs.count()
     assert len(rows) == n_originals + copies.count()
@@ -170,13 +178,39 @@ def test_semantic_dedup_crossover_paths_flag_planted_copies(spark, monkeypatch):
     # default cap -> flat (n < 65536); cap 0 -> hierarchical
     for cap in (clustering.SEMDEDUP_FLAT_MAX_N, 0):
         monkeypatch.setattr(clustering, "SEMDEDUP_FLAT_MAX_N", cap)
-        out = clustering.semantic_dedup(corpus, k=None, iters=2, threshold=0.99)
+        out = clustering.semantic_dedup(corpus, iters=2, threshold=0.99)
         assert dict(out.dtypes)["cluster"] == "bigint"
         rows = {r["vec_id"]: r for r in out.collect()}
         for vid, r in rows.items():
             if vid >= 500000:
                 assert r["is_dup"], f"copy {vid} not flagged (SEMDEDUP_FLAT_MAX_N={cap})"
                 assert r["cluster"] == rows[vid - 500000]["cluster"]
+
+
+_SPLIT_LEVEL = {
+    "driver": clustering._split_level_driver,
+    "join": clustering._split_level_join,
+}
+
+
+def _hierarchical(monkeypatch, vecs):
+    """hierarchical_assign at width 8, branch 4, 3 levels (the patched
+    constants), and the exchange each splitting level used, observed by
+    spies on the two level functions."""
+    from clearcare_data_pipeline_spark.operators import clustering
+
+    for name, value in (
+        ("SEMDEDUP_TARGET_WIDTH", 8), ("HIER_BRANCH", 4), ("HIER_MAX_LEVELS", 3)
+    ):
+        monkeypatch.setattr(clustering, name, value)
+    exchanges = []
+    for exchange, real in _SPLIT_LEVEL.items():
+        def spy(*a, _real=real, _exchange=exchange):
+            exchanges.append(_exchange)
+            return _real(*a)
+
+        monkeypatch.setattr(clustering, real.__name__, spy)
+    return clustering.hierarchical_assign(vecs, iters=2), exchanges
 
 
 @pytest.mark.slow
@@ -193,17 +227,11 @@ def test_hierarchical_auto_trigger_without_collect(spark, monkeypatch):
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding"
     )
-    ref_stats = {}
-    ref = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=ref_stats
-    )
-    assert ref_stats["join_levels"] == 0 and ref_stats["levels"] > 0
+    ref, ref_exchanges = _hierarchical(monkeypatch, vecs)
+    assert ref_exchanges and set(ref_exchanges) == {"driver"}
     monkeypatch.setattr(clustering, "HIER_DRIVER_CENTROID_CAP", 0)
-    stats = {}
-    out = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=stats
-    )
-    assert stats["join_levels"] == stats["levels"] > 0
+    out, exchanges = _hierarchical(monkeypatch, vecs)
+    assert exchanges == ["join"] * len(ref_exchanges)
     assert {(r.vec_id, r.cluster) for r in out.collect()} == {
         (r.vec_id, r.cluster) for r in ref.collect()
     }
@@ -225,13 +253,10 @@ def test_hierarchical_matches_duckdb_twin(spark, monkeypatch, driver_cap):
     if driver_cap is not None:
         monkeypatch.setattr(clustering, "HIER_DRIVER_CENTROID_CAP", driver_cap)
     vecs = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    stats = {}
-    out = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3, stats=stats
-    )
+    out, exchanges = _hierarchical(monkeypatch, vecs)
     got = {(r.vec_id, r.cluster) for r in out.collect()}
-    assert stats["levels"] > 0
-    assert stats["join_levels"] == (0 if driver_cap is None else stats["levels"])
+    assert exchanges
+    assert set(exchanges) == {"driver" if driver_cap is None else "join"}
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
@@ -254,13 +279,9 @@ def test_hierarchical_shuffle_join_split_set_bit_identical(spark, monkeypatch):
     vecs = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding"
     )
-    ref = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3
-    )
+    ref, _ = _hierarchical(monkeypatch, vecs)
     monkeypatch.setattr(clustering, "HIER_SPLIT_BROADCAST_CAP", 0)
-    out = clustering.hierarchical_assign(
-        vecs, target_width=8, branch=4, iters=2, max_levels=3
-    )
+    out, _ = _hierarchical(monkeypatch, vecs)
     assert {(r.vec_id, r.cluster) for r in out.collect()} == {
         (r.vec_id, r.cluster) for r in ref.collect()
     }

@@ -142,14 +142,18 @@ def test_run_etl_tall_end_to_end(spark, registry_path, tmp_path):
 
 
 def test_run_etl_format_dispatch_errors(spark, registry_path, tmp_path):
-    with pytest.raises(ValueError, match="Unsupported format"):
+    # the format comes from the campus's registry row
+    upsert_campus(
+        registry_path, "excel_campus", {"hospital_name": "Excel Hospital", "structure": "excel"},
+        registry_snapshot(registry_path),
+    )
+    with pytest.raises(ValueError, match="Unsupported format 'excel'"):
         run_etl(
             spark,
-            campus_id="general_springfield",
+            campus_id="excel_campus",
             raw_path=f"{FIX}/tall.csv",
             registry_path=registry_path,
             output_dir=str(tmp_path / "o"),
-            file_format="excel",
         )
 
 

@@ -49,44 +49,67 @@ def test_perplexity_matches_hand_computation(spark):
     assert abs(rows[1].perplexity - round(math.exp(-expect1), 6)) < 1e-9
 
 
-def test_keyed_join_path_matches_broadcast_path(spark):
-    a = {
-        r.doc_id: r
-        for r in trigram_lm_perplexity(_docs(spark), broadcast_model=True).collect()
-    }
-    b = {
-        r.doc_id: r
-        for r in trigram_lm_perplexity(_docs(spark), broadcast_model=False).collect()
-    }
+def _perplexity_and_plan(spark, monkeypatch):
+    """trigram_lm_perplexity's rows by doc, and whether its scoring join
+    broadcast the model (read from the plan score_trigram_counts built,
+    before the result is checkpointed)."""
+    from clearcare_data_pipeline_spark.operators import textstats
+
+    plans = []
+    real = textstats.score_trigram_counts
+
+    def spy(doctri, model, **kw):
+        out = real(doctri, model, **kw)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(textstats, "score_trigram_counts", spy)
+    rows = {r.doc_id: r for r in trigram_lm_perplexity(_docs(spark)).collect()}
+    (plan,) = plans
+    return rows, "BroadcastHashJoin" in plan
+
+
+def test_keyed_join_path_matches_broadcast_path(spark, monkeypatch):
+    from clearcare_data_pipeline_spark.operators import textstats
+
+    a, a_broadcast = _perplexity_and_plan(spark, monkeypatch)  # vocab << default cap
+    # cap 0 drops the hint; with size-based broadcasting off too, the
+    # model joins keyed
+    monkeypatch.setattr(textstats, "BROADCAST_MODEL_ROW_CAP", 0)
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        b, b_broadcast = _perplexity_and_plan(spark, monkeypatch)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert (a_broadcast, b_broadcast) == (True, False)
     assert a.keys() == b.keys()
     for k in a:
         assert a[k] == b[k]
 
 
-def test_broadcast_auto_switch(spark):
-    """broadcast_model=None broadcasts small models and routes large
+def test_broadcast_auto_switch(spark, monkeypatch):
+    """broadcast_if_small broadcasts small models and routes large
     vocabularies to the keyed join (VERDICT r6 #5)."""
-    from clearcare_data_pipeline_spark.operators.textstats import (
-        doc_trigram_counts,
-        score_trigram_counts,
-        trigram_lm_model_from_counts,
-    )
+    from clearcare_data_pipeline_spark.operators import textstats
 
-    doctri = doc_trigram_counts(_docs(spark))
-    model = trigram_lm_model_from_counts(doctri)
+    doctri = textstats.doc_trigram_counts(_docs(spark))
+    model = textstats.trigram_lm_model_from_counts(doctri)
 
-    small = score_trigram_counts(doctri, model)  # vocab << default cap
+    small = textstats.score_trigram_counts(doctri, textstats.broadcast_if_small(model))
     assert "Broadcast" in small._jdf.queryExecution().executedPlan().toString()
 
-    big = score_trigram_counts(doctri, model, broadcast_row_cap=1)
+    monkeypatch.setattr(textstats, "BROADCAST_MODEL_ROW_CAP", 1)
+    big = textstats.score_trigram_counts(doctri, textstats.broadcast_if_small(model))
     assert "BroadcastHashJoin" not in big._jdf.queryExecution().executedPlan().toString()
     key = lambda r: (r["doc_id"], r["n_trigrams"], r["avg_logprob"])
     assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
 
 
-def test_streaming_scoring_matches_batch(spark, tmp_path):
+def test_streaming_scoring_matches_batch(spark, tmp_path, monkeypatch):
     """Two microbatches of docs scored against a static model come out
-    identical to batch scoring of the same docs."""
+    identical to batch scoring of the same docs, and the model's size
+    is probed once per stream, not once per microbatch."""
     import json
 
     from clearcare_data_pipeline_spark.operators.textstats import (
@@ -94,8 +117,12 @@ def test_streaming_scoring_matches_batch(spark, tmp_path):
         score_trigram_counts,
         trigram_lm_model_from_counts,
     )
-    from clearcare_data_pipeline_spark.streaming.lmscore import (
-        run_lm_scoring_stream,
+    from clearcare_data_pipeline_spark.streaming import lmscore
+
+    probes = []
+    real = lmscore.broadcast_if_small
+    monkeypatch.setattr(
+        lmscore, "broadcast_if_small", lambda m: probes.append(m) or real(m)
     )
 
     train = spark.createDataFrame(
@@ -117,7 +144,7 @@ def test_streaming_scoring_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(inp))
     )
-    q = run_lm_scoring_stream(
+    q = lmscore.run_lm_scoring_stream(
         stream,
         model,
         str(tmp_path / "scored"),
@@ -137,5 +164,6 @@ def test_streaming_scoring_matches_batch(spark, tmp_path):
         for r in score_trigram_counts(doc_trigram_counts(batch_docs), model).collect()
     }
     assert got == want
+    assert len(probes) == 1
     assert 3 not in got  # out-of-model doc yields no row (inner join)
     assert set(got) == {1, 2}

@@ -16,12 +16,31 @@ from clearcare_data_pipeline_spark.queries import _oracle_expr as oe
 from clearcare_data_pipeline_spark.schema import TESTDATA_TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
+QPKG = "clearcare_data_pipeline_spark.queries"
+
+
+def _queries_modules():
+    return [m for m in list(sys.modules) if m == QPKG or m.startswith(QPKG + ".")]
+
+
+@pytest.fixture(autouse=True)
+def _restore_queries_modules():
+    """Put back the queries modules ``_fresh_oracles`` replaced, so test
+    modules that imported from them at module top still share the live
+    package with ``sys.modules`` (and a monkeypatch of one reaches the
+    other)."""
+    saved = {m: sys.modules[m] for m in _queries_modules()}
+    yield
+    for m in _queries_modules():
+        del sys.modules[m]
+    sys.modules.update(saved)
+    setattr(sys.modules["clearcare_data_pipeline_spark"], "queries", saved[QPKG])
 
 
 def _fresh_oracles():
     """Re-import the queries package so module-level oracle dicts are
     rebuilt under the current env."""
-    for m in [m for m in list(sys.modules) if m.startswith("clearcare_data_pipeline_spark.queries")]:
+    for m in _queries_modules():
         del sys.modules[m]
     import clearcare_data_pipeline_spark.queries as q
 
@@ -58,7 +77,6 @@ def test_cached_oracles_match_canonical(stage_cache, monkeypatch):
     monkeypatch.setenv(oe.ORACLE_STAGE_ENV, stage_cache)
     cached = _fresh_oracles()
     monkeypatch.delenv(oe.ORACLE_STAGE_ENV)
-    _fresh_oracles()  # restore module state for other tests
     for name in ["charges_cleaned", "charges_quarantine", "charges_rules_tagged",
                  "charges_unknown_code_types", "charges_code_type_mappings",
                  "charges_score", "extract_tall_canonical",
@@ -77,5 +95,3 @@ def test_unbuilt_cache_is_a_hard_error(tmp_path, monkeypatch):
     monkeypatch.setenv(oe.ORACLE_STAGE_ENV, str(tmp_path / "nowhere"))
     with pytest.raises(FileNotFoundError, match="materialize_oracle_stages"):
         oe.cleaned_charges_cte("lineitem")
-    monkeypatch.delenv(oe.ORACLE_STAGE_ENV)
-    _fresh_oracles()

@@ -309,11 +309,9 @@ def test_partial_or_registry_defined_query_fn_refused(monkeypatch):
         out["evil_partial"] = functools.partial(real["q1_pricing_summary"], None)
         return out
 
-    # called through qpkg: test_oracle_stage_cache re-imports the
-    # registry package, so a module-top import may hold a stale copy
     monkeypatch.setattr(qpkg, "all_queries", fake_registry)
     with pytest.raises(ValueError, match="evil_partial"):
-        qpkg.query_code_hashes(["evil_partial"])
+        query_code_hashes(["evil_partial"])
 
 
 def test_remap_reresolves_to_new_module(monkeypatch):
@@ -334,9 +332,9 @@ def test_remap_reresolves_to_new_module(monkeypatch):
         out[victim] = impostor
         return out
 
-    before = qpkg.query_code_hashes([victim])[victim]
+    before = query_code_hashes([victim])[victim]
     monkeypatch.setattr(qpkg, "all_queries", fake_registry)
-    after = qpkg.query_code_hashes([victim])[victim]
+    after = query_code_hashes([victim])[victim]
     assert after != before
     assert after == P.closure_hash(impostor.__module__)
 

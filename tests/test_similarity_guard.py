@@ -19,13 +19,10 @@ def test_cosine_topk_routes_to_ivf_above_cap(spark, monkeypatch):
         return real(vectors, queries, **kw)
 
     monkeypatch.setattr(similarity, "ivf_topk_nprobe", spy)
-    out = similarity.cosine_topk(
-        _vecs(spark, 20), _vecs(spark, 5, prefix=100), k=2, max_broadcast_queries=3
-    )
-    with pytest.warns(UserWarning, match="routing to ivf_topk_nprobe"):
-        similarity.cosine_topk(
-            _vecs(spark, 20), _vecs(spark, 5, prefix=100), k=2, max_broadcast_queries=3
-        )
+    monkeypatch.setattr(similarity, "BRUTE_FORCE_QUERY_CAP", 3)
+    out = similarity.cosine_topk(_vecs(spark, 20), _vecs(spark, 5, prefix=100), k=2)
+    with pytest.warns(UserWarning, match="exceeds 3 rows; routing to ivf_topk_nprobe"):
+        similarity.cosine_topk(_vecs(spark, 20), _vecs(spark, 5, prefix=100), k=2)
     assert called.get("hit")
     assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rn"]
 

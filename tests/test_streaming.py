@@ -354,11 +354,12 @@ def test_stream_merge_sink_tombstone_deletes(spark, tmp_path):
 @pytest.mark.slow
 def test_replayed_batches_are_noops(spark, tmp_path):
     """Crash-replay semantics: a micro-batch whose snapshot the pointer
-    already names must be skipped. Simulated by wiping the streaming
-    checkpoint after a completed run — availableNow then re-reads and
-    re-delivers every batch with the same batch ids — and asserting the
-    table is unchanged (not double-counted, not wedged on
-    read-from/overwrite of the live snapshot)."""
+    already names must be skipped, and a stream_clean batch must
+    rewrite its own output rather than append it again. Simulated by
+    wiping the streaming checkpoint after a completed run — availableNow
+    then re-reads and re-delivers every batch with the same batch ids —
+    and asserting the table is unchanged (not double-counted, not wedged
+    on read-from/overwrite of the live snapshot)."""
     import json as j
     import shutil
 
@@ -421,6 +422,23 @@ def test_replayed_batches_are_noops(spark, tmp_path):
         (r.k, r.n, float(r.total)) for r in read_merge_target(spark, itarget).collect()
     )
     assert agg_after == agg_before
+
+    # --- stream_clean: each batch overwrites its own batch_id directory
+    cin, cout, cchk = tmp_path / "cin", str(tmp_path / "cout"), str(tmp_path / "cchk")
+    cin.mkdir()
+    (cin / "a.csv").write_text(_HEADER + "\n" + _charges_csv_line() + "\n")
+    (cin / "b.csv").write_text(_HEADER + "\n" + _charges_csv_line(code="99214", maxp="") + "\n")
+
+    def clean_counts():
+        return tuple(spark.read.parquet(f"{cout}/{side}").count() for side in ("clean", "quarantine"))
+
+    stream_clean(spark, str(cin), cout, cchk).awaitTermination(120)
+    assert clean_counts() == (1, 1)
+    shutil.rmtree(cchk)
+    q3 = stream_clean(spark, str(cin), cout, cchk)
+    q3.awaitTermination(120)
+    assert q3.exception() is None
+    assert clean_counts() == (1, 1)
 
 
 def test_stream_static_enrichment_join(spark, tmp_path):
