@@ -32,8 +32,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from drain_jvms import spark_jvms  # noqa: E402
 from clearcare_data_pipeline_spark.session import get_spark  # noqa: E402
 
 # Default 5; the sf1 scale-step run overrides to 3 via env (per-run
@@ -204,7 +206,7 @@ def _force_gc(spark) -> None:
     still lands inside its timed runs. (Cheap insurance, not a cure
     for the multi-second sf1 outliers once blamed on GC: ``-Xlog:gc*``
     showed <1 s total pause time inside a 25 s slow window — those were
-    leftover-JVM contamination, see ``_foreign_jvms``.)
+    leftover-JVM contamination, see ``tools/drain_jvms.spark_jvms``.)
     """
     try:
         spark._jvm.System.gc()
@@ -335,32 +337,6 @@ def _skew_demo(spark, sf_dir: str) -> dict[str, float]:
     }
 
 
-def _foreign_jvms() -> list[int]:
-    """PIDs of Spark/Java processes that are NOT this bench's own JVM.
-
-    A leftover JVM from an earlier run (killed mid-query, or a
-    still-draining background bench) silently competes for every core
-    and contaminates timings by 2-5x — measured at sf1: the same
-    scan+agg query read 1.2 s on a quiet machine and 5.8-6.1 s with one
-    orphan churning an interpreted HOF stage; GC/heap were exonerated
-    by ``-Xlog:gc*`` (total pause time <1 s in a 25 s window). The scan
-    runs BEFORE this process launches its own JVM, so anything found is
-    foreign by construction.
-    """
-    pids = []
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/cmdline", "rb") as f:
-                cmd = f.read().decode(errors="replace")
-        except OSError:
-            continue
-        if "SparkSubmit" in cmd or "org.apache.spark" in cmd:
-            pids.append(int(pid))
-    return pids
-
-
 def _wait_for_clean_machine() -> list[int]:
     """Block until no foreign Spark JVM is alive, then return the final
     scan (VERDICT r7 defect #1: the r7 driver bench recorded a foreign
@@ -375,7 +351,7 @@ def _wait_for_clean_machine() -> list[int]:
     """
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_WAIT_CLEAN_SEC", "900"))
     deadline = time.time() + budget
-    foreign = _foreign_jvms()
+    foreign = spark_jvms()
     waited = False
     while foreign and time.time() < deadline:
         if not waited:
@@ -387,7 +363,7 @@ def _wait_for_clean_machine() -> list[int]:
             )
             waited = True
         time.sleep(5)
-        foreign = _foreign_jvms()
+        foreign = spark_jvms()
     if waited and not foreign:
         print("[bench] machine clean, starting", file=sys.stderr, flush=True)
     return foreign
@@ -600,7 +576,7 @@ def main() -> None:
         )
     )
     # Explicit stop so the JVM exits with this process — a lingering
-    # JVM would contaminate the NEXT bench (see _foreign_jvms).
+    # JVM would contaminate the NEXT bench (see drain_jvms.spark_jvms).
     spark.stop()
 
 

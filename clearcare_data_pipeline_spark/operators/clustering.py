@@ -20,10 +20,19 @@ Determinism (required by the DuckDB oracle twin):
 - empty clusters keep their previous centroid.
 """
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from clearcare_data_pipeline_spark.operators.similarity import as_double_vec
+from clearcare_data_pipeline_spark.operators.similarity import (
+    as_double_vec,
+    bucket_pairs,
+    capped_probe,
+    dot_expr_fixed,
+    nearest_expr,
+    with_norm,
+)
 
 _SUM_DEC = "decimal(27,10)"
 
@@ -40,26 +49,44 @@ _SUM_DEC = "decimal(27,10)"
 # a new measurement.
 
 
-def _dists_expr(dvec: Column, centroids: list[list[float]]) -> Column:
-    cent_lit = F.array(*[F.array(*[F.lit(float(w)) for w in c]) for c in centroids])
-    return F.transform(
-        cent_lit,
-        lambda cv: F.aggregate(
-            F.zip_with(dvec, cv, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+def _lloyd_means(assigned: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., pos, m): each group's per-dimension mean of ``dvec``
+    via posexplode + one (keys, pos) aggregation — ONE sum/count pair
+    instead of ``dim`` aggregate columns, so the expression tree (and
+    per-iteration plan compilation) is constant-size in the vector
+    dimension, and the measured-faster format (the r12 A/B note
+    above). Sums go through DECIMAL so partial-aggregation order cannot
+    change the double result across engines."""
+    return (
+        assigned.select(*keys, F.posexplode("dvec").alias("pos", "v"))
+        .groupBy(*keys, "pos")
+        .agg((F.sum(F.col("v").cast(_SUM_DEC)).cast("double") / F.count(F.lit(1))).alias("m"))
     )
+
+
+def _nearest(x, cmat):
+    """Row-wise index of the nearest ``cmat`` row for the (batch, dim)
+    float64 matrix ``x`` — the numpy twin of ``nearest_expr`` used by
+    every Arrow-batched assignment. The squared distance is accumulated
+    dimension by dimension (``acc = acc + (x_d - c_d)^2`` across the
+    whole batch), which performs float64 operations in exactly the
+    fold-left order of ``F.aggregate``/``list_reduce`` — not numpy's
+    pairwise ``sum`` — and ``argmin`` breaks exact ties on the lowest
+    index, matching the (distance, index) struct ordering."""
+    import numpy as np
+
+    acc = np.zeros((x.shape[0], cmat.shape[0]))
+    for d in range(cmat.shape[1]):
+        diff = x[:, d, None] - cmat[None, :, d]
+        acc = acc + diff * diff
+    return np.argmin(acc, axis=1).astype("int32")
 
 
 def assign_expr(dvec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid index with deterministic (distance, index)
-    tie-break: array_min over (dist, idx) structs."""
-    pairs = F.transform(
-        _dists_expr(dvec, centroids),
-        lambda d, i: F.struct(d.alias("dist"), i.alias("cluster")),
-    )
-    return F.array_min(pairs).getField("cluster")
+    """Nearest-centroid index against the centroids as ONE constant
+    array-of-arrays plan literal."""
+    cent_lit = F.array(*[F.array(*[F.lit(float(w)) for w in c]) for c in centroids])
+    return nearest_expr(dvec, cent_lit)
 
 
 # Above this many k x dim distance cells the interpreted higher-order
@@ -72,6 +99,13 @@ def assign_expr(dvec: Column, centroids: list[list[float]]) -> Column:
 # because staying inside whole-stage codegen beats the Python-worker
 # round trip while the expression tree is small, so the switch sits at
 # 512 cells: small-k workloads keep codegen, anything wider goes Arrow.
+# Both sides again on a 4-core box (local[4]; kmeans_fit + collect of
+# the assignments, iters=3, each path forced by patching this constant,
+# alternating pairs, identical centroids and assignments): k=4 on the
+# sf0.01 embeddings (500 x 64, 256 cells — the query_mix shape) literal
+# 1.45 s vs Arrow 1.74 s median over 7 pairs, literal faster in all 7;
+# k=64 on the sf0.1 embeddings (2,000 x 64, 4,096 cells) literal 8.72 s
+# vs Arrow 2.42 s median over 6 pairs, Arrow faster in all 6.
 _ASSIGN_UDF_MIN_CELLS = 512
 
 
@@ -81,12 +115,7 @@ def _assign_pandas(centroids: list[list[float]]):
     corpus size (SemDeDup auto-k).
 
     Bit-identical to ``assign_expr`` and the DuckDB oracle by
-    construction: the squared distance is accumulated dimension-by-
-    dimension (``acc = acc + (x_d - c_d)^2`` across the whole batch),
-    which performs float64 operations in exactly the fold-left order of
-    ``F.aggregate``/``list_reduce`` — not numpy's pairwise ``sum`` —
-    and ``argmin`` breaks exact ties on the lowest index, matching the
-    (distance, cluster) struct ordering. So the UDF/literal switch can
+    construction (see ``_nearest``), so the UDF/literal switch can
     never change a result, only its speed.
     """
     import numpy as np
@@ -99,12 +128,7 @@ def _assign_pandas(centroids: list[list[float]]):
     def assign(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int32")
-        x = np.stack(v.to_numpy())  # (batch, dim) float64
-        acc = np.zeros((x.shape[0], cmat.shape[0]))
-        for d in range(cmat.shape[1]):
-            diff = x[:, d, None] - cmat[None, :, d]
-            acc = acc + diff * diff
-        return pd.Series(np.argmin(acc, axis=1).astype("int32"))
+        return pd.Series(_nearest(np.stack(v.to_numpy()), cmat))
 
     return assign
 
@@ -140,20 +164,7 @@ def kmeans_fit(
         dim = len(centroids[0])
         for _ in range(iters):
             assigned = d.withColumn("cluster", _assign_col(F.col("dvec"), centroids))
-            # Per-dimension means via posexplode + (cluster, pos) agg:
-            # ONE sum/count pair instead of `dim` separate aggregate
-            # columns, so the expression tree (and per-iteration plan
-            # compilation) is constant-size in the vector dimension —
-            # and the measured-faster format (see the r12 A/B note at
-            # the top of this module).
-            rows = (
-                assigned.select("cluster", F.posexplode("dvec").alias("pos", "v"))
-                .groupBy("cluster", "pos")
-                .agg(
-                    (F.sum(F.col("v").cast(_SUM_DEC)).cast("double") / F.count(F.lit(1))).alias("m")
-                )
-                .collect()
-            )
+            rows = _lloyd_means(assigned, "cluster").collect()
             means: dict[int, list] = {}
             for r in rows:
                 means.setdefault(r.cluster, [None] * dim)[r.pos] = r.m
@@ -382,6 +393,21 @@ def _init_sub_centroid_ids(work: DataFrame, branch: int) -> DataFrame:
     )
 
 
+def _sub_centroids(assigned: DataFrame) -> DataFrame:
+    """(cluster, sub, cvec): a splitting level's Lloyd means, regrouped
+    from the long format into one vector per sub-cluster."""
+    return (
+        _lloyd_means(assigned, "cluster", "sub")
+        .groupBy("cluster", "sub")
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s.m,
+            ).alias("cvec")
+        )
+    )
+
+
 def _split_level_driver(
     work: DataFrame, split_ids: list[int], branch: int, iters: int
 ) -> DataFrame:
@@ -409,24 +435,7 @@ def _split_level_driver(
         assigned = work.withColumn(
             "sub", _assign_grouped_pandas(cents)(F.col("dvec"), F.col("cluster"))
         )
-        rows = (
-            assigned.select("cluster", "sub", F.posexplode("dvec").alias("pos", "v"))
-            .groupBy("cluster", "sub", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast(_SUM_DEC)).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .groupBy("cluster", "sub")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m,
-                ).alias("cvec")
-            )
-            .collect()
-        )
+        rows = _sub_centroids(assigned).collect()
         new_cents = {c: m.copy() for c, m in cents.items()}
         for r in rows:
             new_cents[r.cluster][r.sub] = r.cvec
@@ -469,23 +478,8 @@ def _split_level_join(work: DataFrame, branch: int, iters: int) -> DataFrame:
     )
     for _ in range(iters):
         assigned = _assign_cogroup(work, cent)
-        means = (
-            work.join(assigned, "_hid")
-            .select("cluster", "sub", F.posexplode("dvec").alias("pos", "v"))
-            .groupBy("cluster", "sub", "pos")
-            .agg(
-                (
-                    F.sum(F.col("v").cast(_SUM_DEC)).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("m")
-            )
-            .groupBy("cluster", "sub")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.m,
-                ).alias("nvec")
-            )
+        means = _sub_centroids(work.join(assigned, "_hid")).withColumnRenamed(
+            "cvec", "nvec"
         )
         new_cent = (
             cent.join(means, ["cluster", "sub"], "left")
@@ -511,9 +505,8 @@ def _assign_cogroup(work: DataFrame, cent: DataFrame) -> DataFrame:
     """(_hid, sub) nearest-sub-centroid assignment via
     cogroup(cluster) + applyInPandas: each cluster's points meet each
     cluster's centroid matrix executor-side. The numpy fold is
-    copy-identical to _assign_grouped_pandas (dimension-major float64
-    accumulation, argmin first-occurrence = lowest sub), so results
-    are bit-equal to the driver exchange."""
+    ``_nearest`` (the lowest sub wins exact ties), so results are
+    bit-equal to the driver exchange."""
     import numpy as np
     import pandas as pd
 
@@ -526,11 +519,7 @@ def _assign_cogroup(work: DataFrame, cent: DataFrame) -> DataFrame:
         cs = cs.sort_values("sub")
         cmat = np.stack(cs["cvec"].to_numpy())
         x = np.stack(pts["dvec"].to_numpy())
-        acc = np.zeros((x.shape[0], cmat.shape[0]))
-        for d in range(cmat.shape[1]):
-            diff = x[:, d, None] - cmat[None, :, d]
-            acc = acc + diff * diff
-        sub = cs["sub"].to_numpy()[np.argmin(acc, axis=1)].astype("int32")
+        sub = cs["sub"].to_numpy()[_nearest(x, cmat)].astype("int32")
         return pd.DataFrame({"_hid": pts["_hid"].to_numpy(), "sub": sub})
 
     return (
@@ -545,9 +534,8 @@ def _assign_grouped_pandas(cents):
     """Arrow-batched per-cluster nearest-sub-centroid assignment:
     ``cents`` maps cluster id -> (subs, dim) centroid matrix. Batches
     are grouped by cluster in pandas, each group scored against its own
-    matrix with the identical dimension-major float64 fold as
-    ``_assign_pandas`` (bit-identical to the literal expression and the
-    DuckDB replay); argmin breaks exact ties on the lowest sub."""
+    matrix by ``_nearest`` (bit-identical to the literal expression and
+    the DuckDB replay; the lowest sub wins exact ties)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -559,14 +547,8 @@ def _assign_grouped_pandas(cents):
             return pd.Series(out)
         frame = pd.DataFrame({"i": np.arange(len(v)), "c": cluster.to_numpy()})
         for c, grp in frame.groupby("c"):
-            cmat = cents[c]
             idx = grp["i"].to_numpy()
-            x = np.stack(v.iloc[idx].to_numpy())
-            acc = np.zeros((x.shape[0], cmat.shape[0]))
-            for d in range(cmat.shape[1]):
-                diff = x[:, d, None] - cmat[None, :, d]
-                acc = acc + diff * diff
-            out[idx] = np.argmin(acc, axis=1).astype("int32")
+            out[idx] = _nearest(np.stack(v.iloc[idx].to_numpy()), cents[c])
         return pd.Series(out)
 
     return assign
@@ -613,35 +595,11 @@ def semantic_dedup(
     SAME corpus, gating each replayed branch to emptiness when not
     taken — so both engines always compute the same partitioning.
     """
-    from clearcare_data_pipeline_spark.operators.similarity import (
-        DOT_UNROLL_MAX_DIM,
-        dot_expr,
-        dot_expr_fixed,
-        with_norm,
-    )
-
-    # O(cap) branch probe (VERDICT r8 #4a): LIMIT cap+1 short-circuits
-    # the count after the cap instead of scanning the whole corpus (the
-    # dedicated full-count job was the measured +8% at sf10). Below the
-    # cap the limited count IS the exact corpus count, which is all
-    # derive_k needs; above it the hierarchy derives its own widths and
-    # never needs n. The same bounded job also probes the vector
-    # dimension for the unrolled-dot fast path of the within-cluster
-    # pairwise scorer (r13 — was a second probe job per run via
-    # probed_dot; any probed dim yields bit-identical scores because
-    # dot_expr_fixed falls back per-row on size mismatch and is
-    # IEEE-identical to the fold when it applies).
-    probe = df.limit(SEMDEDUP_FLAT_MAX_N + 1).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size(F.col(vec_col))).alias("dim"),
-    ).collect()[0]
-    n = int(probe["n"])
-    pdim = int(probe["dim"]) if probe["dim"] is not None else 0
-    dot = (
-        (lambda a, b, _d=pdim: dot_expr_fixed(a, b, _d))
-        if 1 <= pdim <= DOT_UNROLL_MAX_DIM
-        else dot_expr
-    )
+    # O(cap) branch probe: below the cap the limited count IS the exact
+    # corpus count, which is all derive_k needs; above it the hierarchy
+    # derives its own widths and never needs n. The same bounded job
+    # probes the dimension for the within-cluster pairwise scorer's dot.
+    n, dim = capped_probe(df, SEMDEDUP_FLAT_MAX_N, vec_col)
     if n <= SEMDEDUP_FLAT_MAX_N:
         _cents, assigned = kmeans_fit(
             df, k=derive_k(n), iters=iters, vec_col=vec_col, id_col=id_col
@@ -662,31 +620,10 @@ def semantic_dedup(
         .join(assigned, id_col)
         .persist()
     )
-    a = d.select(
-        F.col(id_col).alias("_a_id"),
-        F.col("dvec").alias("_a_vec"),
-        F.col("norm").alias("_a_norm"),
-        "cluster",
-    )
-    b = d.select(
-        F.col(id_col).alias("_b_id"),
-        F.col("dvec").alias("_b_vec"),
-        F.col("norm").alias("_b_norm"),
-        "cluster",
-    )
     try:
         dup_ids = (
-            a.join(b, "cluster")
-            .where(F.col("_a_id") < F.col("_b_id"))
-            .where(
-                F.round(
-                    dot(F.col("_a_vec"), F.col("_b_vec"))
-                    / (F.col("_a_norm") * F.col("_b_norm")),
-                    6,
-                )
-                >= threshold
-            )
-            .select(F.col("_b_id").alias(id_col))
+            bucket_pairs(d, ["cluster"], partial(dot_expr_fixed, dim=dim), threshold, id_col)
+            .select(F.col("b").alias(id_col))
             .distinct()
             .withColumn("is_dup", F.lit(True))
         )

@@ -12,6 +12,8 @@ left-fold makes the dot product bit-reproducible across engines.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -118,7 +120,10 @@ def dot_expr_fixed(a: Column, b: Column, dim: int) -> Column:
     scorer). The per-row size guard keeps semantics identical for
     ragged rows (falls back to the fold, which NULL-pads via
     zip_with); getItem stays in-bounds because the guarded branch only
-    evaluates when both sizes equal ``dim``."""
+    evaluates when both sizes equal ``dim``. Outside 1..DOT_UNROLL_MAX_DIM
+    it IS the fold, so a scorer binds whatever dimension its probe saw
+    (0 for none): the probe only PICKS the fast path, it never changes
+    results."""
     if not (1 <= dim <= DOT_UNROLL_MAX_DIM):
         return dot_expr(a, b)
     terms = a.getItem(0) * b.getItem(0)
@@ -129,29 +134,59 @@ def dot_expr_fixed(a: Column, b: Column, dim: int) -> Column:
     ).otherwise(dot_expr(a, b))
 
 
+def capped_probe(df: DataFrame, cap: int, vec_col: str = "embedding") -> tuple[int, int]:
+    """(row count, vector dimension) from ONE bounded job over at most
+    ``cap + 1`` rows. A count above ``cap`` means "more than cap" —
+    the LIMIT short-circuits the scan instead of counting the whole
+    frame (VERDICT r6 #7, r8 #4a: the dedicated full-count job was the
+    measured +8% at sf10). The dimension is a null-skipping F.max over
+    the same sample, not the first row's size (ADVICE r10 #4, r11 #1):
+    a NULL or ragged leading row is partition-order dependent and would
+    nondeterministically zero it. 0 when the sample holds no vector."""
+    probe = df.limit(cap + 1).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(F.size(F.col(vec_col))).alias("dim"),
+    ).collect()[0]
+    return int(probe["n"]), int(probe["dim"]) if probe["dim"] is not None else 0
+
+
 def probed_dot(df: DataFrame, vec_col: str = "embedding"):
-    """The dot implementation a scorer should use for this corpus:
-    unrolled fixed-dim (codegen) when a bounded probe finds a
-    codegen-sized dimension, the generic fold otherwise. One bounded
-    agg job — null-skipping F.max over a LIMIT sample instead of
-    head(1) (ADVICE r11 #1: a null- or ragged-leading first row is
-    partition-order dependent and would nondeterministically lose the
-    fast path); rows that don't match the probed dim still fall back
-    per-row, so the probe only PICKS the fast path, it never changes
-    results."""
-    probe = (
-        df.limit(16)
-        .agg(F.max(F.size(F.col(vec_col))).alias("d"))
-        .collect()[0]
-    )
-    dim = int(probe["d"]) if probe["d"] is not None else 0
-    if 1 <= dim <= DOT_UNROLL_MAX_DIM:
-        return lambda x, y: dot_expr_fixed(x, y, dim)
-    return dot_expr
+    """The dot callable for this corpus, probed from a 16-row sample."""
+    return partial(dot_expr_fixed, dim=capped_probe(df, 15, vec_col)[1])
 
 
 def norm_expr(v: Column) -> Column:
     return F.sqrt(dot_expr(v, v))
+
+
+def sq_dist_expr(a: Column, b: Column) -> Column:
+    """Squared L2 distance as a sequential left-fold — the same fold
+    order as ``dot_expr``, the numpy ``_nearest`` in
+    operators/clustering.py and the DuckDB ``list_reduce`` twins, so
+    values are engine-portable."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _dists_expr(dvec: Column, cmat: Column) -> Column:
+    """Squared L2 distances to every row of the matrix ``cmat``, as one
+    array."""
+    return F.transform(cmat, lambda cv: sq_dist_expr(dvec, cv))
+
+
+def nearest_expr(dvec: Column, cmat: Column) -> Column:
+    """Index of the row of ``cmat`` nearest to ``dvec``: array_min over
+    (dist, index) structs, so exact ties break on the lowest index.
+    ``cmat`` is a plan literal in ``kmeans_fit`` (a few centroids) and
+    a broadcast table cell in the IVF coarse quantizer."""
+    pairs = F.transform(
+        _dists_expr(dvec, cmat),
+        lambda d, i: F.struct(d.alias("dist"), i.alias("cluster")),
+    )
+    return F.array_min(pairs).getField("cluster")
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -188,19 +223,12 @@ def cosine_topk(
     the exact baseline must be asked for knowingly, never become the
     production plan by accident on a grown query set.
     """
-    from pyspark.sql import Window
-
-    # O(cap) probe: scan at most cap+1 query rows instead of counting
-    # the whole query side (VERDICT r6 #7) — the guard must stay cheap
-    # even when the query frame is corpus-sized. The same bounded job
-    # also returns the vector dimension (null-skipping max, the r10
-    # probe discipline) for the unrolled-dot fast path below.
+    # O(cap) probe: the guard must stay cheap even when the query frame
+    # is corpus-sized; the same bounded job returns the dimension for
+    # the unrolled-dot fast path below.
     cap = BRUTE_FORCE_QUERY_CAP
-    probe = queries.limit(cap + 1).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size(F.col("embedding"))).alias("dim"),
-    ).collect()[0]
-    if int(probe["n"]) > cap:
+    n, dim = capped_probe(queries, cap)
+    if n > cap:
         import warnings
 
         warnings.warn(
@@ -211,7 +239,6 @@ def cosine_topk(
             stacklevel=2,
         )
         return ivf_topk_nprobe(vectors, queries, k=k, id_col=id_col)
-    dim = int(probe["dim"]) if probe["dim"] is not None else 0
 
     cand = with_norm(vectors, "embedding").select(
         F.col(id_col).alias("neighbor_id"), "dvec", "norm"
@@ -227,14 +254,7 @@ def cosine_topk(
     n_par = cand.sparkSession.sparkContext.defaultParallelism
     if cand.rdd.getNumPartitions() < n_par:
         cand = cand.repartition(n_par)
-    # Unrolled fixed-dim dot (bit-identical, see dot_expr_fixed) when
-    # the probed dimension is codegen-sized; ragged/oversized corpora
-    # keep the generic fold.
-    dot = (
-        (lambda x, y: dot_expr_fixed(x, y, dim))
-        if 1 <= dim <= DOT_UNROLL_MAX_DIM
-        else dot_expr
-    )
+    dot = partial(dot_expr_fixed, dim=dim)
     q = with_norm(queries, "embedding").select(
         F.col(id_col).alias("query_id"), F.col("dvec").alias("qvec"), F.col("norm").alias("qnorm")
     )
@@ -242,11 +262,20 @@ def cosine_topk(
         cand.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cos_sim", F.round(dot(F.col("dvec"), F.col("qvec")) / (F.col("norm") * F.col("qnorm")), 6))
     )
+    return _top_k(scored, k, "query_id", "neighbor_id", "cos_sim")
+
+
+def _top_k(scored: DataFrame, k: int, *cols: str) -> DataFrame:
+    """``cols`` plus rn (BIGINT 1..k) for each query's ``k`` best
+    scored rows, ranked by (cos_sim DESC, neighbor_id ASC) — fully
+    deterministic, the ORDER BY of every top-k DuckDB twin."""
+    from pyspark.sql import Window
+
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rn").cast("long").alias("rn"))
+        .select(*cols, F.col("rn").cast("long").alias("rn"))
     )
 
 
@@ -368,35 +397,43 @@ def refined_lsh_buckets(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
     full = LSH_REFINE_LADDER[-1]
     levels = len(LSH_REFINE_LADDER)
     # Persisted: the deep signature feeds the histogram, every ladder
-    # width aggregation, and BOTH sides of the downstream pair join —
-    # without the cache each consumer re-runs the corpus-wide signature
-    # pass (~9 evaluations of the most expensive stage). MLlib-style
-    # tradeoff — the cache is LRU-evicted; rows are (id, sig, dvec,
-    # norm), i.e. ~9 doubles per input vector.
+    # width aggregation and the leaf mapping join — without the cache
+    # each consumer re-runs the corpus-wide signature pass (the most
+    # expensive stage). Rows are (id, sig, dvec, norm), ~9 doubles per
+    # input vector. The result is checkpointed eagerly (it feeds BOTH
+    # sides of the caller's pair join) so both caches are released
+    # before returning instead of leaking for the session lifetime —
+    # the semantic_dedup pattern.
     d = (
         lsh_buckets(df, id_col, full)
         .withColumnRenamed("bucket", "sig")
         .persist()
     )
     sigs = d.groupBy("sig").count().persist()
-    m = sigs
-    for idx, p in enumerate(LSH_REFINE_LADDER):
-        w = (
-            sigs.groupBy((F.col("sig") % F.lit(2**p)).alias(f"_p{idx}"))
-            .agg(F.sum("count").alias(f"_w{idx}"))
+    try:
+        m = sigs
+        for idx, p in enumerate(LSH_REFINE_LADDER):
+            w = (
+                sigs.groupBy((F.col("sig") % F.lit(2**p)).alias(f"_p{idx}"))
+                .agg(F.sum("count").alias(f"_w{idx}"))
+            )
+            m = m.join(w, (F.col("sig") % F.lit(2**p)) == F.col(f"_p{idx}")).drop(f"_p{idx}")
+        bucket = F.col("sig") * levels + F.lit(len(LSH_REFINE_LADDER) - 1)
+        for idx in range(levels - 2, -1, -1):
+            p = LSH_REFINE_LADDER[idx]
+            bucket = F.when(
+                F.col(f"_w{idx}") <= LSH_LEAF_CAP,
+                (F.col("sig") % F.lit(2**p)) * levels + F.lit(idx),
+            ).otherwise(bucket)
+        mapping = m.select("sig", bucket.alias("bucket"))
+        return (
+            d.join(mapping, "sig")
+            .select(F.col(id_col), "bucket", "dvec", "norm")
+            .localCheckpoint(eager=True)
         )
-        m = m.join(w, (F.col("sig") % F.lit(2**p)) == F.col(f"_p{idx}")).drop(f"_p{idx}")
-    bucket = F.col("sig") * levels + F.lit(len(LSH_REFINE_LADDER) - 1)
-    for idx in range(levels - 2, -1, -1):
-        p = LSH_REFINE_LADDER[idx]
-        bucket = F.when(
-            F.col(f"_w{idx}") <= LSH_LEAF_CAP,
-            (F.col("sig") % F.lit(2**p)) * levels + F.lit(idx),
-        ).otherwise(bucket)
-    mapping = m.select("sig", bucket.alias("bucket"))
-    return d.join(mapping, "sig").select(
-        F.col(id_col), "bucket", "dvec", "norm"
-    )
+    finally:
+        sigs.unpersist()
+        d.unpersist()
 
 
 def lsh_near_dup_pairs(
@@ -426,66 +463,54 @@ def lsh_near_dup_pairs(
     (VERDICT r8 #6), which ORs several independent plane families —
     the MinHash-band construction of operators/dedup.py; the measured
     recall gate lives in queries/similarity.py (emb_lsh_recall)."""
-    # O(cap) branch probe (VERDICT r8 #4a): the decision only needs
-    # "at most LSH_FLAT_MAX_N rows or not", so a LIMIT cap+1 count
-    # short-circuits after cap+1 rows instead of scanning the whole
-    # corpus (the dedicated full-count job was the measured +8% at
-    # sf10) — the same bounded-probe discipline as cosine_topk's
-    # broadcast guard.
-    # One probe job returns BOTH the capped count and the vector
-    # dimension (for the broadcast byte gate below) — folding the
-    # ADVICE r9 #3 dim probe into the existing LIMIT probe keeps the
-    # flat branch at a single probe job.
-    # F.max (not F.first) over the capped sample: null-skipping, so a
-    # NULL embedding in the sample cannot zero the dim and defeat the
-    # byte gate, and deterministic regardless of partition order
-    # (ADVICE r10 #4).
-    probe = df.limit(LSH_FLAT_MAX_N + 1).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size(F.col("embedding"))).alias("dim"),
-    ).collect()[0]
-    n = int(probe["n"])
-    dim = int(probe["dim"]) if probe["dim"] is not None else 0
-    # the probed dim also picks the unrolled-dot fast path for the
-    # pair scoring below (bit-identical; see dot_expr_fixed)
-    dot = (
-        (lambda x, y: dot_expr_fixed(x, y, dim))
-        if 1 <= dim <= DOT_UNROLL_MAX_DIM
-        else dot_expr
-    )
+    # One O(cap) probe job returns BOTH the branch decision's capped
+    # count and the vector dimension, which sizes the broadcast byte
+    # gate below (ADVICE r9 #3) and picks the pair scorer's dot.
+    n, dim = capped_probe(df, LSH_FLAT_MAX_N)
     flat = n <= LSH_FLAT_MAX_N
     if flat:
         b = lsh_buckets(df, id_col, LSH_FLAT_PLANES)
     else:
         b = refined_lsh_buckets(df, id_col)
-    # ADVICE r10 #3: the byte gate sizes the ACTUAL corpus (the probed
-    # count, exact on the flat branch), not the crossover ceiling — a
-    # 100-row x 4096-dim corpus is ~3 MB, not the 2 GB a cap-sized
-    # estimate would claim, and keeps its zero-shuffle broadcast plan.
+    # The flat branch's corpus is <= LSH_FLAT_MAX_N rows by the probe,
+    # so the bucket self-join broadcasts its right side: zero shuffles,
+    # one stage, instead of two exchanges over a tiny input. Gated on
+    # ESTIMATED BYTES, not row count (ADVICE r9 #3): 65,536 rows is
+    # ~35 MB at 64 dims but hundreds of MB at 1024-1536 dims, where
+    # shipping the side to every executor risks memory pressure. The
+    # gate sizes the ACTUAL corpus (the probed count, exact on the flat
+    # branch), not the crossover ceiling (ADVICE r10 #3) — a 100-row x
+    # 4096-dim corpus is ~3 MB, not the 2 GB a cap-sized estimate would
+    # claim, and keeps its zero-shuffle broadcast plan.
     use_broadcast = flat and _vec_bytes_estimate(dim, n) <= LSH_BROADCAST_BYTES_CAP
     if not use_broadcast:
         # Shuffle-join path: both sides derive from ONE explicit hash
         # repartition so they canonicalize to the same Exchange (r13,
         # same pattern as lsh_candidate_pairs) — the signature pass
         # runs once and the (id, dvec, norm) payload crosses the wire
-        # once instead of once per side. The broadcast path below
-        # stays untouched: it has ZERO exchanges and a repartition
-        # would add one.
+        # once instead of once per side. The broadcast path has ZERO
+        # exchanges and a repartition would add one.
         b = b.repartition("bucket")
-    left = b.select(F.col("bucket"), F.col(id_col).alias("a"), F.col("dvec").alias("va"), F.col("norm").alias("na"))
-    right = b.select(F.col("bucket"), F.col(id_col).alias("b"), F.col("dvec").alias("vb"), F.col("norm").alias("nb"))
-    if use_broadcast:
-        # the flat branch's corpus is <= LSH_FLAT_MAX_N rows by the probe,
-        # so the bucket self-join broadcasts its right side: zero
-        # shuffles, one stage, instead of two exchanges over a tiny
-        # input. Gated on ESTIMATED BYTES, not row count (ADVICE r9
-        # #3): 65,536 rows is ~35 MB at 64 dims but hundreds of MB at
-        # 1024-1536 dims, where shipping the side to every executor
-        # risks memory pressure — wide embeddings take the shuffle
-        # join below the same correctness plan.
-        right = F.broadcast(right)
+    return bucket_pairs(b, ["bucket"], partial(dot_expr_fixed, dim=dim), min_cosine, id_col, use_broadcast)
+
+
+def bucket_pairs(
+    df: DataFrame,
+    keys: list[str],
+    dot,
+    min_cosine: float,
+    id_col: str,
+    broadcast: bool = False,
+) -> DataFrame:
+    """(a, b, cos_sim) for every pair a < b of ``df``'s (id_col, dvec,
+    norm) rows that share all ``keys`` and score round(cos, 6) >=
+    ``min_cosine`` — the keyed self-join that confines the quadratic
+    cost to each bucket (never a cross product). ``broadcast`` ships
+    the right side to every task instead of joining by shuffle."""
+    left = df.select(*keys, F.col(id_col).alias("a"), F.col("dvec").alias("va"), F.col("norm").alias("na"))
+    right = df.select(*keys, F.col(id_col).alias("b"), F.col("dvec").alias("vb"), F.col("norm").alias("nb"))
     return (
-        left.join(right, "bucket")
+        left.join(F.broadcast(right) if broadcast else right, keys)
         .where(F.col("a") < F.col("b"))
         .withColumn("cos_sim", F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6))
         .where(F.col("cos_sim") >= min_cosine)
@@ -577,25 +602,7 @@ def lsh_banded_pairs(
     # join side; the join is then co-partitioned on (band, bucket)
     # and adds no exchange of its own.
     ).repartition("band", "bucket")
-    left = e.select(
-        "band", "bucket", F.col(id_col).alias("a"),
-        F.col("dvec").alias("va"), F.col("norm").alias("na"),
-    )
-    right = e.select(
-        "band", "bucket", F.col(id_col).alias("b"),
-        F.col("dvec").alias("vb"), F.col("norm").alias("nb"),
-    )
-    return (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .withColumn(
-            "cos_sim",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .where(F.col("cos_sim") >= min_cosine)
-        .select("a", "b", "cos_sim")
-        .distinct()
-    )
+    return bucket_pairs(e, ["band", "bucket"], dot, min_cosine, id_col).distinct()
 
 
 # --- int8 scalar quantization ------------------------------------------
@@ -667,43 +674,13 @@ def _with_cmat(df: DataFrame) -> DataFrame:
     return df.crossJoin(F.broadcast(centroid_matrix_df(df.sparkSession)))
 
 
-def _dists_expr(dvec: Column, cmat: Column) -> Column:
-    """L2 distances to every centroid in ``cmat``, as one array (same
-    sequential fold as dot products, so values are engine-portable)."""
-    return F.transform(
-        cmat,
-        lambda cv: F.aggregate(
-            F.zip_with(dvec, cv, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def ivf_cell_expr(dvec: Column, cmat: Column) -> Column:
-    """Nearest-centroid cell id (argmin L2 distance; first-min wins —
-    the IVF coarse quantizer)."""
-    dists = _dists_expr(dvec, cmat)
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
 def ivf_cells_expr(dvec: Column, cmat: Column, nprobe: int = 2) -> Column:
     """The ``nprobe`` nearest cells, nearest first (distance ties break
-    toward the lower cell id, matching ``ivf_cell_expr``'s first-min)."""
+    toward the lower cell id, matching ``nearest_expr``)."""
     dists = _dists_expr(dvec, cmat)
     pairs = F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
     return F.transform(
         F.slice(F.array_sort(pairs), 1, nprobe), lambda s: s["i"].cast("int")
-    )
-
-
-def ivf_assignments(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    d = _with_cmat(with_norm(df, "embedding"))
-    return d.select(
-        F.col(id_col),
-        ivf_cell_expr(F.col("dvec"), F.col("cmat")).alias("cell"),
-        "dvec",
-        "norm",
     )
 
 
@@ -714,34 +691,10 @@ def ivf_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """ANN top-k: candidates restricted to the query's own IVF cell
-    (nprobe=1). The scale path: the candidate join is keyed on cell,
-    shuffling only same-cell pairs instead of the full cross product."""
-    from pyspark.sql import Window
-
-    dot = probed_dot(vectors)
-    cand = ivf_assignments(vectors, id_col).select(
-        F.col(id_col).alias("neighbor_id"), "cell", "dvec", "norm"
-    )
-    q = ivf_assignments(queries, id_col).select(
-        F.col(id_col).alias("query_id"),
-        "cell",
-        F.col("dvec").alias("qvec"),
-        F.col("norm").alias("qnorm"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(dot(F.col("dvec"), F.col("qvec")) / (F.col("norm") * F.col("qnorm")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "cell", "neighbor_id", "cos_sim", F.col("rn").cast("long").alias("rn"))
-    )
+    (``ivf_topk_nprobe`` at nprobe=1), reported with that cell. The
+    scale path: the candidate join is keyed on cell, shuffling only
+    same-cell pairs instead of the full cross product."""
+    return _ivf_ranked(vectors, queries, k, 1, id_col)
 
 
 def ivf_topk_nprobe(
@@ -757,14 +710,22 @@ def ivf_topk_nprobe(
     volume grows ~nprobe-fold while the join stays keyed on cell.
     Candidate pairs stay unique because each candidate lives in exactly
     one cell and a query's probed cells are distinct."""
-    from pyspark.sql import Window
+    return _ivf_ranked(vectors, queries, k, nprobe, id_col).drop("cell")
 
+
+def _ivf_ranked(
+    vectors: DataFrame, queries: DataFrame, k: int, nprobe: int, id_col: str
+) -> DataFrame:
+    """(query_id, cell, neighbor_id, cos_sim, rn): each query's top-k
+    over the candidates homed in its ``nprobe`` nearest cells."""
     dot = probed_dot(vectors)
-    cand = ivf_assignments(vectors, id_col).select(
-        F.col(id_col).alias("neighbor_id"), "cell", "dvec", "norm"
+    cand = _with_cmat(with_norm(vectors, "embedding")).select(
+        F.col(id_col).alias("neighbor_id"),
+        nearest_expr(F.col("dvec"), F.col("cmat")).alias("cell"),
+        "dvec",
+        "norm",
     )
-    d = _with_cmat(with_norm(queries, "embedding"))
-    q = d.select(
+    q = _with_cmat(with_norm(queries, "embedding")).select(
         F.col(id_col).alias("query_id"),
         F.explode(ivf_cells_expr(F.col("dvec"), F.col("cmat"), nprobe)).alias("cell"),
         F.col("dvec").alias("qvec"),
@@ -778,9 +739,4 @@ def ivf_topk_nprobe(
             F.round(dot(F.col("dvec"), F.col("qvec")) / (F.col("norm") * F.col("qnorm")), 6),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rn").cast("long").alias("rn"))
-    )
+    return _top_k(scored, k, "query_id", "cell", "neighbor_id", "cos_sim")

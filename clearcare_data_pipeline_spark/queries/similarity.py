@@ -18,6 +18,7 @@ from clearcare_data_pipeline_spark.operators.similarity import (
     cosine_topk,
     lsh_buckets,
     lsh_near_dup_pairs,
+    sq_dist_expr,
     with_norm,
 )
 from clearcare_data_pipeline_spark.sources.tables import load_table
@@ -728,13 +729,7 @@ def q_emb_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = cents.select(F.col("label").alias("label_a"), F.col("cvec").alias("va"))
     b = cents.select(F.col("label").alias("label_b"), F.col("cvec").alias("vb"))
     pairs = a.join(F.broadcast(b), F.col("label_a") < F.col("label_b"))
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with("va", "vb", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    dist = F.sqrt(sq_dist_expr(F.col("va"), F.col("vb")))
     return pairs.select("label_a", "label_b", F.round(dist, 6).alias("centroid_dist"))
 
 

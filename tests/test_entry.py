@@ -47,7 +47,13 @@ def test_queries_run_and_match_oracle_sample(spark):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     q = entrymod.queries()
     o = entrymod.oracle_sql()
-    for name in ["q1_pricing_summary", "charges_rule_counts", "charges_score", "dedup_order_lines"]:
+    for name in [
+        "q1_pricing_summary", "charges_rule_counts", "charges_score", "dedup_order_lines",
+        # the vector operators: every emb_* query whose operator shares
+        # a kernel in operators/similarity.py or operators/clustering.py
+        "emb_semantic_dedup", "emb_kmeans_clusters", "emb_cosine_topk", "emb_ivf_topk",
+        "emb_ivf_topk_nprobe2", "emb_near_dup_pairs", "emb_label_separation",
+    ]:
         sdf = q[name](spark, sf).toPandas()
         ddf = con.execute(o[name]).df()
         assert compare(sdf, ddf) == [], name

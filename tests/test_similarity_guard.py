@@ -85,14 +85,19 @@ def test_near_dup_pairs_finds_planted_copies(spark):
 def test_near_dup_crossover_ladder_branch_still_finds_copies(spark, monkeypatch):
     """Forcing the ladder branch (LSH_FLAT_MAX_N=0) on a small corpus
     must still surface every planted identical pair — identical
-    vectors share the full signature, hence one leaf, at any depth."""
+    vectors share the full signature, hence one leaf, at any depth.
+    The ladder releases its signature and histogram caches: at most
+    the eager checkpoint of the bucketed corpus may remain."""
     rows = [(i, [float(i % 9) - 4.0, float((i * 7) % 13), 2.0]) for i in range(60)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     copies = df.withColumn("vec_id", df.vec_id + 5000)
     monkeypatch.setattr(similarity, "LSH_FLAT_MAX_N", 0)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
     out = similarity.lsh_near_dup_pairs(
         df.unionByName(copies), min_cosine=0.999999)
     pairs = {(r.a, r.b) for r in out.collect()}
+    after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert after - before <= 1
     for i in range(60):
         assert (i, i + 5000) in pairs
 

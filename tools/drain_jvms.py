@@ -8,9 +8,8 @@ and every timing in BENCH_r07.json read ~1.4x slow. This tool makes
   python tools/drain_jvms.py --wait 600 --kill   # round_close.sh
   python tools/drain_jvms.py                     # just report
 
-Scan logic matches bench.py's ``_foreign_jvms``: any /proc process
-whose cmdline mentions SparkSubmit / org.apache.spark. This process
-never holds a JVM itself, so everything found is foreign.
+``spark_jvms`` is also the scan bench.py runs before it starts its
+own JVM.
 """
 
 from __future__ import annotations
@@ -23,6 +22,17 @@ import time
 
 
 def spark_jvms() -> list[int]:
+    """PIDs of every /proc process whose cmdline mentions SparkSubmit /
+    org.apache.spark. Called before the caller launches a JVM of its
+    own, so anything found is foreign.
+
+    A leftover JVM from an earlier run (killed mid-query, or a
+    still-draining background bench) silently competes for every core
+    and contaminates timings by 2-5x — measured at sf1: the same
+    scan+agg query read 1.2 s on a quiet machine and 5.8-6.1 s with one
+    orphan churning an interpreted HOF stage; GC/heap were exonerated
+    by ``-Xlog:gc*`` (total pause time <1 s in a 25 s window).
+    """
     pids = []
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
