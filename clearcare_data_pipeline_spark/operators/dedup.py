@@ -10,15 +10,14 @@ Designed for the 100 TB regime:
                    bucket keys; only docs sharing a band key are ever
                    paired, so the candidate join is keyed and local,
                    never an all-pairs product.
-* SimHash        — 16-bit per-doc signature; equal signatures bucket
+* SimHash        — 64-bit per-doc signature; pigeonhole blocks bucket
                    near-identical token sets.
-* n-gram Jaccard — exact verify step over candidate pairs (or, at
-                   small scale, over the shingle-share join).
+* n-gram Jaccard — exact verify step over LSH candidate pairs.
 
-Hash function note: min-hashes use md5(seed || '|' || shingle) so the
-same signatures are computable in any engine (the correctness oracle
-reproduces them in SQL); md5 here is a deterministic mixer, not a
-security primitive.
+Hash function note: min-hashes are affine permutations of one
+md5(shingle) per shingle, so the same signatures are computable in any
+engine (the correctness oracle reproduces them in SQL); md5 here is a
+deterministic mixer, not a security primitive.
 """
 
 from __future__ import annotations
@@ -28,16 +27,33 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clearcare_data_pipeline_spark.operators.sampling import md5_hex_digit
 from clearcare_data_pipeline_spark.operators.textstats import fingerprint_expr, words_expr
+
+# Document MinHash shape, read at call time: 5-word shingles, 12
+# permutations, 3 rows per band (4 bands). queries/textops.py builds its
+# DuckDB oracles from these same constants.
+SHINGLE_N = 5
+NUM_HASHES = 12
+ROWS_PER_BAND = 3
+
+# SimHash shape, read at call time: 64-bit signatures, 4 pigeonhole
+# blocks of 16 bits (see simhash_near_dup_pairs for the sizing).
+SIMHASH_BITS = 64
+SIMHASH_BLOCKS = 4
+
+
+def _keep_min_id(fingerprinted: DataFrame) -> DataFrame:
+    """One row per ``_fp`` fingerprint: the min ``doc_id`` wins
+    (deterministic, unlike dropDuplicates' arbitrary pick), joined back
+    to recover the row."""
+    keep = fingerprinted.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
+    return fingerprinted.join(keep, ["_fp", "doc_id"], "inner").drop("_fp")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep one row per distinct normalized content (min id wins —
-    deterministic, unlike dropDuplicates' arbitrary pick)."""
-    fp = fingerprint_expr(F.col(text_col))
-    w = df.withColumn("_fp", fp)
-    keep = w.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
-    return w.join(keep, ["_fp", "doc_id"], "inner").drop("_fp")
+    """Keep one row per distinct normalized content (min id wins)."""
+    return _keep_min_id(df.withColumn("_fp", fingerprint_expr(F.col(text_col))))
 
 
 def incremental_exact_dedup(
@@ -55,17 +71,11 @@ def incremental_exact_dedup(
     fresh = w.join(
         seen_fingerprints.select(F.col("fingerprint").alias("_fp")), "_fp", "left_anti"
     )
-    keep = fresh.groupBy("_fp").agg(F.min("doc_id").alias("doc_id"))
-    return fresh.join(keep, ["_fp", "doc_id"], "inner").drop("_fp")
+    return _keep_min_id(fresh)
 
 
 def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    seen_band_keys: DataFrame,
-    num_hashes: int = 12,
-    rows_per_band: int = 3,
-    shingle_n: int = 5,
-    band_keys: DataFrame | None = None,
+    new_docs: DataFrame, seen_band_keys: DataFrame, band_keys: DataFrame
 ) -> DataFrame:
     """Continuous-ingestion NEAR-dup (r13 — closes the incremental gap
     for MinHash that incremental_exact_dedup closes for exact dedup):
@@ -84,22 +94,18 @@ def incremental_minhash_dedup(
     short docs are still caught; only empty/NULL texts emit nothing
     and always survive.
 
+    ``band_keys`` is the (doc_id, band, band_key) frame of ``new_docs``,
+    ``lsh_band_keys(minhash_signatures(doc_shingles(new_docs,
+    n=SHINGLE_N)))``: the caller computes it once, so a history store
+    derived from the same banding shares one banding subtree with this
+    operator.
+
     Scale shape: signature stage is the one-pass k-min groupBy of
     minhash_signatures; the history check is a keyed left-semi join on
     (band, band_key) — at 100 TB the store is bucketed by band_key and
     the join co-locates, touching no document payload; the in-batch
     rule is one keyed min-aggregate + equi-join. No pair enumeration
-    anywhere.
-
-    ``band_keys`` (optional, r13): the (doc_id, band, band_key) frame
-    for ``new_docs`` when the caller has already computed it with the
-    SAME num_hashes/rows_per_band/shingle_n — e.g. because the history
-    store is derived from the same banding. Passing it lets the whole
-    plan hang off one shared banding subtree instead of building a
-    second identical one; it must be exactly
-    ``lsh_band_keys(minhash_signatures(doc_shingles(new_docs,
-    shingle_n), num_hashes), rows_per_band)`` or results are
-    undefined (pinned equal in tests/test_minhash.py)."""
+    anywhere."""
     # One explicit hash repartition feeds all three band consumers
     # below (history semi-join, per-bucket min aggregate, blocked
     # join): the consumers' children canonicalize to the same Exchange
@@ -108,9 +114,9 @@ def incremental_minhash_dedup(
     # per consumer (3x; measured 16 scans / 28 exchanges in the r13
     # before-plan, plans/r13/doc_incremental_minhash_before.txt). The
     # aggregate and both joins are keyed on (band, band_key), so no
-    # consumer adds an exchange of its own on this side. (A caller-
-    # supplied band_keys frame that was repartitioned-then-
-    # localCheckpointed — textops' shape — pays the repartition again
+    # consumer adds an exchange of its own on this side. (A band_keys
+    # frame that was repartitioned-then-localCheckpointed — textops'
+    # shape — pays the repartition again
     # per consumer: a checkpoint's LogicalRDD does not advertise its
     # partitioning, so the nodes cannot collapse; ADVICE r13 #4. The
     # re-shuffles move only narrow (doc_id, band, band_key) rows. An
@@ -120,11 +126,6 @@ def incremental_minhash_dedup(
     # semi-join lands below the repartition on one), so executed
     # ReusedExchange stayed 0 and the A/B was a wash: 2.59 s base /
     # 2.53 s filtered medians at sf0.1.)
-    if band_keys is None:
-        band_keys = lsh_band_keys(
-            minhash_signatures(doc_shingles(new_docs, n=shingle_n), num_hashes=num_hashes),
-            rows_per_band=rows_per_band,
-        )
     bands = band_keys.repartition("band", "band_key")
     hist_hits = (
         bands.join(
@@ -146,7 +147,7 @@ def incremental_minhash_dedup(
     return new_docs.join(dropped, "doc_id", "left_anti")
 
 
-def shingles_expr(tokens: Column, n: int = 5) -> Column:
+def shingles_expr(tokens: Column, n: int) -> Column:
     """Distinct word n-gram shingles from a pre-staged TOKEN ARRAY.
 
     Takes the token array, not the raw text: ``tokens`` is referenced
@@ -162,11 +163,19 @@ def shingles_expr(tokens: Column, n: int = 5) -> Column:
     return F.array_distinct(F.filter(grams, lambda g: F.length(g) > 0))
 
 
-def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 5) -> DataFrame:
-    """(doc_id, shingle) exploded pairs, distinct per doc. Tokens are
-    staged in their own projection so the per-index shingle lambda
+def doc_shingles(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", *, n: int
+) -> DataFrame:
+    """(doc_id, shingle, sh) rows, shingles distinct per doc. Tokens
+    are staged in their own projection so the per-index shingle lambda
     reads a bound column, not a re-evaluated split (see
-    ``shingles_expr``)."""
+    ``shingles_expr``).
+
+    ``sh`` = xxhash64(shingle) is the shingle join key: 8 bytes instead
+    of a 30-50 byte n-gram string, cutting shuffle volume ~5x. Join
+    counts are identical to string joins absent a 64-bit collision
+    within a doc pair (~2^-64 per pair — ignorable even at 100 TB).
+    Consumers that never join on shingles leave it to column pruning."""
     staged = df.select(
         F.col(id_col).alias("doc_id"),
         words_expr(F.col(text_col)).alias("_toks"),
@@ -174,7 +183,7 @@ def doc_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     return staged.select(
         "doc_id",
         F.explode(shingles_expr(F.col("_toks"), n)).alias("shingle"),
-    )
+    ).withColumn("sh", F.xxhash64("shingle"))
 
 
 # Modulus for the affine minhash permutations: the Mersenne prime
@@ -213,14 +222,34 @@ def minhash_consts(num_hashes: int) -> list[tuple[int, int, int]]:
     return out
 
 
-def minhash_signatures(
-    shingled: DataFrame, num_hashes: int = 12
-) -> DataFrame:
+def md5_chunks(h: Column) -> tuple[Column, Column]:
+    """The first two 28-bit chunks (hex digits 1-7 and 8-14) of the md5
+    hex ``h`` as longs: the (b1, b2) inputs of ``minhash_perm``. The
+    oracles replay them as ``CAST('0x' || substr(h, 1, 7) AS BIGINT)``."""
+    b1 = F.conv(F.substring(h, 1, 7), 16, 10).cast("long")
+    b2 = F.conv(F.substring(h, 8, 7), 16, 10).cast("long")
+    return b1, b2
+
+
+def minhash_perm(b1: Column, b2: Column, a1: int, a2: int, c: int) -> Column:
+    """One affine minhash permutation ``(a1*b1 + a2*b2 + c) mod
+    MINHASH_MOD`` of a digest's (b1, b2) chunks, with one seed's
+    ``minhash_consts`` coefficients."""
+    return (F.lit(a1) * b1 + F.lit(a2) * b2 + F.lit(c)) % F.lit(MINHASH_MOD)
+
+
+def band_key(*minhashes: Column) -> Column:
+    """LSH band key: md5 of the band's seed-ordered minhash strings
+    joined with '|' (string columns, or one array of them)."""
+    return F.md5(F.concat_ws("|", *minhashes).cast("binary"))
+
+
+def minhash_signatures(shingled: DataFrame) -> DataFrame:
     """(doc_id, seed, minhash) -> one row per doc per seed.
 
     Minhash_s(doc) = min over shingles of an affine permutation
-    ``(a1_s*b1 + a2_s*b2 + c_s) mod (2^61 - 1)`` of ONE md5 per
-    shingle (b1/b2 = the md5's first two 28-bit hex chunks). The
+    ``minhash_perm`` of ONE md5 per shingle (b1/b2 = its
+    ``md5_chunks``), NUM_HASHES permutations. The
     classic universal-hashing formulation: one strong base hash, k
     cheap independent permutations — versus salting the md5 k times,
     this cuts per-shingle digest work k-fold, which IS the dominant
@@ -238,18 +267,14 @@ def minhash_signatures(
     bander consumes is recovered by a posexplode of k columns per doc,
     which is negligible post-aggregation.
     """
-    h = F.md5(F.col("shingle"))
-    b1 = F.conv(F.substring(h, 1, 7), 16, 10).cast("long")
-    b2 = F.conv(F.substring(h, 8, 7), 16, 10).cast("long")
+    num_hashes = NUM_HASHES
+    b1, b2 = md5_chunks(F.md5(F.col("shingle")))
     hashed = shingled.select(
         "doc_id", b1.alias("_b1"), b2.alias("_b2")
     )
     aggs = [
-        F.min(
-            (F.lit(a1) * F.col("_b1") + F.lit(a2) * F.col("_b2") + F.lit(c))
-            % F.lit(MINHASH_MOD)
-        ).alias(f"mh_{s}")
-        for s, (a1, a2, c) in enumerate(minhash_consts(num_hashes))
+        F.min(minhash_perm(F.col("_b1"), F.col("_b2"), *co)).alias(f"mh_{s}")
+        for s, co in enumerate(minhash_consts(num_hashes))
     ]
     wide = hashed.groupBy("doc_id").agg(*aggs)
     return wide.select(
@@ -260,20 +285,16 @@ def minhash_signatures(
     )
 
 
-def lsh_band_keys(signatures: DataFrame, rows_per_band: int = 3) -> DataFrame:
-    """(doc_id, band, band_key): band_key = md5 of the band's
-    seed-ordered minhashes. Docs agreeing on ANY band key are
-    candidate near-duplicates."""
-    banded = signatures.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
+def lsh_band_keys(signatures: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key): ROWS_PER_BAND consecutive seeds per
+    band. Docs agreeing on ANY band key are candidate near-duplicates."""
+    banded = signatures.withColumn("band", (F.col("seed") / ROWS_PER_BAND).cast("int"))
     return banded.groupBy("doc_id", "band").agg(
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-            ).cast("binary")
+        band_key(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
+                lambda s: s["minhash"].cast("string"),
+            )
         ).alias("band_key")
     )
 
@@ -303,60 +324,30 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
 
 
 def jaccard_pairs(
-    shingled: DataFrame,
-    min_jaccard: float = 0.8,
-    candidates: DataFrame | None = None,
-    hash_col: str | None = None,
+    shingled: DataFrame, candidates: DataFrame, min_jaccard: float = 0.8
 ) -> DataFrame:
-    """Exact n-gram Jaccard |A∩B| / |A∪B| over doc pairs.
+    """Exact n-gram Jaccard |A∩B| / |A∪B| over candidate doc pairs.
 
-    With ``candidates`` (the scale path): intersections are computed by
-    joining each candidate (a, b) pair to the shingle postings of *a*
-    and then of *b* — two keyed joins whose volume is bounded by the
-    LSH bucket sizes. The raw shingle-share self-join never runs, so a
-    high-document-frequency shingle (a hub key) cannot make the plan
-    quadratic in its posting list.
-
-    Without ``candidates`` (exact small-scale path): the unrestricted
-    shingle-share self-join — exact but quadratic in per-shingle
-    posting lists; do not use at corpus scale.
-
-    Joins run on xxhash64(shingle) — 8 bytes instead of a 30-50 byte
-    n-gram string, cutting shuffle volume ~5x. Intersection COUNTS are
-    identical to string joins absent a 64-bit collision within a doc
-    pair (~2^-64 per pair — ignorable even at 100 TB).
-
-    ``hash_col`` (r14): name of a PRECOMPUTED xxhash64(shingle) column
-    already on ``shingled`` — it must be exactly
-    ``F.xxhash64("shingle")`` or results are undefined. The three
-    consumers below (sizes aggregate + both posting-list join legs)
-    each re-derive the hash otherwise; a caller that materializes the
-    shingle frame anyway (q_doc_ngram_jaccard's localCheckpoint) can
-    fold the hash into that materialization so it is computed once
-    per row instead of once per consumer, at +8 bytes/row of
-    checkpoint storage and zero extra passes.
+    ``shingled`` is ``doc_shingles`` output; the joins run on its ``sh``
+    key. Intersections are computed by joining each candidate (a, b)
+    pair to the shingle postings of *a* and then of *b* — two keyed
+    joins whose volume is bounded by the LSH bucket sizes. The raw
+    shingle-share self-join never runs, so a high-document-frequency
+    shingle (a hub key) cannot make the plan quadratic in its posting
+    list.
     """
-    sh_expr = F.col(hash_col) if hash_col else F.xxhash64("shingle")
-    hashed = shingled.select("doc_id", sh_expr.alias("sh"))
+    hashed = shingled.select("doc_id", "sh")
     sizes = hashed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = hashed.select(F.col("doc_id").alias("a"), "sh")
     b = hashed.select(F.col("doc_id").alias("b"), "sh")
-    if candidates is not None:
-        inter = (
-            candidates.select("a", "b")
-            .distinct()
-            .join(a, "a")
-            .join(b, ["b", "sh"])
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    else:
-        inter = (
-            a.join(b, "sh")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+    inter = (
+        candidates.select("a", "b")
+        .distinct()
+        .join(a, "a")
+        .join(b, ["b", "sh"])
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
     return (
         inter.join(sizes.withColumnsRenamed({"doc_id": "a", "sz": "sz_a"}), "a")
         .join(sizes.withColumnsRenamed({"doc_id": "b", "sz": "sz_b"}), "b")
@@ -368,30 +359,23 @@ def jaccard_pairs(
 
 # --- SimHash -----------------------------------------------------------
 
-_HEX = "0123456789abcdef"
-
-
 _LONG_MIN = -9223372036854775808
 
 
-def simhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64) -> DataFrame:
-    """SimHash over distinct tokens, 64-bit by default: bit_i = majority
-    vote across tokens of bit (i % 4) of md5-hex digit (i // 4) — four
-    bits per hex digit, so md5's 32 digits supply up to 128 bits.
-    Engine-portable (strpos + floor-division arithmetic, no native bit
-    ops on binary). The signature lands in a signed long: bit 63
-    carries two's-complement weight -2^63, so XOR/bit_count hamming
-    math downstream is unaffected by sign."""
-    if not 1 <= bits <= 64:
-        raise ValueError("bits must be in 1..64")
+def simhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """SimHash over distinct tokens, SIMHASH_BITS (at most 64) wide:
+    bit_i = majority vote across tokens of bit (i % 4) of md5-hex digit
+    (i // 4) — four bits per hex digit, so md5's 32 digits supply up to
+    128 bits. Engine-portable (strpos + floor-division arithmetic, no
+    native bit ops on binary). The signature lands in a signed long:
+    bit 63 carries two's-complement weight -2^63, so XOR/bit_count
+    hamming math downstream is unaffected by sign."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(words_expr(F.col(text_col)))).alias("tok"),
     ).withColumn("th", F.md5(F.col("tok").cast("binary")))
-    bit = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
-    digit = (
-        F.instr(F.lit(_HEX), F.substring(F.col("th"), (F.col("bit") / 4).cast("int") + 1, 1)) - 1
-    )
+    bit = F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1))).alias("bit")
+    digit = md5_hex_digit(F.col("th"), (F.col("bit") / 4).cast("int") + 1)
     bitval = F.floor(digit / F.pow(F.lit(2.0), F.col("bit") % 4)).cast("long") % 2
     votes = toks.select("doc_id", "th", bit).select(
         "doc_id", "bit", (bitval * 2 - 1).alias("vote")
@@ -405,28 +389,27 @@ def simhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def simhash_near_dup_pairs(
-    signatures: DataFrame, *, max_hamming: int = 1, bits: int = 64, num_blocks: int = 4
-) -> DataFrame:
+def simhash_near_dup_pairs(signatures: DataFrame, *, max_hamming: int = 1) -> DataFrame:
     """(a, b, hamming) near-dup pairs by SimHash block bucketing.
 
-    Pigeonhole LSH: a signature is split into ``num_blocks`` equal bit
-    blocks; any pair within hamming distance < num_blocks must agree
+    Pigeonhole LSH: a signature is split into SIMHASH_BLOCKS equal bit
+    blocks; any pair within hamming distance < SIMHASH_BLOCKS must agree
     exactly on at least one block, so candidate generation is a keyed
     self-join on (block_index, block_value) — never all-pairs — and the
     exact popcount(xor) verify runs only inside buckets.
 
-    Defaults are corpus-scale: 64-bit signatures / 4 blocks = 2^16
+    The shape is corpus-scale: 64-bit signatures / 4 blocks = 2^16
     bucket keys per block, so at 10^9 docs the expected bucket holds
     ~15k docs (vs the 2^8-key 16/2 parameterization, whose buckets
-    degenerate toward all-pairs). Size ``num_blocks`` so
-    docs / 2^(bits/num_blocks) keeps bucket populations bounded — more
-    blocks = more recall (hamming < num_blocks guaranteed caught) but
+    degenerate toward all-pairs). Size SIMHASH_BLOCKS so
+    docs / 2^(bits/blocks) keeps bucket populations bounded — more
+    blocks = more recall (hamming < blocks guaranteed caught) but
     bigger buckets. Block extraction uses an UNSIGNED shift + pmod so
     a negative 64-bit signature (bit 63 set) still yields the correct
     non-negative block values.
     """
-    block_bits = bits // num_blocks
+    num_blocks = SIMHASH_BLOCKS
+    block_bits = SIMHASH_BITS // num_blocks
     blocks = signatures.select(
         "doc_id",
         "simhash",
@@ -479,9 +462,8 @@ def cross_corpus_contamination(
     shingles with any train doc (the standard exact-overlap
     contamination check run before training on a new corpus).
 
-    Plan shape at 100 TB: shingle both corpora (explode), hash each
-    shingle to a 64-bit key (xxhash64 — joins move 8-byte keys, not
-    strings), CAP SHINGLE DOCUMENT FREQUENCY over the union corpus
+    Plan shape at 100 TB: shingle both corpora (explode; joins move
+    the 8-byte ``sh`` key, not strings), CAP SHINGLE DOCUMENT FREQUENCY over the union corpus
     before joining (a boilerplate shingle appearing in millions of
     docs would otherwise make the equi-join quadratic in its posting
     list — the same hub blowup jaccard_pairs guards against), then one
@@ -499,13 +481,11 @@ def cross_corpus_contamination(
     # as operators/spans.py _grams_by_key. The duplicated explode
     # below the legs shares its scan exchange via AQE's runtime stage
     # cache.
-    t_sh = (
-        doc_shingles(train, id_col, text_col, n)
-        .select(F.col("doc_id").alias("train_doc"), F.xxhash64("shingle").alias("sh"))
+    t_sh = doc_shingles(train, id_col, text_col, n=n).select(
+        F.col("doc_id").alias("train_doc"), "sh"
     )
-    e_sh = (
-        doc_shingles(eval_df, id_col, text_col, n)
-        .select(F.col("doc_id").alias("eval_doc"), F.xxhash64("shingle").alias("sh"))
+    e_sh = doc_shingles(eval_df, id_col, text_col, n=n).select(
+        F.col("doc_id").alias("eval_doc"), "sh"
     )
     df_counts = (
         t_sh.select(F.col("train_doc").alias("d"), "sh")

@@ -54,12 +54,12 @@ def pagerank(
         .distinct()
         .persist()
     )
+    iter_frames = []
     try:
         n = nodes.count()
         outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
         base = F.lit(1.0 - damping) / F.lit(float(n))
         pr = nodes.withColumn("pr", F.lit(1.0) / F.lit(float(n)))
-        iter_frames = []
         for _ in range(iters):
             contribs = (
                 edges.join(pr, edges[src] == pr["node"])
@@ -75,12 +75,12 @@ def pagerank(
             iter_frames.append(pr)
         # Narrow (node, pr) checkpoint lets every cache — edges, nodes,
         # and the per-iteration rank frames — release now rather than
-        # leak past return (ADVICE r5 discipline).
-        out = pr.localCheckpoint()
+        # leak past return, on success and on failure alike (ADVICE r5
+        # discipline).
+        return pr.localCheckpoint()
+    finally:
         for f in iter_frames:
             f.unpersist()
-        return out
-    finally:
         nodes.unpersist()
         if we_persisted_edges:
             edges.unpersist()

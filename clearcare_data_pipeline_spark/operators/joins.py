@@ -13,7 +13,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from clearcare_data_pipeline_spark.operators.dedup import MINHASH_MOD, minhash_consts
+from clearcare_data_pipeline_spark.operators.dedup import (
+    band_key,
+    md5_chunks,
+    minhash_consts,
+    minhash_perm,
+)
+
+# Fuzzy-join MinHash shape, read at call time: character 3-grams, 6
+# permutations, 2 rows per band (3 bands). The fuzzy_linkage_banded
+# oracle (queries/relational.py) replays this shape.
+FUZZY_NGRAM = 3
+FUZZY_NUM_HASHES = 6
+FUZZY_ROWS_PER_BAND = 2
 
 
 def asof_join(
@@ -127,7 +139,7 @@ def range_join(
     return left.join(right, cond, how)
 
 
-def _char_ngrams(col: Column, n: int = 3) -> Column:
+def _char_ngrams(col: Column, n: int) -> Column:
     """Character n-grams (1-based start positions, all exactly n chars);
     empty array for strings shorter than n. Mirrors the DuckDB twin
     ``list_transform(range(1, length(x) - (n-2)), i -> substring(x, i, n))``."""
@@ -137,56 +149,46 @@ def _char_ngrams(col: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def minhash_band_keys_expr(
-    text: Column, num_hashes: int = 6, rows_per_band: int = 2, ngram: int = 3
-) -> Column:
+def minhash_band_keys_expr(text: Column) -> Column:
     """LSH band keys for one string: array of (band, band_key) structs.
 
-    minhash_s = min over character n-grams of the affine permutation
-    ``(a1_s*b1 + a2_s*b2 + c_s) mod (2^31 - 1)`` of ONE md5 per gram
-    (b1/b2 = its two 28-bit hex chunks) — the same universal-hashing
-    family as the document MinHash (operators/dedup.py
-    minhash_signatures, shared ``minhash_consts``), inlined per row
-    because a join key needs no posting-list aggregation: one digest
-    per gram instead of ``num_hashes``, which is the dominant per-row
-    cost on high-cardinality text. band_key = md5 of the band's
-    seed-ordered minhashes. md5 hex, exact int64 arithmetic, and
-    numeric min are engine-portable, so a DuckDB oracle reproduces the
-    keys exactly."""
-    grams = _char_ngrams(text, ngram)
+    minhash_s = min over character FUZZY_NGRAM-grams of the affine
+    ``minhash_perm`` of ONE md5 per gram — the same universal-hashing
+    family and kernels as the document MinHash (operators/dedup.py
+    minhash_signatures), inlined per row because a join key needs no
+    posting-list aggregation: one digest per gram instead of one per
+    permutation, which is the dominant per-row cost on
+    high-cardinality text. band_key = md5 of the band's seed-ordered
+    minhashes. md5 hex, exact int64 arithmetic, and numeric min are
+    engine-portable, so a DuckDB oracle reproduces the keys exactly."""
+    rows_per_band = FUZZY_ROWS_PER_BAND
+    grams = _char_ngrams(text, FUZZY_NGRAM)
+
     # One digest per gram; b1/b2 extracted from the already-computed hex
     # (a nested transform so the md5 is never re-evaluated per seed).
     # NB: lambdas must stay arity-1 — pyspark's transform treats a
     # two-argument lambda as (element, index).
-    hashed = F.transform(
-        F.transform(grams, lambda g: F.md5(g)),
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 7), 16, 10).cast("long").alias("b1"),
-            F.conv(F.substring(h, 8, 7), 16, 10).cast("long").alias("b2"),
-        ),
-    )
+    def _chunks(h: Column) -> Column:
+        b1, b2 = md5_chunks(h)
+        return F.struct(b1.alias("b1"), b2.alias("b2"))
+
+    hashed = F.transform(F.transform(grams, lambda g: F.md5(g)), _chunks)
 
     def _mh(a1: int, a2: int, c: int) -> Column:
         return F.array_min(
-            F.transform(
-                hashed,
-                lambda s: (
-                    F.lit(a1) * s["b1"] + F.lit(a2) * s["b2"] + F.lit(c)
-                )
-                % F.lit(MINHASH_MOD),
-            )
+            F.transform(hashed, lambda s: minhash_perm(s["b1"], s["b2"], a1, a2, c))
         ).cast("string")
 
-    mins = [_mh(*co) for co in minhash_consts(num_hashes)]
-    bands = []
-    for b in range(num_hashes // rows_per_band):
-        key = F.md5(
-            F.concat_ws(
-                "|", *mins[b * rows_per_band : (b + 1) * rows_per_band]
-            ).cast("binary")
-        )
-        bands.append(F.struct(F.lit(b).alias("band"), key.alias("band_key")))
-    return F.array(*bands)
+    mins = [_mh(*co) for co in minhash_consts(FUZZY_NUM_HASHES)]
+    return F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                band_key(*mins[b * rows_per_band : (b + 1) * rows_per_band]).alias("band_key"),
+            )
+            for b in range(len(mins) // rows_per_band)
+        ]
+    )
 
 
 def banded_fuzzy_top1(
@@ -195,9 +197,6 @@ def banded_fuzzy_top1(
     left_id: str,
     left_text: str,
     right_text: str,
-    num_hashes: int = 6,
-    rows_per_band: int = 2,
-    ngram: int = 3,
 ) -> DataFrame:
     """Fuzzy top-1 left join at scale: J3's semantics (best match per
     left row by edit distance, deterministic ties) with candidates from
@@ -210,7 +209,7 @@ def banded_fuzzy_top1(
     either input; hot band keys (many rows sharing a signature) bound
     the blowup exactly like LSH dedup buckets. Left rows whose true
     best match shares no band surface as NULL (a recall miss, tunable
-    via num_hashes/rows_per_band) rather than silently wrong — and the
+    via FUZZY_NUM_HASHES/FUZZY_ROWS_PER_BAND) rather than silently wrong — and the
     oracle twin replays the identical banding, so the output is exact
     for the gate.
 
@@ -229,11 +228,11 @@ def banded_fuzzy_top1(
     ltexts = left.select(F.col(left_text).alias("_ltext")).distinct()
     lb = ltexts.select(
         "_ltext",
-        F.explode(minhash_band_keys_expr(F.col("_ltext"), num_hashes, rows_per_band, ngram)).alias("_b"),
+        F.explode(minhash_band_keys_expr(F.col("_ltext"))).alias("_b"),
     ).select("_ltext", "_b.band", "_b.band_key")
     rb = right.select(
         F.col(right_text).alias("_rtext"),
-        F.explode(minhash_band_keys_expr(F.col(right_text), num_hashes, rows_per_band, ngram)).alias("_b"),
+        F.explode(minhash_band_keys_expr(F.col(right_text))).alias("_b"),
     ).select("_rtext", "_b.band", "_b.band_key")
     cands = (
         lb.join(rb, ["band", "band_key"])

@@ -20,6 +20,13 @@ from pyspark.sql import functions as F
 _HEX = "0123456789abcdef"
 
 
+def md5_hex_digit(h: Column, pos: Column | int) -> Column:
+    """Value 0..15 of the md5 hex digit at 1-based ``pos`` of ``h``, by
+    position in the digit alphabet — the oracles replay it as
+    ``strpos(_HEX, substr(h, pos, 1)) - 1``."""
+    return F.instr(F.lit(_HEX), F.substring(h, pos, 1)) - 1
+
+
 def hash_bucket_expr(id_col: Column, num_buckets: int = 100) -> Column:
     """Deterministic bucket in [0, num_buckets) from the first 4 md5
     hex digits of the id — engine-portable (no engine-specific hash
@@ -27,7 +34,7 @@ def hash_bucket_expr(id_col: Column, num_buckets: int = 100) -> Column:
     h = F.md5(id_col.cast("string").cast("binary"))
     val = F.lit(0)
     for i in range(1, 5):
-        val = val * 16 + (F.instr(F.lit(_HEX), F.substring(h, i, 1)) - 1)
+        val = val * 16 + md5_hex_digit(h, i)
     return val % num_buckets
 
 

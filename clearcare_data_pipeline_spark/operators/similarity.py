@@ -177,16 +177,26 @@ def _dists_expr(dvec: Column, cmat: Column) -> Column:
     return F.transform(cmat, lambda cv: sq_dist_expr(dvec, cv))
 
 
-def nearest_expr(dvec: Column, cmat: Column) -> Column:
-    """Index of the row of ``cmat`` nearest to ``dvec``: array_min over
-    (dist, index) structs, so exact ties break on the lowest index.
-    ``cmat`` is a plan literal in ``kmeans_fit`` (a few centroids) and
-    a broadcast table cell in the IVF coarse quantizer."""
+def _defined_dists(dvec: Column, cmat: Column) -> Column:
+    """(dist, cluster) structs for the rows of ``cmat`` whose distance to
+    ``dvec`` is defined. A NULL distance (a NULL vector or element) is
+    dropped rather than ranked: Spark orders a struct with a NULL first
+    field before every other, while the oracles' ``list_min`` skips
+    NULLs."""
     pairs = F.transform(
         _dists_expr(dvec, cmat),
         lambda d, i: F.struct(d.alias("dist"), i.alias("cluster")),
     )
-    return F.array_min(pairs).getField("cluster")
+    return F.filter(pairs, lambda p: p["dist"].isNotNull())
+
+
+def nearest_expr(dvec: Column, cmat: Column) -> Column:
+    """Index of the row of ``cmat`` nearest to ``dvec``: array_min over
+    (dist, index) structs, so exact ties break on the lowest index;
+    NULL when no distance is defined. ``cmat`` is a plan literal in
+    ``kmeans_fit`` (a few centroids) and a broadcast table cell in the
+    IVF coarse quantizer."""
+    return F.array_min(_defined_dists(dvec, cmat)).getField("cluster")
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -676,12 +686,13 @@ def _with_cmat(df: DataFrame) -> DataFrame:
 
 def ivf_cells_expr(dvec: Column, cmat: Column, nprobe: int = 2) -> Column:
     """The ``nprobe`` nearest cells, nearest first (distance ties break
-    toward the lower cell id, matching ``nearest_expr``)."""
-    dists = _dists_expr(dvec, cmat)
-    pairs = F.transform(dists, lambda d, i: F.struct(d.alias("d"), i.alias("i")))
-    return F.transform(
-        F.slice(F.array_sort(pairs), 1, nprobe), lambda s: s["i"].cast("int")
+    toward the lower cell id, matching ``nearest_expr``); NULL when no
+    distance is defined."""
+    pairs = _defined_dists(dvec, cmat)
+    cells = F.transform(
+        F.slice(F.array_sort(pairs), 1, nprobe), lambda s: s["cluster"].cast("int")
     )
+    return F.when(F.size(pairs) > 0, cells)
 
 
 def ivf_topk(

@@ -19,6 +19,9 @@ from clearcare_data_pipeline_spark.operators.dedup import (
     MINHASH_MOD,
     minhash_consts,
     minhash_signatures,
+    NUM_HASHES,
+    ROWS_PER_BAND,
+    SHINGLE_N,
     simhash_signatures,
 )
 from clearcare_data_pipeline_spark.operators.textstats import (
@@ -32,10 +35,6 @@ from clearcare_data_pipeline_spark.queries._textsql import (
     WORDS_SQL,
 )
 from clearcare_data_pipeline_spark.sources.tables import load_table
-
-_NUM_HASHES = 12
-_ROWS_PER_BAND = 3
-_SHINGLE_N = 5
 
 
 # --- deterministic corpora (planted duplicates), both engines ----------
@@ -89,8 +88,8 @@ _SHINGLES_SQL = f"""
 shingled AS (
   SELECT DISTINCT doc_id, shingle FROM (
     SELECT doc_id,
-      unnest(list_transform(range(0, greatest(len(w) - {_SHINGLE_N}, 0) + 1),
-             i -> array_to_string(w[i + 1 : i + {_SHINGLE_N}], ' '))) AS shingle
+      unnest(list_transform(range(0, greatest(len(w) - {SHINGLE_N}, 0) + 1),
+             i -> array_to_string(w[i + 1 : i + {SHINGLE_N}], ' '))) AS shingle
     FROM (SELECT doc_id, {_WORDS} AS w FROM corpus)
   ) WHERE length(shingle) > 0
 )
@@ -98,9 +97,9 @@ shingled AS (
 
 # Replays operators/dedup.py minhash_signatures exactly: one md5 per
 # shingle, k affine permutations of its two 28-bit hex chunks modulo
-# 2^61-1, coefficients from the shared minhash_consts().
+# MINHASH_MOD, coefficients from the shared minhash_consts().
 _SEED_ROWS = ", ".join(
-    f"({s}, {a1}, {a2}, {c})" for s, (a1, a2, c) in enumerate(minhash_consts(_NUM_HASHES))
+    f"({s}, {a1}, {a2}, {c})" for s, (a1, a2, c) in enumerate(minhash_consts(NUM_HASHES))
 )
 
 _MINHASH_SQL = f"""
@@ -118,9 +117,9 @@ signatures AS (
   FROM hashed CROSS JOIN seeds GROUP BY doc_id, seed
 ),
 bands AS (
-  SELECT doc_id, CAST(seed // {_ROWS_PER_BAND} AS INT) AS band,
+  SELECT doc_id, CAST(seed // {ROWS_PER_BAND} AS INT) AS band,
          md5(string_agg(CAST(minhash AS STRING), '|' ORDER BY seed)) AS band_key
-  FROM signatures GROUP BY doc_id, seed // {_ROWS_PER_BAND}
+  FROM signatures GROUP BY doc_id, seed // {ROWS_PER_BAND}
 )
 """
 
@@ -257,26 +256,12 @@ def q_doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle frame feeds BOTH the signature/banding branch and the
     posting-list branch; a localCheckpoint materializes it once (doc_id
-    + shingle, ~linear in corpus bytes) so the text-to-shingles explode
-    is not recomputed per branch. The xxhash64 the Jaccard stage joins
-    on rides INSIDE that checkpoint (r14, VERDICT r13 #4): computed
-    once per shingle row at materialization instead of re-derived by
-    each of jaccard_pairs' three consumers — zero extra passes, +8
-    bytes/row of checkpoint storage (same-JVM A/B a wash at sf0.1
-    where the duplicated hash ran on idle cores; at saturation the
-    removed work is two corpus-sized hash passes)."""
-    sh = (
-        doc_shingles(corpus_near_dups(spark, sf_dir), n=_SHINGLE_N)
-        .withColumn("sh", F.xxhash64("shingle"))
-        .localCheckpoint()
-    )
-    cands = lsh_candidate_pairs(
-        lsh_band_keys(
-            minhash_signatures(sh, num_hashes=_NUM_HASHES),
-            rows_per_band=_ROWS_PER_BAND,
-        )
-    )
-    return jaccard_pairs(sh, min_jaccard=0.7, candidates=cands, hash_col="sh")
+    + shingle + its xxhash64 join key, ~linear in corpus bytes) so the
+    text-to-shingles explode and the key hash are not recomputed per
+    branch or per jaccard_pairs consumer."""
+    sh = doc_shingles(corpus_near_dups(spark, sf_dir), n=SHINGLE_N).localCheckpoint()
+    cands = lsh_candidate_pairs(lsh_band_keys(minhash_signatures(sh)))
+    return jaccard_pairs(sh, cands, min_jaccard=0.7)
 
 
 _JACCARD_ORACLE = f"""
@@ -305,9 +290,8 @@ WHERE round(inter / (sa.sz + sb.sz - inter), 6) >= 0.7
 
 def q_doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate near-dup pairs on the planted corpus."""
-    sh = doc_shingles(corpus_near_dups(spark, sf_dir), n=_SHINGLE_N)
-    sigs = minhash_signatures(sh, num_hashes=_NUM_HASHES)
-    return lsh_candidate_pairs(lsh_band_keys(sigs, rows_per_band=_ROWS_PER_BAND))
+    sh = doc_shingles(corpus_near_dups(spark, sf_dir), n=SHINGLE_N)
+    return lsh_candidate_pairs(lsh_band_keys(minhash_signatures(sh)))
 
 
 _MINHASH_ORACLE = f"""
@@ -361,16 +345,16 @@ SELECT doc_id, simhash FROM sigs
 
 
 def q_doc_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (hamming <= 1) on the planted corpus.
+    """SimHash near-dup pairs (hamming <= 3) on the planted corpus.
 
-    The Spark plan buckets on signature half-blocks (pigeonhole: any
-    pair at hamming <= 1 agrees exactly on one half), so the self-join
+    The Spark plan buckets on 16-bit signature blocks (pigeonhole: any
+    pair at hamming <= 3 agrees exactly on one of the 4), so the self-join
     is keyed, never all-pairs; the oracle deliberately computes the
     same result by brute force, proving the bucketing is lossless."""
     from clearcare_data_pipeline_spark.operators.dedup import simhash_near_dup_pairs
 
     sigs = simhash_signatures(corpus_near_dups(spark, sf_dir))
-    return simhash_near_dup_pairs(sigs, max_hamming=3, bits=64, num_blocks=4)
+    return simhash_near_dup_pairs(sigs, max_hamming=3)
 
 
 _SIMHASH_PAIRS_ORACLE = f"""
@@ -408,8 +392,7 @@ def q_doc_simhash_near_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     sigs = simhash_signatures(corpus_near_dups(spark, sf_dir))
     cliques = sigs.groupBy("simhash").agg(F.count(F.lit(1)).alias("n"))
     sig_pairs = simhash_near_dup_pairs(
-        cliques.select(F.col("simhash").alias("doc_id"), "simhash"),
-        max_hamming=3, bits=64, num_blocks=4,
+        cliques.select(F.col("simhash").alias("doc_id"), "simhash"), max_hamming=3
     )
     cross = (
         sig_pairs
@@ -504,10 +487,9 @@ def q_doc_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # History docs (doc_id < _SEEN_MOD) appear VERBATIM in the batch
     # corpus and banding is deterministic per (doc_id, text), so the
     # history band-key store is the batch banding filtered to history
-    # ids — exactly how the oracle below derives `hist`. Computing the
-    # banding ONCE and passing it through the operator's band_keys
-    # hook (r13) replaces the second identical shingle+md5+k-min
-    # pipeline the old query built for the history side; the
+    # ids — exactly how the oracle below derives `hist`. The banding is
+    # computed ONCE and shared by the history side and the operator
+    # (no second shingle+md5+k-min pipeline for the history side); the
     # localCheckpoint materializes the narrow (doc_id, band, band_key)
     # frame so its FOUR consumers (history filter + the operator's
     # three) read cached blocks instead of re-planning the pipeline —
@@ -517,10 +499,7 @@ def q_doc_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed; plans/r13/doc_incremental_minhash_*.txt).
     batch = corpus_near_dups(spark, sf_dir)
     bands = (
-        lsh_band_keys(
-            minhash_signatures(doc_shingles(batch, n=_SHINGLE_N), num_hashes=_NUM_HASHES),
-            rows_per_band=_ROWS_PER_BAND,
-        )
+        lsh_band_keys(minhash_signatures(doc_shingles(batch, n=SHINGLE_N)))
         .repartition("band", "band_key")
         .localCheckpoint()
     )
@@ -529,14 +508,7 @@ def q_doc_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("band", "band_key")
         .distinct()
     )
-    return incremental_minhash_dedup(
-        batch,
-        seen,
-        num_hashes=_NUM_HASHES,
-        rows_per_band=_ROWS_PER_BAND,
-        shingle_n=_SHINGLE_N,
-        band_keys=bands,
-    ).select("doc_id", "lang", "source")
+    return incremental_minhash_dedup(batch, seen, bands).select("doc_id", "lang", "source")
 
 
 # History bands fall out of the SAME batch band computation (history

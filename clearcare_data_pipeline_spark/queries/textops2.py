@@ -18,6 +18,7 @@ from clearcare_data_pipeline_spark.operators.dedup import (
     lsh_band_keys,
     lsh_candidate_pairs,
     minhash_signatures,
+    SHINGLE_N,
 )
 from clearcare_data_pipeline_spark.operators.textstats import words_expr
 from clearcare_data_pipeline_spark.queries.textops import _CORPUS_NEAR_SQL, _MINHASH_SQL, corpus_near_dups
@@ -81,8 +82,8 @@ SELECT doc_id, term, tfidf, rn FROM (
 
 def q_doc_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = corpus_near_dups(spark, sf_dir)
-    sh = doc_shingles(corpus, n=5)
-    pairs = lsh_candidate_pairs(lsh_band_keys(minhash_signatures(sh, 12), 3))
+    sh = doc_shingles(corpus, n=SHINGLE_N)
+    pairs = lsh_candidate_pairs(lsh_band_keys(minhash_signatures(sh)))
     nodes = corpus.select(F.col("doc_id").alias("id"))
     comps = connected_components(nodes, pairs)
     return (

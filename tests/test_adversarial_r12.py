@@ -178,9 +178,7 @@ def test_pigeonhole_block_join_equals_all_pairs_on_distinct_sigs(spark):
     rel = distinct.select(F.col("simhash").alias("doc_id"), "simhash")
     block = {
         (r["a"], r["b"], r["hamming"])
-        for r in simhash_near_dup_pairs(
-            rel, max_hamming=3, bits=64, num_blocks=4
-        ).collect()
+        for r in simhash_near_dup_pairs(rel, max_hamming=3).collect()
     }
     a = distinct.select(F.col("simhash").alias("a"))
     b = distinct.select(F.col("simhash").alias("b"))

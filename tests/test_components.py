@@ -1,6 +1,7 @@
 """connected_components: long-diameter convergence + safety bound."""
 
 import pytest
+from pyspark import StorageLevel
 
 from clearcare_data_pipeline_spark.operators.components import connected_components
 
@@ -14,8 +15,8 @@ def _chain(spark, n):
 
 @pytest.mark.slow
 def test_long_chain_converges(spark):
-    # Diameter 29 > default checkpoint interval; exercises the
-    # localCheckpoint lineage-truncation path several times over.
+    # Diameter 29: ~30 checkpointed label iterations, each releasing
+    # the one before it.
     nodes, edges = _chain(spark, 30)
     out = connected_components(nodes, edges).collect()
     assert len(out) == 30
@@ -26,6 +27,57 @@ def test_nonconvergence_raises(spark):
     nodes, edges = _chain(spark, 12)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(nodes, edges, max_iters=3)
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_components_leave_only_the_result_checkpoint(spark):
+    """A 12-node chain runs 12 label iterations: every superseded label
+    frame is released, and the returned labels are the one local
+    checkpoint left — not a cached frame held for the session."""
+    nodes, edges = _chain(spark, 12)
+    before = _persisted(spark)
+    out = connected_components(nodes, edges)
+    assert {r["component"] for r in out.collect()} == {0}
+    assert out.storageLevel == StorageLevel.NONE
+    assert _persisted(spark) - before <= 1
+
+
+def test_components_release_everything_on_failure(spark):
+    nodes, edges = _chain(spark, 12)
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(nodes, edges, max_iters=3)
+    assert _persisted(spark) - before <= 0
+
+
+def test_pagerank_leaves_only_the_result_checkpoint(spark):
+    from clearcare_data_pipeline_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
+    before = _persisted(spark)
+    out = pagerank(edges, iters=3)
+    assert len(out.collect()) == 3
+    assert _persisted(spark) - before <= 1
+
+
+def test_pagerank_releases_iteration_frames_on_failure(spark, monkeypatch):
+    """The final checkpoint fails after the per-iteration rank frames
+    were materialized: none of pagerank's caches may survive."""
+    from clearcare_data_pipeline_spark.operators.graph import pagerank
+
+    def failing_checkpoint(self, *args, **kwargs):
+        self.count()
+        raise RuntimeError("injected checkpoint failure")
+
+    edges = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
+    before = _persisted(spark)
+    monkeypatch.setattr(type(edges), "localCheckpoint", failing_checkpoint)
+    with pytest.raises(RuntimeError, match="injected"):
+        pagerank(edges, iters=3)
+    assert _persisted(spark) - before <= 0
 
 
 def test_two_components(spark):

@@ -53,6 +53,12 @@ def test_queries_run_and_match_oracle_sample(spark):
         # a kernel in operators/similarity.py or operators/clustering.py
         "emb_semantic_dedup", "emb_kmeans_clusters", "emb_cosine_topk", "emb_ivf_topk",
         "emb_ivf_topk_nprobe2", "emb_near_dup_pairs", "emb_label_separation",
+        # the text-hash operators: every query whose operator shares a
+        # kernel in operators/dedup.py, joins.py or sampling.py
+        "doc_minhash_lsh", "doc_ngram_jaccard", "doc_incremental_minhash",
+        "doc_near_dup_clusters", "doc_simhash_near_dups", "doc_exact_dedup",
+        "doc_incremental_dedup", "doc_decontamination", "doc_train_eval_split",
+        "doc_hashed_tf", "fuzzy_linkage_banded",
     ]:
         sdf = q[name](spark, sf).toPandas()
         ddf = con.execute(o[name]).df()

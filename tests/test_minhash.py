@@ -13,14 +13,23 @@ import pytest
 import duckdb
 from pyspark.sql import functions as F
 
+from clearcare_data_pipeline_spark.operators import dedup
 from clearcare_data_pipeline_spark.operators.dedup import (
     MINHASH_MOD,
+    SHINGLE_N,
     doc_shingles,
     lsh_band_keys,
     lsh_candidate_pairs,
+    md5_chunks,
     minhash_consts,
+    minhash_perm,
     minhash_signatures,
 )
+
+
+def _bands(docs):
+    """The document banding every doc_* query runs."""
+    return lsh_band_keys(minhash_signatures(doc_shingles(docs, n=SHINGLE_N)))
 
 
 def test_minhash_values_in_modulus_range_and_distinct_seeds(spark):
@@ -28,7 +37,7 @@ def test_minhash_values_in_modulus_range_and_distinct_seeds(spark):
         [(1, "a b c d e f g h i j"), (2, "k l m n o p q r s t")],
         ["doc_id", "text"],
     )
-    sigs = minhash_signatures(doc_shingles(df, n=5), num_hashes=12).collect()
+    sigs = minhash_signatures(doc_shingles(df, n=SHINGLE_N)).collect()
     assert len(sigs) == 24  # 2 docs x 12 seeds
     assert all(0 <= r.minhash < MINHASH_MOD for r in sigs)
     # permutations must actually differ seed-to-seed for a given doc
@@ -52,31 +61,20 @@ def test_lsh_finds_planted_near_duplicate(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, other)], ["doc_id", "text"]
     )
-    pairs = lsh_candidate_pairs(
-        lsh_band_keys(minhash_signatures(doc_shingles(df, n=5), 12), 3)
-    ).collect()
+    pairs = lsh_candidate_pairs(_bands(df)).collect()
     got = {(r.a, r.b) for r in pairs}
     assert (1, 2) in got
     assert (1, 3) not in got and (2, 3) not in got
 
 
 def test_affine_permutation_matches_duckdb_replay(spark):
-    """The Spark-side hex-chunk extraction + modular arithmetic must be
-    bit-equal to the DuckDB oracle formulation for the same shingle."""
+    """The Spark-side hex-chunk extraction (md5_chunks) + modular
+    arithmetic (minhash_perm) must be bit-equal to the DuckDB oracle
+    formulation for the same shingle."""
     shingle = "alpha beta gamma delta epsilon"
     a1, a2, c = minhash_consts(3)[2]
-    spark_val = (
-        spark.range(1)
-        .select(
-            (
-                F.lit(a1) * F.conv(F.substring(F.md5(F.lit(shingle)), 1, 7), 16, 10).cast("long")
-                + F.lit(a2) * F.conv(F.substring(F.md5(F.lit(shingle)), 8, 7), 16, 10).cast("long")
-                + F.lit(c)
-            )
-            % F.lit(MINHASH_MOD)
-        )
-        .collect()[0][0]
-    )
+    b1, b2 = md5_chunks(F.md5(F.lit(shingle)))
+    spark_val = spark.range(1).select(minhash_perm(b1, b2, a1, a2, c)).collect()[0][0]
     duck_val = duckdb.sql(
         f"SELECT ({a1} * CAST(('0x' || substr(md5('{shingle}'), 1, 7)) AS BIGINT)"
         f" + {a2} * CAST(('0x' || substr(md5('{shingle}'), 8, 7)) AS BIGINT)"
@@ -119,7 +117,9 @@ def test_incremental_minhash_composes_exactly(spark):
     # one-shot run over everything
     full = {
         r["doc_id"]
-        for r in incremental_minhash_dedup(docs, empty_hist).select("doc_id").collect()
+        for r in incremental_minhash_dedup(docs, empty_hist, _bands(docs))
+        .select("doc_id")
+        .collect()
     }
 
     # two-stage run: ingest ids < 15 first, then the rest with the
@@ -128,14 +128,16 @@ def test_incremental_minhash_composes_exactly(spark):
     second = docs.where(F.col("doc_id") >= 15)
     s1 = {
         r["doc_id"]
-        for r in incremental_minhash_dedup(first, empty_hist).select("doc_id").collect()
+        for r in incremental_minhash_dedup(first, empty_hist, _bands(first))
+        .select("doc_id")
+        .collect()
     }
-    hist = lsh_band_keys(
-        minhash_signatures(doc_shingles(first, n=5), num_hashes=12), rows_per_band=3
-    ).select("band", "band_key").distinct()
+    hist = _bands(first).select("band", "band_key").distinct()
     s2 = {
         r["doc_id"]
-        for r in incremental_minhash_dedup(second, hist).select("doc_id").collect()
+        for r in incremental_minhash_dedup(second, hist, _bands(second))
+        .select("doc_id")
+        .collect()
     }
     assert s1 | s2 == full
     assert s1 & s2 == set()
@@ -146,38 +148,31 @@ def test_incremental_minhash_composes_exactly(spark):
 
 @pytest.mark.slow
 def test_incremental_minhash_precomputed_bands_identical(spark):
-    """r13 optimization pin: passing a caller-computed band_keys frame
-    (the shared-banding fast path) is row-identical to letting the
-    operator compute the banding itself."""
+    """The band frame in the shape q_doc_incremental_minhash passes it
+    (repartitioned on (band, band_key), then localCheckpointed, and
+    shared with the history side) is row-identical to a lazy banding
+    subtree."""
     from clearcare_data_pipeline_spark.operators.dedup import (
         incremental_minhash_dedup,
     )
 
     docs = _mk_corpus(spark)
-    hist = (
-        lsh_band_keys(
-            minhash_signatures(
-                doc_shingles(docs.where(F.col("doc_id") < 10), n=5), num_hashes=12
-            ),
-            rows_per_band=3,
-        )
-        .select("band", "band_key")
-        .distinct()
-    )
-    default = {
+    hist = _bands(docs.where(F.col("doc_id") < 10)).select("band", "band_key").distinct()
+    lazy = {
         r["doc_id"]
-        for r in incremental_minhash_dedup(docs, hist).select("doc_id").collect()
-    }
-    bands = lsh_band_keys(
-        minhash_signatures(doc_shingles(docs, n=5), num_hashes=12), rows_per_band=3
-    )
-    pre = {
-        r["doc_id"]
-        for r in incremental_minhash_dedup(docs, hist, band_keys=bands)
+        for r in incremental_minhash_dedup(docs, hist, _bands(docs))
         .select("doc_id")
         .collect()
     }
-    assert pre == default
+    pre = {
+        r["doc_id"]
+        for r in incremental_minhash_dedup(
+            docs, hist, _bands(docs).repartition("band", "band_key").localCheckpoint()
+        )
+        .select("doc_id")
+        .collect()
+    }
+    assert pre == lazy and lazy
 
 
 def test_incremental_minhash_short_and_empty_docs(spark):
@@ -193,35 +188,33 @@ def test_incremental_minhash_short_and_empty_docs(spark):
         "doc_id: long, text: string",
     )
     hist = spark.createDataFrame([], "band: int, band_key: string")
-    out = {r["doc_id"] for r in incremental_minhash_dedup(docs, hist).collect()}
+    out = {r["doc_id"] for r in incremental_minhash_dedup(docs, hist, _bands(docs)).collect()}
     assert out == {1, 3, 4}
 
 
-def test_jaccard_pairs_precomputed_hash_identical(spark):
-    """r14: jaccard_pairs(hash_col=...) with a precomputed
-    xxhash64(shingle) column must emit exactly the self-hashed rows."""
-    from pyspark.sql import functions as F
-
-    from clearcare_data_pipeline_spark.operators.dedup import (
-        doc_shingles,
-        jaccard_pairs,
-        lsh_band_keys,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+def test_jaccard_pairs_precomputed_hash_identical(spark, monkeypatch):
+    """jaccard_pairs joins on the xxhash64 key doc_shingles precomputes
+    (here inside a localCheckpoint, as q_doc_ngram_jaccard does); its
+    output must equal the exact Jaccard of the STRING shingle sets of
+    every candidate pair. The banding shape is forced small (6 hashes,
+    2 rows per band) by patching the module constants."""
+    from clearcare_data_pipeline_spark.operators.dedup import jaccard_pairs
     from clearcare_data_pipeline_spark.sources.tables import load_table
 
+    monkeypatch.setattr(dedup, "NUM_HASHES", 6)
+    monkeypatch.setattr(dedup, "ROWS_PER_BAND", 2)
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    sh = doc_shingles(docs, n=3).withColumn("sh", F.xxhash64("shingle")).localCheckpoint()
-    cands = lsh_candidate_pairs(
-        lsh_band_keys(minhash_signatures(sh, num_hashes=6), rows_per_band=2)
-    )
-    base = {
-        (r.a, r.b, r.jaccard)
-        for r in jaccard_pairs(sh, min_jaccard=0.5, candidates=cands).collect()
-    }
-    hooked = {
-        (r.a, r.b, r.jaccard)
-        for r in jaccard_pairs(sh, min_jaccard=0.5, candidates=cands, hash_col="sh").collect()
-    }
-    assert hooked == base and base
+    sh = doc_shingles(docs, n=3).localCheckpoint()
+    cands = lsh_candidate_pairs(lsh_band_keys(minhash_signatures(sh)))
+    got = {(r.a, r.b): r.jaccard for r in jaccard_pairs(sh, cands, min_jaccard=0.5).collect()}
+    sets = {}
+    for r in sh.select("doc_id", "shingle").collect():
+        sets.setdefault(r.doc_id, set()).add(r.shingle)
+    want = {}
+    for r in cands.collect():
+        a, b = sets[r.a], sets[r.b]
+        j = len(a & b) / len(a | b)
+        if j >= 0.5:
+            want[(r.a, r.b)] = j
+    assert want and got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) <= 5e-7 for k in want)

@@ -267,3 +267,27 @@ def test_banded_pairs_precomputed_normed_identical(spark):
         for r in lsh_banded_pairs(corpus, min_cosine=0.9, n_bands=3, normed=n).collect()
     }
     assert hooked == base
+
+
+def test_nearest_cell_is_null_without_a_defined_distance(spark):
+    """A NULL embedding, or one with a NULL element, has no defined
+    distance to any centroid: nearest_expr and ivf_cells_expr give NULL
+    for it (the oracles' list_position(dists, list_min(dists)) does),
+    instead of ranking the NULL-distance struct first as cell 0."""
+    from pyspark.sql import functions as F
+
+    cmat = F.array(F.array(F.lit(0.0), F.lit(0.0)), F.array(F.lit(5.0), F.lit(5.0)))
+    df = spark.createDataFrame(
+        [("null_vec", None), ("null_elem", [1.0, None]), ("clean", [4.0, 4.0])],
+        "tag: string, dvec: array<double>",
+    )
+    out = df.select(
+        "tag",
+        similarity.nearest_expr(F.col("dvec"), cmat).alias("nearest"),
+        similarity.ivf_cells_expr(F.col("dvec"), cmat, 1).alias("cells1"),
+        similarity.ivf_cells_expr(F.col("dvec"), cmat, 2).alias("cells2"),
+    ).collect()
+    got = {r.tag: (r.nearest, r.cells1, r.cells2) for r in out}
+    assert got["null_vec"] == (None, None, None)
+    assert got["null_elem"] == (None, None, None)
+    assert got["clean"] == (1, [1], [1, 0])
