@@ -18,11 +18,16 @@ from the event log of a traced run at sf0.01 (``perfbench``'s tracer,
 folded into the cleaning aggregate, then with the registry on the
 driver and the CSV preamble read in the JVM (the benchmark runs no wide
 campus; that column is one campus's job-group count, split by layer
-from the tall one's):
+from the tall one's). The last two rows count the py4j round trips
+the campus's thread sends on a warm JVM at sf0.01, before and after the
+campus-invariant Columns were built once per gateway
+(``session.gateway_cache``); py4j's finalizer thread adds its handle
+deletes on top (about 1,900 / 2,100 / 2,200 before, 130 / 200 / 220
+after):
 
-=======================  ============  ============  ============
+=======================  ============  ============  ======================
 layer                    multi-pass    one pass      no Python
-=======================  ============  ============  ============
+=======================  ============  ============  ======================
 registry                 5 / 5 / 5     2 / 2 / 2     0 / 0 / 0
 extract                  3 / 2 / 3     3 / 2 / 3     1 / 2 / 1
 extract checkpoint       2 / 2 / 3     1 / 1 / 2     1 / 1 / 2
@@ -30,7 +35,9 @@ cleaning aggregate       4 / 4 / 4     4 / 4 / 4     4 / 4 / 4
 clean+quarantine sinks   2 / 2 / 2     2 / 2 / 2     2 / 2 / 2
 devlog                   11 / 10 / 11  2 / 2 / 2     2 / 2 / 2
 total                    27 / 25 / 28  14 / 13 / 15  10 / 11 / 11
-=======================  ============  ============  ============
+round trips, before                                  9,032 / 9,697 / 11,097
+round trips, after                                   585 / 578 / 619
+=======================  ============  ============  ======================
 
 * registry: one snapshot, read on the driver with pyarrow (or the
   stdlib workbook reader), serves the lookup and the upsert, which

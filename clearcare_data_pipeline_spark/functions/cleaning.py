@@ -49,6 +49,7 @@ from clearcare_data_pipeline_spark.schema import (
     TEXT_FIELDS,
     WHITESPACE_CHARS,
 )
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 # ----------------------------------------------------------------------
 # column-level expressions
@@ -152,10 +153,16 @@ def normalize_headers(df: DataFrame) -> DataFrame:
 
 def ensure_columns(df: DataFrame, columns: list[str]) -> DataFrame:
     """P2: inject missing canonical columns as NULL string columns."""
-    missing = [c for c in columns if c not in df.columns]
+    present = set(df.columns)
+    missing = tuple(c for c in columns if c not in present)
     if not missing:
         return df
-    return df.withColumns({c: F.lit(None).cast(StringType()) for c in missing})
+    return df.withColumns(_null_columns(missing))
+
+
+@gateway_cache
+def _null_columns(names: tuple[str, ...]) -> dict[str, Column]:
+    return {c: F.lit(None).cast(StringType()) for c in names}
 
 
 def clean_price_fields(df: DataFrame) -> DataFrame:
@@ -167,42 +174,76 @@ def clean_price_fields(df: DataFrame) -> DataFrame:
     referenced multiple times), so neither codegen nor the interpreted
     fallback re-runs the regex+cast per predicate branch.
     """
-    df = df.withColumns({c: parse_price_expr(F.col(c)) for c in PRICE_FIELDS})
-    return df.withColumns(
-        {c: null_invalid_price_expr(F.col(c)) for c in PRICE_FIELDS if c not in PRICE_NULL_EXEMPT}
-    )
+    parsed, nulled = _price_columns()
+    return df.withColumns(parsed).withColumns(nulled)
+
+
+@gateway_cache
+def _price_columns() -> tuple[dict[str, Column], dict[str, Column]]:
+    parsed = {c: parse_price_expr(F.col(c)) for c in PRICE_FIELDS}
+    nulled = {
+        c: null_invalid_price_expr(F.col(c)) for c in PRICE_FIELDS if c not in PRICE_NULL_EXEMPT
+    }
+    return parsed, nulled
 
 
 def scrub_invalid_tokens(df: DataFrame, columns: list[str]) -> DataFrame:
     """R1 applied to ``columns``."""
-    return df.withColumns({c: scrub_invalid_token_expr(F.col(c)) for c in columns})
+    return df.withColumns(_scrub_columns(tuple(columns)))
+
+
+@gateway_cache
+def _scrub_columns(names: tuple[str, ...]) -> dict[str, Column]:
+    return {c: scrub_invalid_token_expr(F.col(c)) for c in names}
 
 
 def normalize_text_fields(df: DataFrame) -> DataFrame:
     """F2 applied to the six TEXT_FIELDS."""
-    return df.withColumns({c: normalize_text_expr(F.col(c)) for c in TEXT_FIELDS})
+    return df.withColumns(_text_columns())
+
+
+@gateway_cache
+def _text_columns() -> dict[str, Column]:
+    return {c: normalize_text_expr(F.col(c)) for c in TEXT_FIELDS}
 
 
 def normalize_modifiers(df: DataFrame) -> DataFrame:
     """F3 on the modifiers column."""
-    return df.withColumn("modifiers", normalize_modifiers_expr(F.col("modifiers")))
+    return df.withColumn("modifiers", _modifiers_column())
+
+
+@gateway_cache
+def _modifiers_column() -> Column:
+    return normalize_modifiers_expr(F.col("modifiers"))
 
 
 def normalize_code_type(df: DataFrame) -> DataFrame:
     """F7 on code_type (keeps the raw value in code_type_raw for
     devlog audits A3/A5)."""
-    return df.withColumn("code_type_raw", F.col("code_type")).withColumn(
-        "code_type", normalize_code_type_expr(F.col("code_type"))
-    )
+    raw, normalized = _code_type_columns()
+    return df.withColumn("code_type_raw", raw).withColumn("code_type", normalized)
+
+
+@gateway_cache
+def _code_type_columns() -> tuple[Column, Column]:
+    return F.col("code_type"), normalize_code_type_expr(F.col("code_type"))
 
 
 def flag_invalid_algorithm(df: DataFrame) -> DataFrame:
     """F4 flag column (summed into devlog, dropped before the sink)."""
-    return df.withColumn(
-        "negotiated_algorithm_invalid", algorithm_invalid_expr(F.col("negotiated_algorithm"))
-    )
+    return df.withColumn("negotiated_algorithm_invalid", _algorithm_flag())
+
+
+@gateway_cache
+def _algorithm_flag() -> Column:
+    return algorithm_invalid_expr(F.col("negotiated_algorithm"))
 
 
 def validate_code_format(df: DataFrame) -> DataFrame:
     """R2 keep-filter."""
-    return df.where(code_format_valid_expr(F.col("code"), F.col("code_type")))
+    return df.where(_code_format_valid())
+
+
+@gateway_cache
+def _code_format_valid() -> Column:
+    return code_format_valid_expr(F.col("code"), F.col("code_type"))

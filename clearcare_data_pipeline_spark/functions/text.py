@@ -11,6 +11,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.schema import SLUG_STOPWORDS
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 
 def squeeze_whitespace(col: Column) -> Column:
@@ -42,9 +43,11 @@ def zip5(col: Column) -> Column:
     return F.regexp_extract(col, r"(\d{5})", 1)
 
 
-def split_payer_name_id(col: Column) -> tuple[Column, Column]:
-    """F5: ``"Payer Name [ID]"`` -> (name, id); no bracket suffix ->
-    (whole string, '')."""
+@gateway_cache
+def split_payer_name_id(name_col: str) -> tuple[Column, Column]:
+    """F5: the column ``"Payer Name [ID]"`` -> (name, id); no bracket
+    suffix -> (whole string, '')."""
+    col = F.col(name_col)
     name = F.when(
         col.rlike(r"^.*\[.*?\]\s*$"), F.trim(F.regexp_extract(col, r"^(.*)\[(.*?)\]\s*$", 1))
     ).otherwise(F.trim(col))

@@ -24,7 +24,7 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.cleaning import (
@@ -41,6 +41,7 @@ from clearcare_data_pipeline_spark.functions.cleaning import (
 from clearcare_data_pipeline_spark.plans.metrics import parse_summary, tagged_summary
 from clearcare_data_pipeline_spark.plans.rules import split_clean_quarantine, tag_violations
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS, PRICE_FIELDS
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 
 def clean_charges(df: DataFrame) -> DataFrame:
@@ -61,8 +62,14 @@ def clean_charges(df: DataFrame) -> DataFrame:
     # columns survive as the group minimum so the retained row is
     # deterministic and engine-independent (dropDuplicates' pick is
     # arbitrary; the DuckDB oracle mirrors this exactly).
-    helpers = [c for c in df.columns if c not in set(CANONICAL_COLUMNS)]
-    return df.groupBy(*CANONICAL_COLUMNS).agg(*[F.min(c).alias(c) for c in helpers])
+    helpers = tuple(c for c in df.columns if c not in set(CANONICAL_COLUMNS))
+    key, aggs = _dedup_columns(helpers)
+    return df.groupBy(*key).agg(*aggs)
+
+
+@gateway_cache
+def _dedup_columns(helpers: tuple[str, ...]) -> tuple[list[Column], list[Column]]:
+    return [F.col(c) for c in CANONICAL_COLUMNS], [F.min(c).alias(c) for c in helpers]
 
 
 @dataclass

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from clearcare_data_pipeline_spark.functions.cleaning import modifiers_to_array_expr
 from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, is_clean, present
 from clearcare_data_pipeline_spark.schema import ALLOWED_CODE_TYPES, CANONICAL_COLUMNS
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 
 # Column-name prefixes of the A1/A2 families inside ``tagged_summary``.
@@ -47,7 +48,12 @@ def missing_code_types(histogram: dict[str, int]) -> list[str]:
 
 def modifier_tokens(df: DataFrame) -> DataFrame:
     """A6 keys: one row per token of the normalized modifier list."""
-    return df.select(F.explode(modifiers_to_array_expr(F.col("modifiers"))).alias("modifier"))
+    return df.select(_modifier_token())
+
+
+@gateway_cache
+def _modifier_token() -> Column:
+    return F.explode(modifiers_to_array_expr(F.col("modifiers"))).alias("modifier")
 
 
 def keyed_counts(families: dict[str, DataFrame]) -> dict[str, dict[str, int]]:
@@ -55,20 +61,22 @@ def keyed_counts(families: dict[str, DataFrame]) -> dict[str, dict[str, int]]:
     one collect: each family is a one-column frame of keys. Returns
     family -> {key: n}, keys sorted; a family with no keys maps to an
     empty dict."""
-    parts = [
-        keys.select(F.lit(name).alias("family"), F.col(keys.columns[0]).cast("string").alias("key"))
-        for name, keys in families.items()
-    ]
-    rows = (
-        reduce(DataFrame.unionByName, parts)
-        .groupBy("family", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+    parts = [keys.select(*_family_key(name, keys.columns[0])) for name, keys in families.items()]
+    rows = reduce(DataFrame.unionByName, parts).groupBy("family", "key").agg(_count()).collect()
     out: dict[str, dict[str, int]] = {name: {} for name in families}
     for r in sorted(rows, key=lambda r: (r["family"], r["key"])):
         out[r["family"]][r["key"]] = r["n"]
     return out
+
+
+@gateway_cache
+def _family_key(family: str, key: str) -> tuple[Column, Column]:
+    return F.lit(family).alias("family"), F.col(key).cast("string").alias("key")
+
+
+@gateway_cache
+def _count() -> Column:
+    return F.count(F.lit(1)).alias("n")
 
 
 def tagged_summary(tagged: DataFrame) -> DataFrame:
@@ -79,6 +87,13 @@ def tagged_summary(tagged: DataFrame) -> DataFrame:
     and the code-type histogram (A2) over the clean rows only, the rows
     the clean sink receives. ``parse_summary`` turns the row into the
     devlog's dicts; the ``charges_*`` queries select from it."""
+    violations, score = _score_columns()
+    summary = tagged.agg(*_summary_aggs()).withColumn("total_violations", violations)
+    return summary.withColumn("transparency_score", score)
+
+
+@gateway_cache
+def _summary_aggs() -> list[Column]:
     clean = is_clean()
     aggs = [F.sum(F.col(r).cast("long")).alias(r) for r in RULE_NAMES]
     aggs.append(
@@ -94,19 +109,25 @@ def tagged_summary(tagged: DataFrame) -> DataFrame:
         F.count(F.when(clean & (F.col("code_type") == t), F.lit(1))).alias(_CODE_TYPE + t)
         for t in ALLOWED_CODE_TYPES
     ]
-    # A11 (cleaning_utils.py:214-216): max(0, 1 - V / (N * 10)) where V
-    # sums the per-rule counts (a row violating k rules counts k times,
-    # as in the reference) and N = clean rows + V; 0.0 when N = 0 ("0 if
-    # no records"). Left unrounded: below 2^53 the long/double quotient
-    # is correctly rounded, so it equals the reference's Python int / int.
+    return aggs
+
+
+@gateway_cache
+def _score_columns() -> tuple[Column, Column]:
+    """(total_violations, transparency_score) over the aggregate row.
+
+    A11 (cleaning_utils.py:214-216): max(0, 1 - V / (N * 10)) where V
+    sums the per-rule counts (a row violating k rules counts k times,
+    as in the reference) and N = clean rows + V; 0.0 when N = 0 ("0 if
+    no records"). Left unrounded: below 2^53 the long/double quotient
+    is correctly rounded, so it equals the reference's Python int / int."""
     violations = reduce(Column.__add__, [F.coalesce(F.col(r), F.lit(0)) for r in RULE_NAMES])
     v = F.col("total_violations")
     examined = F.col("total_rows") - F.col("quarantined_rows") + v
     score = F.when(examined == 0, F.lit(0.0)).otherwise(
         F.greatest(F.lit(0.0), 1.0 - v / (examined * 10.0))
     )
-    summary = tagged.agg(*aggs).withColumn("total_violations", violations)
-    return summary.withColumn("transparency_score", score)
+    return violations, score
 
 
 def presence_counts(summary: DataFrame) -> DataFrame:

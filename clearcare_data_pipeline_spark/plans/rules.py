@@ -24,10 +24,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.schema import PRICE_FIELDS
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 RULE_NAMES: list[str] = [f"rule_{i}" for i in range(1, 11)]
 
 
+@gateway_cache
 def present(name: str) -> Column:
     """A value counts as present when it is non-NULL; a field outside
     ``PRICE_FIELDS`` must also be non-blank after trimming. The rules
@@ -39,6 +41,7 @@ def present(name: str) -> Column:
     return c.isNotNull() & (F.trim(c) != "")
 
 
+@gateway_cache
 def rule_predicates() -> dict[str, Column]:
     """rule name -> violation predicate over the cleaned canonical table."""
     payer = present("payer_name")
@@ -107,12 +110,15 @@ def tag_violations(df: DataFrame) -> DataFrame:
     Same output either way: both join the fired rule names with ','
     and yield '' for a clean row.
     """
-    preds = rule_predicates()
-    df = df.withColumns({name: pred for name, pred in preds.items()})
-    tags = [F.when(F.col(name), F.lit(name)) for name in RULE_NAMES]
-    return df.withColumn("rules_violated", F.concat_ws(",", *tags))
+    return df.withColumns(rule_predicates()).withColumn("rules_violated", _rules_violated())
 
 
+@gateway_cache
+def _rules_violated() -> Column:
+    return F.concat_ws(",", *[F.when(F.col(name), F.lit(name)) for name in RULE_NAMES])
+
+
+@gateway_cache
 def is_clean() -> Column:
     """R4 predicate over a ``tag_violations`` output: no rule fired."""
     return F.col("rules_violated") == ""

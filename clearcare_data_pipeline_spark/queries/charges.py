@@ -182,12 +182,9 @@ def q_payer_name_id_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey") % 3 == 0,
         F.concat(F.col("c_name"), F.lit(" [ID"), F.col("c_custkey").cast("string"), F.lit("]")),
     ).otherwise(F.col("c_name"))
-    name, payer_id = split_payer_name_id(raw)
-    return cust.select(
-        F.col("c_custkey").alias("custkey"),
-        raw.alias("payer_raw"),
-        name.alias("payer_name"),
-        payer_id.alias("payer_id"),
+    name, payer_id = split_payer_name_id("payer_raw")
+    return cust.select(F.col("c_custkey").alias("custkey"), raw.alias("payer_raw")).select(
+        "custkey", "payer_raw", name.alias("payer_name"), payer_id.alias("payer_id")
     )
 
 

@@ -313,10 +313,7 @@ ORACLES["emb_ivf_topk"] = _IVF_ORACLE
 
 # --- IVF with nprobe=2 (the recall lever) --------------------------------
 
-from clearcare_data_pipeline_spark.operators.similarity import (  # noqa: E402
-    NUM_CENTROIDS as _NC,
-    ivf_topk_nprobe,
-)
+from clearcare_data_pipeline_spark.operators.similarity import ivf_topk_nprobe  # noqa: E402
 
 _NPROBE = 2
 
@@ -331,16 +328,25 @@ def _dists_list_sql(dv: str) -> str:
     return "[" + ", ".join(_centroid_dist_sql(dv, c) for c in range(NUM_CENTROIDS)) + "]"
 
 
+def _order_cells_sql(dists: str) -> str:
+    """The cells of a distance list, nearest first, ties toward the lower
+    cell: ``ivf_cells_expr``'s order. A NULL distance is dropped, as
+    ``list_min`` skips it, so a vector with no defined distance has no
+    cells: a NULL cell (``[1]`` of an empty list) and no probes."""
+    return (
+        f"list_transform(list_sort(list_filter("
+        f"list_transform(range(0, len({dists})), i -> {{'d': {dists}[i + 1], 'i': i}}), "
+        f"s -> s.d IS NOT NULL)), s -> s.i)"
+    )
+
+
 _IVF_NPROBE_ORACLE = f"""
 WITH base AS (
   SELECT vec_id, dv, sqrt({_dot('dv', 'dv')}) AS nrm, {_dists_list_sql('dv')} AS dists
   FROM (SELECT vec_id, {_DV} AS dv FROM embeddings)
 ),
 cellified AS (
-  SELECT vec_id, dv, nrm,
-    list_transform(
-      list_sort(list_transform(range(0, {_NC}), i -> {{'d': dists[i + 1], 'i': i}})),
-      s -> s.i) AS order_cells
+  SELECT vec_id, dv, nrm, {_order_cells_sql('dists')} AS order_cells
   FROM base
 ),
 cand AS (

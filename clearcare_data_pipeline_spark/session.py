@@ -8,9 +8,15 @@ timezone-stable and comparable against UTC-naive engines like DuckDB).
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def _default_heap_gib() -> int:
@@ -93,3 +99,47 @@ def get_spark(app_name: str = "clearcare-spark") -> SparkSession:
         .config("spark.buffer.pageSize", "4m")
     )
     return builder.getOrCreate()
+
+
+def _gateway():
+    """The live py4j gateway, or None where there is none (no JVM yet,
+    or Spark Connect, whose Columns are plain Python)."""
+    return SparkContext._gateway
+
+
+# Entries kept per cached builder. Builders keyed on a file's header
+# (the CSV body parse, the wide melt) get one entry per header layout,
+# so an onboarding run over many hospital templates must not grow
+# without bound; the campus-invariant builders hold one to 22 entries.
+GATEWAY_CACHE_SIZE = 64
+
+
+def gateway_cache(build: Callable[..., T]) -> Callable[..., T]:
+    """A bounded ``functools.lru_cache`` for builders of Columns that do
+    not change from one campus to the next.
+
+    A classic Column is a handle on a JVM object, and building one costs
+    a py4j round trip per function applied. A builder whose output
+    depends only on its hashable arguments and on import-time constants
+    can build once and serve every later plan: Spark gives a Column's
+    expressions fresh IDs each time a plan uses it.
+
+    The entries belong to the gateway they were built on. The cache
+    holds that gateway object (not its ``id``, which a new one could
+    reuse) and drops every entry when the current gateway differs, so a
+    restarted JVM never receives a dead handle. With no gateway (Spark
+    Connect) it is a plain memo. Results are shared: callers must not
+    mutate a returned list or dict. A builder that reads a module
+    constant tests patch at call time must stay uncached."""
+    memo = functools.lru_cache(maxsize=GATEWAY_CACHE_SIZE)(build)
+    owner = [None]
+
+    @functools.wraps(build)
+    def cached(*args):
+        gateway = _gateway()
+        if gateway is not owner[0]:
+            memo.cache_clear()
+            owner[0] = gateway
+        return memo(*args)
+
+    return cached

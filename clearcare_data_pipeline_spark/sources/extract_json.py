@@ -13,10 +13,11 @@ gross/cash rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type_expr
+from clearcare_data_pipeline_spark.session import gateway_cache
 from clearcare_data_pipeline_spark.sources.mrf import ExtractResult, finalize_canonical
 
 _META_KEYS = ["hospital_name", "hospital_location", "hospital_address", "last_updated_on", "version"]
@@ -27,13 +28,27 @@ def _s(col: Column) -> Column:
     return F.coalesce(col.cast("string"), F.lit(""))
 
 
-def _opt(df: DataFrame, struct_col: str, field: str) -> Column:
-    """Nested field as string, or '' when the file never populates it
-    (absent from the inferred schema)."""
-    struct_fields = [f.name for f in df.schema[struct_col].dataType.fields]
-    if field in struct_fields:
-        return _s(F.col(f"{struct_col}.{field}"))
-    return F.lit("")
+# canonical column -> (struct, field) it is read from
+_FIELDS: dict[str, tuple[str, str]] = {
+    "code": ("ci", "code"),
+    "code_type_raw": ("ci", "type"),
+    "description": ("item", "description"),
+    "drug_unit": ("item", "drug_information.unit"),
+    "drug_type": ("item", "drug_information.type"),
+    "payer_name": ("pi", "payer_name"),
+    "plan_name": ("pi", "plan_name"),
+    "negotiated_price": ("pi", "standard_charge_dollar"),
+    "negotiated_percentage": ("pi", "standard_charge_percentage"),
+    "negotiated_algorithm": ("pi", "standard_charge_algorithm"),
+    "negotiated_methodology": ("pi", "methodology"),
+    "gross_charge": ("sc", "gross_charge"),
+    "discounted_cash_price": ("sc", "discounted_cash"),
+    "min_price": ("sc", "minimum"),
+    "max_price": ("sc", "maximum"),
+    "estimated_amount": ("pi", "estimated_amount"),
+    "setting": ("sc", "setting"),
+    "additional_notes": ("pi", "additional_payer_notes"),
+}
 
 
 def extract_json(
@@ -45,57 +60,61 @@ def extract_json(
 ) -> ExtractResult:
     doc = spark.read.option("multiLine", True).json(path)
 
-    meta_row = doc.select(
-        *[F.coalesce(F.col(k).cast("string"), F.lit("")).alias(k) for k in _META_KEYS if k in doc.columns]
-    ).first()
+    meta_cols = tuple(k for k in _META_KEYS if k in doc.columns)
+    meta_row = doc.select(*_meta_columns(meta_cols)).first()
     meta = dict(meta_row.asDict()) if meta_row else {}
 
-    items = doc.select(F.explode("standard_charge_information").alias("item"))
-    codes = items.select(
-        "item",
-        F.explode("item.code_information").alias("ci"),
-    )
-    charges_groups = codes.select(
-        "item",
-        "ci",
-        F.explode("item.standard_charges").alias("sc"),
-    )
+    explode_items, explode_codes, explode_charges, explode_payers, keep, code_type = _json_steps()
+    items = doc.select(explode_items)
+    codes = items.select("item", explode_codes)
+    charges_groups = codes.select("item", "ci", explode_charges)
     # outer: keep items that publish no payer-specific terms
-    payers = charges_groups.select(
-        "item",
-        "ci",
-        "sc",
-        F.explode_outer("sc.payers_information").alias("pi"),
+    payers = charges_groups.select("item", "ci", "sc", explode_payers)
+
+    # The fields each struct holds: a file that never populates one
+    # leaves it out of the inferred schema, and it reads as ''.
+    schema = payers.schema
+    probed = tuple(
+        (s, tuple(f.name for f in schema[s].dataType.fields)) for s in ("ci", "item", "pi", "sc")
     )
-
-    has_drug = "drug_information" in [f.name for f in payers.schema["item"].dataType.fields]
-
-    df = payers.select(
-        _opt(payers, "ci", "code").alias("code"),
-        _opt(payers, "ci", "type").alias("code_type_raw"),
-        _opt(payers, "item", "description").alias("description"),
-        (_s(F.col("item.drug_information.unit")) if has_drug else F.lit("")).alias("drug_unit"),
-        (_s(F.col("item.drug_information.type")) if has_drug else F.lit("")).alias("drug_type"),
-        _opt(payers, "pi", "payer_name").alias("payer_name"),
-        _opt(payers, "pi", "plan_name").alias("plan_name"),
-        _opt(payers, "pi", "standard_charge_dollar").alias("negotiated_price"),
-        _opt(payers, "pi", "standard_charge_percentage").alias("negotiated_percentage"),
-        _opt(payers, "pi", "standard_charge_algorithm").alias("negotiated_algorithm"),
-        _opt(payers, "pi", "methodology").alias("negotiated_methodology"),
-        _opt(payers, "sc", "gross_charge").alias("gross_charge"),
-        _opt(payers, "sc", "discounted_cash").alias("discounted_cash_price"),
-        _opt(payers, "sc", "minimum").alias("min_price"),
-        _opt(payers, "sc", "maximum").alias("max_price"),
-        _opt(payers, "pi", "estimated_amount").alias("estimated_amount"),
-        _opt(payers, "sc", "setting").alias("setting"),
-        _opt(payers, "pi", "additional_payer_notes").alias("additional_notes"),
-    )
-
-    df = df.where((F.col("code") != "") & (F.col("code_type_raw") != ""))
-    df = df.withColumn("code_type", normalize_code_type_expr(F.col("code_type_raw")))
+    df = payers.select(*_json_columns(probed))
+    df = df.where(keep).withColumn("code_type", code_type)
     slots = finalize_canonical(
         df,
         hospital_name=hospital_name or meta.get("hospital_name", ""),
         zip_code=zip_code,
     )
     return ExtractResult(slots=slots, metadata=meta)
+
+
+@gateway_cache
+def _meta_columns(keys: tuple[str, ...]) -> list[Column]:
+    return [F.coalesce(F.col(k).cast("string"), F.lit("")).alias(k) for k in keys]
+
+
+@gateway_cache
+def _json_steps() -> tuple[Column, ...]:
+    """The three explodes that flatten the document, the outer payer
+    explode, the X1 blank-slot filter and the F7 type normalization."""
+    return (
+        F.explode("standard_charge_information").alias("item"),
+        F.explode("item.code_information").alias("ci"),
+        F.explode("item.standard_charges").alias("sc"),
+        F.explode_outer("sc.payers_information").alias("pi"),
+        (F.col("code") != "") & (F.col("code_type_raw") != ""),
+        normalize_code_type_expr(F.col("code_type_raw")),
+    )
+
+
+@gateway_cache
+def _json_columns(probed: tuple[tuple[str, tuple[str, ...]], ...]) -> list[Column]:
+    """The canonical select list over the flattened rows, given the
+    fields each struct holds: a field the file never populates is ''."""
+    fields = dict(probed)
+
+    def read(struct: str, field: str) -> Column:
+        if field.split(".")[0] in fields[struct]:
+            return _s(F.col(f"{struct}.{field}"))
+        return F.lit("")
+
+    return [read(*where).alias(name) for name, where in _FIELDS.items()]

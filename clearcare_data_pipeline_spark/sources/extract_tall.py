@@ -10,7 +10,6 @@ loop).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.functions.text import split_payer_name_id
 from clearcare_data_pipeline_spark.sources.mrf import (
@@ -51,7 +50,7 @@ def extract_tall(
     meta, raw = read_mrf_csv(spark, path)
 
     # F5: "Payer Name [ID]" split
-    name, payer_id = split_payer_name_id(F.col("payer_name"))
+    name, payer_id = split_payer_name_id("payer_name")
     df = raw.withColumn("payer_id", payer_id).withColumn("payer_name", name)
 
     # P4 renames (only columns present in this source)

@@ -29,6 +29,7 @@ from clearcare_data_pipeline_spark.schema import (
     CANONICAL_COLUMNS,
 )
 from clearcare_data_pipeline_spark.functions.cleaning import normalize_code_type_expr
+from clearcare_data_pipeline_spark.session import gateway_cache
 
 
 def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFrame]:
@@ -48,10 +49,12 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     it: the preamble and header lines go through Python's ``csv.reader``
     and the body through ``from_csv`` with ``escape='"'``, so a doubled
     quote in a quoted cell is one quote everywhere (``"a ""q"" z"`` ->
-    ``a "q" z``). Two differences from pandas remain: a quoted body cell
-    holding a backslash before a quote (``"x\\"y"``, not RFC 4180) comes
-    out as its raw text where pandas gives ``x\\y"``, and a quoted field
-    may not span lines.
+    ``a "q" z``). A quoted body cell holding a backslash before a quote
+    (``"x\\"y"``, not RFC 4180) comes out as its raw text where pandas
+    gives ``x\\y"``. A quoted field may not span lines: the file is read
+    line by line, so a body line that ends inside an open quoted field
+    (by pandas' rule, see ``_OPEN_QUOTE_RE``) fails the job that parses
+    it with ``raise_error``, where pandas would read one row.
 
     The preamble is dropped by position: ``_line`` counts the rows of
     each scan partition, and lines 0 and 1 of the first partition are
@@ -63,15 +66,9 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     they fail (``maxPartitionBytes`` shorter than the first line) rather
     than parse a preamble line as data.
     """
-    lines = spark.read.text(path).withColumn("_line", F.monotonically_increasing_id())
-    preamble = F.col("_line") < 2
-    nonblank = F.length(F.trim("value")) > 0
-    head = (
-        lines.where(preamble | nonblank)
-        .select("value", "_line", F.input_file_block_start().alias("_start"))
-        .limit(3)
-        .collect()
-    )
+    line, head_keep, head_cols, body_keep = _line_columns()
+    lines = spark.read.text(path).withColumn("_line", line)
+    head = lines.where(head_keep).select(*head_cols).limit(3).collect()
     if len(head) < 3:
         raise ValueError(f"{path}: no header line after the 2-line preamble")
     if [(r._line, r._start) for r in head[:2]] != [(0, 0), (1, 0)]:
@@ -82,9 +79,46 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     names = _safe_header(next(csv.reader([header])), case_sensitive)
     schema = ", ".join(f"`{n.replace('`', '``')}` STRING" for n in names)
-    body = lines.where(~preamble & nonblank & (F.col("value") != header))
-    cells = F.from_csv("value", schema, {"escape": '"'})
-    return meta, body.select(cells.alias("r")).select("r.*").na.fill("")
+    not_header, cells = _body_columns(header, schema)
+    body = lines.where(body_keep & not_header)
+    return meta, body.select(cells).select("r.*").na.fill("")
+
+
+# Strips one complete field per match, each starting where the last one
+# ended (``\G``), by pandas' quoting rule: a quote opens a field only at
+# the field's start, ``""`` inside it is one quote, and the closing quote
+# may be followed by unquoted text. What is left of a line starts a
+# quoted field that the line does not close.
+_OPEN_QUOTE_RE = r'\G(?:"(?:[^"]++|"")*+"(?:[^,"][^,]*+)?|(?:[^,"][^,]*+)?)(?:,|$)'
+
+
+@gateway_cache
+def _line_columns() -> tuple[Column, Column, list[Column], Column]:
+    """(line number, head-action filter, head-action projection, body
+    filter) of ``read_mrf_csv``'s text scan."""
+    preamble = F.col("_line") < 2
+    nonblank = F.length(F.trim("value")) > 0
+    head_cols = [F.col("value"), F.col("_line"), F.input_file_block_start().alias("_start")]
+    return F.monotonically_increasing_id(), preamble | nonblank, head_cols, ~preamble & nonblank
+
+
+@gateway_cache
+def _body_columns(header: str, schema: str) -> tuple[Column, Column]:
+    """(not a copy of the header, the line's cells as struct ``r``) of a
+    body line; a line that ends inside an open quoted field raises."""
+    open_quote = F.regexp_replace("value", _OPEN_QUOTE_RE, "") != ""
+    line = F.when(
+        open_quote,
+        F.raise_error(
+            F.concat(
+                F.input_file_name(),
+                F.lit(": a quoted field spans lines, which this reader does not support: "),
+                F.substring("value", 1, 200),
+            )
+        ),
+    ).otherwise(F.col("value"))
+    cells = F.from_csv(line, schema, {"escape": '"'}).alias("r")
+    return F.col("value") != header, cells
 
 
 def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:
@@ -105,23 +139,30 @@ def explode_code_slots(df: DataFrame, available_cols: list[str]) -> DataFrame:
     skipped; raw type normalized (F7) and gated to the allowed set
     (R3). Adds ``code``, ``code_type``, ``code_type_raw`` columns.
     Slots absent from the source schema contribute nothing."""
-    slots = [
-        F.struct(
-            F.col(f"`code|{i}`").alias("code"),
-            F.col(f"`code|{i}|type`").alias("raw_type"),
-        )
-        for i in range(1, 5)
-        if f"code|{i}" in available_cols and f"code|{i}|type" in available_cols
+    cols = set(available_cols)
+    present = tuple(i for i in range(1, 5) if f"code|{i}" in cols and f"code|{i}|type" in cols)
+    slot, keep, code, raw, code_type = _slot_columns(present)
+    df = df.withColumn("_slot", slot).where(keep)
+    df = df.withColumn("code", code).withColumn("code_type_raw", raw)
+    return df.withColumn("code_type", code_type).drop("_slot")
+
+
+@gateway_cache
+def _slot_columns(slots: tuple[int, ...]) -> tuple[Column, ...]:
+    structs = [
+        F.struct(F.col(f"`code|{i}`").alias("code"), F.col(f"`code|{i}|type`").alias("raw_type"))
+        for i in slots
     ]
-    df = df.withColumn("_slot", F.explode(F.array(*slots)))
-    df = df.where((F.col("_slot.code") != "") & (F.col("_slot.raw_type") != ""))
-    df = df.withColumn("code", F.col("_slot.code")).withColumn(
-        "code_type_raw", F.col("_slot.raw_type")
+    return (
+        F.explode(F.array(*structs)),
+        (F.col("_slot.code") != "") & (F.col("_slot.raw_type") != ""),
+        F.col("_slot.code"),
+        F.col("_slot.raw_type"),
+        normalize_code_type_expr(F.col("code_type_raw")),
     )
-    df = df.withColumn("code_type", normalize_code_type_expr(F.col("code_type_raw")))
-    return df.drop("_slot")
 
 
+@gateway_cache
 def allowed_type() -> Column:
     """R3 keep predicate on the normalized code type; an unmapped
     (NULL) type is not allowed."""
@@ -132,29 +173,46 @@ def finalize_canonical(df: DataFrame, hospital_name: str = "", zip_code: str = "
     """Project to the canonical 22 columns in order, plus
     ``code_type_raw``, filling the registry-sourced identity columns
     and defaulting absences to ''."""
+    present = set(df.columns)
     out = df
-    if "hospital_name" not in out.columns:
+    if "hospital_name" not in present:
         out = out.withColumn("hospital_name", F.lit(hospital_name))
-    if "zip_code" not in out.columns:
+    if "zip_code" not in present:
         out = out.withColumn("zip_code", F.lit(zip_code))
-    for c in CANONICAL_COLUMNS:
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit("").cast(StringType()))
-    return out.select(*CANONICAL_COLUMNS, "code_type_raw")
+    present |= {"hospital_name", "zip_code"}
+    missing = tuple(c for c in CANONICAL_COLUMNS if c not in present)
+    if missing:
+        out = out.withColumns(_blank_columns(missing))
+    return out.select(*_canonical())
+
+
+@gateway_cache
+def _blank_columns(names: tuple[str, ...]) -> dict[str, Column]:
+    return {c: F.lit("").cast(StringType()) for c in names}
+
+
+@gateway_cache
+def _canonical() -> list[Column]:
+    """The canonical columns in order, then ``code_type_raw``."""
+    return [F.col(c) for c in [*CANONICAL_COLUMNS, "code_type_raw"]]
 
 
 def kept_charges(slots: DataFrame) -> DataFrame:
     """R3: the canonical charges table, i.e. the slots whose normalized
     type is allowed."""
-    return slots.where(allowed_type()).select(*CANONICAL_COLUMNS)
+    return slots.where(allowed_type()).select(*_canonical()[:-1])
 
 
 def unknown_type_keys(slots: DataFrame) -> DataFrame:
     """Devlog A3 keys: one row per slot R3 rejected, holding its raw
     type upper-cased and trimmed."""
-    return slots.where(~allowed_type()).select(
-        F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type")
-    )
+    rejected, key = _unknown_type_columns()
+    return slots.where(rejected).select(key)
+
+
+@gateway_cache
+def _unknown_type_columns() -> tuple[Column, Column]:
+    return ~allowed_type(), F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type")
 
 
 def unknown_type_histogram(slots: DataFrame) -> DataFrame:

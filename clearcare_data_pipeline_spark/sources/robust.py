@@ -16,22 +16,27 @@ executors; nothing driver-side.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CORRUPT_COL = "_corrupt_record"
 
 
+@contextmanager
 def read_csv_with_quarantine(
     spark: SparkSession,
     path: str,
     schema_ddl: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (parsed, quarantined) from a CSV with a header line.
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """Yields (parsed, quarantined) from a CSV with a header line.
     ``schema_ddl`` is the expected schema; lines that fail to parse
-    land in the quarantine frame with their raw text. The input is read
-    once per returned frame (two filtered scans, both
-    pushdown-friendly), never collected."""
+    land in the quarantine frame with their raw text. Both frames are
+    filters over one cached parse, never collected; the cache lives
+    for the ``with`` block and is released when the block exits, on
+    success or failure (both frames then recompute from the file)."""
     full_schema = f"{schema_ddl}, {CORRUPT_COL} string"
     raw = (
         spark.read.schema(full_schema)
@@ -43,11 +48,14 @@ def read_csv_with_quarantine(
         # column in filters (SPARK-38523); a projection materializes it.
         .cache()
     )
-    parsed = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    quarantined = raw.where(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_line")
-    )
-    return parsed, quarantined
+    try:
+        parsed = raw.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+        quarantined = raw.where(F.col(CORRUPT_COL).isNotNull()).select(
+            F.col(CORRUPT_COL).alias("raw_line")
+        )
+        yield parsed, quarantined
+    finally:
+        raw.unpersist()
 
 
 def read_binary_blobs(

@@ -4,10 +4,15 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 
+from clearcare_data_pipeline_spark import pipeline, session
 from clearcare_data_pipeline_spark.etl import export_reference_csv, run_etl
+from clearcare_data_pipeline_spark.functions import cleaning
+from clearcare_data_pipeline_spark.plans import metrics, rules
+from clearcare_data_pipeline_spark.sources import extract_tall, mrf
 from clearcare_data_pipeline_spark.schema import REFERENCE_HEADERS, REGISTRY_SCHEMA
 from clearcare_data_pipeline_spark.sources.registry import (
     CampusNotFound,
@@ -352,30 +357,84 @@ def _run_layout(spark, cid: str, registry: str, out: str):
     )
 
 
+# Cached builders the campus plan is made from, as the ETL's modules
+# call them.
+_CACHED_BUILDERS = [
+    (rules, "rule_predicates"),
+    (metrics, "_summary_aggs"),
+    (cleaning, "_price_columns"),
+    (pipeline, "_dedup_columns"),
+    (mrf, "allowed_type"),
+    (extract_tall, "split_payer_name_id"),
+]
+
+
+def _spy_builders(m, served: dict) -> None:
+    """Record every value the cached builders serve, by builder."""
+    for mod, name in _CACHED_BUILDERS:
+        def spy(*args, _real=getattr(mod, name), _name=name):
+            out = _real(*args)
+            served.setdefault(_name, []).append(out)
+            return out
+
+        m.setattr(mod, name, spy)
+
+
+def _count_round_trips(spark, run):
+    """``run()`` and the py4j commands this thread sent while it ran.
+    The handle deletes py4j's finalizer thread sends on its own timer
+    are left out, so the count does not depend on when they fall."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    me = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        result = run()
+    finally:
+        client.send_command = real
+    return result, len(sent)
+
+
 @pytest.fixture(scope="module")
 def layout_loop(spark, tmp_path_factory):
     """One session, one campus per raw layout, run back to back, each
-    under its own job group. Yields the registry path, output dir,
-    results, Spark jobs per campus and the RDDs that were persisted
+    under its own job group; then the same three campuses again, warm,
+    into a second output directory. Yields the registry path, the first
+    round's output dir and results, Spark jobs per campus (first round),
+    py4j round trips per campus (second round), the values the cached
+    builders served over both rounds, and the RDDs that were persisted
     before the loop began."""
     base = tmp_path_factory.mktemp("layouts")
     registry, out = str(base / "registry.parquet"), str(base / "out")
     _layout_registry(spark, registry)
     before = _persisted_ids(spark)
     sc = spark.sparkContext
-    results, jobs = {}, {}
-    for cid in _LAYOUTS:
-        group = f"test_etl.layout_loop.{cid}"
-        sc.setJobGroup(group, f"run_etl {cid}")
-        try:
-            results[cid] = _run_layout(spark, cid, registry, out)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs[cid] = len(sc.statusTracker().getJobIdsForGroup(group))
+    results, jobs, round_trips, served = {}, {}, {}, {}
+    with pytest.MonkeyPatch.context() as m:
+        _spy_builders(m, served)
+        for cid in _LAYOUTS:
+            group = f"test_etl.layout_loop.{cid}"
+            sc.setJobGroup(group, f"run_etl {cid}")
+            try:
+                results[cid] = _run_layout(spark, cid, registry, out)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            jobs[cid] = len(sc.statusTracker().getJobIdsForGroup(group))
+        for cid in _LAYOUTS:
+            _, round_trips[cid] = _count_round_trips(
+                spark, lambda: _run_layout(spark, cid, registry, str(base / "warm"))
+            )
     return {
         "registry": registry, "out": out, "results": results, "jobs": jobs,
-        "persisted_before": before,
+        "round_trips": round_trips, "served": served, "persisted_before": before,
     }
 
 
@@ -388,6 +447,50 @@ JOBS_PER_CAMPUS = {"tall_campus": 10, "json_campus": 10, "wide_campus": 11}
 
 def test_spark_jobs_per_campus(layout_loop):
     assert layout_loop["jobs"] == JOBS_PER_CAMPUS
+
+
+# py4j round trips per warm campus on the fixtures: the calls and
+# reflection lookups the campus's own thread sent. Before the
+# campus-invariant Columns were built once per gateway: tall 9,108, JSON
+# 9,793, wide 11,175. A builder that stops hitting its cache, or a new
+# per-campus Column tree, shows here.
+ROUND_TRIPS_PER_CAMPUS = {"tall_campus": 576, "json_campus": 580, "wide_campus": 619}
+
+
+def test_py4j_round_trips_per_campus(layout_loop):
+    assert layout_loop["round_trips"] == ROUND_TRIPS_PER_CAMPUS
+
+
+def test_cached_builders_serve_one_column_set(layout_loop):
+    # Every campus of both rounds got the same Column objects from each
+    # cached builder: none was rebuilt for a campus.
+    served = layout_loop["served"]
+    assert sorted(served) == sorted(name for _, name in _CACHED_BUILDERS)
+    for name, values in served.items():
+        assert len(values) >= 2, name
+        assert all(v is values[0] for v in values), name
+
+
+def test_cached_builders_rebuild_after_gateway_change(spark, layout_loop, monkeypatch, tmp_path):
+    # A new gateway (a restarted JVM) drops every entry: the builders
+    # build again, once, and the campus runs as before on the new Columns.
+    old = {name: getattr(mod, name) for mod, name in _CACHED_BUILDERS}
+    args = {
+        "split_payer_name_id": ("payer_name",),
+        "_dedup_columns": (("code_type_raw", "negotiated_algorithm_invalid"),),
+    }
+    cached = {name: build(*args.get(name, ())) for name, build in old.items()}
+    new_gateway = object()
+    monkeypatch.setattr(session, "_gateway", lambda: new_gateway)
+    rebuilt = {name: old[name](*args.get(name, ())) for name in cached}
+    for name in cached:
+        assert rebuilt[name] is not cached[name], name
+        assert old[name](*args.get(name, ())) is rebuilt[name], name
+    res = _run_layout(spark, "tall_campus", layout_loop["registry"], str(tmp_path / "out"))
+    with open(res.devlog_path) as f:
+        entry = json.load(f)[-1]
+    assert entry["rule_violation_counts"] == PINNED_DEVLOGS["tall_campus"]["rule_violation_counts"]
+    assert entry["transparency_score"] == PINNED_DEVLOGS["tall_campus"]["transparency_score"]
 
 
 @pytest.mark.parametrize("cid", sorted(_LAYOUTS))

@@ -282,6 +282,32 @@ def test_csv_reader_matches_pandas(spark, tmp_path, case):
     assert [list(r) for r in df.collect()] == want.values.tolist()
 
 
+# Bodies with a line that ends inside an open quoted field, by pandas'
+# rule: a quote opens a field only at the field's start, and "" inside
+# it is one quote. pandas reads each as one row whose cell holds the
+# newline; a line reader would split it into two broken rows.
+_SPANNING_BODIES = {
+    "cell_spans_lines": '1,"line one\nline two",3\n',
+    "doubled_quote_before_newline": '1,"a ""q""\nz",3\n',
+    "last_cell_open": '1,2,"open\nclosed"\n',
+}
+
+
+@pytest.mark.parametrize("case", sorted(_SPANNING_BODIES))
+def test_csv_reader_fails_on_a_quoted_cell_that_spans_lines(spark, tmp_path, case):
+    import io
+
+    import pandas as pd
+
+    text = _PRE + "a,b,c\n" + _SPANNING_BODIES[case]
+    assert len(pd.read_csv(io.StringIO(text), skiprows=2, dtype=str)) == 1
+    path = tmp_path / f"{case}.csv"
+    path.write_text(text)
+    _, df = read_mrf_csv(spark, str(path))
+    with pytest.raises(Exception, match="a quoted field spans lines"):
+        df.collect()
+
+
 def test_csv_reader_drops_preamble_only_in_first_split(spark, tmp_path):
     # Forced into many small splits, every line after the header is
     # read once, and only the file's own first lines are dropped.

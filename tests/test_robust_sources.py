@@ -5,12 +5,18 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from clearcare_data_pipeline_spark.sources.robust import (  # noqa: E402
     read_binary_blobs,
     read_csv_with_quarantine,
 )
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_csv_quarantine_splits_bad_lines(spark, tmp_path):
@@ -21,13 +27,25 @@ def test_csv_quarantine_splits_bad_lines(spark, tmp_path):
         "2,not_a_number,2024-01-02 00:00:00\n"   # bad double
         "3,7.25,2024-01-03 00:00:00\n"
     )
-    parsed, quarantined = read_csv_with_quarantine(
+    before = _persisted_ids(spark)
+    with read_csv_with_quarantine(
         spark, str(p), "id long, amount double, when timestamp"
-    )
-    good = sorted(r.id for r in parsed.collect())
-    bad = [r.raw_line for r in quarantined.collect()]
+    ) as (parsed, quarantined):
+        good = sorted(r.id for r in parsed.collect())
+        bad = [r.raw_line for r in quarantined.collect()]
+        assert len(_persisted_ids(spark) - before) == 1
     assert good == [1, 3]
     assert len(bad) == 1 and "not_a_number" in bad[0]
+    # the block owns the cache: released on exit, and on a failure too
+    assert _persisted_ids(spark) - before == set()
+    with pytest.raises(RuntimeError, match="injected"):
+        with read_csv_with_quarantine(spark, str(p), "id long, amount double, when timestamp") as (
+            parsed,
+            _,
+        ):
+            parsed.count()
+            raise RuntimeError("injected failure inside the block")
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_binary_blob_scan_feeds_multimodal(spark, tmp_path):

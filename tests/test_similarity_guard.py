@@ -291,3 +291,40 @@ def test_nearest_cell_is_null_without_a_defined_distance(spark):
     assert got["null_vec"] == (None, None, None)
     assert got["null_elem"] == (None, None, None)
     assert got["clean"] == (1, [1], [1, 0])
+
+
+def test_nprobe_oracle_cells_match_spark(spark):
+    """The emb_ivf_topk_nprobe2 oracle's cell order over a distance list
+    gives what nearest_expr and ivf_cells_expr give: the nearest cell and
+    the cells probed, ties toward the lower cell. A vector with no
+    defined distance has a NULL cell and probes nothing (the oracle's
+    list_sort used to keep index order there and probe cells [0, 1])."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from clearcare_data_pipeline_spark.queries.similarity import _order_cells_sql
+
+    cmat = F.array(*[F.array(F.lit(x), F.lit(y)) for x, y in [(0.0, 0.0), (5.0, 5.0), (0.0, 0.0)]])
+    df = spark.createDataFrame(
+        [("null_vec", None), ("null_elem", [1.0, None]), ("clean", [4.0, 4.0]), ("tie", [1.0, 1.0])],
+        "tag: string, dvec: array<double>",
+    )
+    rows = df.select(
+        "tag",
+        similarity._dists_expr(F.col("dvec"), cmat).alias("dists"),
+        similarity.nearest_expr(F.col("dvec"), cmat).alias("cell"),
+        similarity.ivf_cells_expr(F.col("dvec"), cmat, 2).alias("probes"),
+    ).collect()
+    order = _order_cells_sql("($1::DOUBLE[])")
+    got = {}
+    for r in rows:
+        dists = r.dists if r.dists is not None else [None, None, None]
+        cell, probes = duckdb.sql(f"SELECT ({order})[1], ({order})[1:2]", params=[dists]).fetchone()
+        assert (cell, probes) == (r.cell, r.probes or []), r.tag
+        got[r.tag] = (cell, probes)
+    assert got == {
+        "null_vec": (None, []),
+        "null_elem": (None, []),
+        "clean": (1, [1, 0]),
+        "tie": (0, [0, 2]),
+    }

@@ -272,7 +272,7 @@ def test_payer_split_re_parity(spark):
         "[solo]",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "s: string")
-    name_col, id_col = split_payer_name_id(F.col("s"))
+    name_col, id_col = split_payer_name_id("s")
     spark_rows = [
         (r["n"], r["i"]) for r in
         df.select(name_col.alias("n"), id_col.alias("i")).collect()
