@@ -22,8 +22,9 @@ from the tall one's). The last two rows count the py4j round trips
 the campus's thread sends on a warm JVM at sf0.01, before and after the
 campus-invariant Columns were built once per gateway
 (``session.gateway_cache``); py4j's finalizer thread adds its handle
-deletes on top (about 1,900 / 2,100 / 2,200 before, 130 / 200 / 220
-after):
+deletes on top (about 1,900 / 2,100 / 2,200 before, 210 / 180 / 330
+after). The wide file's melt is still built from its own header, one
+struct per payer column:
 
 =======================  ============  ============  ======================
 layer                    multi-pass    one pass      no Python
@@ -36,7 +37,7 @@ clean+quarantine sinks   2 / 2 / 2     2 / 2 / 2     2 / 2 / 2
 devlog                   11 / 10 / 11  2 / 2 / 2     2 / 2 / 2
 total                    27 / 25 / 28  14 / 13 / 15  10 / 11 / 11
 round trips, before                                  9,032 / 9,697 / 11,097
-round trips, after                                   585 / 578 / 619
+round trips, after                                   628 / 578 / 1,641
 =======================  ============  ============  ======================
 
 * registry: one snapshot, read on the driver with pyarrow (or the

@@ -107,31 +107,29 @@ def _gateway():
     return SparkContext._gateway
 
 
-# Entries kept per cached builder. Builders keyed on a file's header
-# (the CSV body parse, the wide melt) get one entry per header layout,
-# so an onboarding run over many hospital templates must not grow
-# without bound; the campus-invariant builders hold one to 22 entries.
-GATEWAY_CACHE_SIZE = 64
-
-
 def gateway_cache(build: Callable[..., T]) -> Callable[..., T]:
-    """A bounded ``functools.lru_cache`` for builders of Columns that do
-    not change from one campus to the next.
+    """A ``functools.cache`` for builders of Columns that do not change
+    from one campus to the next.
 
     A classic Column is a handle on a JVM object, and building one costs
     a py4j round trip per function applied. A builder whose output
     depends only on its hashable arguments and on import-time constants
     can build once and serve every later plan: Spark gives a Column's
-    expressions fresh IDs each time a plan uses it.
+    expressions fresh IDs each time a plan uses it. Keys must come from
+    a small fixed set (column names of the canonical schema, subsets of
+    them), never from a file's own content such as its header, which
+    differs from one hospital to the next and would only grow the memo.
 
-    The entries belong to the gateway they were built on. The cache
-    holds that gateway object (not its ``id``, which a new one could
-    reuse) and drops every entry when the current gateway differs, so a
-    restarted JVM never receives a dead handle. With no gateway (Spark
-    Connect) it is a plain memo. Results are shared: callers must not
-    mutate a returned list or dict. A builder that reads a module
+    The entries are tagged with the gateway object they were built on
+    and dropped when ``SparkContext._gateway`` holds a different one.
+    PySpark itself never swaps the gateway within a process (it sets it
+    once and ``stop()`` keeps it), so the check guards only against code
+    that resets ``SparkContext._gateway`` to start a new JVM; a JVM that
+    dies under the same gateway object is not detected. With no gateway
+    (Spark Connect) it is a plain memo. Results are shared: callers must
+    not mutate a returned list or dict. A builder that reads a module
     constant tests patch at call time must stay uncached."""
-    memo = functools.lru_cache(maxsize=GATEWAY_CACHE_SIZE)(build)
+    memo = functools.cache(build)
     owner = [None]
 
     @functools.wraps(build)

@@ -74,10 +74,9 @@ def extract_json(
     # The fields each struct holds: a file that never populates one
     # leaves it out of the inferred schema, and it reads as ''.
     schema = payers.schema
-    probed = tuple(
-        (s, tuple(f.name for f in schema[s].dataType.fields)) for s in ("ci", "item", "pi", "sc")
-    )
-    df = payers.select(*_json_columns(probed))
+    held = {s: {f.name for f in schema[s].dataType.fields} for s in ("ci", "item", "pi", "sc")}
+    populated = tuple(n for n, (s, f) in _FIELDS.items() if f.split(".")[0] in held[s])
+    df = payers.select(*_json_columns(populated))
     df = df.where(keep).withColumn("code_type", code_type)
     slots = finalize_canonical(
         df,
@@ -107,14 +106,11 @@ def _json_steps() -> tuple[Column, ...]:
 
 
 @gateway_cache
-def _json_columns(probed: tuple[tuple[str, tuple[str, ...]], ...]) -> list[Column]:
+def _json_columns(populated: tuple[str, ...]) -> list[Column]:
     """The canonical select list over the flattened rows, given the
-    fields each struct holds: a field the file never populates is ''."""
-    fields = dict(probed)
-
-    def read(struct: str, field: str) -> Column:
-        if field.split(".")[0] in fields[struct]:
-            return _s(F.col(f"{struct}.{field}"))
-        return F.lit("")
-
-    return [read(*where).alias(name) for name, where in _FIELDS.items()]
+    canonical columns whose source field the file populates; any other
+    reads as ''."""
+    return [
+        (_s(F.col(f"{struct}.{field}")) if name in populated else F.lit("")).alias(name)
+        for name, (struct, field) in _FIELDS.items()
+    ]

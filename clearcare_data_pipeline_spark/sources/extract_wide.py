@@ -87,49 +87,17 @@ def extract_wide(
     zip_code: str = "",
 ) -> ExtractResult:
     meta, raw = read_mrf_csv(spark, path)
-    columns = tuple(raw.columns)
-    row_id, cell, kept_cell, melted_cols = _melt_columns(columns)
-    unknown_slot, group_key, aggs, notes = _regroup_columns(columns)
 
-    # --- melt: one struct per payer cell, exploded; blanks skipped ---
-    melted = (
-        raw.withColumn("_row_id", row_id)
-        .withColumn("_cell", cell)
-        .where(kept_cell)
-        .select(*melted_cols)
-    )
-
-    # --- X1: code slots (cross with payer cells via the same row) ----
-    melted = explode_code_slots(melted, columns)
-    # Slots R3 will reject ride through the regroup as one group each,
-    # so the unknown-type histogram counts them as the melt emitted
-    # them; allowed slots all have a NULL key and group by (code, type,
-    # payer, plan) alone.
-    melted = melted.withColumn("_unknown_slot", unknown_slot)
-
-    # --- X2 regroup: last-write-wins per (code, type, payer, plan) ---
-    grouped = melted.groupBy(*group_key).agg(*aggs).drop("_unknown_slot")
-
-    # F11: additional notes = generic ⊕ payer note
-    grouped = grouped.withColumn("additional_notes", notes).drop("_generic_notes", "_payer_notes")
-    grouped = grouped.na.fill("")
-
-    slots = finalize_canonical(
-        grouped, hospital_name=hospital_name or meta.get("hospital_name", ""), zip_code=zip_code
-    )
-    return ExtractResult(slots=slots, metadata=meta)
-
-
-@gateway_cache
-def _melt_columns(columns: tuple[str, ...]) -> tuple[Column, Column, Column, list[Column]]:
-    """(row id, the payer cells exploded, the non-blank cell filter, the
-    melted row's columns) for a header's columns."""
-    # P5: classify payer columns from the schema (driver-side)
+    # --- P5: classify payer columns from the schema (driver-side) ----
     payer_cols: list[tuple[str, str, str, str]] = []  # (src, field, payer, plan)
-    for c in columns:
+    for c in raw.columns:
         parsed = parse_column_for_payer(c)
         if parsed and parsed[1].strip():
             payer_cols.append((c, *parsed))
+
+    # --- melt: one struct per payer cell, exploded; blanks skipped ---
+    row_id = F.monotonically_increasing_id()
+    df = raw.withColumn("_row_id", row_id)
     cells = F.array(
         *[
             F.struct(
@@ -141,26 +109,50 @@ def _melt_columns(columns: tuple[str, ...]) -> tuple[Column, Column, Column, lis
             for src, fieldname, payer, plan in payer_cols
         ]
     )
-    melted_cols = [
-        F.col("_row_id"),
-        *[F.col(f"`{c}`") for c in columns if parse_column_for_payer(c) is None],
-        F.col("_cell.field").alias("_field"),
-        F.col("_cell.payer").alias("payer_name"),
-        F.col("_cell.plan").alias("plan_name"),
-        F.col("_cell.value").alias("_value"),
-    ]
-    return F.monotonically_increasing_id(), F.explode(cells), F.col("_cell.value") != "", melted_cols
+    melted = (
+        df.withColumn("_cell", F.explode(cells))
+        .where(F.col("_cell.value") != "")
+        .select(
+            "_row_id",
+            *[F.col(f"`{c}`") for c in raw.columns if parse_column_for_payer(c) is None],
+            F.col("_cell.field").alias("_field"),
+            F.col("_cell.payer").alias("payer_name"),
+            F.col("_cell.plan").alias("plan_name"),
+            F.col("_cell.value").alias("_value"),
+        )
+    )
+
+    # --- X1: code slots (cross with payer cells via the same row) ----
+    melted = explode_code_slots(melted, raw.columns)
+    # Slots R3 will reject ride through the regroup as one group each,
+    # so the unknown-type histogram counts them as the melt emitted
+    # them; allowed slots all have a NULL key and group by (code, type,
+    # payer, plan) alone.
+    melted = melted.withColumn(
+        "_unknown_slot", F.when(~allowed_type(), F.monotonically_increasing_id())
+    )
+
+    # --- X2 regroup: last-write-wins per (code, type, payer, plan) ---
+    row_level = tuple(c for c in (*WIDE_ROW_MAP, "additional_generic_notes") if c in raw.columns)
+    grouped = melted.groupBy(
+        "code", "code_type", "code_type_raw", "payer_name", "plan_name", "_unknown_slot"
+    ).agg(*_regroup_aggs(row_level)).drop("_unknown_slot")
+
+    # F11: additional notes = generic ⊕ payer note
+    grouped = grouped.withColumn("additional_notes", _notes()).drop("_generic_notes", "_payer_notes")
+    grouped = grouped.na.fill("")
+
+    slots = finalize_canonical(
+        grouped, hospital_name=hospital_name or meta.get("hospital_name", ""), zip_code=zip_code
+    )
+    return ExtractResult(slots=slots, metadata=meta)
 
 
 @gateway_cache
-def _regroup_columns(columns: tuple[str, ...]) -> tuple[Column, list[Column], list[Column], Column]:
-    """(the unknown-slot key, the group key, the X2 aggregates, the F11
-    notes) for a header's columns."""
-    unknown_slot = F.when(~allowed_type(), F.monotonically_increasing_id())
-    group_key = [
-        F.col(c)
-        for c in ("code", "code_type", "code_type_raw", "payer_name", "plan_name", "_unknown_slot")
-    ]
+def _regroup_aggs(row_level: tuple[str, ...]) -> list[Column]:
+    """X2 aggregates, given the row-level source columns the file has:
+    each payer field's and each row-level column's value from the
+    group's last source row."""
     field_aggs = [
         F.max_by(F.when(F.col("_field") == f, F.col("_value")), F.when(F.col("_field") == f, F.col("_row_id")))
         .alias(f)
@@ -169,14 +161,19 @@ def _regroup_columns(columns: tuple[str, ...]) -> tuple[Column, list[Column], li
     row_level_aggs = [
         F.max_by(F.col(f"`{src}`"), F.col("_row_id")).alias(dst)
         for src, dst in WIDE_ROW_MAP.items()
-        if src in columns
+        if src in row_level
     ]
     generic_notes = (
         [F.max_by(F.col("additional_generic_notes"), F.col("_row_id")).alias("_generic_notes")]
-        if "additional_generic_notes" in columns
+        if "additional_generic_notes" in row_level
         else [F.first(F.lit("")).alias("_generic_notes")]
     )
-    notes = notes_concat(
+    return [*field_aggs, *row_level_aggs, *generic_notes]
+
+
+@gateway_cache
+def _notes() -> Column:
+    """F11: the generic note ⊕ the payer note."""
+    return notes_concat(
         F.coalesce(F.col("_generic_notes"), F.lit("")), F.coalesce(F.col("_payer_notes"), F.lit(""))
     )
-    return unknown_slot, group_key, [*field_aggs, *row_level_aggs, *generic_notes], notes

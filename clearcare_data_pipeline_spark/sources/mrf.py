@@ -79,17 +79,9 @@ def read_mrf_csv(spark: SparkSession, path: str) -> tuple[dict[str, str], DataFr
     case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     names = _safe_header(next(csv.reader([header])), case_sensitive)
     schema = ", ".join(f"`{n.replace('`', '``')}` STRING" for n in names)
-    not_header, cells = _body_columns(header, schema)
-    body = lines.where(body_keep & not_header)
-    return meta, body.select(cells).select("r.*").na.fill("")
-
-
-# Strips one complete field per match, each starting where the last one
-# ended (``\G``), by pandas' quoting rule: a quote opens a field only at
-# the field's start, ``""`` inside it is one quote, and the closing quote
-# may be followed by unquoted text. What is left of a line starts a
-# quoted field that the line does not close.
-_OPEN_QUOTE_RE = r'\G(?:"(?:[^"]++|"")*+"(?:[^,"][^,]*+)?|(?:[^,"][^,]*+)?)(?:,|$)'
+    body = lines.where(body_keep & (F.col("value") != header))
+    cells = F.from_csv(_checked_line(), schema, {"escape": '"'})
+    return meta, body.select(cells.alias("r")).select("r.*").na.fill("")
 
 
 @gateway_cache
@@ -102,12 +94,20 @@ def _line_columns() -> tuple[Column, Column, list[Column], Column]:
     return F.monotonically_increasing_id(), preamble | nonblank, head_cols, ~preamble & nonblank
 
 
+# Strips one complete field per match, each starting where the last one
+# ended (``\G``), by pandas' quoting rule: a quote opens a field only at
+# the field's start, ``""`` inside it is one quote, and the closing quote
+# may be followed by unquoted text. What is left of a line starts a
+# quoted field that the line does not close.
+_OPEN_QUOTE_RE = r'\G(?:"(?:[^"]++|"")*+"(?:[^,"][^,]*+)?|(?:[^,"][^,]*+)?)(?:,|$)'
+
+
 @gateway_cache
-def _body_columns(header: str, schema: str) -> tuple[Column, Column]:
-    """(not a copy of the header, the line's cells as struct ``r``) of a
-    body line; a line that ends inside an open quoted field raises."""
+def _checked_line() -> Column:
+    """A body line's text; a line that ends inside an open quoted field
+    raises."""
     open_quote = F.regexp_replace("value", _OPEN_QUOTE_RE, "") != ""
-    line = F.when(
+    return F.when(
         open_quote,
         F.raise_error(
             F.concat(
@@ -117,8 +117,6 @@ def _body_columns(header: str, schema: str) -> tuple[Column, Column]:
             )
         ),
     ).otherwise(F.col("value"))
-    cells = F.from_csv(line, schema, {"escape": '"'}).alias("r")
-    return F.col("value") != header, cells
 
 
 def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:

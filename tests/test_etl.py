@@ -347,11 +347,11 @@ def _layout_registry(spark, path: str) -> None:
     spark.createDataFrame(rows, REGISTRY_SCHEMA).write.mode("overwrite").parquet(path)
 
 
-def _run_layout(spark, cid: str, registry: str, out: str):
+def _run_layout(spark, cid: str, registry: str, out: str, raw_dir: str = FIX):
     return run_etl(
         spark,
         campus_id=cid,
-        raw_path=f"{FIX}/{_LAYOUTS[cid][1]}",
+        raw_path=f"{raw_dir}/{_LAYOUTS[cid][1]}",
         registry_path=registry,
         output_dir=out,
     )
@@ -405,14 +405,24 @@ def _count_round_trips(spark, run):
 @pytest.fixture(scope="module")
 def layout_loop(spark, tmp_path_factory):
     """One session, one campus per raw layout, run back to back, each
-    under its own job group; then the same three campuses again, warm,
-    into a second output directory. Yields the registry path, the first
-    round's output dir and results, Spark jobs per campus (first round),
-    py4j round trips per campus (second round), the values the cached
-    builders served over both rounds, and the RDDs that were persisted
-    before the loop began."""
+    under its own job group; then the three campuses again, warm, into a
+    second output directory, from copies of the files that name a payer
+    differently. The wide file carries payer names in its header, so no
+    Column keyed on a file's own header can serve the second round, as
+    none could serve the next hospital's file. Yields the registry path,
+    the first round's output dir and results, Spark jobs per campus
+    (first round), py4j round trips per campus (second round), the
+    values the cached builders served over both rounds, and the RDDs
+    that were persisted before the loop began."""
     base = tmp_path_factory.mktemp("layouts")
     registry, out = str(base / "registry.parquet"), str(base / "out")
+    renamed = base / "renamed"
+    renamed.mkdir()
+    for _, name in _LAYOUTS.values():
+        with open(f"{FIX}/{name}") as f:
+            text = f.read()
+        assert "Aetna" in text, name
+        (renamed / name).write_text(text.replace("Aetna", "Aetna Health"))
     _layout_registry(spark, registry)
     before = _persisted_ids(spark)
     sc = spark.sparkContext
@@ -430,7 +440,7 @@ def layout_loop(spark, tmp_path_factory):
             jobs[cid] = len(sc.statusTracker().getJobIdsForGroup(group))
         for cid in _LAYOUTS:
             _, round_trips[cid] = _count_round_trips(
-                spark, lambda: _run_layout(spark, cid, registry, str(base / "warm"))
+                spark, lambda: _run_layout(spark, cid, registry, str(base / "warm"), str(renamed))
             )
     return {
         "registry": registry, "out": out, "results": results, "jobs": jobs,
@@ -452,9 +462,11 @@ def test_spark_jobs_per_campus(layout_loop):
 # py4j round trips per warm campus on the fixtures: the calls and
 # reflection lookups the campus's own thread sent. Before the
 # campus-invariant Columns were built once per gateway: tall 9,108, JSON
-# 9,793, wide 11,175. A builder that stops hitting its cache, or a new
-# per-campus Column tree, shows here.
-ROUND_TRIPS_PER_CAMPUS = {"tall_campus": 576, "json_campus": 580, "wide_campus": 619}
+# 9,793, wide 11,175. What is left is mostly the plan's own DataFrame
+# calls and, for wide, the melt built from the file's header. A builder
+# that stops hitting its cache, or a new per-campus Column tree, shows
+# here.
+ROUND_TRIPS_PER_CAMPUS = {"tall_campus": 619, "json_campus": 580, "wide_campus": 1719}
 
 
 def test_py4j_round_trips_per_campus(layout_loop):
@@ -472,8 +484,10 @@ def test_cached_builders_serve_one_column_set(layout_loop):
 
 
 def test_cached_builders_rebuild_after_gateway_change(spark, layout_loop, monkeypatch, tmp_path):
-    # A new gateway (a restarted JVM) drops every entry: the builders
-    # build again, once, and the campus runs as before on the new Columns.
+    # A different object in SparkContext._gateway (code that replaced
+    # it to start a new JVM; PySpark itself never does) drops every
+    # entry: the builders build again, once, and the campus runs as
+    # before on the new Columns.
     old = {name: getattr(mod, name) for mod, name in _CACHED_BUILDERS}
     args = {
         "split_payer_name_id": ("payer_name",),
