@@ -205,40 +205,6 @@ def _append_devlog(path: str, entry: dict) -> None:
             os.remove(tmp)
 
 
-def write_jdbc(
-    df,
-    url: str,
-    table: str,
-    *,
-    mode: str = "append",
-    batch_size: int = 10_000,
-    num_partitions: int | None = None,
-    isolation_level: str = "READ_COMMITTED",
-    **properties: str,
-) -> None:
-    """K7: relational sink via Spark's JDBC writer.
-
-    The reference declares a Postgres dependency but ships no sink code
-    (requirements.txt:12; hospital_enricher.py never opens a
-    connection), so this is parity-plus: a thin adapter over
-    ``df.write.jdbc`` with the two options that matter at scale —
-    ``batchsize`` (rows per INSERT round-trip) and ``numPartitions``
-    (concurrent connections; cap it well below the database's
-    connection limit, executors x cores parallel writers is a DDoS on
-    a single Postgres). Credentials ride in ``properties``
-    (user/password/driver), never in the URL.
-    """
-    if mode not in ("append", "overwrite", "ignore", "error", "errorifexists"):
-        raise ValueError(f"unsupported JDBC save mode: {mode!r}")
-    out = df.coalesce(num_partitions) if num_partitions else df
-    props = {
-        "batchsize": str(batch_size),
-        "isolationLevel": isolation_level,
-        **{k: str(v) for k, v in properties.items()},
-    }
-    out.write.jdbc(url, table, mode=mode, properties=props)
-
-
 def export_reference_csv(df, path: str) -> None:
     """K1/K2: export canonical parquet back to the reference's exact
     CSV layout (space-separated headers, every field quoted)."""

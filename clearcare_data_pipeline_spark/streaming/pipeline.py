@@ -8,8 +8,6 @@ stream).
   reference's append-mode chunk loop, cleaning_utils.py:163-208). Each
   batch overwrites its own ``batch_id={id}`` directory, so a replayed
   batch rewrites its rows instead of appending them again.
-* ``stream_event_window_counts``: watermarked tumbling-window counts
-  over an event stream — late data beyond the watermark is dropped.
 
 Global dedup is per-micro-batch here (the reference's chunk-local
 dedup, D1 — exactly its semantics); cross-batch exact dedup would add
@@ -19,7 +17,6 @@ dedup, D1 — exactly its semantics); cross-batch exact dedup would add
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from clearcare_data_pipeline_spark.pipeline import clean_charges
@@ -58,98 +55,3 @@ def stream_clean(
     )
     return writer.trigger(availableNow=True).start()
 
-
-def stream_event_window_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> StreamingQuery:
-    """Watermarked tumbling-window counts over JSON event files
-    (schema: ts timestamp, event_type string, value double)."""
-    events = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .json(input_dir)
-        .withWatermark("ts", watermark)
-    )
-    counts = (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-    )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    return writer.trigger(availableNow=True).start()
-
-
-def stream_dedup_events(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    watermark: str = "1 hour",
-) -> StreamingQuery:
-    """Streaming exact dedup on event_id within the watermark horizon
-    (``dropDuplicatesWithinWatermark``): state for an id is kept only
-    until the watermark passes it — the bounded-state streaming analog
-    of batch dropDuplicates."""
-    events = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string, value double")
-        .json(input_dir)
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    writer = (
-        events.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    return writer.trigger(availableNow=True).start()
-
-
-def stream_session_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> StreamingQuery:
-    """Watermarked session-window aggregation per user: events closer
-    than ``gap`` merge into one session; a session emits once the
-    watermark passes its close (append mode). State per in-flight
-    session only — the streaming twin of the batch sessionization
-    query (queries/eventsops.py)."""
-    events = (
-        spark.readStream.schema("user_id long, ts timestamp, event_type string, value double")
-        .json(input_dir)
-        .withWatermark("ts", watermark)
-    )
-    sessions = (
-        events.groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    return writer.trigger(availableNow=True).start()

@@ -242,24 +242,6 @@ def test_export_reference_csv(spark, registry_path, tmp_path):
     assert back.count() == res.clean_rows
 
 
-def test_write_jdbc_validates_and_reaches_jdbc_layer(spark, tmp_path):
-    """K7 parity-plus: the sink rejects bad modes up front, and with no
-    JDBC driver on the classpath the configured write surfaces the JVM's
-    driver-resolution error (proof the plumbing reaches the JDBC data
-    source, the only integration available in this sandbox)."""
-    import pytest
-
-    from clearcare_data_pipeline_spark.etl import write_jdbc
-
-    df = spark.createDataFrame([(1, "a")], ["id", "v"])
-    with pytest.raises(ValueError, match="save mode"):
-        write_jdbc(df, "jdbc:sqlite:x.db", "t", mode="replace")
-    with pytest.raises(Exception, match="(?i)driver|jdbc"):
-        write_jdbc(
-            df, f"jdbc:sqlite:{tmp_path}/t.db", "t", mode="overwrite", num_partitions=1
-        )
-
-
 # --- one campus per layout: devlog pins, cache release, atomic devlog ---
 
 _LAYOUTS = {

@@ -105,65 +105,3 @@ def test_broadcast_auto_switch(spark, monkeypatch):
     key = lambda r: (r["doc_id"], r["n_trigrams"], r["avg_logprob"])
     assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
 
-
-def test_streaming_scoring_matches_batch(spark, tmp_path, monkeypatch):
-    """Two microbatches of docs scored against a static model come out
-    identical to batch scoring of the same docs, and the model's size
-    is probed once per stream, not once per microbatch."""
-    import json
-
-    from clearcare_data_pipeline_spark.operators.textstats import (
-        doc_trigram_counts,
-        score_trigram_counts,
-        trigram_lm_model_from_counts,
-    )
-    from clearcare_data_pipeline_spark.streaming import lmscore
-
-    probes = []
-    real = lmscore.broadcast_if_small
-    monkeypatch.setattr(
-        lmscore, "broadcast_if_small", lambda m: probes.append(m) or real(m)
-    )
-
-    train = spark.createDataFrame(
-        [(100, "a b a b a"), (101, "a b c a b c"), (102, "b a b a b")],
-        ["doc_id", "text"],
-    )
-    model = trigram_lm_model_from_counts(doc_trigram_counts(train)).localCheckpoint()
-
-    inp = tmp_path / "docs_in"
-    inp.mkdir()
-    (inp / "b1.json").write_text(json.dumps({"doc_id": 1, "text": "a b a b"}))
-    (inp / "b2.json").write_text(
-        json.dumps({"doc_id": 2, "text": "a b c"})
-        + "\n"
-        + json.dumps({"doc_id": 3, "text": "z z z z"})  # fully out-of-model
-    )
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(inp))
-    )
-    q = lmscore.run_lm_scoring_stream(
-        stream,
-        model,
-        str(tmp_path / "scored"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r.doc_id: (r.n_trigrams, r.avg_logprob, r.perplexity)
-        for r in spark.read.parquet(str(tmp_path / "scored")).collect()
-    }
-    batch_docs = spark.createDataFrame(
-        [(1, "a b a b"), (2, "a b c"), (3, "z z z z")], ["doc_id", "text"]
-    )
-    want = {
-        r.doc_id: (r.n_trigrams, r.avg_logprob, r.perplexity)
-        for r in score_trigram_counts(doc_trigram_counts(batch_docs), model).collect()
-    }
-    assert got == want
-    assert len(probes) == 1
-    assert 3 not in got  # out-of-model doc yields no row (inner join)
-    assert set(got) == {1, 2}
