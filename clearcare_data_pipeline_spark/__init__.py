@@ -5,8 +5,8 @@ reference healthcare price-transparency pipeline
 (Nikitha-Masineni/ClearCare-Data-Pipeline; see SURVEY.md), extended with
 the operators a large-scale (100 TB) training-data pipeline needs:
 deduplication (exact / MinHash-LSH / SimHash / n-gram Jaccard /
-embedding near-dup), similarity search, text analysis, windowed event
-analytics and structured-streaming ingestion.
+embedding near-dup), similarity search, text analysis and windowed
+event analytics.
 
 Design stance (SURVEY.md §7): DataFrame/SQL only — declare logical
 plans, let Catalyst/Tungsten choose physical strategy. Python UDFs only

@@ -220,7 +220,7 @@ def trigram_lm_perplexity(
 def trigram_lm_model_from_counts(doctri: DataFrame) -> DataFrame:
     """(w1, w2, w3, lp) LM table from per-document trigram counts —
     the trainable half of ``trigram_lm_perplexity``, reusable against
-    any corpus (or a document STREAM, see streaming/lmscore.py).
+    any corpus.
     Prefix totals come from a window over the VOCABULARY-sized trigram
     table (not a second aggregate + join): one subtree, one cheap
     sort."""

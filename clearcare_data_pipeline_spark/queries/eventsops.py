@@ -2,9 +2,8 @@
 
 Beyond-reference operators (SURVEY.md §7 Milestone 3): tumbling and
 sliding time windows, gap-based sessionization, JSON property
-extraction, and per-type stats. The same transformations run under
-Structured Streaming in clearcare_data_pipeline_spark/streaming/ —
-here they are expressed in batch for the oracle gate.
+extraction, and per-type stats, expressed in batch for the oracle
+gate.
 
 Session semantics note: Spark's ``session_window(ts, gap)`` closes a
 session when the next event is >= last_ts + gap (windows are
