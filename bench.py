@@ -42,25 +42,12 @@ from clearcare_data_pipeline_spark.session import get_spark  # noqa: E402
 # times are ~10x sf0.1 so the median stabilizes with fewer repeats).
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
-# Reference calibration time (seconds) for the machine-epoch
-# normalizer — pinned from the first artifact that carried
-# calibration_sec (round 11, this machine, otherwise idle). None
-# disables the normalized headline (raw-only artifact); it is set to
-# the measured value once, below, and then NEVER retuned — retuning
-# would silently re-baseline every cross-round comparison.
-#
-# RE-PIN PROCEDURE (only when the FLEET MACHINE changes, never for
-# drift — drift is exactly what the normalizer corrects): (1) on the
-# new machine, idle, run `python bench.py` twice and confirm the two
-# calibration_sec medians agree within 5%; (2) set CAL_REF_SEC to the
-# first run's value and record machine + date in this comment; (3) from
-# then on, calibrated numbers are comparable only WITHIN the new epoch
-# — note the epoch break in the round's SCALING file. The printed
-# calibration_spread (below) is the in-run stability check: a spread
-# above CAL_SPREAD_SUSPECT of the median marks the whole artifact
-# suspect (calibration_unstable: true) because the normalizer itself
-# was moving while measuring.
-CAL_REF_SEC: float | None = 1.667  # BENCH_local_r11.json, 2026-08-16
+# The calibration probe (below) is reported as a raw machine-speed
+# reading, never as a divisor of the headline: it is throughput-bound,
+# while the headline is bound by scheduling, so their ratio does not
+# carry from one machine to another. A spread above CAL_SPREAD_SUSPECT
+# of its median marks the artifact calibration_unstable: the machine
+# was moving while it was measured.
 CAL_SPREAD_SUSPECT = 0.15
 
 # The driver's artifact keeps roughly this many tail characters of
@@ -91,11 +78,6 @@ def compact_record(
         "calibration_sec": calibration_sec,
         "calibration_spread": calibration_spread,
         **({"calibration_unstable": True} if calibration_unstable else {}),
-        **(
-            {"value_calibrated": round(total * CAL_REF_SEC / calibration_sec, 3)}
-            if CAL_REF_SEC and calibration_sec
-            else {}
-        ),
         **({"steal_pct": steal_pct} if steal_pct is not None else {}),
         "sf": sf,
     }
@@ -403,15 +385,12 @@ def main() -> None:
     # Machine-epoch calibration (VERDICT r10 #6): sf0.1 round-over-round
     # headline deltas drift ±30% with the machine-day (pinned twice by
     # identical-code A/B re-runs, r9 and r10). This fixed, data-free,
-    # pure-codegen scan-agg measures TODAY's machine speed so the
-    # artifact can carry a normalized headline alongside the raw one:
-    # value_calibrated = value * CAL_REF_SEC / calibration_sec. It runs
-    # HERE — right after JIT warmup, before any sf-sized work — because
-    # it must reflect the machine, not the session's accumulated heap:
-    # measured 2.98 s after an sf10 charges derivation vs 1.67 s clean
-    # (r11), so placement is load-bearing. Round-over-round tables
-    # should compare the CALIBRATED number; the raw number remains what
-    # BASELINE.md ratios use.
+    # pure-codegen scan-agg measures TODAY's machine speed, recorded
+    # beside the raw headline as calibration_sec. It runs HERE — right
+    # after JIT warmup, before any sf-sized work — because it must
+    # reflect the machine, not the session's accumulated heap: measured
+    # 2.98 s after an sf10 charges derivation vs 1.67 s clean (r11), so
+    # placement is load-bearing.
     cal_runs = _time_runs(
         # the inner modulo keeps the ANSI-mode sum far below 2^63
         # (8e9 rows x <1e5 per row) while the per-row arithmetic still
@@ -425,7 +404,7 @@ def main() -> None:
     calibration_sec = round(statistics.median(cal_runs), 3)
     # spread of the calibration runs themselves: if the machine-speed
     # probe can't repeat within CAL_SPREAD_SUSPECT of its median, the
-    # normalizer is unreliable this run and the artifact says so
+    # machine was not steady this run and the artifact says so
     calibration_spread = round(max(cal_runs) - min(cal_runs), 3)
     calibration_unstable = bool(
         calibration_sec and calibration_spread > CAL_SPREAD_SUSPECT * calibration_sec
@@ -524,15 +503,6 @@ def main() -> None:
                 "calibration_sec": calibration_sec,
                 "calibration_spread": calibration_spread,
                 **({"calibration_unstable": True} if calibration_unstable else {}),
-                **(
-                    {
-                        "value_calibrated": round(
-                            total * CAL_REF_SEC / calibration_sec, 3
-                        )
-                    }
-                    if CAL_REF_SEC and calibration_sec
-                    else {}
-                ),
                 # hypervisor steal over the whole timed window and per
                 # query (VERDICT r13 #1): steal_pct near 0 = quiet host;
                 # a double-digit run-level value, or a spike on one

@@ -28,7 +28,6 @@ def test_compact_record_carries_contract_fields():
         assert key in rec, key
     assert rec["unit"] == "sec"
     assert rec["metric"] == "headline_queries_total_sec"
-    assert "value_calibrated" in rec  # CAL_REF_SEC is pinned non-None
     assert "calibration_unstable" not in rec
 
 
