@@ -1,10 +1,10 @@
-"""Join operators Spark lacks natively: the range join, and fuzzy and
-similarity joins with banded or blocked candidates.
+"""Join operators Spark lacks natively: the as-of and range joins, and
+fuzzy and similarity joins with banded or blocked candidates.
 
 Each is re-expressed as a composition of existing DataFrame ops
 (keyed equi-join + predicate + dedup window), so Catalyst plans it
 as an ordinary hash/sort-merge join keyed on the equality columns — the
-range predicate rides along as a post-join filter, and the join is
+temporal predicate rides along as a post-join filter, and the join is
 co-located when both sides are pre-partitioned on the key. No UDFs,
 no per-partition imperative logic.
 """
@@ -27,6 +27,92 @@ from clearcare_data_pipeline_spark.operators.dedup import (
 FUZZY_NGRAM = 3
 FUZZY_NUM_HASHES = 6
 FUZZY_ROWS_PER_BAND = 2
+
+
+def asof_join(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    on: list[tuple[str, str]],
+    left_ts: str,
+    right_ts: str,
+    direction: str = "backward",
+    tolerance: Column | None = None,
+    how: str = "inner",
+) -> DataFrame:
+    """For each left row, the single closest right row by timestamp.
+
+    ``on``: (left_col, right_col) equality pairs. ``direction``:
+    'backward' matches the latest right_ts <= left_ts, 'forward' the
+    earliest right_ts >= left_ts. ``tolerance``: optional max interval
+    column/literal (e.g. ``F.expr("INTERVAL 7 DAYS")``). ``how`` in
+    {'inner', 'left'} — 'left' keeps unmatched left rows with NULLs.
+
+    Plan shape: equi-join on the keys, temporal predicate as filter,
+    then a row_number window keyed by the left row to keep the single
+    nearest match (ties broken by all right columns descending /
+    ascending for determinism only when right_ts ties — callers
+    needing total determinism should pass a unique right_ts or dedup
+    the right side first).
+
+    When both sides name their timestamp the same (the common case,
+    e.g. both ``ts``), the right timestamp is emitted with a
+    ``_right`` suffix — pandas ``merge_asof`` convention. All
+    temporal predicates are built from the qualified parent columns
+    (``left[left_ts]`` / ``right[right_ts]``), never bare ``F.col``,
+    so same-named columns cannot trip an ambiguous-reference error.
+    """
+    if direction not in ("backward", "forward"):
+        raise ValueError("direction must be 'backward' or 'forward'")
+    if how not in ("inner", "left"):
+        raise ValueError("how must be 'inner' or 'left'")
+    r_keys = {rc for _, rc in on}
+    r_ts_out = right_ts
+    if right_ts in left.columns and right_ts not in r_keys:
+        r_ts_out = right_ts + "_right"
+        if r_ts_out in left.columns or r_ts_out in right.columns:
+            raise ValueError(f"cannot disambiguate timestamp column {right_ts!r}: "
+                             f"{r_ts_out!r} already exists")
+        right = right.withColumnRenamed(right_ts, r_ts_out)
+    lt, rt = left[left_ts], right[r_ts_out]
+    cond = None
+    for lc, rc in on:
+        c = left[lc] == right[rc]
+        cond = c if cond is None else (cond & c)
+    temporal = rt <= lt if direction == "backward" else rt >= lt
+    cond = temporal if cond is None else (cond & temporal)
+    if tolerance is not None:
+        bound = (lt - tolerance <= rt) if direction == "backward" else (rt <= lt + tolerance)
+        cond = cond & bound
+
+    # Output = left columns + right's non-key columns. Right-side key
+    # columns are redundant (equal by construction); any OTHER name
+    # collision is ambiguous and rejected rather than silently renamed.
+    r_cols = [c for c in right.columns if c not in r_keys]
+    collisions = set(r_cols) & set(left.columns)
+    if collisions:
+        raise ValueError(f"rename right-side columns colliding with left: {sorted(collisions)}")
+
+    lid = "_asof_lid"
+    lkeyed = left.withColumn(lid, F.monotonically_increasing_id())
+    joined = lkeyed.join(right, cond, "inner").select(
+        *[lkeyed[c] for c in lkeyed.columns], *[right[c] for c in r_cols]
+    )
+    # Order by the right timestamp as it appears in the joined output;
+    # when right_ts doubles as an equality key it is constant within
+    # each left row's partition and any order picks the same row.
+    order_key = r_ts_out if r_ts_out in r_cols else left_ts
+    order = [F.desc(order_key)] if direction == "backward" else [F.asc(order_key)]
+    w = Window.partitionBy(lid).orderBy(*order)
+    best = joined.withColumn("_asof_rn", F.row_number().over(w)).where(
+        F.col("_asof_rn") == 1
+    ).drop("_asof_rn")
+    if how == "left":
+        missing = lkeyed.join(best.select(lid), lid, "left_anti")
+        for c in r_cols:
+            missing = missing.withColumn(c, F.lit(None).cast(right.schema[c].dataType))
+        best = best.unionByName(missing.select(*best.columns))
+    return best.drop(lid)
 
 
 def range_join(

@@ -94,3 +94,16 @@ def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = 
     for name in tables or TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
+
+def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """Raw text ingestion: one document per line (the common one-doc-
+    per-line corpus dump). Adds a stable ``doc_id`` derived from
+    (file, line content) — deterministic across re-runs and
+    repartitioning, unlike monotonically_increasing_id. Identical
+    lines in the same file collapse to the same id, which downstream
+    exact-dedup would do anyway."""
+    raw = spark.read.text(path)
+    return raw.select(
+        F.xxhash64(F.input_file_name(), F.col("value")).alias("doc_id"),
+        F.col("value").alias("text"),
+    ).where(F.length(F.trim("text")) > 0)

@@ -1,13 +1,17 @@
 """Edge-case property tests for the round-3 operator fixes
-(VERDICT r4 ask #5): salted_join degenerate salt count under AQE and
-chunk_documents at an exact stride-boundary document length.
+(VERDICT r4 ask #5): salted_join degenerate salt count under AQE,
+asof_join tolerance at exact boundary equality, chunk_documents at an
+exact stride-boundary document length.
 """
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.operators.chunking import chunk_documents
+from clearcare_data_pipeline_spark.operators.joins import asof_join
 from clearcare_data_pipeline_spark.operators.skew import salted_join
 
 
@@ -36,6 +40,60 @@ def test_salted_join_num_salts_1_under_aqe(spark):
     got_left = salted_join(fact2, dim, ["k"], num_salts=1, how="left")
     want_left = fact2.join(dim, ["k"], "left")
     assert sorted(got_left.collect()) == sorted(want_left.collect())
+
+
+def test_asof_tolerance_exact_boundary(spark):
+    """A right row exactly ``tolerance`` before the left timestamp is
+    INSIDE the window (bound is inclusive: lt - tol <= rt, matching
+    pandas merge_asof); one second beyond is outside."""
+    left = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 12, 0, 0))], ["k", "ts"]
+    )
+    # exactly 60s before, and 61s before
+    right = spark.createDataFrame(
+        [
+            (1, datetime(2024, 1, 1, 11, 59, 0), "at_boundary"),
+            (1, datetime(2024, 1, 1, 11, 58, 59), "beyond"),
+        ],
+        ["k", "rts", "tag"],
+    )
+    got = asof_join(
+        left,
+        right,
+        on=[("k", "k")],
+        left_ts="ts",
+        right_ts="rts",
+        direction="backward",
+        tolerance=F.expr("INTERVAL 60 SECONDS"),
+    ).collect()
+    assert len(got) == 1 and got[0]["tag"] == "at_boundary"
+
+    # shrink tolerance by 1s: the boundary row falls out -> no match
+    got_none = asof_join(
+        left,
+        right,
+        on=[("k", "k")],
+        left_ts="ts",
+        right_ts="rts",
+        direction="backward",
+        tolerance=F.expr("INTERVAL 59 SECONDS"),
+    ).collect()
+    assert got_none == []
+
+    # forward direction mirror: right row exactly tolerance after matches
+    right_fwd = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 12, 1, 0), "fwd_boundary")], ["k", "rts", "tag"]
+    )
+    got_fwd = asof_join(
+        left,
+        right_fwd,
+        on=[("k", "k")],
+        left_ts="ts",
+        right_ts="rts",
+        direction="forward",
+        tolerance=F.expr("INTERVAL 60 SECONDS"),
+    ).collect()
+    assert len(got_fwd) == 1 and got_fwd[0]["tag"] == "fwd_boundary"
 
 
 def test_chunk_documents_at_stride_boundary(spark):

@@ -1,8 +1,65 @@
-"""range_join and banded fuzzy join operator semantics."""
+"""asof_join / range_join operator semantics."""
 
 from pyspark.sql import functions as F
 
-from clearcare_data_pipeline_spark.operators.joins import range_join
+from clearcare_data_pipeline_spark.operators.joins import asof_join, range_join
+
+
+def _trades(spark):
+    return spark.createDataFrame(
+        [("A", 10, "t1"), ("A", 25, "t2"), ("B", 12, "t3"), ("A", 3, "t0")],
+        "sym string, t long, trade string",
+    ).withColumn("t", F.timestamp_seconds("t"))
+
+
+def _quotes(spark):
+    return spark.createDataFrame(
+        [("A", 5, 100.0), ("A", 20, 101.0), ("A", 30, 102.0), ("C", 1, 9.0)],
+        "sym string, qt long, px double",
+    ).withColumn("qt", F.timestamp_seconds("qt"))
+
+
+def test_asof_backward(spark):
+    out = asof_join(
+        _trades(spark), _quotes(spark), on=[("sym", "sym")], left_ts="t", right_ts="qt"
+    )
+    got = {r["trade"]: r["px"] for r in out.collect()}
+    # t0 (t=3) has no quote at/before it; t1 (10) -> qt5; t2 (25) -> qt20
+    assert got == {"t1": 100.0, "t2": 101.0}
+
+
+def test_asof_forward_with_left(spark):
+    out = asof_join(
+        _trades(spark),
+        _quotes(spark),
+        on=[("sym", "sym")],
+        left_ts="t",
+        right_ts="qt",
+        direction="forward",
+        how="left",
+    )
+    got = {r["trade"]: r["px"] for r in out.collect()}
+    # forward: t0 (3) -> qt5; t1 (10) -> qt20; t2 (25) -> qt30; B has no quotes -> NULL
+    assert got == {"t0": 100.0, "t1": 101.0, "t2": 102.0, "t3": None}
+
+
+def test_asof_tolerance(spark):
+    out = asof_join(
+        _trades(spark),
+        _quotes(spark),
+        on=[("sym", "sym")],
+        left_ts="t",
+        right_ts="qt",
+        tolerance=F.expr("INTERVAL 5 SECONDS"),
+    )
+    got = {r["trade"]: r["px"] for r in out.collect()}
+    # t1 (10): qt5 is exactly 5s back -> kept; t2 (25): qt20 is 5s back -> kept
+    assert got == {"t1": 100.0, "t2": 101.0}
+    tight = asof_join(
+        _trades(spark), _quotes(spark), on=[("sym", "sym")],
+        left_ts="t", right_ts="qt", tolerance=F.expr("INTERVAL 3 SECONDS"),
+    )
+    assert tight.count() == 0
 
 
 def test_range_join_half_open(spark):
@@ -20,6 +77,33 @@ def test_range_join_half_open(spark):
     got = sorted((r["pid"], r["iid"]) for r in out.collect())
     # p2 at x=20 is NOT in [15, 20) — upper bound is exclusive
     assert got == [("p1", "i1"), ("p3", "i3")]
+
+
+def test_asof_same_named_ts_columns(spark):
+    """Both sides call their timestamp 'ts' — the common case. The right
+    timestamp must come back suffixed '_right', and the match semantics
+    are unchanged (no ambiguous-reference analysis error)."""
+    trades = _trades(spark).withColumnRenamed("t", "ts")
+    quotes = _quotes(spark).withColumnRenamed("qt", "ts")
+    out = asof_join(
+        trades, quotes, on=[("sym", "sym")], left_ts="ts", right_ts="ts"
+    )
+    assert "ts_right" in out.columns
+    got = {r["trade"]: r["px"] for r in out.collect()}
+    assert got == {"t1": 100.0, "t2": 101.0}
+    # left + tolerance through the same path
+    out2 = asof_join(
+        trades,
+        quotes,
+        on=[("sym", "sym")],
+        left_ts="ts",
+        right_ts="ts",
+        direction="forward",
+        how="left",
+        tolerance=F.expr("INTERVAL 100 SECONDS"),
+    )
+    got2 = {r["trade"]: r["px"] for r in out2.collect()}
+    assert got2 == {"t0": 100.0, "t1": 101.0, "t2": 102.0, "t3": None}
 
 
 def test_banded_fuzzy_top1_matches_and_plan(spark):
